@@ -458,14 +458,6 @@ def _bloom_build(
     return out
 
 
-def _bloom_words(table_path: str, meta: dict):
-    """Load a bloom sidecar as a little-endian uint64 numpy array."""
-    import numpy as np
-
-    with open(os.path.join(table_path, meta["file"]), "rb") as f:
-        return np.frombuffer(f.read(), dtype="<u8")
-
-
 def _stat_lit(value, dtype):
     """Rebuild a Spark literal of the column's type from a JSON-safe
     stats value (the inverse of _json_safe) — comparisons during MERGE
@@ -2630,27 +2622,8 @@ class VersionedTable:
             # POINT lookups (lo == hi) and IN-sets (a list of values)
             # additionally consult per-group Bloom filters: on
             # high-cardinality unordered keys the min/max box can't
-            # prune, the bloom can — a multi-key point probe bit-tests
-            # EACH value and keeps a group only if SOME value is
-            # maybe-present
-            eq: dict = {}
-            for c, bound in wmap.items():
-                if isinstance(bound, (list, set, frozenset)):
-                    vals = [v for v in bound if v is not None]
-                    if vals:
-                        eq[c] = vals
-                else:
-                    lo, hi = bound
-                    if lo is not None and lo == hi:
-                        eq[c] = [lo]
-            if eq and any(
-                (stats.get(g, {}).get("_bloom") or {}) for g in groups
-            ):
-                declared = _schema_from_json(m["schema"])
-                types = {f.name: f.dataType for f in declared.fields}
-                groups = _bloom_prune_point(
-                    spark, stats, groups, eq, types, self.path
-                )
+            # prune, the bloom can
+            groups = _bloom_prune_where(spark, m, groups, wmap, self.path)
         out = self._read_groups(spark, m, groups)
         if where_expr is not None:
             out = out.filter(where_expr)
@@ -4393,26 +4366,9 @@ class VersionedTable:
             # rewrites the entire table instead of the one group the
             # key can live in. False positives only cost an
             # unnecessary rewrite; false negatives are impossible.
-            eq: dict = {}
-            for c, bound in prune_where.items():
-                if isinstance(bound, (list, set, frozenset)):
-                    vals = [v for v in bound if v is not None]
-                    if vals:
-                        eq[c] = vals
-                else:
-                    lo, hi = bound
-                    if lo is not None and lo == hi:
-                        eq[c] = [lo]
-            if eq and any(
-                (stats.get(g, {}).get("_bloom") or {}) for g in touched
-            ):
-                types = {
-                    f.name: f.dataType
-                    for f in _schema_from_json(m["schema"]).fields
-                }
-                touched = _bloom_prune_point(
-                    spark, stats, touched, eq, types, self.path
-                )
+            touched = _bloom_prune_where(
+                spark, m, touched, prune_where, self.path
+            )
         else:
             touched = groups
         if prune_where and not touched:
@@ -5775,145 +5731,104 @@ def _split_touched_groups(
     )
 
 
-def _bloom_prune_point(
+# -- Bloom membership probes --------------------------------------------
+#
+# Every bloom question — read()'s point/IN refinement, the auto-pruned
+# DML touch set, merge_into/apply_changes touch tests and rebase
+# membership — is one test: raw xxhash64 matrices per probed column
+# (cast literals for a point/IN probe, collected update keys for a
+# touch test) bit-tested against each candidate (group, column)
+# sidecar by ONE kernel, _bloom_maybe. A point lookup is a touch test
+# whose probe rows are literals; only the rule combining the
+# per-(group, column) maybe-vectors differs.
+
+
+def _bloom_prune_where(
     spark: SparkSession,
-    stats: dict,
+    m: dict,
     groups: list[str],
-    eq: dict,
-    types: dict,
+    where: dict,
     table_path: str,
 ) -> list[str]:
-    """Drop groups whose Bloom filters prove every probed value
-    absent. ``eq`` maps column -> LIST of candidate values (one value
-    for a point lookup, several for an IN-set probe); a group survives
-    a column's test if ANY value is maybe-present (the IN predicate is
-    a disjunction), and survives overall only if EVERY bloom'd column's
-    test passes (the WHERE is a conjunction). ONE tiny driver job
-    computes the k hash positions per (column, value, distinct m) —
-    each literal is CAST to the column's declared type first, because
-    xxhash64 is type-sensitive and the stored blooms hashed the column
-    in its own type — then each group's word array is bit-tested in
-    Python. Groups without a bloom for a referenced column pass
-    through (conservative)."""
-    need = set()
-    for g in groups:
-        bl = stats.get(g, {}).get("_bloom") or {}
-        for c in eq:
-            if c in bl:
-                for vi in range(len(eq[c])):
-                    need.add((c, vi, int(bl[c]["m"])))
-    if not need:
+    """Bloom refinement of a stats-pruned candidate list for a
+    (normalized) bounds map: POINT bounds (lo == hi) and IN-sets (a
+    list of values) are bit-tested, range bounds are not. A group
+    survives a column if ANY probed value is maybe-present (IN is a
+    disjunction) and survives overall only if EVERY bloom'd probed
+    column passes (the WHERE is a conjunction); groups without a bloom
+    for a column pass it (conservative). The literals are hashed in
+    ONE tiny Spark job, each CAST to the column's declared type first
+    (xxhash64 is type-sensitive and the blooms hashed the column in
+    its own type). No bloom'd candidate: no job, no sidecar read."""
+    stats = m.get("stats") or {}
+    eq: dict = {}
+    for c, bound in where.items():
+        if isinstance(bound, (list, set, frozenset)):
+            vals = [v for v in bound if v is not None]
+        else:
+            lo, hi = bound
+            vals = [lo] if lo is not None and lo == hi else []
+        if vals and any(
+            c in (stats.get(g, {}).get("_bloom") or {}) for g in groups
+        ):
+            eq[c] = vals
+    if not eq:
         return groups
-    need = sorted(need)
-    exprs = []
-    for j, (c, vi, mval) in enumerate(need):
-        lit = F.lit(eq[c][vi])
-        if c in types:
-            lit = lit.cast(types[c])
-        exprs.append(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(mval))
-                    for i in range(_BLOOM_K)
-                ]
-            ).alias(f"p{j}")
-        )
-    row = spark.range(1).select(*exprs).first()
-    pos = {key: [int(p) for p in row[f"p{j}"]] for j, key in enumerate(need)}
-    if _bloom_distributed_regime(stats, groups, list(eq)):
-        # large candidate sidecar set: test each sidecar where it
-        # lives (executor-side scan + Arrow kernel) instead of
-        # serializing O(groups × sidecar bytes) reads on the driver —
-        # same regime split as the MERGE touch test's _bloom_touched
-        return _bloom_prune_point_distributed(
-            spark, stats, groups, eq, pos, table_path
-        )
-    out = []
-    for g in groups:
-        bl = stats.get(g, {}).get("_bloom") or {}
-        keep = True
-        for c in eq:
-            if c not in bl:
-                continue
-            arr = _bloom_words(table_path, bl[c])
-            mval = int(bl[c]["m"])
-            any_value = False
-            for vi in range(len(eq[c])):
-                present = True
-                for p in pos[(c, vi, mval)]:
-                    if not (int(arr[p // 64]) >> (p % 64)) & 1:
-                        present = False
-                        break
-                if present:
-                    any_value = True
-                    break
-            if not any_value:
-                keep = False
-                break
-        if keep:
-            out.append(g)
-    return out
+    types = {
+        f.name: f.dataType for f in _schema_from_json(m["schema"]).fields
+    }
+    hashes = [
+        _bloom_hashes(
+            [F.lit(v).cast(types[c]) if c in types else F.lit(v) for v in vs]
+        ).alias(c)
+        for c, vs in eq.items()
+    ]
+    row = spark.range(1).select(*hashes).first()
+    H = {c: _hash_matrix([row[c]], len(vs))[0] for c, vs in eq.items()}
+    maybe = _bloom_maybe(spark, H, stats, groups, table_path)
+    absent = {gi for (gi, _), hit in maybe.items() if not hit.any()}
+    return [g for gi, g in enumerate(groups) if gi not in absent]
 
 
-def _bloom_prune_point_distributed(
-    spark: SparkSession,
+def _bloom_touched(
+    updates: DataFrame,
+    keys: list[str],
     stats: dict,
     groups: list[str],
-    eq: dict,
-    pos: dict,
     table_path: str,
-) -> list[str]:
-    """Executor-side variant of _bloom_prune_point's bit test for MANY
-    candidate groups: the precomputed (column, value-index, m) → k-bit-
-    positions map ships in the task closure (a few ints per probed
-    value), each sidecar is read and tested where it lives, and only a
-    per-(group, column) pass/fail boolean comes back. Semantics match
-    the driver loop exactly: a group is dropped iff SOME probed column
-    has a bloom there and NO probed value is maybe-present in it."""
-    paths, gi_of = [], {}
-    for gi, g in enumerate(groups):
-        bl = stats.get(g, {}).get("_bloom") or {}
-        gi_of[os.path.basename(g)] = gi
-        for c in eq:
-            if c in bl:
-                paths.append(os.path.join(table_path, bl[c]["file"]))
-    if not paths:
-        return groups
-    par = min(len(paths), spark.sparkContext.defaultParallelism)
-    bf = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(par)
-    nvals = {c: len(vs) for c, vs in eq.items()}
+) -> set:
+    """The groups (subset of ``groups``, each bloom'd on EVERY key
+    column) where some update ROW is maybe-present in every key
+    column's Bloom filter. A bounded delta collects k raw hashes per
+    key column per row (NO key values) and goes through _bloom_maybe;
+    a delta over _BLOOM_DRIVER_MAX_ROWS takes the fully distributed
+    hash-join (_bloom_touched_join)."""
+    if not groups:
+        return set()
+    import numpy as np
 
-    def probe(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                gi, c = _sidecar_gi_col(path, gi_of)
-                with open(path, "rb") as f:
-                    arr = np.frombuffer(f.read(), dtype="<u8")
-                m = arr.size * 64
-                any_v = False
-                for vi in range(nvals[c]):
-                    ps = pos.get((c, vi, m))
-                    if ps is None:
-                        # sidecar size disagrees with the manifest's m
-                        # (foreign/corrupt): no positions for it — stay
-                        # conservative, the group scans
-                        any_v = True
-                        break
-                    if all(
-                        (int(arr[p // 64]) >> (p % 64)) & 1 for p in ps
-                    ):
-                        any_v = True
-                        break
-                yield pd.DataFrame({"gi": [gi], "passed": [bool(any_v)]})
-
-    rows = bf.mapInPandas(probe, "gi int, passed boolean").collect()
-    dropped = {int(r["gi"]) for r in rows if not r["passed"]}
-    return [g for gi, g in enumerate(groups) if gi not in dropped]
+    head = (
+        updates.select(_bloom_hashes([F.col(k) for k in keys]))
+        .limit(_BLOOM_DRIVER_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(head) > _BLOOM_DRIVER_MAX_ROWS:
+        return _bloom_touched_join(updates, keys, stats, groups, table_path)
+    if not head:
+        return set()
+    M = _hash_matrix([r[0] for r in head], len(keys))
+    maybe = _bloom_maybe(
+        updates.sparkSession,
+        {k: M[:, ci] for ci, k in enumerate(keys)},
+        stats,
+        groups,
+        table_path,
+    )
+    return {
+        g
+        for gi, g in enumerate(groups)
+        if np.logical_and.reduce([maybe[(gi, k)] for k in keys]).any()
+    }
 
 
 def _rebase_bloom_membership(
@@ -5936,30 +5851,19 @@ def _rebase_bloom_membership(
     return _bloom_touched(updates, keys, lstats, groups, table_path)
 
 
-# Regime split for bloom probes: the driver numpy loop wins while the
-# sidecar set is small (zero Spark jobs; measured 3x faster than the
-# executor probe at 128 page-cached 8 KiB sidecars — tools/ab_bloom.py
-# --many-groups), and the executor-side scan wins when driver I/O
-# would serialize — thousands of groups × up to 2 MiB each through one
-# process, which on object storage is the MERGE touch test's wall
-# clock. The distributed path therefore triggers only when BOTH hold:
-# more groups than _BLOOM_DRIVER_MAX_GROUPS AND more planned sidecar
-# bytes than _BLOOM_DRIVER_MAX_BYTES (computed from the manifests' m
-# values — no file I/O). Module-level so tests can pin the regimes.
+# Regime split for the kernel: the driver numpy regime wins while the
+# sidecar set is small (zero Spark jobs; tools/ab_bloom.py
+# --many-groups measures it against the executor regime at 128
+# page-cached 8 KiB sidecars), and the executor regime wins when
+# driver I/O would serialize — thousands of groups × up to 2 MiB each
+# through one process, which on object storage is the MERGE touch
+# test's wall clock. The executor regime therefore triggers only when
+# BOTH hold: more groups than _BLOOM_DRIVER_MAX_GROUPS AND more planned
+# sidecar bytes than _BLOOM_DRIVER_MAX_BYTES (computed from the
+# manifests' m values — no file I/O). Module-level so tests can pin
+# the regimes.
 _BLOOM_DRIVER_MAX_GROUPS = 64
 _BLOOM_DRIVER_MAX_BYTES = 64 << 20
-
-
-def _bloom_distributed_regime(stats: dict, groups: list, cols) -> bool:
-    if len(groups) <= _BLOOM_DRIVER_MAX_GROUPS:
-        return False
-    total = 0
-    for g in groups:
-        bl = stats.get(g, {}).get("_bloom") or {}
-        for c in cols:
-            if c in bl:
-                total += int(bl[c]["m"]) // 8
-    return total > _BLOOM_DRIVER_MAX_BYTES
 
 # update-row ceiling for collecting the raw key-hash matrix to the
 # driver (k int64 per key column per row — NO key values); larger
@@ -5968,220 +5872,202 @@ def _bloom_distributed_regime(stats: dict, groups: list, cols) -> bool:
 _BLOOM_DRIVER_MAX_ROWS = 200_000
 
 
-def _bloom_sidecar_scan(
-    spark: SparkSession,
-    stats: dict,
-    groups: list[str],
-    keys: list[str],
-    table_path: str,
-):
-    """Distributed scan over the (group × key-column) bloom sidecars:
-    a DataFrame of sidecar PATHS spread across executors (one task
-    opens and decodes each file where it runs), plus the
-    {group-dir-name: group-index} map the kernels use to label
-    results. The driver never opens a sidecar. A ``binaryFile`` read
-    would be the idiomatic route, but Hadoop's hidden-file filter
-    silently drops ``_``-prefixed paths — and the sidecars are named
-    ``_bloom_<col>.bin`` precisely so the parquet reader ignores them
-    — so the kernels open the files directly; the table already
-    requires a shared POSIX-semantics filesystem (the manifest
-    protocol's atomic os.link), so every executor can. The column
-    name and m are recovered from the file itself (name suffix;
-    m = filesize × 8), so no manifest metadata ships with the scan."""
-    paths, gi_of = [], {}
-    for gi, g in enumerate(groups):
-        bl = stats[g]["_bloom"]
-        gi_of[os.path.basename(g)] = gi
-        for k in keys:
-            paths.append((os.path.join(table_path, bl[k]["file"]),))
-    par = min(len(paths), spark.sparkContext.defaultParallelism)
-    bf = spark.createDataFrame(paths, "path string").repartition(par)
-    return bf, gi_of
+def _bloom_distributed_regime(groups: list, probes: list) -> bool:
+    return len(groups) > _BLOOM_DRIVER_MAX_GROUPS and (
+        sum(int(meta["m"]) // 8 for _, _, meta in probes)
+        > _BLOOM_DRIVER_MAX_BYTES
+    )
 
 
-def _sidecar_gi_col(path: str, gi_of: dict) -> tuple:
-    """(group index, column name) from a sidecar path
-    ``.../data/<uuid>/_bloom_<col>.bin`` (URI or plain)."""
-    parts = path.rstrip("/").split("/")
-    return gi_of[parts[-2]], parts[-1][len("_bloom_"):-len(".bin")]
+def _bloom_hashes(cols: list):
+    """ONE array of the k raw xxhash64 values of each column in
+    ``cols``, column-major — the hashes the filters were built from
+    (_bloom_positions) before the per-group ``pmod m``."""
+    return F.array(
+        *[F.xxhash64(c, F.lit(i)) for c in cols for i in range(_BLOOM_K)]
+    )
 
 
-def _bloom_words_df(
-    spark: SparkSession,
-    stats: dict,
-    groups: list[str],
-    keys: list[str],
-    table_path: str,
-) -> DataFrame:
-    """(gi, c, widx, word) over the NONZERO sidecar words — the sparse
-    bloom-word table for the distributed hash-join path, produced by
-    the executor-side sidecar scan + Arrow kernel instead of a driver
-    read loop."""
-    bf, gi_of = _bloom_sidecar_scan(spark, stats, groups, keys, table_path)
-
-    def extract(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                gi, c = _sidecar_gi_col(path, gi_of)
-                with open(path, "rb") as f:
-                    arr = np.frombuffer(f.read(), dtype="<u8")
-                nz = np.nonzero(arr)[0]
-                if not len(nz):
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "gi": np.full(len(nz), gi, dtype="int32"),
-                        "c": c,
-                        "widx": nz.astype("int64"),
-                        "word": arr[nz].view(np.int64),
-                    }
-                )
-
-    return bf.mapInPandas(extract, "gi int, c string, widx long, word long")
-
-
-def _bloom_touched_distributed_probe(
-    spark: SparkSession,
-    H,
-    keys: list[str],
-    stats: dict,
-    groups: list[str],
-    table_path: str,
-) -> set:
-    """Bounded delta × MANY groups: broadcast the update-key hash
-    matrix (rows × keys × k int64 — no key values, bounded by
-    _BLOOM_DRIVER_MAX_ROWS) and bit-test each sidecar where it lives —
-    one executor kernel per sidecar file via the distributed path scan
-    + mapInPandas, emitting a packed per-row maybe-bitmap per
-    (group, column). The
-    driver only ANDs the tiny bitmaps across key columns (rows/8 bytes
-    per sidecar), never touches sidecar bytes — the touch test stays
-    O(delta) driver work at any group count."""
+def _hash_matrix(flat_rows: list, n_cols: int):
+    """Collected _bloom_hashes arrays as an (n, n_cols, k) uint64
+    matrix. Spark longs are signed: reinterpret them as uint64 two's
+    complement (an int64 VIEW, not a value cast — numpy deprecates
+    implicit negative→uint64)."""
     import numpy as np
 
-    bf, gi_of = _bloom_sidecar_scan(spark, stats, groups, keys, table_path)
-    ci_of = {k: ci for ci, k in enumerate(keys)}
+    return (
+        np.array(flat_rows, dtype=np.int64)
+        .view(np.uint64)
+        .reshape(len(flat_rows), n_cols, _BLOOM_K)
+    )
+
+
+def _bloom_probes(stats: dict, groups: list[str], cols) -> list:
+    """(group index, column, manifest bloom meta) for every candidate
+    group with a bloom on a probed column."""
+    return [
+        (gi, c, bl[c])
+        for gi, g in enumerate(groups)
+        for bl in [stats.get(g, {}).get("_bloom") or {}]
+        for c in cols
+        if c in bl
+    ]
+
+
+def _bloom_maybe(
+    spark: SparkSession,
+    H: dict,
+    stats: dict,
+    groups: list[str],
+    table_path: str,
+) -> dict:
+    """THE bloom membership kernel. ``H`` maps each probed column to
+    an (n, k) raw-hash matrix; the result maps (group index, column)
+    to n maybe-present flags, for every candidate group with a bloom
+    on that column. Two regimes, same bit test (_bloom_test):
+
+    * driver — numpy over each sidecar read on the driver: zero Spark
+      jobs;
+    * executor — H is broadcast and one mapInPandas pass over the
+      sidecar scan tests each sidecar where it lives; only a packed
+      n-bit bitmap per (group, column) comes back, so the driver never
+      touches sidecar bytes at any group count."""
+    import numpy as np
+
+    probes = _bloom_probes(stats, groups, H)
+    if not _bloom_distributed_regime(groups, probes):
+        return {
+            (gi, c): _bloom_test(
+                _bloom_words(table_path, meta), H[c], int(meta["m"])
+            )
+            for gi, c, meta in probes
+        }
     bH = spark.sparkContext.broadcast(H)
 
     def probe(batches):
         import numpy as np
-        import pandas as pd
 
-        Hv = bH.value
         for pdf in batches:
-            for path in pdf["path"]:
-                gi, c = _sidecar_gi_col(path, gi_of)
-                with open(path, "rb") as f:
-                    arr = np.frombuffer(f.read(), dtype="<u8")
-                m = np.uint64(arr.size * 64)
-                pos = Hv[:, ci_of[c], :] % m
-                bits = (
-                    arr[pos >> np.uint64(6)] >> (pos & np.uint64(63))
-                ) & np.uint64(1)
-                maybe = bits.all(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "gi": [gi],
-                        "bitmap": [np.packbits(maybe).tobytes()],
-                    }
-                )
+            pdf["bitmap"] = [
+                np.packbits(
+                    _bloom_test(_sidecar_words(path, m), bH.value[c], m)
+                ).tobytes()
+                for c, m, path in zip(pdf["c"], pdf["m"], pdf["path"])
+            ]
+            yield pdf[["gi", "c", "bitmap"]]
 
-    rows = bf.mapInPandas(probe, "gi int, bitmap binary").collect()
-    n = H.shape[0]
-    per_group: dict[int, object] = {}
-    for r in rows:
-        bm = np.unpackbits(
-            np.frombuffer(r["bitmap"], dtype=np.uint8), count=n
-        ).astype(bool)
-        gi = int(r["gi"])
-        per_group[gi] = bm if gi not in per_group else per_group[gi] & bm
+    rows = (
+        _bloom_sidecar_scan(spark, table_path, probes)
+        .mapInPandas(probe, "gi int, c string, bitmap binary")
+        .collect()
+    )
     return {
-        groups[gi] for gi, bm in per_group.items() if bm.any()
+        (r["gi"], r["c"]): np.unpackbits(
+            np.frombuffer(r["bitmap"], dtype=np.uint8), count=len(H[r["c"]])
+        ).astype(bool)
+        for r in rows
     }
 
 
-def _bloom_touched(
+def _bloom_test(words, H, m: int):
+    """The bit test: maybe-present flags for the rows of ``H`` (n × k
+    raw hashes) against one m-bit sidecar. (h + 2^64) mod m ==
+    pmod(h, m) BECAUSE m is a power of two (_bloom_m) — the modulus
+    must stay a power of two or this and the JVM-side pmod the filters
+    were built with would disagree."""
+    import numpy as np
+
+    pos = H % np.uint64(m)
+    bits = (words[pos >> np.uint64(6)] >> (pos & np.uint64(63))) & np.uint64(1)
+    return bits.all(axis=1)
+
+
+def _sidecar_words(path: str, m: int):
+    """A bloom sidecar as little-endian uint64 words. A file whose size
+    disagrees with its manifest's ``m`` (truncated, foreign) reads as
+    SATURATED — every probe maybe-present — so every regime keeps its
+    group: a bad sidecar costs a scan or a rewrite, never a false
+    negative."""
+    import numpy as np
+
+    with open(path, "rb") as f:
+        data = f.read()
+    if len(data) * 8 != m:
+        return np.full(m // 64, np.iinfo(np.uint64).max, dtype="<u8")
+    return np.frombuffer(data, dtype="<u8")
+
+
+def _bloom_words(table_path: str, meta: dict):
+    """Driver-side read of the sidecar a manifest bloom ``meta``
+    ({m, k, file}) names."""
+    return _sidecar_words(
+        os.path.join(table_path, meta["file"]), int(meta["m"])
+    )
+
+
+def _bloom_sidecar_scan(
+    spark: SparkSession, table_path: str, probes: list
+) -> DataFrame:
+    """(gi, c, m, path) rows, one per probed sidecar, spread across
+    executors so each task opens and decodes its files where it runs;
+    m is the manifest's, so a size mismatch reads saturated there too.
+    A ``binaryFile`` read would be the idiomatic route, but Hadoop's
+    hidden-file filter silently drops ``_``-prefixed paths — and the
+    sidecars are named ``_bloom_<col>.bin`` precisely so the parquet
+    reader ignores them — so the kernels open the files directly; the
+    table already requires a shared POSIX-semantics filesystem (the
+    manifest protocol's atomic os.link), so every executor can."""
+    rows = [
+        (gi, c, int(meta["m"]), os.path.join(table_path, meta["file"]))
+        for gi, c, meta in probes
+    ]
+    par = min(len(rows), spark.sparkContext.defaultParallelism)
+    return spark.createDataFrame(
+        rows, "gi int, c string, m long, path string"
+    ).repartition(par)
+
+
+def _bloom_touched_join(
     updates: DataFrame,
     keys: list[str],
     stats: dict,
     groups: list[str],
     table_path: str,
 ) -> set:
-    """The groups (subset of ``groups``) where some update row is
-    maybe-present in EVERY key column's Bloom filter. Three regimes:
-
-    * bounded delta × few groups — collect the raw 64-bit key hashes
-      (k per column per row, NO key values) and bit-test each sidecar
-      driver-side with numpy: zero extra Spark jobs;
-    * bounded delta × many groups — same collected hash matrix, but
-      BROADCAST it and test each sidecar where it lives (executor-side
-      scan + Arrow kernel): the driver never reads a sidecar, so the
-      touch test no longer serializes on O(groups) driver I/O;
-    * oversized delta — fully distributed hash-join: update-key hashes
-      join the sparse bloom-word table (itself produced by the
-      executor-side scan). Group blooms may differ in m (sized by row
-      count at write time), so the raw hash is computed once per
-      (row, col, seed) and reduced mod each group's own m."""
-    import numpy as np
-
+    """_bloom_touched for an oversized delta, fully distributed:
+    update-key hashes join the sparse (gi, c, widx, word) table of
+    NONZERO sidecar words, which the executor-side sidecar scan
+    extracts. Group blooms may differ in m (sized by NDV at write
+    time), so the raw hash is computed once per (row, col, seed) and
+    reduced mod each group's own m."""
     spark = updates.sparkSession
-    # k raw hashes per key column per row, NO key values — bounded
-    # collect; oversized deltas fall through to the join path
-    _MAX_DRIVER_ROWS = _BLOOM_DRIVER_MAX_ROWS
-    hash_arr = F.array(
-        *[
-            F.xxhash64(F.col(k), F.lit(i))
-            for k in keys
-            for i in range(_BLOOM_K)
-        ]
-    ).alias("hs")
-    head = updates.select(hash_arr).limit(_MAX_DRIVER_ROWS + 1).collect()
-    if len(head) <= _MAX_DRIVER_ROWS:
-        if not head:
-            return set()
-        # signed Spark longs reinterpret as uint64 two's-complement
-        # (int64 view, not a value cast — numpy deprecates implicit
-        # negative→uint64); (h + 2^64) mod m == pmod(h, m) BECAUSE m
-        # is a power of two (guaranteed by _bloom_m) — the modulus
-        # must stay a power of two or these paths and the JVM-side
-        # pmod would disagree
-        H = (
-            np.array([r["hs"] for r in head], dtype=np.int64)
-            .view(np.uint64)
-            .reshape(len(head), len(keys), _BLOOM_K)
-        )
-        if _bloom_distributed_regime(stats, groups, keys):
-            return _bloom_touched_distributed_probe(
-                spark, H, keys, stats, groups, table_path
-            )
-        out = set()
-        for g in groups:
-            bl = stats[g]["_bloom"]
-            maybe = np.ones(len(head), dtype=bool)
-            for ci, k in enumerate(keys):
-                meta = bl[k]
-                arr = _bloom_words(table_path, meta)
-                pos = H[:, ci, :] % np.uint64(meta["m"])
-                bits = (
-                    arr[pos >> np.uint64(6)]
-                    >> (pos & np.uint64(63))
-                ) & np.uint64(1)
-                maybe &= bits.all(axis=1)
-                if not maybe.any():
-                    break
-            if maybe.any():
-                out.add(g)
-        return out
-    meta_rows = [
-        (gi, k, int(stats[g]["_bloom"][k]["m"]))
-        for gi, g in enumerate(groups)
-        for k in keys
-    ]
-    words = _bloom_words_df(spark, stats, groups, keys, table_path)
-    metas = spark.createDataFrame(meta_rows, "gi int, c string, m long")
+    probes = _bloom_probes(stats, groups, keys)
+
+    def extract(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            for gi, c, m, path in pdf.itertuples(index=False):
+                arr = _sidecar_words(path, m)
+                nz = np.nonzero(arr)[0]
+                if len(nz):
+                    yield pd.DataFrame(
+                        {
+                            "gi": np.full(len(nz), gi, dtype="int32"),
+                            "c": c,
+                            "widx": nz.astype("int64"),
+                            "word": arr[nz].view(np.int64),
+                        }
+                    )
+
+    words = _bloom_sidecar_scan(spark, table_path, probes).mapInPandas(
+        extract, "gi int, c string, widx long, word long"
+    )
+    metas = spark.createDataFrame(
+        [(gi, c, int(meta["m"])) for gi, c, meta in probes],
+        "gi int, c string, m long",
+    )
     hs = updates.select(
         F.struct(*[F.col(k) for k in keys]).alias("kid"),
         F.explode(
@@ -6218,9 +6104,9 @@ def _bloom_touched(
             ).alias("bit"),
         )
     )
-    # no broadcast hint on words: it is now produced by a distributed
-    # sidecar scan (groups × m/64 nonzero words can exceed driver
-    # memory at thousands of groups); AQE picks broadcast when small
+    # no broadcast hint on words: it comes from a distributed sidecar
+    # scan (groups × m/64 nonzero words can exceed driver memory at
+    # thousands of groups); AQE picks broadcast when small
     hits = pos.join(words, ["gi", "c", "widx"]).filter(
         F.col("word").bitwiseAND(F.col("bit")) != 0
     )

@@ -10,10 +10,10 @@ driver's value-hash gate.
   deterministic).
 * lake_in_set_read — the r8 IN-set read surface (where={col: [v1,
   v2, ...]}) with per-value Bloom refinement on a hash key.
-* lake_many_groups_bloom_merge — MERGE through the r9 EXECUTOR-SIDE
-  bloom touch test (_bloom_touched_distributed_probe): the
-  many-groups regime is forced via its module knob so the driver
-  exercises the distributed kernel, not the driver numpy loop.
+* lake_many_groups_bloom_merge — MERGE through the EXECUTOR regime of
+  the bloom membership kernel (_bloom_maybe): the many-groups regime
+  is forced via its module knobs so the touch test bit-tests the
+  sidecars in executor kernels, not in the driver numpy regime.
 * lake_auto_pruned_update — UPDATE through the r9 predicate planner
   (prune_where="auto" → derive_prune_bounds), with the carried-group
   count value-checked like lake_pruned_delete's.
@@ -198,13 +198,13 @@ def lake_in_set_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_many_groups_bloom_merge(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """MERGE through the round-9 DISTRIBUTED bloom touch test: an
-    8-group hash-keyed table (every box spans the key space — only
-    blooms prune) merged with 3 updates + 1 insert while the
-    many-groups regime knobs (_BLOOM_DRIVER_MAX_GROUPS/_BYTES) are
-    pinned to 0, so the
-    touch test runs _bloom_touched_distributed_probe — sidecars are
-    read and bit-tested in EXECUTOR kernels, never on the driver. The
+    """MERGE through the DISTRIBUTED bloom touch test: an 8-group
+    hash-keyed table (every box spans the key space — only blooms
+    prune) merged with 3 updates + 1 insert while the many-groups
+    regime knobs (_BLOOM_DRIVER_MAX_GROUPS/_BYTES) are pinned to 0, so
+    the touch test runs the executor regime of the bloom kernel
+    (_bloom_maybe) — sidecars are read and bit-tested in EXECUTOR
+    kernels, never on the driver. The
     oracle recomputes the merge relationally; the hash check proves
     the executor kernel's bit math agrees with the JVM-side hashing
     that built the filters (one wrong bit → a missed update → broken

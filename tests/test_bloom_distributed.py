@@ -1,17 +1,18 @@
-"""Round-9: distributed Bloom sidecar reads (VERDICT r8's top item).
+"""Bloom probes at many groups: the executor and hash-join regimes.
 
-The MERGE touch test (_bloom_touched) and the read-path point probe
-(_bloom_prune_point) used to read every candidate group's sidecar in a
-driver-side loop — correct, but an O(groups) driver I/O serialization
-at thousands of groups. Both now split into regimes:
+Every bloom membership question (the read-path point/IN probe
+_bloom_prune_where, the MERGE touch test _bloom_touched) goes through
+one kernel, _bloom_maybe, with two regimes:
 
-* few groups  → driver numpy loop (zero extra Spark jobs, unchanged);
-* many groups → binaryFile scan + Arrow kernel: each sidecar is read
-  and bit-tested on an EXECUTOR, only a tiny pass/fail (or packed
-  bitmap) comes back;
-* oversized deltas → the distributed hash-join path, whose sparse
-  bloom-word table is now itself produced by the binaryFile scan
-  (_bloom_words_df) instead of a driver read loop.
+* few groups  → driver numpy over each sidecar (zero extra Spark jobs);
+* many groups → sidecar scan + mapInPandas: each sidecar is opened and
+  bit-tested on an EXECUTOR (the files are opened directly — Hadoop's
+  hidden-file filter drops the ``_bloom_*`` names), only a packed
+  maybe-bitmap per (group, column) comes back;
+
+and oversized touch-test deltas take the distributed hash-join path
+(_bloom_touched_join), whose sparse bloom-word table comes from the
+same executor-side sidecar scan.
 
 These tests drive each regime against the same ground truth and prove
 the many-group paths never open a sidecar on the driver (monkeypatched
@@ -198,7 +199,7 @@ class TestRegimeParity:
         via_probe = V._bloom_touched(upd, ["k"], stats, groups, t.path)
         monkeypatch.setattr(V, "_BLOOM_DRIVER_MAX_ROWS", 1)
         via_join = V._bloom_touched(upd, ["k"], stats, groups, t.path)
-        # the probe regimes are hash-exact mirrors of the driver loop
+        # the other regimes are hash-exact mirrors of the driver regime
         assert via_probe == ref
         assert via_join == ref
         # ground truth: the b and d groups are in every regime's answer

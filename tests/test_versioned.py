@@ -2808,14 +2808,8 @@ class TestBloomBitsPerKey:
 
         def probe(t, value):
             m = t._load_manifest(t.latest_version())
-            stats = m.get("stats") or {}
-            types = {
-                f.name: f.dataType
-                for f in V._schema_from_json(m["schema"]).fields
-            }
-            return V._bloom_prune_point(
-                spark, stats, list(m["groups"]), {"k": [value]}, types,
-                t.path,
+            return V._bloom_prune_where(
+                spark, m, list(m["groups"]), {"k": [value]}, t.path
             )
 
         # absent keys: md5 of ids far outside the committed range

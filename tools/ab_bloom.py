@@ -20,13 +20,15 @@ sidecar shrinks 128 KiB -> 16 -> 2 -> 1 while fpp stays 0.00-0.21%
 against 20k absent-key probes and present keys hit 100% (false
 negatives impossible by construction).
 
-`--many-groups` times the touch test's driver numpy loop vs the r9
-executor-side probe at 128 bloom'd groups. Measured (2026-08-14, local
-page-cached 8 KiB sidecars): driver 1.73s vs executor 5.22s, identical
-10/128 touched — which is WHY the regime split keys on total sidecar
-BYTES (_BLOOM_DRIVER_MAX_BYTES, 64 MiB) and not group count alone: the
-executor path pays one Spark job of overhead and only wins when driver
-I/O would serialize real volume (object storage, MiB-scale sidecars).
+`--many-groups` times the touch test through the two regimes of the
+bloom membership kernel (_bloom_maybe) at 128 bloom'd groups: driver
+numpy vs executor mapInPandas. Measured (2026-08-14, local page-cached
+8 KiB sidecars): driver 1.73s vs executor 5.22s,
+identical 10/128 touched — which is WHY the regime split keys on total
+sidecar BYTES (_BLOOM_DRIVER_MAX_BYTES, 64 MiB) and not group count
+alone: the executor regime pays Spark jobs of overhead and only wins
+when driver I/O would serialize real volume (object storage, MiB-scale
+sidecars).
 
 Run: python tools/ab_bloom.py [--sweep-bits | --dup | --many-groups]
 """
@@ -135,31 +137,19 @@ def run_dup(spark: SparkSession, n_distinct: int) -> dict:
         meta = m["stats"][g]["_bloom"]["k"]
         # measured fpp: hash 20k absent keys in ONE job (the same
         # xxhash64 form the filters were built with), bit-test the
-        # sidecar with numpy
-        import numpy as np
-
+        # sidecar with the lake's own bloom kernel
         from file_stream_import_spark.io.versioned import (
-            _BLOOM_K,
+            _bloom_hashes,
+            _bloom_test,
             _bloom_words,
+            _hash_matrix,
         )
 
         def maybe_count(keys_df) -> int:
-            rows = keys_df.select(
-                F.array(
-                    *[F.xxhash64(F.col("k"), F.lit(i)) for i in range(_BLOOM_K)]
-                ).alias("hs")
-            ).collect()
-            H = (
-                np.array([r["hs"] for r in rows], dtype=np.int64)
-                .view(np.uint64)
-                .reshape(len(rows), _BLOOM_K)
-            )
+            rows = keys_df.select(_bloom_hashes([F.col("k")])).collect()
+            H = _hash_matrix([r[0] for r in rows], 1)[:, 0]
             arr = _bloom_words(t.path, meta)
-            pos = H % np.uint64(meta["m"])
-            bits = (
-                arr[pos >> np.uint64(6)] >> (pos & np.uint64(63))
-            ) & np.uint64(1)
-            return int(bits.all(axis=1).sum())
+            return int(_bloom_test(arr, H, int(meta["m"])).sum())
 
         n_probe = 20_000
         ghosts = spark.range(n_probe).select(
@@ -184,14 +174,14 @@ def run_dup(spark: SparkSession, n_distinct: int) -> dict:
 
 
 def run_many_groups(spark: SparkSession, n_groups: int) -> None:
-    """r9 A/B: the MERGE touch test's bloom probe at MANY groups —
-    driver numpy loop vs the executor-side distributed probe
-    (_bloom_touched_distributed_probe). On local disk with a warm page
-    cache the driver loop is hard to beat in absolute terms; the point
-    of the distributed path is that its cost stays FLAT per-executor
-    while the driver loop serializes O(groups × sidecar_bytes) through
-    one process — this A/B pins the local crossover and shows the
-    distributed path's constant overhead is small (one Spark job)."""
+    """A/B: the MERGE touch test's bloom probe at MANY groups — the
+    bloom kernel's (_bloom_maybe) driver numpy regime vs its executor
+    mapInPandas regime. On local disk with a warm page cache the
+    driver regime is hard to beat in absolute terms; the point of the
+    executor regime is that its cost stays FLAT per-executor while the
+    driver regime serializes O(groups × sidecar_bytes) through one
+    process — this A/B pins the local crossover and shows the executor
+    regime's constant overhead is small (a few Spark jobs)."""
     import file_stream_import_spark.io.versioned as V
     from file_stream_import_spark.io.versioned import (
         VersionedTable,
@@ -230,7 +220,7 @@ def run_many_groups(spark: SparkSession, n_groups: int) -> None:
         )
         results = []
         saved = (V._BLOOM_DRIVER_MAX_GROUPS, V._BLOOM_DRIVER_MAX_BYTES)
-        for tag, knob in (("driver loop", 10**9), ("executor probe", 0)):
+        for tag, knob in (("driver regime", 10**9), ("executor regime", 0)):
             V._BLOOM_DRIVER_MAX_GROUPS = knob
             V._BLOOM_DRIVER_MAX_BYTES = knob
             try:

@@ -72,7 +72,9 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -918,10 +920,13 @@ _WRITE_REBALANCE_MAX_BYTES = int(
     )
 )
 # Plans whose leaves have no real statistics (e.g. LogicalRDD from a
-# localCheckpoint or a streaming foreachBatch micro-batch) report the
-# defaultSizeInBytes sentinel (Long.MaxValue); joins can multiply
-# finite estimates past it too. At or above this, the estimate carries
-# no information.
+# localCheckpoint, createDataFrame over Python rows, or a foreachBatch
+# micro-batch that commit() appends) report the defaultSizeInBytes
+# sentinel (Long.MaxValue); joins can multiply finite estimates past
+# it too. At or above this, the estimate carries no information. MERGE
+# writes are not such plans: merge_into / apply_changes pin their
+# source, and once the touch test has filled the cache it reports its
+# real size.
 _STATS_UNKNOWN = 1 << 62
 
 
@@ -972,9 +977,9 @@ def _delta_small_enough(df: DataFrame) -> bool:
     written delta is small enough that per-upstream-partition layout
     could produce pathological tiny files — the case the REBALANCE
     hint exists for. Unknown estimates return True: the unknown-stats
-    shapes (micro-batch deltas, checkpointed fixtures) are exactly the
-    small exactly-once commits that need the protection, and a
-    misjudged large one merely pays one bounded delta shuffle."""
+    shapes (appended micro-batches, checkpointed fixtures) are mostly
+    small commits that need the protection, and a misjudged large one
+    merely pays one bounded delta shuffle."""
     est = _write_size_estimate(df)
     if est is None:
         return True
@@ -5151,6 +5156,22 @@ def _evolve_schema(table_schema_json: str, incoming) -> str:
     return StructType(evolved).json()
 
 
+@contextmanager
+def _materialized(df: DataFrame):
+    """Persist ``df`` (MEMORY_AND_DISK, lineage kept) for the body of
+    the block, then unpersist it. A DataFrame that is already cached —
+    looked up in the JVM cache manager, not the Python-side
+    ``is_cached`` flag — is used as is and stays cached."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield
+        return
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield
+    finally:
+        df.unpersist()
+
+
 def merge_into(
     table: VersionedTable,
     spark: SparkSession,
@@ -5239,6 +5260,20 @@ def merge_into(
     manifests, all-stats-ineligible key types) are rewritten
     conservatively.
 
+    The source is MATERIALIZED ONCE for the whole call (Delta's
+    MergeIntoMaterializeSource): persisted MEMORY_AND_DISK with its
+    lineage kept (executor loss recomputes), unpersisted after the
+    publish, so the touch test, the write plan (which reads the source
+    twice: anti-join + union) and the rebase callbacks all see the same
+    rows. Without it each action re-executes the source — its whole
+    upstream pipeline, which for an MV refresh is the CDF diff and the
+    aggregation (measured 3x the per-refresh cost) — and a
+    non-deterministic source could land keys the touch test never saw.
+    Once the touch test has filled the cache, the write plan also sees
+    the source's real size, so the anti-join broadcasts it and a small
+    merge lands as one file. A source the caller already cached is used
+    as is and stays cached.
+
     ``expected_parent`` pins the snapshot the caller's decision was
     based on (exactly-once writers pass the version their watermark
     was read from); the default "any" merges onto the current latest.
@@ -5304,168 +5339,169 @@ def merge_into(
             f"{{col: expr}} dict, or None; got "
             f"{when_not_matched_by_source!r}"
         )
-    base = (
-        table.latest_version() if expected_parent == "any"
-        else expected_parent
-    )
-    if base is None:
-        if dup_exprs is not None:
-            _check_dup(updates.agg(*dup_exprs).first())
-        return table.commit(
-            updates
-            if when_not_matched == "insert_all"
-            else updates.filter(F.lit(False)),
-            mode="overwrite", txn=txn,
-            expected_parent=expected_parent,
+    with _materialized(updates):
+        base = (
+            table.latest_version() if expected_parent == "any"
+            else expected_parent
         )
-    m = table._load_manifest(base)
-    schema_json = m["schema"]
-    declared = _schema_from_json(schema_json)
-    if _schema_key(declared) != _schema_key(updates.schema):
-        if not allow_evolution:
-            raise SchemaMismatchError(
-                "MERGE source schema differs from table schema; pass "
-                "allow_evolution=True for additive source columns"
+        if base is None:
+            if dup_exprs is not None:
+                _check_dup(updates.agg(*dup_exprs).first())
+            return table.commit(
+                updates
+                if when_not_matched == "insert_all"
+                else updates.filter(F.lit(False)),
+                mode="overwrite", txn=txn,
+                expected_parent=expected_parent,
             )
-        # Delta's schema.autoMerge: the source may ADD columns, which
-        # evolve the table additively INSIDE the merge commit — the
-        # same _evolve_schema path appends use, so old groups carried
-        # by reference read the new columns as NULL. The source must
-        # still cover every existing table column (additive only) and
-        # shared columns must keep their exact types (_evolve_schema
-        # raises otherwise).
-        have = set(updates.columns)
-        missing = [
-            f.name for f in declared.fields if f.name not in have
-        ]
-        if missing:
-            raise SchemaMismatchError(
-                f"MERGE source lacks table column(s) {missing}; "
-                "evolution is additive — the source must carry every "
-                "existing column"
-            )
-        schema_json = _evolve_schema(m["schema"], updates.schema)
+        m = table._load_manifest(base)
+        schema_json = m["schema"]
         declared = _schema_from_json(schema_json)
-        # align the source's column order to the evolved schema so
-        # the positional union below stays by-name correct
-        updates = updates.select(*[f.name for f in declared.fields])
-    types = {f.name: f.dataType for f in declared.fields}
-    touched, untouched, probe_row = _split_touched_groups(
-        m, updates, keys, types, table_path=table.path,
-        extra_aggs=dup_exprs,
-    )
-    if dup_exprs is not None:
-        if probe_row is None:  # no touch-test pass ran
-            probe_row = updates.agg(*dup_exprs).first()
-        _check_dup(probe_row)
-    if when_not_matched_by_source is not None and untouched:
-        # the BY SOURCE clause concerns target rows whose keys are
-        # ABSENT from the source — they live in any group, so groups
-        # escape the rewrite only when the clause's own condition
-        # provably can't match them (the planner's bounds vs their
-        # stats box); no condition or no derivable bounds → full sweep
-        bys_bounds = (
-            derive_prune_bounds(not_matched_by_source_condition)
-            if not_matched_by_source_condition is not None
-            else {}
-        )
-        # stats-domain re-encoding (str-on-temporal literals prune
-        # lexicographically otherwise); drops only widen the sweep
-        bys_bounds, _ = _normalize_prune_bounds(bys_bounds, types)
-        gstats = m.get("stats") or {}
-        extra = [
-            g
-            for g in untouched
-            if not bys_bounds
-            or _group_may_match(gstats.get(g), bys_bounds)
-        ]
-        extra_set = set(extra)
-        touched = [g for g in m["groups"] if g in set(touched) | extra_set]
-        untouched = [g for g in untouched if g not in extra_set]
-    current = table._read_groups(spark, m, touched)
-    # evolved columns: rewritten target rows NULL-backfill the new
-    # columns (untouched groups get the same NULLs lazily at read)
-    for f in declared.fields:
-        if f.name not in current.columns:
-            current = current.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    if (
-        when_matched == "update_all"
-        and matched_condition is None
-        and when_not_matched == "insert_all"
-        and when_not_matched_by_source is None
-    ):
-        # default clauses: the classic anti-join + union upsert (no
-        # per-column conditionals, narrower shuffle)
-        merged = current.join(updates, keys, "left_anti").unionByName(
-            updates
-        )
-    else:
-        merged = _merge_clauses(
-            current, updates, keys, declared,
-            when_matched, matched_condition, when_not_matched,
-            when_not_matched_by_source, not_matched_by_source_condition,
-        )
-
-    # write the rewritten delta as ONE new group, then publish a
-    # manifest carrying the untouched groups (and their stats) by
-    # reference; base-pinned so a concurrent commit conflicts instead
-    # of silently disappearing under the rewrite
-    group = os.path.join("data", uuid.uuid4().hex)
-    group_stats = _write_group_with_stats(
-        merged, os.path.join(table.path, group),
-        checks=m.get("constraints") or {},
-        bloom_cols=m.get("bloom_cols"),
-        bloom_bits=m.get("bloom_bits"),
-    )
-    stats = {
-        g: s
-        for g, s in (m.get("stats") or {}).items()
-        if g in set(untouched)
-    }
-    if group_stats is not None:
-        stats[group] = group_stats
-    # delete entries survive only where their groups do: touched groups
-    # were rewritten with deletes applied; an entry scoped solely to
-    # touched groups is fully materialized and dropped
-    entries = []
-    for e in m.get("delete_entries") or []:
-        applies = [g for g in e["applies_to"] if g in set(untouched)]
-        if applies:
-            entries.append({**e, "applies_to": applies})
-    return table._publish_or_rebase(
-        base,
-        {
-            "schema": schema_json,
-            "groups": untouched + [group],
-            "mode": "overwrite",
-            "added": [group],
-            "delete_entries": entries,
-            "stats": stats,
-        },
-        txn=txn,
-        removed=touched,
-        # evaluated ONLY if a rebase is needed: one tiny agg job over
-        # the updates proving which key range this merge could touch.
-        # A BY SOURCE clause depends on key NON-existence, so no box
-        # can prove a concurrent add disjoint — rebase is disabled
-        # (update_box=None → any concurrent add truly conflicts).
-        update_box=(
-            None
-            if when_not_matched_by_source is not None
-            else (lambda: _key_box(updates, keys, types))
-        ),
-        update_membership=(
-            None
-            if when_not_matched_by_source is not None
-            else (
-                lambda lstats, gs: _rebase_bloom_membership(
-                    updates, keys, lstats, gs, table.path
+        if _schema_key(declared) != _schema_key(updates.schema):
+            if not allow_evolution:
+                raise SchemaMismatchError(
+                    "MERGE source schema differs from table schema; pass "
+                    "allow_evolution=True for additive source columns"
                 )
+            # Delta's schema.autoMerge: the source may ADD columns, which
+            # evolve the table additively INSIDE the merge commit — the
+            # same _evolve_schema path appends use, so old groups carried
+            # by reference read the new columns as NULL. The source must
+            # still cover every existing table column (additive only) and
+            # shared columns must keep their exact types (_evolve_schema
+            # raises otherwise).
+            have = set(updates.columns)
+            missing = [
+                f.name for f in declared.fields if f.name not in have
+            ]
+            if missing:
+                raise SchemaMismatchError(
+                    f"MERGE source lacks table column(s) {missing}; "
+                    "evolution is additive — the source must carry every "
+                    "existing column"
+                )
+            schema_json = _evolve_schema(m["schema"], updates.schema)
+            declared = _schema_from_json(schema_json)
+            # align the source's column order to the evolved schema so
+            # the positional union below stays by-name correct
+            updates = updates.select(*[f.name for f in declared.fields])
+        types = {f.name: f.dataType for f in declared.fields}
+        touched, untouched, probe_row = _split_touched_groups(
+            m, updates, keys, types, table_path=table.path,
+            extra_aggs=dup_exprs,
+        )
+        if dup_exprs is not None:
+            if probe_row is None:  # no touch-test pass ran
+                probe_row = updates.agg(*dup_exprs).first()
+            _check_dup(probe_row)
+        if when_not_matched_by_source is not None and untouched:
+            # the BY SOURCE clause concerns target rows whose keys are
+            # ABSENT from the source — they live in any group, so groups
+            # escape the rewrite only when the clause's own condition
+            # provably can't match them (the planner's bounds vs their
+            # stats box); no condition or no derivable bounds → full sweep
+            bys_bounds = (
+                derive_prune_bounds(not_matched_by_source_condition)
+                if not_matched_by_source_condition is not None
+                else {}
             )
-        ),
-    )
+            # stats-domain re-encoding (str-on-temporal literals prune
+            # lexicographically otherwise); drops only widen the sweep
+            bys_bounds, _ = _normalize_prune_bounds(bys_bounds, types)
+            gstats = m.get("stats") or {}
+            extra = [
+                g
+                for g in untouched
+                if not bys_bounds
+                or _group_may_match(gstats.get(g), bys_bounds)
+            ]
+            extra_set = set(extra)
+            touched = [g for g in m["groups"] if g in set(touched) | extra_set]
+            untouched = [g for g in untouched if g not in extra_set]
+        current = table._read_groups(spark, m, touched)
+        # evolved columns: rewritten target rows NULL-backfill the new
+        # columns (untouched groups get the same NULLs lazily at read)
+        for f in declared.fields:
+            if f.name not in current.columns:
+                current = current.withColumn(
+                    f.name, F.lit(None).cast(f.dataType)
+                )
+        if (
+            when_matched == "update_all"
+            and matched_condition is None
+            and when_not_matched == "insert_all"
+            and when_not_matched_by_source is None
+        ):
+            # default clauses: the classic anti-join + union upsert (no
+            # per-column conditionals, narrower shuffle)
+            merged = current.join(updates, keys, "left_anti").unionByName(
+                updates
+            )
+        else:
+            merged = _merge_clauses(
+                current, updates, keys, declared,
+                when_matched, matched_condition, when_not_matched,
+                when_not_matched_by_source, not_matched_by_source_condition,
+            )
+
+        # write the rewritten delta as ONE new group, then publish a
+        # manifest carrying the untouched groups (and their stats) by
+        # reference; base-pinned so a concurrent commit conflicts instead
+        # of silently disappearing under the rewrite
+        group = os.path.join("data", uuid.uuid4().hex)
+        group_stats = _write_group_with_stats(
+            merged, os.path.join(table.path, group),
+            checks=m.get("constraints") or {},
+            bloom_cols=m.get("bloom_cols"),
+            bloom_bits=m.get("bloom_bits"),
+        )
+        stats = {
+            g: s
+            for g, s in (m.get("stats") or {}).items()
+            if g in set(untouched)
+        }
+        if group_stats is not None:
+            stats[group] = group_stats
+        # delete entries survive only where their groups do: touched groups
+        # were rewritten with deletes applied; an entry scoped solely to
+        # touched groups is fully materialized and dropped
+        entries = []
+        for e in m.get("delete_entries") or []:
+            applies = [g for g in e["applies_to"] if g in set(untouched)]
+            if applies:
+                entries.append({**e, "applies_to": applies})
+        return table._publish_or_rebase(
+            base,
+            {
+                "schema": schema_json,
+                "groups": untouched + [group],
+                "mode": "overwrite",
+                "added": [group],
+                "delete_entries": entries,
+                "stats": stats,
+            },
+            txn=txn,
+            removed=touched,
+            # evaluated ONLY if a rebase is needed: one tiny agg job over
+            # the updates proving which key range this merge could touch.
+            # A BY SOURCE clause depends on key NON-existence, so no box
+            # can prove a concurrent add disjoint — rebase is disabled
+            # (update_box=None → any concurrent add truly conflicts).
+            update_box=(
+                None
+                if when_not_matched_by_source is not None
+                else (lambda: _key_box(updates, keys, types))
+            ),
+            update_membership=(
+                None
+                if when_not_matched_by_source is not None
+                else (
+                    lambda lstats, gs: _rebase_bloom_membership(
+                        updates, keys, lstats, gs, table.path
+                    )
+                )
+            ),
+        )
 
 
 def _merge_clauses(
@@ -5632,10 +5668,11 @@ def _split_touched_groups(
     pruning on non-null values is lossless.
 
     ``extra_aggs`` piggybacks caller aggregates (merge_into's
-    duplicate-key probe) on the FIRST touch-test pass, so the caller
-    pays zero extra jobs; the third return value is that pass's Row
-    (None when no touch-test pass ran — the caller aggregates
-    itself)."""
+    duplicate-key probe, apply_changes' duplicate-key and op probes) on
+    the FIRST touch-test pass, so the caller pays zero extra jobs; the
+    third return value is that pass's Row (None when no touch-test pass
+    ran — the caller aggregates itself). Callers pin ``updates`` first:
+    every pass, and the bloom refinement, re-reads it."""
     groups = list(m["groups"])
     stats = m.get("stats") or {}
     candidates: list[tuple[str, object]] = []  # (group, box condition)
@@ -5684,9 +5721,8 @@ def _split_touched_groups(
             candidates.append((g, box))
     # chunked so a many-commit table (thousands of candidate groups)
     # never builds one giant aggregate expression tree — each pass
-    # tests <= _TOUCH_CHUNK boxes; passes share the cached updates scan
-    if len(candidates) > _TOUCH_CHUNK:
-        updates = updates.localCheckpoint(eager=True)
+    # tests <= _TOUCH_CHUNK boxes; passes share the caller's pinned
+    # source
     extra_row = None
     for lo in range(0, len(candidates), _TOUCH_CHUNK):
         chunk = candidates[lo : lo + _TOUCH_CHUNK]
@@ -6147,7 +6183,9 @@ def apply_changes(
     LAST-WRITER-WINS within the batch (without it, duplicate keys fail
     loudly like merge_into). Groups whose key box contains NO change
     key are carried by reference — a trickle of CDC rows against a
-    100 TB table rewrites only the touched groups."""
+    100 TB table rewrites only the touched groups. The batch (after the
+    ``seq_col`` resolution) is materialized once for the whole call,
+    like merge_into's source."""
     keys = [key] if isinstance(key, str) else list(key)
     if seq_col is not None:
         w = W.partitionBy(*keys).orderBy(F.col(seq_col).desc())
@@ -6156,90 +6194,108 @@ def apply_changes(
             .filter(F.col("__rn") == 1)
             .drop("__rn", seq_col)
         )
-    else:
-        dup = (
-            changes.groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
+    # Batch probes — an op outside I/U/D and (without seq_col) a
+    # duplicate key, as count(*) vs COUNT DISTINCT of the key tuple like
+    # merge_into's — RIDE the touch-test pass below; only the no-pass
+    # paths pay one standalone aggregate.
+    bad_op = ~F.coalesce(F.col(op_col).isin("I", "U", "D"), F.lit(False))
+    probes = [F.max(bad_op).alias("__chg_bad")]
+    if seq_col is None:
+        probes += [
+            F.count(F.lit(1)).alias("__chg_n"),
+            F.count_distinct(
+                F.struct(*[F.col(k) for k in keys])
+            ).alias("__chg_nd"),
+        ]
+
+    def _check_probes(row) -> None:
+        if seq_col is None and row["__chg_n"] != row["__chg_nd"]:
             raise ValueError(
                 "changelog batch has duplicate keys; pass seq_col for "
                 "last-writer-wins resolution"
             )
-    ops = changes.select(op_col).distinct()
-    bad = [
-        r[0] for r in ops.collect() if r[0] not in ("I", "U", "D")
-    ]
-    if bad:
-        raise ValueError(f"unknown changelog op(s) {bad!r}; expected I/U/D")
-    upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
-    all_keys = changes.select(*keys)
+        if row["__chg_bad"]:
+            bad = [
+                r[0]
+                for r in changes.select(op_col).distinct()
+                .filter(bad_op).collect()
+            ]
+            raise ValueError(
+                f"unknown changelog op(s) {bad!r}; expected I/U/D"
+            )
 
-    # snapshot-pinned like merge_into: compute against expected_parent,
-    # validate-and-rebase at publish (disjoint concurrent commits land)
-    base = (
-        table.latest_version() if expected_parent == "any"
-        else expected_parent
-    )
-    if base is None:
-        return table.commit(
-            upserts, mode="overwrite", txn=txn,
-            expected_parent=expected_parent,
+    with _materialized(changes):
+        upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
+        all_keys = changes.select(*keys)
+
+        # snapshot-pinned like merge_into: compute against
+        # expected_parent, validate-and-rebase at publish (disjoint
+        # concurrent commits land)
+        base = (
+            table.latest_version() if expected_parent == "any"
+            else expected_parent
         )
-    m = table._load_manifest(base)
-    declared = _schema_from_json(m["schema"])
-    if _schema_key(declared) != _schema_key(upserts.schema):
-        raise SchemaMismatchError(
-            "changelog schema (minus op/seq) differs from table schema"
+        if base is None:
+            _check_probes(changes.agg(*probes).first())
+            return table.commit(
+                upserts, mode="overwrite", txn=txn,
+                expected_parent=expected_parent,
+            )
+        m = table._load_manifest(base)
+        declared = _schema_from_json(m["schema"])
+        if _schema_key(declared) != _schema_key(upserts.schema):
+            raise SchemaMismatchError(
+                "changelog schema (minus op/seq) differs from table schema"
+            )
+        types = {f.name: f.dataType for f in declared.fields}
+        # a group is touched if ANY change key (upsert OR delete) hits it
+        touched, untouched, probe_row = _split_touched_groups(
+            m, changes, keys, types, table_path=table.path,
+            extra_aggs=probes,
         )
-    types = {f.name: f.dataType for f in declared.fields}
-    # a group is touched if ANY change key (upsert OR delete) hits it
-    touched, untouched, _ = _split_touched_groups(
-        m, all_keys, keys, types, table_path=table.path
-    )
-    current = table._read_groups(spark, m, touched)
-    rewritten = current.join(all_keys, keys, "left_anti").unionByName(
-        upserts
-    )
-    group = os.path.join("data", uuid.uuid4().hex)
-    group_stats = _write_group_with_stats(
-        rewritten, os.path.join(table.path, group),
-        checks=m.get("constraints") or {},
-        bloom_cols=m.get("bloom_cols"),
-        bloom_bits=m.get("bloom_bits"),
-    )
-    stats = {
-        g: s
-        for g, s in (m.get("stats") or {}).items()
-        if g in set(untouched)
-    }
-    if group_stats is not None:
-        stats[group] = group_stats
-    entries = []
-    for e in m.get("delete_entries") or []:
-        applies = [g for g in e["applies_to"] if g in set(untouched)]
-        if applies:
-            entries.append({**e, "applies_to": applies})
-    return table._publish_or_rebase(
-        base,
-        {
-            "schema": m["schema"],
-            "groups": untouched + [group],
-            "mode": "overwrite",
-            "added": [group],
-            "delete_entries": entries,
-            "stats": stats,
-        },
-        txn=txn,
-        removed=touched,
-        update_box=lambda: _key_box(all_keys, keys, types),
-        update_membership=lambda lstats, gs: _rebase_bloom_membership(
-            all_keys, keys, lstats, gs, table.path
-        ),
-    )
+        if probe_row is None:  # no touch-test pass ran
+            probe_row = changes.agg(*probes).first()
+        _check_probes(probe_row)
+        current = table._read_groups(spark, m, touched)
+        rewritten = current.join(all_keys, keys, "left_anti").unionByName(
+            upserts
+        )
+        group = os.path.join("data", uuid.uuid4().hex)
+        group_stats = _write_group_with_stats(
+            rewritten, os.path.join(table.path, group),
+            checks=m.get("constraints") or {},
+            bloom_cols=m.get("bloom_cols"),
+            bloom_bits=m.get("bloom_bits"),
+        )
+        stats = {
+            g: s
+            for g, s in (m.get("stats") or {}).items()
+            if g in set(untouched)
+        }
+        if group_stats is not None:
+            stats[group] = group_stats
+        entries = []
+        for e in m.get("delete_entries") or []:
+            applies = [g for g in e["applies_to"] if g in set(untouched)]
+            if applies:
+                entries.append({**e, "applies_to": applies})
+        return table._publish_or_rebase(
+            base,
+            {
+                "schema": m["schema"],
+                "groups": untouched + [group],
+                "mode": "overwrite",
+                "added": [group],
+                "delete_entries": entries,
+                "stats": stats,
+            },
+            txn=txn,
+            removed=touched,
+            update_box=lambda: _key_box(all_keys, keys, types),
+            update_membership=lambda lstats, gs: _rebase_bloom_membership(
+                all_keys, keys, lstats, gs, table.path
+            ),
+        )
 
 
 def _parse_instant(ts) -> float:

@@ -8,7 +8,10 @@ snapshot_diff: O(delta) via the manifest shared-group skip), folds the
 rows into SIGNED grouped deltas (+1 for insert/update_postimage, -1
 for delete/update_preimage — an update that MOVES a row between groups
 decomposes naturally into -1 old group / +1 new group), and MERGEs
-them into the MV keyed on the group columns. At 100 TB this is the
+them into the MV keyed on the group columns. The deltas are handed to
+merge_into lazy: it materializes its source once for the whole merge
+(touch test, group write, rebase), so the upstream CDF diff and
+aggregation run once per refresh. At 100 TB this is the
 difference between a nightly full rescan and a seconds-long delta
 fold — the Delta Live Tables / classic incremental-view-maintenance
 design, built from parts this engine already has.
@@ -126,20 +129,6 @@ def _sweep_zero_groups(mv: VersionedTable, spark, rows_col: str) -> None:
         mv.delete_where(spark, F.col(rows_col) == 0, prune_where="auto")
     except CommitConflictError:
         pass  # next refresh's sweep converges the residue
-
-
-def _pin_deltas(df):
-    """Materialize a delta pipeline ONCE before merge_into consumes it:
-    the merge runs at least two actions over its source (touch test +
-    group write), and without a persist each action re-executes the
-    whole upstream CDF diff + aggregation — measured 3x the per-refresh
-    cost on the bench cycle (guide §1/§2: don't recompute). Deltas are
-    aggregate-sized (one row per touched group), so MEMORY_AND_DISK is
-    bounded; lineage is kept (unlike localCheckpoint) so executor loss
-    recomputes. Callers unpersist right after the merge commits."""
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _sign_col():
@@ -1254,32 +1243,29 @@ def refresh_mv(
                     nonzero = nonzero | (F.col(c) != 0)
                 for n in hist_names:
                     nonzero = nonzero | (F.size(F.col(n)) > 0)
-                deltas = _pin_deltas(deltas.filter(nonzero).select(
+                deltas = deltas.filter(nonzero).select(
                     *group_cols, *sum_cols, rows_col, *hist_names,
-                ))
-                try:
-                    merge_into(
-                        mv,
-                        spark,
-                        deltas,
-                        key=group_cols,
-                        when_matched={
-                            **{
-                                c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                                + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                                for c in [*sum_cols, rows_col]
-                            },
-                            **{
-                                n: _hist_merge_expr(n)
-                                for n in hist_names
-                            },
+                )
+                merge_into(
+                    mv,
+                    spark,
+                    deltas,
+                    key=group_cols,
+                    when_matched={
+                        **{
+                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                            for c in [*sum_cols, rows_col]
                         },
-                        txn={tag: cur},
-                        expected_parent=mv_v,
-                        source_unique=True,  # groupBy(group_cols) out
-                    )
-                finally:
-                    deltas.unpersist()
+                        **{
+                            n: _hist_merge_expr(n)
+                            for n in hist_names
+                        },
+                    },
+                    txn={tag: cur},
+                    expected_parent=mv_v,
+                    source_unique=True,  # groupBy(group_cols) out
+                )
             else:
                 sign = _sign_col()
                 is_add = sign == 1
@@ -1401,45 +1387,42 @@ def refresh_mv(
                         group_cols=group_cols,
                         distinct_cols=distinct_cols,
                     )
-                deltas = _pin_deltas(deltas.select(
+                deltas = deltas.select(
                     *group_cols, *sum_cols, rows_col, *sq_names,
                     *ext_names, *nd_names, *hll_names, *hist_names,
-                ))
-                try:
-                    merge_into(
-                        mv,
-                        spark,
-                        deltas,
-                        key=group_cols,
-                        when_matched={
-                            **{
-                                c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                                + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                                for c in [*sum_cols, rows_col, *sq_names]
-                            },
-                            # the source row already carries the FINAL
-                            # extreme (folded against the stored value /
-                            # exact-recomputed for endangered groups) —
-                            # and the FINAL distinct count from the aux
-                            **{
-                                n: F.col(f"s.{n}")
-                                for n in [
-                                    *ext_names, *nd_names, *hll_names
-                                ]
-                            },
-                            # histograms MERGE-combine: signed
-                            # per-bucket add, zero buckets dropped
-                            **{
-                                n: _hist_merge_expr(n)
-                                for n in hist_names
-                            },
+                )
+                merge_into(
+                    mv,
+                    spark,
+                    deltas,
+                    key=group_cols,
+                    when_matched={
+                        **{
+                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                            for c in [*sum_cols, rows_col, *sq_names]
                         },
-                        txn={tag: cur},
-                        expected_parent=mv_v,
-                        source_unique=True,  # groupBy(group_cols) out
-                    )
-                finally:
-                    deltas.unpersist()
+                        # the source row already carries the FINAL
+                        # extreme (folded against the stored value /
+                        # exact-recomputed for endangered groups) —
+                        # and the FINAL distinct count from the aux
+                        **{
+                            n: F.col(f"s.{n}")
+                            for n in [
+                                *ext_names, *nd_names, *hll_names
+                            ]
+                        },
+                        # histograms MERGE-combine: signed
+                        # per-bucket add, zero buckets dropped
+                        **{
+                            n: _hist_merge_expr(n)
+                            for n in hist_names
+                        },
+                    },
+                    txn={tag: cur},
+                    expected_parent=mv_v,
+                    source_unique=True,  # groupBy(group_cols) out
+                )
             _sweep_zero_groups(mv, spark, rows_col)
             if pin_watermark:
                 _pin_watermark(source, name, cur)
@@ -1547,28 +1530,25 @@ def _fold_aux(
                 )
                 if where_expr is not None:
                     cdf = cdf.filter(where_expr)
-                deltas = _pin_deltas(
+                deltas = (
                     cdf
                     .filter(F.col(col).isNotNull())
                     .groupBy(*group_cols, col)
                     .agg(F.sum(sign).cast("bigint").alias("cnt"))
                 )
-                try:
-                    merge_into(
-                        aux,
-                        spark,
-                        deltas,
-                        key=[*group_cols, col],
-                        when_matched={
-                            "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
-                            + F.coalesce(F.col("s.cnt"), F.lit(0))
-                        },
-                        txn={tag: cur},
-                        expected_parent=a_v,
-                        source_unique=True,  # groupBy(key) output
-                    )
-                finally:
-                    deltas.unpersist()
+                merge_into(
+                    aux,
+                    spark,
+                    deltas,
+                    key=[*group_cols, col],
+                    when_matched={
+                        "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
+                        + F.coalesce(F.col("s.cnt"), F.lit(0))
+                    },
+                    txn={tag: cur},
+                    expected_parent=a_v,
+                    source_unique=True,  # groupBy(key) output
+                )
             _sweep_zero_groups(aux, spark, "cnt")
             return
         except CommitConflictError:
@@ -2085,30 +2065,26 @@ def refresh_join_mv(
                         deltas, delta, group_cols, percentile_cols,
                         hist_base, F.col("__sign"),
                     )
-                deltas = _pin_deltas(deltas)
-                try:
-                    merge_into(
-                        mv,
-                        spark,
-                        deltas,
-                        key=group_cols,
-                        when_matched={
-                            **{
-                                c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                                + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                                for c in [*sum_cols, rows_col]
-                            },
-                            **{
-                                n: _hist_merge_expr(n)
-                                for n in hist_names
-                            },
+                merge_into(
+                    mv,
+                    spark,
+                    deltas,
+                    key=group_cols,
+                    when_matched={
+                        **{
+                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                            for c in [*sum_cols, rows_col]
                         },
-                        txn={tag_a: cur_a, tag_b: cur_b},
-                        expected_parent=mv_v,
-                        source_unique=True,  # groupBy(group_cols) out
-                    )
-                finally:
-                    deltas.unpersist()
+                        **{
+                            n: _hist_merge_expr(n)
+                            for n in hist_names
+                        },
+                    },
+                    txn={tag_a: cur_a, tag_b: cur_b},
+                    expected_parent=mv_v,
+                    source_unique=True,  # groupBy(group_cols) out
+                )
             _sweep_zero_groups(mv, spark, rows_col)
             if pin_watermark:
                 # pin BOTH sides: the next refresh reads A@watermark
@@ -2445,10 +2421,10 @@ def make_mv_maintainer(
                     group_cols=group_cols,
                     distinct_cols=distinct_cols,
                 )
-            deltas = _pin_deltas(deltas.select(
+            deltas = deltas.select(
                 *group_cols, *sum_cols, rows_col, *sq_names,
                 *ext_names, *nd_names, *hll_names, *hist_names,
-            ))
+            )
             try:
                 merge_into(
                     mv,
@@ -2474,8 +2450,6 @@ def make_mv_maintainer(
                 break
             except CommitConflictError:
                 continue  # concurrent delivery landed: re-check
-            finally:
-                deltas.unpersist()
         _sweep_zero_groups(mv, spark, rows_col)
 
     return write
@@ -2767,32 +2741,29 @@ def refresh_rollup_mv(
                     nonzero = nonzero | (F.col(c) != 0)
                 for n in hist_names:
                     nonzero = nonzero | (F.size(F.col(n)) > 0)
-                deltas = _pin_deltas(deltas.filter(nonzero).select(
+                deltas = deltas.filter(nonzero).select(
                     *group_cols, *fold_cols, rows_col, *hist_names,
-                ))
-                try:
-                    merge_into(
-                        mv,
-                        spark,
-                        deltas,
-                        key=group_cols,
-                        when_matched={
-                            **{
-                                c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                                + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                                for c in [*fold_cols, rows_col]
-                            },
-                            **{
-                                n: _hist_merge_expr(n)
-                                for n in hist_names
-                            },
+                )
+                merge_into(
+                    mv,
+                    spark,
+                    deltas,
+                    key=group_cols,
+                    when_matched={
+                        **{
+                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                            for c in [*fold_cols, rows_col]
                         },
-                        txn={tag: cur},
-                        expected_parent=mv_v,
-                        source_unique=True,  # groupBy(group_cols) out
-                    )
-                finally:
-                    deltas.unpersist()
+                        **{
+                            n: _hist_merge_expr(n)
+                            for n in hist_names
+                        },
+                    },
+                    txn={tag: cur},
+                    expected_parent=mv_v,
+                    source_unique=True,  # groupBy(group_cols) out
+                )
             else:
                 sign = _sign_col()
                 is_add = sign == 1
@@ -2872,37 +2843,34 @@ def refresh_rollup_mv(
                         source_where=source_where,
                         rollup_src=True,
                     )
-                deltas = _pin_deltas(deltas.select(
+                deltas = deltas.select(
                     *group_cols, *fold_cols, rows_col,
                     *ext_names, *hll_names, *hist_names,
-                ))
-                try:
-                    merge_into(
-                        mv,
-                        spark,
-                        deltas,
-                        key=group_cols,
-                        when_matched={
-                            **{
-                                c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                                + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                                for c in [*fold_cols, rows_col]
-                            },
-                            **{
-                                n: F.col(f"s.{n}")
-                                for n in [*ext_names, *hll_names]
-                            },
-                            **{
-                                n: _hist_merge_expr(n)
-                                for n in hist_names
-                            },
+                )
+                merge_into(
+                    mv,
+                    spark,
+                    deltas,
+                    key=group_cols,
+                    when_matched={
+                        **{
+                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                            for c in [*fold_cols, rows_col]
                         },
-                        txn={tag: cur},
-                        expected_parent=mv_v,
-                        source_unique=True,  # groupBy(group_cols) out
-                    )
-                finally:
-                    deltas.unpersist()
+                        **{
+                            n: F.col(f"s.{n}")
+                            for n in [*ext_names, *hll_names]
+                        },
+                        **{
+                            n: _hist_merge_expr(n)
+                            for n in hist_names
+                        },
+                    },
+                    txn={tag: cur},
+                    expected_parent=mv_v,
+                    source_unique=True,  # groupBy(group_cols) out
+                )
             _sweep_zero_groups(mv, spark, rows_col)
             if pin_watermark:
                 _pin_watermark(fine, name, cur)

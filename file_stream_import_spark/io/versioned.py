@@ -898,27 +898,19 @@ def _group_fully_contained(gstats: dict | None, where: dict) -> bool:
     return True
 
 
-# write-side AQE file sizing for data-group writes (see the REBALANCE
-# note inside _write_group_with_stats); env-gated so an A/B can compare:
-#   "0"     — never rebalance (pre-r16 layout)
-#   "1"     — rebalance only when the delta is estimated small (default)
-#   "force" — always rebalance (the un-gated r16 behavior, for A/Bs)
-_WRITE_REBALANCE = os.environ.get("SPARK_GRAFT_WRITE_REBALANCE", "1")
-# Size gate for the hint: only deltas at most this many estimated bytes
-# get the extra shuffle. Default 256 MB = 4x the 64 MB AQE advisory — a
-# cluster that raises advisoryPartitionSizeInBytes should raise this in
-# step. Rationale: the small-files pathology the hint fixes only exists
-# for small deltas (a 1k-row commit landing as one ~30-row file per
-# upstream partition); for a large delta the shuffle is a full extra
-# pass over the data that buys nothing locally (measured 1.7x slower on
-# a 20M-row/280 MB commit with the file count UNCHANGED at 32 either
+# Size gate for the write-side REBALANCE hint (see _size_write_delta):
+# only deltas of at most this many estimated bytes get the extra
+# shuffle. 256 MB = 4x the 64 MB AQE advisory — a cluster that raises
+# advisoryPartitionSizeInBytes should raise this in step. Rationale:
+# the small-files pathology the hint fixes only exists for small
+# deltas (a 1k-row commit landing as one ~30-row file per upstream
+# partition); for a large delta the shuffle is a full extra pass over
+# the data that buys nothing locally (measured 1.7x slower on a
+# 20M-row/280 MB commit with the file count UNCHANGED at 32 either
 # way, because AQE's default parallelism-first coalescing targets
-# bytes/cores, not the advisory — tools/ab_write_rebalance.py).
-_WRITE_REBALANCE_MAX_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_WRITE_REBALANCE_MAX_BYTES", str(256 << 20)
-    )
-)
+# bytes/cores, not the advisory — measured when the gate landed,
+# revision 9f98adb).
+_WRITE_REBALANCE_MAX_BYTES = 256 << 20
 # Plans whose leaves have no real statistics (e.g. LogicalRDD from a
 # localCheckpoint, createDataFrame over Python rows, or a foreachBatch
 # micro-batch that commit() appends) report the defaultSizeInBytes
@@ -947,9 +939,15 @@ def _write_size_estimate(df: DataFrame) -> int | None:
     return est
 
 
+_BYTE_STRINGS: dict = {}
+
+
 def _advisory_bytes(spark) -> int:
-    """AQE's advisory partition size (the write-sizing target), parsed
-    from the session conf; 64 MB fallback mirrors session.py."""
+    """AQE's advisory partition size (the write-sizing target) from the
+    session conf, parsed by Spark's own byte-string parser (so "1t" or
+    "134217728b" read as Spark reads them); 64 MB fallback mirrors
+    session.py. Memoized per raw string: the JVM class lookup costs 8
+    py4j round trips, the conf read 2."""
     raw = "64m"
     try:
         raw = spark.conf.get(
@@ -957,33 +955,53 @@ def _advisory_bytes(spark) -> int:
         )
     except Exception:  # pragma: no cover
         pass
-    raw = str(raw).strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if raw.endswith(suf + "b"):
-            raw, mult = raw[:-2], m
-            break
-        if raw.endswith(suf):
-            raw, mult = raw[:-1], m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:  # pragma: no cover
-        return 64 << 20
+    hit = _BYTE_STRINGS.get(raw)
+    if hit is None:
+        try:
+            hit = int(
+                spark._jvm.org.apache.spark.network.util.JavaUtils
+                .byteStringAsBytes(str(raw))
+            )
+        except Exception:  # pragma: no cover — py4j/connect edge
+            hit = 64 << 20
+        _BYTE_STRINGS[raw] = hit
+    return hit
 
 
-def _delta_small_enough(df: DataFrame) -> bool:
-    """True when the optimizer's size estimate says the about-to-be-
-    written delta is small enough that per-upstream-partition layout
-    could produce pathological tiny files — the case the REBALANCE
-    hint exists for. Unknown estimates return True: the unknown-stats
-    shapes (appended micro-batches, checkpointed fixtures) are mostly
-    small commits that need the protection, and a misjudged large one
-    merely pays one bounded delta shuffle."""
+def _size_write_delta(df: DataFrame) -> DataFrame:
+    """Write-side file sizing (guide §6) for one data-group write.
+
+    A commit delta arriving in N upstream partitions otherwise lands as
+    N files regardless of size — a 1k-row exactly-once commit on
+    local[32] wrote 32 ~30-row files, and the per-file-planned
+    changefeed then fanned a tiny catch-up into 256 Python tasks. Three
+    outcomes, by the optimizer's size estimate:
+
+    * over _WRITE_REBALANCE_MAX_BYTES: ``df`` as is — a LARGE delta
+      keeps its upstream partitioning; there the extra shuffle costs a
+      full pass over the data and cannot produce the tiny-files
+      pathology anyway.
+    * KNOWN and at most the AQE advisory size: ``coalesce(1)`` — the
+      rebalance would coalesce to ONE partition anyway, and coalesce
+      produces the identical single-file layout with ZERO shuffle (the
+      hint pays an exchange + one AQE stage materialization per write;
+      an MV-refresh cycle runs several).
+    * anything else, unknown estimates included: a REBALANCE hint,
+      which makes AQE coalesce the write to advisory-sized partitions —
+      one bounded shuffle of the delta, the Iceberg
+      write.distribution-mode analog. The unknown-stats shapes
+      (appended micro-batches, checkpointed fixtures) are mostly small
+      commits that need the protection; coalesce on a misjudged large
+      one would serialize the whole write onto one task.
+
+    Sorted/clustered layouts do NOT pass through here (_cluster_write
+    has its own kernel), so no ordering is destroyed."""
     est = _write_size_estimate(df)
-    if est is None:
-        return True
-    return est <= _WRITE_REBALANCE_MAX_BYTES
+    if est is not None and est > _WRITE_REBALANCE_MAX_BYTES:
+        return df
+    if est is not None and est <= _advisory_bytes(df.sparkSession):
+        return df.coalesce(1)
+    return df.hint("rebalance")
 
 
 _STATS_EXPR_CACHE: dict = {}
@@ -1062,41 +1080,7 @@ def _write_group_with_stats(
     PASSES (only FALSE violates)."""
     from pyspark.sql import Observation
 
-    # Write-side file sizing (guide §6): a commit delta arriving in N
-    # upstream partitions otherwise lands as N files regardless of
-    # size — a 1k-row exactly-once commit on local[32] wrote 32
-    # ~30-row files, and the per-file-planned changefeed then fanned a
-    # tiny catch-up into 256 Python tasks. A REBALANCE hint makes AQE
-    # coalesce the write to advisoryPartitionSizeInBytes-sized
-    # partitions (64 MB default; a cluster raises the advisory conf,
-    # so the knob is already scale-parameterized) — one bounded
-    # shuffle of the commit delta, the Iceberg
-    # write.distribution-mode analog. Sorted/clustered layouts do NOT
-    # pass through here (_cluster_write has its own kernel), so no
-    # ordering is destroyed. Size-gated by _delta_small_enough: a
-    # LARGE delta keeps its upstream partitioning — there the extra
-    # shuffle costs a full pass over the data and cannot produce the
-    # tiny-files pathology anyway (tools/ab_write_rebalance.py
-    # measured 1.7x on a 280 MB commit, file count unchanged).
-    # SPARK_GRAFT_WRITE_REBALANCE=0 restores the old behavior
-    # entirely; "force" skips the size gate.
-    if _WRITE_REBALANCE == "force":
-        df = df.hint("rebalance")
-    elif _WRITE_REBALANCE != "0":
-        est = _write_size_estimate(df)
-        if est is not None and est > _WRITE_REBALANCE_MAX_BYTES:
-            pass  # large delta: keep its upstream layout (r16 gate)
-        elif est is not None and est <= _advisory_bytes(df.sparkSession):
-            # KNOWN sub-advisory delta (r17): the rebalance would
-            # coalesce to ONE partition anyway — coalesce(1) produces
-            # the identical single-file layout with ZERO shuffle (the
-            # hint pays an exchange + one AQE stage materialization
-            # per write; an MV-refresh cycle runs several). Unknown
-            # estimates keep the hint: coalesce on a misjudged large
-            # delta would serialize the whole write onto one task.
-            df = df.coalesce(1)
-        else:
-            df = df.hint("rebalance")
+    df = _size_write_delta(df)
     checks = checks or {}
     cols = [f for f in df.schema.fields if _stats_eligible(f.dataType)]
     if not cols and not checks and not bloom_cols:

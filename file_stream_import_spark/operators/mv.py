@@ -56,13 +56,9 @@ _ROWS = "n_rows"
 # no min/max/HLL/exact-distinct, no double sums, no sumsq), the
 # refresh folds table_signed_rows directly by the GROUP columns: the
 # keyed CDF's per-key shuffle and pair join disappear (unchanged rows
-# cancel exactly). "0" restores the keyed-CDF fold for A/Bs. Ranges
-# past _CDF_PLAN_CHUNK pairs keep the CDF path (its chunked
-# evaluation bounds Catalyst analysis; the signed fold has no chunk
-# machinery).
-import os as _os
-
-_SIGNED_FOLD = _os.environ.get("SPARK_GRAFT_MV_SIGNED_FOLD", "1")
+# cancel exactly). Every other spec folds the keyed CDF, as do ranges
+# past _CDF_PLAN_CHUNK pairs (its chunked evaluation bounds Catalyst
+# analysis; the signed fold has no chunk machinery).
 
 # endangered-group keys are collected driver-side only up to this cap
 # (to drive the group-pruned exact read); a larger set falls back to a
@@ -1191,20 +1187,19 @@ def refresh_mv(
                     expected_parent=mv_v,
                 )
             elif (
-                _SIGNED_FOLD != "0"
-                and not ext_names
+                not ext_names
                 and not nd_names
                 and not hll_names
                 and not sumsq_cols
                 and all(ftypes[c] != "double" for c in sum_cols)
                 and cur - wm <= _CDF_PLAN_CHUNK
             ):
-                # DIRECT SIGNED FOLD (see module knob note): every
-                # maintained aggregate here is linear in the row
-                # multiset over exact arithmetic, so folding ALL rows
-                # of the differing groups (±) equals folding the keyed
-                # CDF delta — unchanged rows cancel exactly — with no
-                # per-key shuffle and no pair join.
+                # DIRECT SIGNED FOLD (see the module signed-fold
+                # note): every maintained aggregate here is linear in
+                # the row multiset over exact arithmetic, so folding
+                # ALL rows of the differing groups (±) equals folding
+                # the keyed CDF delta — unchanged rows cancel exactly —
+                # with no per-key shuffle and no pair join.
                 needed = (
                     None
                     if source_where is not None
@@ -2691,18 +2686,18 @@ def refresh_rollup_mv(
                     expected_parent=mv_v,
                 )
             elif (
-                _SIGNED_FOLD != "0"
-                and not ext_names
+                not ext_names
                 and not hll_names
                 and all(ftypes[c] != "double" for c in fold_cols)
                 and cur - wm <= _CDF_PLAN_CHUNK
             ):
                 # DIRECT SIGNED FOLD over fine-MV rows (see refresh_mv
-                # and the module knob note): coarse sums, the weighted
-                # row count, and signed histogram merges are all linear
-                # in the fine-row multiset over exact arithmetic, so ±
-                # fine rows fold to the same coarse delta as the keyed
-                # fine CDF — unchanged fine groups cancel exactly.
+                # and the module signed-fold note): coarse sums, the
+                # weighted row count, and signed histogram merges are
+                # all linear in the fine-row multiset over exact
+                # arithmetic, so ± fine rows fold to the same coarse
+                # delta as the keyed fine CDF — unchanged fine groups
+                # cancel exactly.
                 # (fold_cols includes <c>_sumsq only when the fine MV
                 # declares it, and those are double — the gate above
                 # keeps such specs on the CDF path.)

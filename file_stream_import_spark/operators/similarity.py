@@ -10,7 +10,6 @@ loop, and bit-identical to an oracle computing in double precision.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -501,8 +500,8 @@ def _neardup_exact_kernel(
     vectors PER PAIR (~2 GB at sf0.1); this ships each vector P+1
     times (~30 MB) and does the pairing inside the kernel.
 
-    Value-identical to the JVM fold (see _make_neardup_exact_fn), with
-    the JVM path kept for A/B under SPARK_GRAFT_COSINE_KERNEL=jvm.
+    Value-identical to the JVM fold (see _make_neardup_exact_fn and
+    _neardup_exact_jvm, the path for non-integral ids).
     Rows the JVM condition could never match — NULL id, NULL vector, a
     NULL element anywhere (zip_with's NULL poisons the whole fold) —
     bypass the kernel entirely and survive, exactly as the anti join
@@ -524,9 +523,7 @@ def _neardup_exact_kernel(
     passthrough = base.filter(~F.col("_ok")).select(
         F.col("_id").alias(id_col)
     )
-    n_slices = int(
-        os.environ.get("SPARK_GRAFT_COSINE_SLICES", "0")
-    ) or spark.sparkContext.defaultParallelism
+    n_slices = spark.sparkContext.defaultParallelism
     sliced = clean.withColumn(
         "_g", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_slices))
     )
@@ -557,6 +554,44 @@ def _neardup_exact_kernel(
     return survivors.unionByName(passthrough)
 
 
+def _neardup_exact_jvm(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    min_cos: float,
+) -> DataFrame:
+    """Exact O(n²) cosine dedup as ONE broadcast nested-loop LEFT ANTI
+    join whose condition is the thresholded cosine — the literal NOT
+    EXISTS shape (r16). The path for ids the numpy kernel cannot order
+    like the JVM (non-integral types), and the reference the kernel is
+    tested against.
+
+    Three wins over the old inner-join → distinct → anti-join form,
+    none changing the result: the anti join SHORT-CIRCUITS each row at
+    its first qualifying smaller-id neighbor (the inner join scored
+    every pair); the norms fold once per ROW instead of once per PAIR
+    (hoisted columns, bit-identical — see _cos_with_norms); and the
+    doomed-set distinct + second join disappear. Measured sf0.1 (2,000
+    vectors): 63s → 10.6s."""
+    ids = vectors.select(id_col, vec_col)
+    a = ids.select(
+        F.col(id_col).alias("id_a"),
+        F.col(vec_col).cast("array<double>").alias("va"),
+    ).withColumn("na", _norm(F.col("va")))
+    b = ids.select(
+        F.col(id_col).alias("id_b"),
+        F.col(vec_col).cast("array<double>").alias("vb"),
+    ).withColumn("nb", _norm(F.col("vb")))
+    # survives ⟺ no smaller-id row with cosine ≥ min_cos exists
+    cond = (F.col("id_a") < F.col("id_b")) & (
+        _cos_with_norms(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+        >= F.lit(min_cos)
+    )
+    return b.join(F.broadcast(a), cond, "left_anti").select(
+        F.col("id_b").alias(id_col)
+    )
+
+
 def cosine_neardup_dedup(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -576,50 +611,19 @@ def cosine_neardup_dedup(
     candidate pairs first (ann_lsh_pairs), so only colliding pairs are
     scored; same keep-smallest-id rule applied to the approximate pair set.
 
-    The exact path (r16) runs as ONE broadcast nested-loop LEFT ANTI
-    join whose condition is the thresholded cosine — the literal NOT
-    EXISTS shape. Three wins over the old inner-join → distinct →
-    anti-join form, none changing the result: the anti join
-    SHORT-CIRCUITS each row at its first qualifying smaller-id
-    neighbor (the inner join scored every pair); the norms fold once
-    per ROW instead of once per PAIR (hoisted columns, bit-identical —
-    see _cos_with_norms); and the doomed-set distinct + second join
-    disappear. Measured sf0.1 (2,000 vectors): 63s → 10.6s.
+    The exact path runs the numpy kernel (_neardup_exact_kernel) when
+    the id type is integral and the JVM anti join (_neardup_exact_jvm)
+    otherwise; both keep the same rows.
     """
-    ids = vectors.select(id_col, vec_col)
     if exact:
         from pyspark.sql.types import (
             ByteType, IntegerType, LongType, ShortType,
         )
 
         id_type = vectors.schema[id_col].dataType
-        use_kernel = os.environ.get(
-            "SPARK_GRAFT_COSINE_KERNEL", "pandas"
-        ) != "jvm" and isinstance(
-            id_type, (ByteType, ShortType, IntegerType, LongType)
-        )
-        if use_kernel:
-            return _neardup_exact_kernel(
-                vectors, id_col, vec_col, min_cos
-            )
-        a = ids.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).cast("array<double>").alias("va"),
-        ).withColumn("na", _norm(F.col("va")))
-        b = ids.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).cast("array<double>").alias("vb"),
-        ).withColumn("nb", _norm(F.col("vb")))
-        # survives ⟺ no smaller-id row with cosine ≥ min_cos exists
-        cond = (F.col("id_a") < F.col("id_b")) & (
-            _cos_with_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            )
-            >= F.lit(min_cos)
-        )
-        return b.join(F.broadcast(a), cond, "left_anti").select(
-            F.col("id_b").alias(id_col)
-        )
+        if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+            return _neardup_exact_kernel(vectors, id_col, vec_col, min_cos)
+        return _neardup_exact_jvm(vectors, id_col, vec_col, min_cos)
     dup_pairs = ann_lsh_pairs(
         vectors, id_col, vec_col, num_planes=num_planes,
         min_cos=min_cos, dim=dim,

@@ -117,17 +117,6 @@ class TestBucketedJoin:
             spark.sql("DROP TABLE IF EXISTS t_o_bucketed")
 
 
-class TestIngestMetrics:
-    def test_observe_counts_rows_in_one_pass(self, spark, sf_dir):
-        from file_stream_import_spark.io.metrics import with_ingest_metrics
-
-        orders = load_table(spark, sf_dir, "orders")
-        observed, obs = with_ingest_metrics(orders, "o9")
-        n = observed.count()  # the "real job"; metrics ride along
-        assert obs.get["n_rows"] == n
-        assert obs.get["n_key_nulls"] == 0
-
-
 class TestOrcAndText:
     def test_orc_round_trip_and_filter_pushdown(self, spark, sf_dir, tmp_path):
         import pytest

@@ -323,44 +323,86 @@ class TestWriteFileSizing:
 
 
 class TestRebalanceSizeGate:
-    """The REBALANCE hint is size-gated: only deltas the optimizer
-    estimates small get the extra shuffle. A large delta keeps its
+    """_size_write_delta, the gate every data-group write passes
+    through: a delta the optimizer estimates over the gate keeps its
     upstream partitioning (the shuffle there is a full extra pass that
     cannot fix a tiny-files pathology it does not have — measured 1.7x
-    on a 280 MB commit with the file count unchanged,
-    tools/ab_write_rebalance.py)."""
+    on a 280 MB commit with the file count unchanged, revision
+    9f98adb); a known sub-advisory delta is coalesced to one partition;
+    everything else gets the REBALANCE hint."""
+
+    @staticmethod
+    def _gated(df):
+        from file_stream_import_spark.io.versioned import (
+            _size_write_delta,
+        )
+
+        out = _size_write_delta(df)
+        return out, out._jdf.queryExecution().analyzed().toString()
+
+    def test_sub_advisory_estimate_coalesces(self, spark):
+        _, plan = self._gated(
+            spark.range(1000).selectExpr("id as k", "id * 2 as v")
+        )
+        assert "Repartition 1, false" in plan
+        assert "RebalancePartitions" not in plan
 
     def test_small_estimate_rebalances(self, spark):
         from file_stream_import_spark.io.versioned import (
-            _delta_small_enough,
+            _WRITE_REBALANCE_MAX_BYTES,
+            _advisory_bytes,
+            _write_size_estimate,
         )
 
-        assert _delta_small_enough(spark.range(1000).selectExpr(
-            "id as k", "id * 2 as v"
-        ))
+        # over the 64 MB advisory, under the 256 MB gate
+        df = spark.range(20_000_000)
+        est = _write_size_estimate(df)
+        assert _advisory_bytes(spark) < est <= _WRITE_REBALANCE_MAX_BYTES
+        _, plan = self._gated(df)
+        assert "RebalancePartitions" in plan
 
     def test_large_estimate_skips(self, spark):
-        from file_stream_import_spark.io.versioned import (
-            _delta_small_enough,
-        )
-
         # Range reports exact rows x width stats without running a
         # job: 10^9 rows x 8 B >> the 256 MB gate
-        assert not _delta_small_enough(spark.range(1_000_000_000))
+        df = spark.range(1_000_000_000)
+        out, _ = self._gated(df)
+        assert out is df
 
     def test_unknown_estimate_rebalances(self, spark):
-        """LogicalRDD-backed plans (localCheckpoint, foreachBatch
-        micro-batch deltas) report the defaultSizeInBytes sentinel —
-        exactly the exactly-once small-commit shapes the hint exists
-        for, so unknown must mean rebalance."""
+        """RDD-backed plans (foreachBatch micro-batch deltas) report
+        the defaultSizeInBytes sentinel — exactly the exactly-once
+        small-commit shapes the hint exists for, so unknown must mean
+        rebalance, never coalesce(1)."""
         from file_stream_import_spark.io.versioned import (
-            _delta_small_enough,
+            _write_size_estimate,
         )
 
-        df = spark.range(100).selectExpr("id as k").localCheckpoint(
-            eager=True
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize([(i,) for i in range(100)]),
+            "k long",
         )
-        assert _delta_small_enough(df)
+        assert _write_size_estimate(df) is None
+        _, plan = self._gated(df)
+        assert "RebalancePartitions" in plan
+        assert "Repartition 1, false" not in plan
+
+    def test_advisory_bytes_reads_spark_byte_strings(self, spark):
+        """The advisory conf is parsed as Spark parses it: a bare
+        ``b`` suffix and ``1g`` read their real sizes."""
+        from file_stream_import_spark.io.versioned import _advisory_bytes
+
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        old = spark.conf.get(key)
+        try:
+            for raw, want in (
+                ("64m", 64 << 20),
+                ("134217728b", 128 << 20),
+                ("1g", 1 << 30),
+            ):
+                spark.conf.set(key, raw)
+                assert _advisory_bytes(spark) == want, raw
+        finally:
+            spark.conf.set(key, old)
 
     def test_large_commit_keeps_upstream_layout(self, spark, tmp_path):
         """End-to-end: a delta estimated over the gate writes one file
@@ -406,39 +448,44 @@ class TestSignedDirectFold:
             map(tuple, mv.read(spark).collect()), key=str
         )
 
-    def test_fast_and_cdf_paths_agree_through_dml(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Same DML history folded under SPARK_GRAFT_MV_SIGNED_FOLD
-        on/off lands byte-identical MV rows — updates, group moves,
-        deletes, multi-commit refresh windows."""
+    def test_fast_and_cdf_paths_agree_through_dml(self, spark, tmp_path):
+        """Every refresh of the same DML history — updates, group
+        moves, deletes, multi-commit refresh windows — equals a
+        from-scratch groupBy of the source, for the linear spec (signed
+        fold) and for the same spec plus min_cols (keyed-CDF fold)."""
         from file_stream_import_spark.operators import mv as M
         from file_stream_import_spark.io.versioned import apply_changes
 
-        results = {}
-        for mode in ("1", "0"):
-            monkeypatch.setattr(M, "_SIGNED_FOLD", mode)
-            t = VersionedTable(str(tmp_path / f"t{mode}"))
-            view = VersionedTable(str(tmp_path / f"v{mode}"))
-            mk = lambda rows: spark.createDataFrame(
-                rows, "k long, g string, x long"
-            )
+        mk = lambda rows: spark.createDataFrame(
+            rows, "k long, g string, x long"
+        )
+        for tag, extra in (("lin", {}), ("min", {"min_cols": ["x"]})):
+            t = VersionedTable(str(tmp_path / f"t{tag}"))
+            view = VersionedTable(str(tmp_path / f"v{tag}"))
+            aggs = [F.sum("x").alias("x"), F.count("*").alias("n_rows")]
+            aggs += [F.min("x").alias("x_min")] if extra else []
+
+            def refresh_and_check():
+                M.refresh_mv(
+                    t, view, spark, name="m", group_cols=["g"],
+                    sum_cols=["x"], key="k", **extra,
+                )
+                want = t.read(spark).groupBy("g").agg(*aggs)
+                got = view.read(spark).select(*want.columns)
+                assert sorted(map(tuple, got.collect()), key=str) == sorted(
+                    map(tuple, want.collect()), key=str
+                ), tag
+
             t.commit(
                 mk([(i, "ab"[i % 2], i * 10) for i in range(20)]),
                 mode="overwrite",
             )
-            M.refresh_mv(
-                t, view, spark, name="m", group_cols=["g"],
-                sum_cols=["x"], key="k",
-            )
+            refresh_and_check()
             # one refresh per commit, then one spanning two commits
             merge_into(
                 t, spark, mk([(1, "a", 999), (20, "b", 5)]), key="k"
             )
-            M.refresh_mv(
-                t, view, spark, name="m", group_cols=["g"],
-                sum_cols=["x"], key="k",
-            )
+            refresh_and_check()
             apply_changes(
                 t, spark,
                 spark.createDataFrame(
@@ -449,12 +496,7 @@ class TestSignedDirectFold:
                 key="k",
             )
             t.delete_where(spark, F.col("k").between(10, 12))
-            M.refresh_mv(
-                t, view, spark, name="m", group_cols=["g"],
-                sum_cols=["x"], key="k",
-            )
-            results[mode] = self._mv_rows(spark, view)
-        assert results["1"] == results["0"]
+            refresh_and_check()
 
     def test_fast_path_is_taken_and_gated(
         self, spark, tmp_path, monkeypatch
@@ -758,19 +800,16 @@ class TestVecmathHoistAnti:
         assert got == want
         assert 0 < len(got) < 40  # planted dups actually pruned
 
-    def test_exact_dedup_plan_is_single_anti_join(
-        self, spark, vecs, monkeypatch
-    ):
-        # r17 made the numpy cogroup kernel the default; this pins the
-        # PRESERVED JVM arm (SPARK_GRAFT_COSINE_KERNEL=jvm) — see
+    def test_exact_dedup_plan_is_single_anti_join(self, spark, vecs):
+        # r17 made the numpy cogroup kernel the path for integral ids;
+        # this pins the JVM anti join (the non-integral-id path) — see
         # test_r17_optimizations for the kernel-path plan shape
-        monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "jvm")
         from file_stream_import_spark.operators.similarity import (
-            cosine_neardup_dedup,
+            _neardup_exact_jvm,
         )
 
         plan = (
-            cosine_neardup_dedup(vecs, min_cos=0.4, exact=True)
+            _neardup_exact_jvm(vecs, "vec_id", "embedding", 0.4)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

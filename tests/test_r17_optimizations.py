@@ -12,24 +12,34 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _sorted_ids(df):
+    return sorted(
+        (r[0] if r[0] is not None else -10**9) for r in df.collect()
+    )
+
+
 def _survivors(df, min_cos=0.4):
     from file_stream_import_spark.operators.similarity import (
         cosine_neardup_dedup,
     )
 
-    return sorted(
-        (r[0] if r[0] is not None else -10**9)
-        for r in cosine_neardup_dedup(
-            df, min_cos=min_cos, exact=True
-        ).collect()
+    return _sorted_ids(cosine_neardup_dedup(df, min_cos=min_cos, exact=True))
+
+
+def _jvm_survivors(df, min_cos=0.4):
+    from file_stream_import_spark.operators.similarity import (
+        _neardup_exact_jvm,
     )
+
+    return _sorted_ids(_neardup_exact_jvm(df, "vec_id", "embedding", min_cos))
 
 
 class TestCosineKernel:
-    """r17: the exact cosine dedup runs as a cogrouped numpy kernel
-    (rows cross the Arrow boundary, pairs never do) that must be
-    VALUE-IDENTICAL to the preserved JVM anti-join arm — same
-    dim-ordered IEEE accumulation, same NaN-matches / NULL-survives /
+    """r17: the exact cosine dedup over integral ids runs as a
+    cogrouped numpy kernel (rows cross the Arrow boundary, pairs never
+    do) that must be VALUE-IDENTICAL to the JVM anti join
+    (_neardup_exact_jvm, the non-integral-id path) — same dim-ordered
+    IEEE accumulation, same NaN-matches / NULL-survives /
     zero-norm-raises semantics."""
 
     @pytest.fixture()
@@ -51,21 +61,15 @@ class TestCosineKernel:
             rows, "vec_id bigint, embedding array<float>"
         )
 
-    def _both_arms(self, df, monkeypatch, min_cos=0.4):
-        monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "pandas")
-        got = _survivors(df, min_cos)
-        monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "jvm")
-        want = _survivors(df, min_cos)
-        return got, want
+    def _both_arms(self, df, min_cos=0.4):
+        return _survivors(df, min_cos), _jvm_survivors(df, min_cos)
 
-    def test_kernel_equals_jvm_on_clusters(
-        self, spark, clustered, monkeypatch
-    ):
-        got, want = self._both_arms(clustered, monkeypatch)
+    def test_kernel_equals_jvm_on_clusters(self, spark, clustered):
+        got, want = self._both_arms(clustered)
         assert got == want
         assert 0 < len(got) < 60  # planted dups actually pruned
 
-    def test_kernel_edge_semantics_match_jvm(self, spark, monkeypatch):
+    def test_kernel_edge_semantics_match_jvm(self, spark):
         # NaN element (cosine NaN matches: Spark NaN > everything),
         # NULL element / NULL vector / NULL id (cosine or id-compare
         # NULL: never matches, row survives), mismatched lengths
@@ -87,13 +91,13 @@ class TestCosineKernel:
         d = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>"
         )
-        got, want = self._both_arms(d, monkeypatch)
+        got, want = self._both_arms(d)
         assert got == want
         # NaN row 6 dooms 7 and 8; 5 doomed by 1; NULL-ish rows and
         # the duplicate-id pair survive
         assert got == [-10**9, 1, 2, 3, 6, 9]
 
-    def test_zero_norm_raises_on_both_arms(self, spark, monkeypatch):
+    def test_zero_norm_raises_on_both_arms(self, spark):
         # ANSI mode (Spark 4 default): division by the zero norm
         # raises; the kernel mirrors the JVM arm including the And
         # short-circuit (only id_a < id_b cells evaluate the division)
@@ -101,14 +105,11 @@ class TestCosineKernel:
             [(1, [0.0, 0.0]), (2, [0.0, 0.0])],
             "vec_id long, embedding array<double>",
         )
-        for arm in ("pandas", "jvm"):
-            monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", arm)
+        for arm in (_survivors, _jvm_survivors):
             with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                _survivors(d)
+                arm(d)
 
-    def test_single_zero_norm_smallest_id_no_pair_no_raise(
-        self, spark, monkeypatch
-    ):
+    def test_single_zero_norm_smallest_id_no_pair_no_raise(self, spark):
         # a zero-norm vector whose id is the LARGEST never sits on the
         # small-id side of an evaluated cell on the jvm arm only when
         # no id_a < id_b pair exists at all; with one row there are no
@@ -116,12 +117,10 @@ class TestCosineKernel:
         d = spark.createDataFrame(
             [(1, [0.0, 0.0])], "vec_id long, embedding array<double>"
         )
-        for arm in ("pandas", "jvm"):
-            monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", arm)
-            assert _survivors(d) == [1]
+        for arm in (_survivors, _jvm_survivors):
+            assert arm(d) == [1]
 
-    def test_kernel_plan_shape(self, spark, clustered, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "pandas")
+    def test_kernel_plan_shape(self, spark, clustered):
         from file_stream_import_spark.operators.similarity import (
             cosine_neardup_dedup,
         )
@@ -139,13 +138,10 @@ class TestCosineKernel:
         assert "LeftAnti" not in plan
         assert "zip_with" not in plan
 
-    def test_non_integral_id_falls_back_to_jvm(
-        self, spark, monkeypatch
-    ):
+    def test_non_integral_id_falls_back_to_jvm(self, spark):
         # string ids order differently in numpy (UTF-32 code points)
         # than in the JVM (binary); the kernel is gated to integral id
-        # types and everything else keeps the anti-join arm
-        monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL", raising=False)
+        # types and everything else takes the anti join
         d = spark.createDataFrame(
             [("a", [1.0, 0.0]), ("b", [1.0, 0.0001])],
             "vec_id string, embedding array<double>",

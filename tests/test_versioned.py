@@ -737,19 +737,20 @@ class TestChangefeedPartitionedReader:
         import file_stream_import_spark.io.versioned as V
 
         t = VersionedTable(str(tmp_path / "t"))
-        # pin the multi-file fixture shape: the r16 write-side
-        # REBALANCE would coalesce 3 tiny partitions into one file
-        # (by design); this test is about per-FILE planning, so it
-        # writes the old layout explicitly
-        old = V._WRITE_REBALANCE
-        V._WRITE_REBALANCE = "0"
+        # pin the multi-file fixture shape: the write-side size gate
+        # would coalesce 3 tiny partitions into one file (by design);
+        # this test is about per-FILE planning, so it drops the gate to
+        # 1 byte — _df is spark.range-backed, so its size estimate is
+        # real and "large" keeps the upstream layout
+        old = V._WRITE_REBALANCE_MAX_BYTES
+        V._WRITE_REBALANCE_MAX_BYTES = 1
         try:
             t.commit(
                 _df(spark, 0, 10).repartition(3), mode="overwrite"
             )  # v0: one group, 3 files
             t.commit(_df(spark, 10, 14).coalesce(1))  # v1: 1 file
         finally:
-            V._WRITE_REBALANCE = old
+            V._WRITE_REBALANCE_MAX_BYTES = old
         r = TableChangefeedPartitionedReader({"path": t.path})
         full = r.partitions(
             {"next_version": 0}, {"next_version": 2}

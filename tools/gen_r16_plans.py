@@ -12,8 +12,8 @@ for the three diff-backed paths:
   lake_mv_signed_fold     — the grouped delta a LINEAR MV spec now
                             folds (table_signed_rows → groupBy):
                             'before' is the same delta through the
-                            keyed CDF (SPARK_GRAFT_MV_SIGNED_FOLD=0
-                            shape)
+                            keyed CDF (how a linear spec refreshed
+                            before r16)
 
 Usage: python tools/gen_r16_plans.py [suffix]   (default: after)
 Writes plans/r16/<name>_<suffix>.txt.
@@ -95,8 +95,8 @@ def main() -> None:
         if suffix == "before":
             # round-start 'before' files are historical evidence —
             # never overwrite them; 'before' mode regenerates ONLY the
-            # keyed-CDF shape of the signed-fold grouped delta (what
-            # SPARK_GRAFT_MV_SIGNED_FOLD=0 refreshes compute)
+            # keyed-CDF shape of the signed-fold grouped delta (what a
+            # linear spec's refresh computed before r16)
             plans = {}
             cdf = table_changes_cdf(
                 t, spark, v, v, key="k", dup_probe="lazy",

@@ -376,8 +376,7 @@ def _cdf_diff_arrow(
     """Row-level change-data-feed delta of snapshot ``v`` vs ``v-1``
     as ONE Arrow table — the stream-side twin of the batch
     ``snapshot_diff`` (io/versioned.py), computed with pyarrow/pandas
-    where the reader runs (driver for the simple reader, one executor
-    task for the partitioned one) because stream readers have no
+    in the reader's executor task because stream readers have no
     SparkSession. Same manifest-aware skip: groups present in both
     snapshots contribute identical rows to both sides and are never
     read, so a pruned MERGE/DELETE diff costs O(its delta), not
@@ -680,11 +679,11 @@ def _changefeed_added_groups(
     meta_root: str | None = None,
 ) -> list[tuple[int, str]]:
     """(version, group-relpath) pairs ADDED by snapshots [lo, hi], in
-    commit order — the one walk both changefeed readers share, so the
-    append-only contract and the vacuum-expiry remedy behave
-    identically whether batches materialize on the driver (simple
-    reader) or on executors (partitioned reader). ``meta_root``
-    selects a branch's manifest chain (data groups stay table-rooted)."""
+    commit order — the one walk the changefeed stream reader and the
+    batch ``table_changes`` share, so the append-only contract and the
+    vacuum-expiry remedy behave identically on both surfaces.
+    ``meta_root`` selects a branch's manifest chain (data groups stay
+    table-rooted)."""
     t = _ref_table_or_raise(path, meta_root)
 
     def manifest_or_expired(v: int) -> dict:
@@ -1167,13 +1166,19 @@ def _trigger_limits(options: dict) -> tuple[int, int, int]:
     """(max_versions, max_files, max_bytes) per micro-batch;
     0 = unbounded. Bytes come from the manifest's per-group _bytes
     (recorded at commit time) with a file-size fallback for legacy
-    manifests."""
-    return (
-        int(options.get("maxversionspertrigger", 0) or 0),
-        int(options.get("maxfilespertrigger", 0) or 0),
-        int(options.get("maxbytespertrigger", 0) or 0),
-    )
-
+    manifests. A negative bound is rejected: _admitted_end would read
+    it as already exceeded and admit one version per batch."""
+    limits = []
+    for name in (
+        "maxversionspertrigger", "maxfilespertrigger", "maxbytespertrigger"
+    ):
+        n = int(options.get(name, 0) or 0)
+        if n < 0:
+            raise ValueError(
+                f"option {name!r} must be >= 0 (0 = unbounded), got {n}"
+            )
+        limits.append(n)
+    return tuple(limits)
 
 
 def _nullable(schema):
@@ -1245,214 +1250,6 @@ def _arrow_align(table, declared, mapping):
     return pa.table(dict(zip(names, arrays)))
 
 
-class TableChangefeedReader(SimpleDataSourceStreamReader):
-    """Offset = ``{"next_version": v}`` — snapshots < v are consumed.
-    Each micro-batch emits the rows of data groups ADDED by snapshots
-    [v, latest] (each manifest records its own ``added`` delta, so the
-    feed never needs a parent manifest that vacuum may have expired);
-    committed ranges replay bit-identically because manifests and data
-    groups are immutable (io/versioned.py's core invariant).
-
-    Append-only contract (Delta-identical): an overwrite in the tailed
-    range raises unless ``ignorechanges=true``, in which case only NEW
-    groups are emitted and removed data is never retracted — including
-    OPTIMIZE rewrites, which (like Delta's ignoreChanges) re-emit the
-    rewritten rows. Rollbacks add no groups and emit nothing in either
-    mode.
-
-    ``startingversion`` option: "earliest" (default — version 0),
-    "latest" (only commits AFTER stream start), or a number. Tailing a
-    range whose manifests vacuum has expired raises with the remedy
-    (fresh checkpoint + startingversion) instead of a bare
-    FileNotFoundError.
-
-    Rows are aligned to the declared schema BY NAME per group, so
-    snapshots written before an additive evolution yield NULL for the
-    new columns and column reorders cannot silently transpose values.
-
-    Scale note: SimpleDataSourceStreamReader materializes batches on
-    the driver — this class is the contract-reference form, selected
-    via ``.option("reader", "simple")``; the default plan goes through
-    TableChangefeedPartitionedReader below, which ships one
-    InputPartition per added parquet file to executors and never moves
-    data through the driver.
-    """
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self._options = dict(options)
-        self.ignore_changes = (
-            str(options.get("ignorechanges", "false")).lower() == "true"
-        )
-        # .option("branch", name): tail the branch's commit chain —
-        # the audit side of write-audit-publish watches staging land
-        self._meta = _branch_meta_root(
-            self.path, options.get("branch")
-        )
-        self.read_change_data, self.cdf_key = _cdf_options(options)
-        t = self._table()
-        self.starting = _starting_option(options, t)
-        latest = t.latest_version()
-        if latest is None:
-            raise FileNotFoundError(
-                "table has no snapshots yet — commit once before tailing"
-            )
-        from .versioned import _schema_from_json
-
-        pinned = t._load_manifest(latest)
-        self._pinned_latest = latest
-        self._overlay_cache = _OverlayCache(latest)
-        self._declared = _schema_from_json(pinned["schema"])
-        self._fields = [f.name for f in self._declared]
-        # the colmap is pinned WITH the schema: batch-end manifests
-        # that predate a rename have no entry for pre-rename groups,
-        # so a bounded catch-up batch ending before the rename commit
-        # must still route old file columns to the pinned names. CDF
-        # and ignorechanges modes pin the RANGED union instead — they
-        # replay history that may contain groups rewritten away before
-        # stream start, whose routing only historical manifests hold
-        # (_resolved_map).
-        if self.read_change_data or self.ignore_changes:
-            self._pinned_colmap = _resolved_map(
-                t,
-                0 if self.starting == "earliest" else (
-                    latest if self.starting == "latest"
-                    else int(self.starting)
-                ),
-                latest,
-            )
-        else:
-            self._pinned_colmap = pinned.get("colmap") or {}
-
-    def _table(self):
-        return _ref_table_or_raise(self.path, self._meta)
-
-    def initialOffset(self) -> dict:
-        if self.starting == "earliest":
-            return {"next_version": 0}
-        t = self._table()
-        if self.starting == "latest":
-            return {"next_version": (t.latest_version() or -1) + 1}
-        return {"next_version": int(self.starting)}
-
-    def _rows_for_versions(self, lo: int, hi: int):
-        """Rows added by snapshots [lo, hi], in (version, group) order,
-        aligned by NAME to the declared schema. The column name maps
-        come from the batch-end (hi) manifest OVERLAID with the maps
-        pinned at stream start (pinned wins for groups in both): a
-        bounded catch-up batch ending BEFORE a rename commit sees a hi
-        manifest with no entry for the pre-rename groups, and only the
-        pinned map can route their old file columns to the pinned
-        (post-rename) field names."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        try:
-            colmap = (
-                self._table()._load_manifest(hi).get("colmap") or {}
-            )
-        except FileNotFoundError:
-            colmap = {}
-        # post-pin overlay (r13): versions past the schema pin fold
-        # their routing BACK to the pinned names, so a mid-stream
-        # rename keeps values flowing under the pinned column instead
-        # of NULLing it; the stream-start pinned union still wins for
-        # the groups it knows
-        overlay = self._overlay_cache.extend(self._table(), hi)
-        colmap = {**colmap, **overlay, **self._pinned_colmap}
-        cdf_fallback = {**overlay, **self._pinned_colmap}
-
-        def group_rows(g: str, extra: tuple = ()) -> list[tuple]:
-            mapping = colmap.get(g) or {}
-            current = {
-                fc: cur
-                for fc, cur in mapping.items()
-                if cur is not None
-            }
-            dropped = {fc for fc, cur in mapping.items() if cur is None}
-            file_of = {cur: fc for fc, cur in current.items()}
-            table = pq.read_table(os.path.join(self.path, g))
-            out = []
-            for row in table.to_pylist():
-                vals = []
-                for name in self._fields:
-                    fcol = file_of.get(name, name)
-                    if fcol in dropped or (
-                        fcol in current and current[fcol] != name
-                    ):
-                        vals.append(None)
-                    else:
-                        vals.append(row.get(fcol))
-                out.append(tuple(vals) + extra)
-            return out
-
-        rows: list[tuple] = []
-        if not self.read_change_data:
-            for _v, g in _changefeed_added_groups(
-                self.path, lo, hi, self.ignore_changes, self._meta
-            ):
-                rows.extend(group_rows(g))
-            return rows
-        # CDF mode: append-like versions emit their added rows as
-        # 'insert'; anything else (rewrite publish, overwrite, merge,
-        # CoW delete/update, rollback, compaction) is EXPLAINED as the
-        # exact row delta vs its parent — Delta's readChangeFeed shape
-        t = self._table()
-        meta_cols = ["_change_type", "_commit_version"]
-        for v in range(lo, hi + 1):
-            try:
-                m = t._load_manifest(v)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"snapshot {v} has been expired by vacuum(); "
-                    "restart the stream from a fresh checkpoint with "
-                    "startingversion=latest (or a retained version)"
-                ) from None
-            if _append_like_mode(str(m.get("mode", "")), v):
-                for _vv, g in _changefeed_added_groups(
-                    self.path, v, v, True, self._meta
-                ):
-                    rows.extend(group_rows(g, ("insert", v)))
-            else:
-                at = _cdf_diff_arrow(
-                    self.path, self._meta, v, self.cdf_key,
-                    self._declared, cdf_fallback,
-                )
-                for row in at.to_pylist():
-                    rows.append(
-                        tuple(
-                            row[n] for n in self._fields + meta_cols
-                        )
-                    )
-        return rows
-
-    def read(self, start: dict):
-        lo = int(start["next_version"])
-        latest = self._table().latest_version()
-        if latest is None or latest < lo:
-            return iter([]), start
-        mv, mf, mb = _trigger_limits(self._options)
-        end = (
-            _admitted_end(
-                self.path, lo, latest + 1, mv, mf, mb, self._meta
-            )
-            if (mv or mf or mb)
-            else latest + 1
-        )
-        return (
-            iter(self._rows_for_versions(lo, end - 1)),
-            {"next_version": end},
-        )
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(
-            self._rows_for_versions(
-                int(start["next_version"]), int(end["next_version"]) - 1
-            )
-        )
-
-
 class _ChangeFile(InputPartition):
     """One parquet file of one ADDED group — the unit of executor
     parallelism in the partitioned changefeed. Carries the declared
@@ -1490,28 +1287,35 @@ class _CdfDiffPartition(InputPartition):
 
 
 class TableChangefeedPartitionedReader(DataSourceStreamReader):
-    """The executor-parallel changefeed (the scale path; the simple
-    reader above is the driver-materialized contract reference). Same
-    offsets (``{"next_version": v}``), same append-only contract, same
-    vacuum-expiry remedy — all enforced at PLANNING time in
-    ``partitions()``, which is driver-side metadata work only: it
-    walks the manifests of [start, end) and emits one InputPartition
-    per parquet file of each ADDED group. The DATA never touches the
+    """The table changefeed stream reader. Offset =
+    ``{"next_version": v}`` — snapshots < v are consumed; a batch
+    emits the rows of data groups ADDED by snapshots [start, end)
+    (each manifest records its own ``added`` delta, so the feed never
+    needs a parent manifest that vacuum may have expired).
+
+    Append-only contract (Delta-identical): an overwrite in the tailed
+    range raises unless ``ignorechanges=true``, in which case only NEW
+    groups are emitted and removed data is never retracted — including
+    OPTIMIZE rewrites, which (like Delta's ignoreChanges) re-emit the
+    rewritten rows; rollbacks add no groups. A vacuum-expired range
+    raises with the remedy (fresh checkpoint + startingversion). All
+    of it is enforced at PLANNING time in ``partitions()``, which is
+    driver-side metadata work only: it emits one InputPartition per
+    parquet file of each ADDED group. The DATA never touches the
     driver: ``read(partition)`` runs on executors and yields Arrow
     record batches (the same align-by-name kernel as the
     versioned_table batch source), so a commit of N files fans out to
-    N parallel tasks — a large micro-batch costs what any parquet scan
-    costs, instead of serializing through the driver as Python rows.
+    N parallel tasks.
 
     Replay is bit-identical because partitions are a pure function of
     the immutable manifest range — exactly-once through a sink
-    checkpoint holds exactly as it does for the simple reader.
+    checkpoint.
 
     Schema is pinned at stream start (latest manifest): groups written
     before an additive evolution align by name and read NULL for the
     new columns; groups written AFTER the pinned schema would silently
-    drop the new column until restart, same as the simple reader (and
-    Delta's semantics — restart picks up the evolved schema)."""
+    drop the new column until restart (Delta's semantics — restart
+    picks up the evolved schema)."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
@@ -1537,7 +1341,7 @@ class TableChangefeedPartitionedReader(DataSourceStreamReader):
         pinned = t._load_manifest(latest)
         self._pinned_latest = latest
         self._schema_json = pinned["schema"]
-        # pinned with the schema — see TableChangefeedReader: a
+        # the column maps are pinned WITH the schema: a
         # bounded batch ending before a rename commit needs the
         # pinned maps to route pre-rename file columns to the pinned
         # field names (the batch-end manifest has no entry yet); CDF
@@ -1667,9 +1471,10 @@ class TableChangefeedPartitionedReader(DataSourceStreamReader):
                 self._plan_modes = {
                     v: str(r.get("mode", "")) for v, r in rows.items()
                 }
-        # post-pin overlay (r13): see TableChangefeedReader — a
-        # mid-stream rename's versions fold their routing back to the
-        # pinned names, planned driver-side once per batch. Checkpoint
+        # post-pin overlay (r13): a mid-stream rename's versions fold
+        # their routing back to the pinned names, so values keep
+        # flowing under the pinned column instead of reading NULL;
+        # planned driver-side once per batch. Checkpoint
         # rows (r14) let it skip manifest loads for known non-setter
         # versions.
         overlay = self._overlay_cache.extend(
@@ -1787,11 +1592,9 @@ class TableChangefeedPartitionedReader(DataSourceStreamReader):
 class TableChangefeedDataSource(DataSource):
     """``spark.readStream.format("table_changefeed")
     .option("path", table_dir).load()`` — tail a VersionedTable's
-    commits as a stream. Plans through the executor-parallel
-    partitioned reader; ``.option("reader", "simple")`` selects the
-    driver-materialized SimpleDataSourceStreamReader form (the
-    contract-reference implementation, and a debugging aid: one
-    process to breakpoint).
+    commits as a stream through TableChangefeedPartitionedReader.
+    ``.option("startingversion", v)``: "earliest" (default — version
+    0), "latest" (only commits AFTER stream start), or a number.
 
     Catch-up admission control (Delta's maxFilesPerTrigger analog):
     ``.option("maxversionspertrigger", n)`` bounds each micro-batch to
@@ -1801,8 +1604,8 @@ class TableChangefeedDataSource(DataSource):
     version) — so starting at
     ``startingversion=earliest`` on a long history plans MANY bounded
     batches instead of one backlog-sized batch, keeping checkpoint
-    granularity and retry cost proportional to the trigger. Both
-    readers honor both options; unset = unbounded (the old behavior).
+    granularity and retry cost proportional to the trigger. Unset or
+    0 = unbounded; a negative bound raises.
 
     ``.option("branch", name)`` tails a BRANCH's commit chain instead
     of main — the audit side of write-audit-publish watches staged
@@ -1870,19 +1673,7 @@ class TableChangefeedDataSource(DataSource):
         return _nullable(base)
 
     def streamReader(self, schema) -> TableChangefeedPartitionedReader:
-        if str(self.options.get("reader", "")).lower() == "simple":
-            # raising NotImplementedError here makes Spark fall back
-            # to simpleStreamReader (datasource_internal._streamReader)
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return TableChangefeedPartitionedReader(self.options)
-
-    def simpleStreamReader(self, schema) -> TableChangefeedReader:
-        return TableChangefeedReader(self.options)
 
     def reader(self, schema) -> "TableChangefeedBatchReader":
         return TableChangefeedBatchReader(self.options)

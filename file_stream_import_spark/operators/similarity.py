@@ -20,14 +20,15 @@ def _dot(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns, as a zip_with/aggregate
     fold.
 
-    The fold form is deliberate (r16, tools/ab_vecmath.py): unrolling
-    the statically-known 64-dim chain into ``a[0]*b[0] + ...`` pushes
-    the whole-stage method past the JVM/codegen size limits, the stage
-    silently drops to interpreted evaluation, and the boxed ~1.5k-node
-    expression tree measured 3.7-7.7x SLOWER than this compact
-    CodegenFallback fold across every vector query. What IS cheap is
-    evaluating folds less often — hoist per-row norms out of per-pair
-    expressions (see cosine_neardup_dedup / the knn operators)."""
+    The fold form is deliberate (r16, e21e091:tools/ab_vecmath.py):
+    unrolling the statically-known 64-dim chain into ``a[0]*b[0] + ...``
+    pushes the whole-stage method past the JVM/codegen size limits, the
+    stage silently drops to interpreted evaluation, and the boxed
+    ~1.5k-node expression tree measured 3.7-7.7x SLOWER than this
+    compact CodegenFallback fold across every vector query. What IS
+    cheap is evaluating folds less often — hoist per-row norms out of
+    per-pair expressions (see cosine_neardup_dedup / the knn
+    operators)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -139,12 +140,12 @@ def knn_topk_partial(
     (asserted in tests/test_plans.py), so it survives optimizer-rule or
     engine-version changes rather than depending on them.
 
-    Measured (r5, 2026-08-14, tools/ab_topk.py — 5 interleaved passes,
-    one session, sf0.1 local[32]): this form median 0.655s vs the pure
-    window form 0.671s — a tie within host noise. The pandas form is
-    kept because the explicit bound is the operator's point: at true
-    scale the scored-pair stream is too large to trust to an optimizer
-    rule, and the A/B shows the crossing costs nothing here.
+    Measured (r5, 2026-08-14, e21e091:tools/ab_topk.py — 5 interleaved
+    passes, one session, sf0.1 local[32]): this form median 0.655s vs
+    the pure window form 0.671s — a tie within host noise. The pandas
+    form is kept because the explicit bound is the operator's point: at
+    true scale the scored-pair stream is too large to trust to an
+    optimizer rule, and the A/B shows the crossing costs nothing here.
     """
     # norms hoisted once per row (r16), as in knn_bruteforce
     q = queries.select(

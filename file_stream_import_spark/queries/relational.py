@@ -560,12 +560,13 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-and-sort never happens, and phase-1 cost scales linearly
     with executors.
 
-    Measured (r5, 2026-08-14, tools/ab_topk.py — 5 interleaved passes,
-    one session, sf0.1 local[32]): this form median 0.892s vs the pure
-    row_number window form (WindowGroupLimit prune) median 1.269s — the
-    pandas prune wins by ~1.4x despite the Arrow crossing, so it ships.
-    The plan's residual WindowGroupLimit above the MapInPandas re-prunes
-    only the <=K*batches survivors, which is noise.
+    Measured (r5, 2026-08-14, e21e091:tools/ab_topk.py — 5 interleaved
+    passes, one session, sf0.1 local[32]): this form median 0.892s vs
+    the pure row_number window form (WindowGroupLimit prune) median
+    1.269s — the pandas prune wins by ~1.4x despite the Arrow crossing,
+    so it ships. The plan's residual WindowGroupLimit above the
+    MapInPandas re-prunes only the <=K*batches survivors, which is
+    noise.
     """
     li = load_table(spark, sf_dir, "lineitem")
     order = (F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber"))

@@ -1,7 +1,7 @@
 """Regression tests for the round-11 ADVICE findings:
 
-1. (high) Both changefeed readers resolved the RENAME/DROP column map
-   from the batch-END manifest while the output schema is pinned from
+1. (high) The changefeed resolved the RENAME/DROP column map from
+   the batch-END manifest while the output schema is pinned from
    the stream-start LATEST manifest. A bounded catch-up batch
    (maxversionspertrigger & co.) ending BEFORE a rename commit saw a
    batch-end manifest with no colmap entry for the pre-rename groups,
@@ -94,12 +94,10 @@ class TestBoundedTriggerAcrossRename:
         )
         return t
 
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_one_version_per_trigger(self, spark, tmp_path, reader):
         t = self._table(spark, tmp_path)
         opts = {"maxversionspertrigger": 1}
-        if reader == "simple":
-            opts["reader"] = "simple"
         df = _drain_changefeed(
             spark,
             t.path,

@@ -220,3 +220,18 @@ class TestAdmissionFromRows:
         ]
         assert served == walked
         assert all(lo < e <= head for e in served)
+
+
+class TestTriggerBounds:
+    @pytest.mark.parametrize(
+        "opt",
+        ["maxversionspertrigger", "maxfilespertrigger", "maxbytespertrigger"],
+    )
+    def test_negative_bound_raises(self, spark, tmp_path, opt):
+        """A negative bound is rejected instead of read as a limit
+        already exceeded (which admitted one version per batch); 0
+        stays unbounded."""
+        t = _mk_history(spark, tmp_path, n_appends=0)
+        with pytest.raises(ValueError, match=opt):
+            ps.TableChangefeedPartitionedReader({"path": t.path, opt: "-1"})
+        ps.TableChangefeedPartitionedReader({"path": t.path, opt: "0"})

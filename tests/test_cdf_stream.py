@@ -2,9 +2,9 @@
 changefeed EXPLAIN non-append commits as row-level deltas (Delta's
 readChangeFeed) instead of rejecting them — including the rewrite
 publish (``publish_branch_rewrite:``) the r11 changefeed could only
-skip with ignorechanges. Both readers (driver-simple and
-executor-partitioned) share the pyarrow diff kernel
-(io/pysource._cdf_diff_arrow), the stream twin of snapshot_diff."""
+skip with ignorechanges. The stream reader computes each diff in an
+executor task with the pyarrow kernel io/pysource._cdf_diff_arrow, the
+stream twin of snapshot_diff."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def _mk(spark, tmp_path, rows, name="t"):
     return t
 
 
-def _drain_cdf(spark, path, tmp_path, reader="partitioned", **opts):
+def _drain_cdf(spark, path, tmp_path, **opts):
     from file_stream_import_spark.io.pysource import (
         TableChangefeedDataSource,
     )
@@ -39,8 +39,6 @@ def _drain_cdf(spark, path, tmp_path, reader="partitioned", **opts):
         .option("key", "k")
         .option("maxversionspertrigger", "1")
     )
-    if reader == "simple":
-        r = r.option("reader", "simple")
     for k, v in opts.items():
         r = r.option(k, str(v))
     q = (
@@ -60,7 +58,7 @@ def _drain_cdf(spark, path, tmp_path, reader="partitioned", **opts):
         )
         .option(
             "checkpointLocation",
-            str(tmp_path / f"ckpt_{len(str(tmp_path))}_{reader}"),
+            str(tmp_path / f"ckpt_{len(str(tmp_path))}"),
         )
         .start()
     )
@@ -72,7 +70,7 @@ def _drain_cdf(spark, path, tmp_path, reader="partitioned", **opts):
 
 
 class TestCdfRows:
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_insert_update_delete_shapes(self, spark, tmp_path, reader):
         t = _mk(spark, tmp_path, [(1, 10), (2, 20), (3, 30)], reader)
         t.commit(
@@ -85,7 +83,7 @@ class TestCdfRows:
             key="k",
         )
         t.delete_where(spark, F.col("k") == 3)
-        got = _drain_cdf(spark, t.path, tmp_path, reader)
+        got = _drain_cdf(spark, t.path, tmp_path)
         assert got == [
             [(1, 10, "insert", 0), (2, 20, "insert", 0),
              (3, 30, "insert", 0)],
@@ -339,7 +337,7 @@ class TestRewrittenAwayGroupRouting:
         )
         assert got == [(1, 10, 0), (2, 20, 0), (2, 20, 2)]
 
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_ignorechanges_stream_routes_historical_group(
         self, spark, tmp_path, reader
     ):
@@ -355,8 +353,6 @@ class TestRewrittenAwayGroupRouting:
             .option("path", t.path)
             .option("ignorechanges", "true")
         )
-        if reader == "simple":
-            r = r.option("reader", "simple")
         q = (
             r.load()
             .writeStream.foreachBatch(
@@ -377,7 +373,7 @@ class TestRewrittenAwayGroupRouting:
 
 
 class TestStartingTimestamp:
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_starts_at_first_commit_after_instant(
         self, spark, tmp_path, reader
     ):
@@ -402,8 +398,6 @@ class TestStartingTimestamp:
             .option("path", t.path)
             .option("startingtimestamp", str(cut))
         )
-        if reader == "simple":
-            r = r.option("reader", "simple")
         q = (
             r.load()
             .writeStream.foreachBatch(
@@ -650,14 +644,14 @@ class TestMidStreamRename:
     overlay folds versions past the pin BACK to the pinned names, so
     values keep flowing."""
 
-    def _run(self, spark, tmp_path, reader):
+    def _run(self, spark, tmp_path):
         from file_stream_import_spark.io.pysource import (
             TableChangefeedDataSource,
         )
         from file_stream_import_spark.io.versioned import merge_into
 
         spark.dataSource.register(TableChangefeedDataSource)
-        t = _mk(spark, tmp_path, [(1, 10)], name=f"t_{reader}")
+        t = _mk(spark, tmp_path, [(1, 10)])
         got: list[tuple] = []
         r = (
             spark.readStream.format("table_changefeed")
@@ -665,8 +659,6 @@ class TestMidStreamRename:
             .option("readchangedata", "true")
             .option("key", "k")
         )
-        if reader == "simple":
-            r = r.option("reader", "simple")
         q = (
             r.load()
             .writeStream.foreachBatch(
@@ -676,7 +668,7 @@ class TestMidStreamRename:
                     for x in df.collect()
                 )
             )
-            .option("checkpointLocation", str(tmp_path / f"ck_{reader}"))
+            .option("checkpointLocation", str(tmp_path / "ck"))
             .start()
         )
         try:
@@ -700,15 +692,7 @@ class TestMidStreamRename:
         return sorted(got)
 
     def test_partitioned_reader_values_flow(self, spark, tmp_path):
-        assert self._run(spark, tmp_path, "partitioned") == [
-            (0, 1, "insert", 10),
-            (2, 2, "insert", 20),
-            (3, 1, "update_postimage", 77),
-            (3, 1, "update_preimage", 10),
-        ]
-
-    def test_simple_reader_values_flow(self, spark, tmp_path):
-        assert self._run(spark, tmp_path, "simple") == [
+        assert self._run(spark, tmp_path) == [
             (0, 1, "insert", 10),
             (2, 2, "insert", 20),
             (3, 1, "update_postimage", 77),

@@ -408,7 +408,7 @@ class TestRefsReaders:
                 "tag", "gold"
             ).load().collect()
 
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_changefeed_tails_branch(self, spark, tmp_path, reader):
         from file_stream_import_spark.io.pysource import (
             TableChangefeedDataSource,
@@ -423,8 +423,6 @@ class TestRefsReaders:
             .option("branch", "stage")
             .option("maxversionspertrigger", "1")
         )
-        if reader == "simple":
-            r = r.option("reader", "simple")
         q = (
             r.load()
             .writeStream.format("parquet")
@@ -543,7 +541,7 @@ class TestBranchLifecycleMidStream:
     the remedy, not a bare FileNotFoundError or silently-regressing
     offsets (the same standard as the vacuum-vs-reader retry, r9)."""
 
-    @pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    @pytest.mark.parametrize("reader", ["partitioned"])
     def test_delete_branch_mid_stream_raises_contract(
         self, spark, tmp_path, reader
     ):
@@ -568,8 +566,6 @@ class TestBranchLifecycleMidStream:
             .option("path", t.path)
             .option("branch", "stage")
         )
-        if reader == "simple":
-            r = r.option("reader", "simple")
         q = (
             r.load()
             .writeStream.foreachBatch(

@@ -259,34 +259,24 @@ class TestChangefeedAcrossRename:
             ),
             mode="append",
         )
-        for reader_opt in ({}, {"reader": "simple"}):
-            out = str(
-                tmp_path / f"out_{reader_opt.get('reader', 'part')}"
-            )
-            ckpt = str(
-                tmp_path / f"ckpt_{reader_opt.get('reader', 'part')}"
-            )
-            reader = spark.readStream.format("table_changefeed").option(
-                "path", t.path
-            )
-            for kk, vv in reader_opt.items():
-                reader = reader.option(kk, vv)
-            q = (
-                reader.load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            got = {
-                r["k"]: r["amount"]
-                for r in spark.read.parquet(out).collect()
-            }
-            assert got == {k: 2 * k for k in range(8)}, reader_opt
+        out = str(tmp_path / "out")
+        q = (
+            spark.readStream.format("table_changefeed")
+            .option("path", t.path)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {
+            r["k"]: r["amount"] for r in spark.read.parquet(out).collect()
+        }
+        assert got == {k: 2 * k for k in range(8)}
 
 
 class TestSnapshotDiffAcrossRename:

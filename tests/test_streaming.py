@@ -1750,20 +1750,6 @@ class TestChangefeedAdmissionControl:
         assert len(sizes) >= 7
         assert max(sizes) <= 3 * self.ROWS_PER_VERSION
 
-    def test_simple_reader_honors_bound(self, spark, tmp_path):
-        t = self._table(spark, tmp_path)
-        sizes, rows = self._drain(
-            spark,
-            t,
-            str(tmp_path / "ckpt"),
-            reader="simple",
-            maxversionspertrigger=5,
-        )
-        total = self.N_VERSIONS * self.ROWS_PER_VERSION
-        assert sorted(k for k, _ in rows) == list(range(total))
-        assert len(sizes) >= 4
-        assert max(sizes) <= 5 * self.ROWS_PER_VERSION
-
     def test_restart_mid_catchup_exactly_once(self, spark, tmp_path):
         """Stop after the first bounded batch; the restarted stream
         resumes from the checkpoint with no duplicates and no gaps

@@ -719,10 +719,9 @@ class TestDeleteWhere:
 
 
 class TestChangefeedPartitionedReader:
-    """The executor-parallel changefeed plan (r9:
-    TableChangefeedPartitionedReader — the default since this round;
-    the 7 semantic tests above now route through it). These pin the
-    PLANNING shape and the simple-reader fallback."""
+    """The changefeed stream reader's plan
+    (TableChangefeedPartitionedReader; the 7 semantic tests above
+    route through it). These pin the PLANNING shape."""
 
     def test_partitions_are_per_added_file_and_metadata_only(
         self, spark, tmp_path
@@ -785,48 +784,6 @@ class TestChangefeedPartitionedReader:
         batches = [b for p in parts for b in r.read(p)]
         assert [b.schema.names for b in batches] == [["k", "v"]]
         assert batches[0].to_pylist() == [{"k": 1, "v": "a"}]
-
-    def test_simple_reader_option_falls_back_and_agrees(
-        self, spark, tmp_path
-    ):
-        """.option('reader', 'simple') routes through the
-        SimpleDataSourceStreamReader contract form and produces the
-        same rows as the default partitioned plan."""
-        import uuid as _uuid
-
-        from file_stream_import_spark.io.pysource import (
-            TableChangefeedDataSource,
-        )
-
-        spark.dataSource.register(TableChangefeedDataSource)
-        t = VersionedTable(str(tmp_path / "t"))
-        t.commit(_df(spark, 0, 5), mode="overwrite")
-        t.commit(_df(spark, 5, 9))
-
-        def run(tag, **opts):
-            name = "cf" + _uuid.uuid4().hex[:8]
-            reader = spark.readStream.format("table_changefeed").option(
-                "path", t.path
-            )
-            for k, v in opts.items():
-                reader = reader.option(k, v)
-            q = (
-                reader.load()
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            return sorted(
-                r["id"] for r in spark.sql(f"SELECT * FROM {name}").collect()
-            )
-
-        assert run("part") == run("simple", reader="simple") == list(range(9))
 
 
 class TestMergeOnReadDeletes:

@@ -1164,15 +1164,25 @@ def _cdf_options(options: dict) -> tuple[bool, list[str]]:
 
 def _trigger_limits(options: dict) -> tuple[int, int, int]:
     """(max_versions, max_files, max_bytes) per micro-batch;
-    0 = unbounded. Bytes come from the manifest's per-group _bytes
-    (recorded at commit time) with a file-size fallback for legacy
-    manifests. A negative bound is rejected: _admitted_end would read
-    it as already exceeded and admit one version per batch."""
+    0 = unbounded. The two counts are integers; maxbytespertrigger is a
+    Spark byte string ("64m", "1g"; tables._parse_bytes). Bytes come
+    from the manifest's per-group _bytes (recorded at commit time) with
+    a file-size fallback for legacy manifests. A malformed or negative
+    bound raises ValueError naming the option: _admitted_end would read
+    a negative one as already exceeded and admit one version per
+    batch."""
+    from .tables import _parse_bytes
+
     limits = []
-    for name in (
-        "maxversionspertrigger", "maxfilespertrigger", "maxbytespertrigger"
+    for name, parse in (
+        ("maxversionspertrigger", int),
+        ("maxfilespertrigger", int),
+        ("maxbytespertrigger", _parse_bytes),
     ):
-        n = int(options.get(name, 0) or 0)
+        try:
+            n = parse(options.get(name) or "0")
+        except ValueError as e:
+            raise ValueError(f"option {name!r}: {e}") from None
         if n < 0:
             raise ValueError(
                 f"option {name!r} must be >= 0 (0 = unbounded), got {n}"

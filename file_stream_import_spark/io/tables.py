@@ -11,6 +11,7 @@ Catalyst can prune and push down:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -64,16 +65,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _parse_bytes(raw: str | int) -> int:
-    raw = str(raw).strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if raw.endswith(suf + "b"):
-            raw, mult = raw[:-2], m
-            break
-        if raw.endswith(suf):
-            raw, mult = raw[:-1], m
-            break
-    return int(raw) * mult
+    """Bytes in a Spark byte string (``"64m"``, ``"134217728b"``,
+    ``" 5G "``), read with the grammar of Spark's
+    ``JavaUtils.byteStringAsBytes``: ASCII digits, then an optional
+    case-insensitive binary suffix b/k/kb/m/mb/g/gb/t/tb/p/pb (none
+    means bytes); fractions, signs and exponents are rejected, as is a
+    result past Long.MAX_VALUE. Pure Python, so the streaming-source
+    worker, which has no JVM gateway, parses as the session does.
+    Raises ValueError."""
+    # Java's String.trim() drops every char <= U+0020
+    s = str(raw).lower().strip("".join(map(chr, range(33))))
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", s)
+    shift = {
+        "": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+        "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50,
+    }.get(m.group(2)) if m else None
+    if shift is None:
+        raise ValueError(
+            f"not a byte string: {raw!r} (bytes as digits with an "
+            "optional b/k/m/g/t/p suffix, e.g. 50b, 100k or 250m; no "
+            "fractions)"
+        )
+    n = int(m.group(1)) << shift
+    if n >= 1 << 63:
+        raise ValueError(f"byte string exceeds Long.MAX_VALUE: {raw!r}")
+    return n
 
 
 def spread_small_scan(

@@ -939,15 +939,13 @@ def _write_size_estimate(df: DataFrame) -> int | None:
     return est
 
 
-_BYTE_STRINGS: dict = {}
-
-
 def _advisory_bytes(spark) -> int:
     """AQE's advisory partition size (the write-sizing target) from the
-    session conf, parsed by Spark's own byte-string parser (so "1t" or
-    "134217728b" read as Spark reads them); 64 MB fallback mirrors
-    session.py. Memoized per raw string: the JVM class lookup costs 8
-    py4j round trips, the conf read 2."""
+    session conf, read with Spark's byte-string grammar
+    (tables._parse_bytes, so "1t" or "134217728b" read as Spark reads
+    them); 64 MB fallback mirrors session.py."""
+    from .tables import _parse_bytes
+
     raw = "64m"
     try:
         raw = spark.conf.get(
@@ -955,17 +953,7 @@ def _advisory_bytes(spark) -> int:
         )
     except Exception:  # pragma: no cover
         pass
-    hit = _BYTE_STRINGS.get(raw)
-    if hit is None:
-        try:
-            hit = int(
-                spark._jvm.org.apache.spark.network.util.JavaUtils
-                .byteStringAsBytes(str(raw))
-            )
-        except Exception:  # pragma: no cover — py4j/connect edge
-            hit = 64 << 20
-        _BYTE_STRINGS[raw] = hit
-    return hit
+    return _parse_bytes(raw)
 
 
 def _size_write_delta(df: DataFrame) -> DataFrame:
@@ -994,8 +982,9 @@ def _size_write_delta(df: DataFrame) -> DataFrame:
       commits that need the protection; coalesce on a misjudged large
       one would serialize the whole write onto one task.
 
-    Sorted/clustered layouts do NOT pass through here (_cluster_write
-    has its own kernel), so no ordering is destroyed."""
+    Only the one-group form of _write_groups passes through here; its
+    multi-group form (partitioned commits, clustering) writes the
+    caller's own shuffle, so no clustered ordering is destroyed."""
     est = _write_size_estimate(df)
     if est is not None and est > _WRITE_REBALANCE_MAX_BYTES:
         return df
@@ -1010,8 +999,13 @@ _STATS_EXPR_CACHE: dict = {}
 def _stats_observe_exprs(
     cols: tuple, checks_items: tuple, ndv_cols: tuple
 ) -> tuple[list, set]:
-    """Observation expression list for _write_group_with_stats,
-    memoized per (schema, checks, bloom, SparkContext) signature.
+    """The one aggregate list behind every group's manifest stats (see
+    _write_groups): row count; min/max/null count per stats-eligible
+    column plus SUM for numerics; a violation count per CHECK
+    constraint; approx NDV per bloom column. The same Columns serve as
+    ``observe(...)`` on a one-group write and as
+    ``groupBy(<group id>).agg(...)`` over a multi-group write.
+    Memoized per (schema, checks, bloom, SparkContext) signature.
 
     The Columns are unresolved expressions, reusable across any number
     of DataFrames under the same JVM; building them fresh costs ~400
@@ -1060,104 +1054,166 @@ def _stats_observe_exprs(
     return exprs, summable
 
 
-def _write_group_with_stats(
-    df: DataFrame,
-    full_path: str,
-    checks: dict | None = None,
-    bloom_cols: list[str] | None = None,
-    bloom_bits: int | None = None,
-) -> dict | None:
-    """Write ``df`` as a parquet group, observing per-column min/max +
-    null counts — and CHECK-constraint violation counts — in the SAME
-    job (Observation piggybacks on the write: no extra scan, which
-    matters when the group is TBs). Raises ConstraintViolationError
-    AFTER the write if any check fails — the data files become orphans
-    that no manifest references (the standard crash-window shape,
-    reclaimed by vacuum), so atomicity is preserved without a separate
-    validation pass. Returns ``{col: {"min": v, "max": v, "nulls": n},
-    "_rows": n}`` or None if nothing is stats-eligible and no checks
-    exist. CHECK semantics are SQL's: a NULL-evaluating condition
-    PASSES (only FALSE violates)."""
-    from pyspark.sql import Observation
-
-    df = _size_write_delta(df)
-    checks = checks or {}
-    cols = [f for f in df.schema.fields if _stats_eligible(f.dataType)]
-    if not cols and not checks and not bloom_cols:
-        df.write.parquet(full_path)
-        return None
-    ndv_cols = [c for c in (bloom_cols or []) if c in df.columns]
-    exprs, summable = _stats_observe_exprs(
-        tuple(cols), tuple(sorted((checks or {}).items())),
-        tuple(ndv_cols),
+def _group_bytes(d: str) -> int:
+    """Data bytes of one group directory: its parquet files, not the
+    ``_``-prefixed bloom sidecars and markers or ``.`` checksums."""
+    return sum(
+        os.path.getsize(os.path.join(d, n))
+        for n in os.listdir(d)
+        if not n.startswith(("_", "."))
     )
-    check_names = sorted(checks)
-    obs = Observation()
-    df.observe(obs, *exprs).write.parquet(full_path)
-    got = obs.get
-    violated = {
-        name: int(got[f"ck_{i}"] or 0)
-        for i, name in enumerate(check_names)
-        if int(got[f"ck_{i}"] or 0) > 0
-    }
+
+
+def _write_groups(
+    df: DataFrame, table_path: str, m: dict, part_cols: tuple = ()
+) -> tuple[list[str], dict]:
+    """Write ``df`` as new data groups of the table at ``table_path``;
+    returns (groups, {group: stats entry}). ``m`` is the manifest the
+    write is computed against: its CHECK constraints are validated and
+    its bloom columns get a per-group sidecar. Every write of data
+    groups — plain, partitioned and MERGE/DML commits, compaction,
+    clustering — goes through here, so groups of the same rows carry
+    the same stats however they were written.
+
+    * No ``part_cols``: ONE group. The _stats_observe_exprs aggregates
+      ride the write job as an Observation (no second scan, which
+      matters when the group is TBs); _size_write_delta sizes its
+      files.
+    * ``part_cols``: ``df`` arrives shuffled by the caller and carries
+      the derived columns ``part_cols``; each distinct value becomes
+      one group. A staged ``partitionBy`` write lays the values out as
+      directories (the derived columns leave the files, every source
+      column stays), each leaf directory is renamed into an immutable
+      group — in name order with digit runs compared as numbers, so
+      clustering's ``__bucket=2`` precedes ``__bucket=10`` and the
+      groups stay in key order — and ONE grouped aggregate of the same
+      expressions over the new groups, keyed by input_file_name's
+      group id, yields every group's stats.
+
+    The entry holds ``_rows``, ``_bytes`` (data bytes: compact() sizes
+    groups from it without walking the data tree), ``{"min", "max",
+    "nulls"}`` (+ ``"sum"`` for numerics) per stats-eligible column,
+    and ``_bloom`` when blooms are declared. CHECK violations raise
+    ConstraintViolationError AFTER the write: the data files become
+    orphans that no manifest references (the standard crash-window
+    shape, reclaimed by vacuum), so atomicity is preserved without a
+    separate validation pass. CHECK semantics are SQL's: a
+    NULL-evaluating condition PASSES (only FALSE violates)."""
+    import shutil
+
+    from pyspark.sql import Observation
+    from pyspark.sql.types import StructType
+
+    spark = df.sparkSession
+    checks = m.get("constraints") or {}
+    bloom_cols = m.get("bloom_cols") or []
+    schema = StructType(
+        [f for f in df.schema.fields if f.name not in part_cols]
+    )
+    cols = [f for f in schema.fields if _stats_eligible(f.dataType)]
+    ndv_cols = [c for c in bloom_cols if c in schema.names]
+    exprs, summable = _stats_observe_exprs(
+        tuple(cols), tuple(sorted(checks.items())), tuple(ndv_cols)
+    )
+    if not part_cols:
+        group = os.path.join("data", uuid.uuid4().hex)
+        obs = Observation()
+        _size_write_delta(df).observe(obs, *exprs).write.parquet(
+            os.path.join(table_path, group)
+        )
+        per = {group: obs.get}
+    else:
+        staged = os.path.join(
+            table_path, "data", f"stage-{uuid.uuid4().hex}"
+        )
+        df.write.partitionBy(*part_cols).parquet(staged)
+        leaves = [staged]
+        for _ in part_cols:
+            leaves = [
+                os.path.join(d, n)
+                for d in leaves
+                for n in sorted(
+                    os.listdir(d),
+                    key=lambda name: [
+                        int(t) if t.isdecimal() else t
+                        for t in _re.split(r"(\d+)", name)
+                    ],
+                )
+                if os.path.isdir(os.path.join(d, n))
+            ]
+        groups = []
+        for d in leaves:
+            g = os.path.join("data", uuid.uuid4().hex)
+            os.rename(d, os.path.join(table_path, g))
+            groups.append(g)
+        shutil.rmtree(staged, ignore_errors=True)
+        per = {}
+        if groups:
+            # the files' schema IS ``schema``: read under it instead of
+            # inferring, which runs a footer-reading job at plan time
+            by_id = {
+                r["__g"]: r
+                for r in spark.read.schema(schema)
+                .parquet(*[os.path.join(table_path, g) for g in groups])
+                .groupBy(
+                    F.regexp_extract(
+                        F.input_file_name(), "data/([0-9a-f]{32})/", 1
+                    ).alias("__g")
+                )
+                .agg(*exprs)
+                .collect()
+            }
+            per = {g: by_id[os.path.basename(g)] for g in groups}
+    violated = {}
+    for i, name in enumerate(sorted(checks)):
+        n = sum(int(r[f"ck_{i}"] or 0) for r in per.values())
+        if n:
+            violated[name] = n
     if violated:
         raise ConstraintViolationError(
-            f"CHECK constraint(s) violated: "
+            "CHECK constraint(s) violated: "
             + ", ".join(
                 f"{n} ({c} rows, condition: {checks[n]!r})"
                 for n, c in violated.items()
             )
-            + "; the rejected data group is unreferenced and will be "
+            + "; the rejected data groups are unreferenced and will be "
             "vacuumed"
         )
-    rows = int(got["rows"] or 0)
-    out: dict = {"_rows": rows}
-    try:
-        # data bytes of the group just written (one listdir — O(files
-        # in this group), at commit time, never again): compact() sizes
-        # groups from this manifest field instead of walking the data
-        # tree, making bin-packing selection metadata-only
-        out["_bytes"] = sum(
-            os.path.getsize(os.path.join(full_path, n))
-            for n in os.listdir(full_path)
-            if not n.startswith(("_", "."))
-        )
-    except OSError:
-        pass  # advisory; compact() falls back to a directory walk
-    for i, f in enumerate(cols):
-        entry = _col_stats_entry(
-            got[f"mn_{i}"],
-            got[f"mx_{i}"],
-            int(got[f"nu_{i}"] or 0),
-            rows,
-            f.dataType,
-        )
-        if entry is not None:
+    stats: dict = {}
+    for g, r in per.items():
+        gd = os.path.join(table_path, g)
+        rows = int(r["rows"] or 0)
+        st: dict = {"_rows": rows, "_bytes": _group_bytes(gd)}
+        for i, f in enumerate(cols):
+            entry = _col_stats_entry(
+                r[f"mn_{i}"], r[f"mx_{i}"], int(r[f"nu_{i}"] or 0), rows,
+                f.dataType,
+            )
+            if entry is None:
+                continue
             if i in summable:
-                s = _json_safe(got[f"sm_{i}"], f.dataType)
-                if got[f"sm_{i}"] is None or s is not None:
-                    entry["sum"] = s  # None = all-NULL (SQL SUM=NULL)
-            out[f.name] = entry
-    if bloom_cols:
-        # second (tiny, page-cached) pass over the group just written —
-        # Observation can't express the per-row k-position fan-out
-        table_path = os.path.dirname(os.path.dirname(full_path))
-        group = os.path.join(
-            os.path.basename(os.path.dirname(full_path)),
-            os.path.basename(full_path),
-        )
-        blooms = _bloom_build(
-            df.sparkSession.read.parquet(full_path), bloom_cols, rows,
-            table_path, group,
-            bits_per_key=bloom_bits or _BLOOM_DEFAULT_BITS_PER_KEY,
-            ndv={
-                c: int(got[f"nd_{i}"] or 0)
-                for i, c in enumerate(ndv_cols)
-            },
-        )
-        if blooms:
-            out["_bloom"] = blooms
-    return out
+                sm = _json_safe(r[f"sm_{i}"], f.dataType)
+                if r[f"sm_{i}"] is None or sm is not None:
+                    entry["sum"] = sm  # None = all-NULL (SQL SUM=NULL)
+            st[f.name] = entry
+        if bloom_cols:
+            # a second (tiny, page-cached) pass over the group just
+            # written: an aggregate cannot express the per-row
+            # k-position fan-out
+            blooms = _bloom_build(
+                spark.read.schema(schema).parquet(gd), bloom_cols, rows,
+                table_path, g,
+                bits_per_key=m.get("bloom_bits")
+                or _BLOOM_DEFAULT_BITS_PER_KEY,
+                ndv={
+                    c: int(r[f"nd_{i}"] or 0)
+                    for i, c in enumerate(ndv_cols)
+                },
+            )
+            if blooms:
+                st["_bloom"] = blooms
+        stats[g] = st
+    return list(per), stats
 
 
 class SchemaMismatchError(ValueError):
@@ -1712,9 +1768,11 @@ class VersionedTable:
         concurrent writer takes the target version first.
 
         ``partition_by`` splits the commit into ONE GROUP PER
-        PARTITION VALUE (_write_partitioned_groups): each group's
-        stats box for a partition column is a point, so reads, MERGE
-        touch tests, and auto-pruned DML on that column skip exactly —
+        PARTITION VALUE (one hash shuffle on the values, then the
+        multi-group form of _write_groups, the writer every commit,
+        DML and clustering write shares): each group's stats box for
+        a partition column is a point, so reads, MERGE touch tests,
+        and auto-pruned DML on that column skip exactly —
         the Iceberg/Delta partitioned-table layout without needing a
         clustering OPTIMIZE. Many tiny partitions per commit are the
         compact() use case. Entries may be HIDDEN-PARTITIONING
@@ -1798,27 +1856,25 @@ class VersionedTable:
             else {}
         )
         # (1) immutable data files first, invisible until the manifest;
-        # per-column min/max + CHECK validation observed in the SAME
-        # job as the write
-        checks = pm.get("constraints") or {}
+        # stats + CHECK validation in the same pass as the write
+        pcols: tuple = ()
         if partition_by:
-            added, new_stats = self._write_partitioned_groups(
-                df, list(partition_by), checks,
-                pm.get("bloom_cols"), pm.get("bloom_bits"),
-            )
-            stats.update(new_stats)
-            groups.extend(added)
-        else:
-            group = os.path.join("data", uuid.uuid4().hex)
-            group_stats = _write_group_with_stats(
-                df, os.path.join(self.path, group), checks=checks,
-                bloom_cols=pm.get("bloom_cols"),
-                bloom_bits=pm.get("bloom_bits"),
-            )
-            if group_stats is not None:
-                stats[group] = group_stats
-            groups.append(group)
-            added = [group]
+            # the PARTITION VALUE of each entry (a bare column or a
+            # hidden-partitioning transform) is a derived ``__p_i``
+            # column, so the source columns stay in the files and
+            # every reader sees the full schema; one hash shuffle
+            # co-locates each value
+            transforms = [
+                _partition_transform(spec, df.schema)
+                for spec in partition_by
+            ]
+            pcols = tuple(f"__p_{i}" for i in range(len(transforms)))
+            df = df.select("*", *[
+                expr.alias(p) for (_, expr), p in zip(transforms, pcols)
+            ]).repartition(*pcols)
+        added, new_stats = _write_groups(df, self.path, pm, pcols)
+        groups.extend(added)
+        stats.update(new_stats)
         # (2) atomic manifest publish; "added" records THIS commit's
         # delta explicitly so consumers (the changefeed) never need the
         # parent manifest — which vacuum may have expired. Appends
@@ -1839,188 +1895,6 @@ class VersionedTable:
                 concurrent_adds_ok=True,
             )
         return self._publish(parent, manifest, txn=txn)
-
-    def _write_partitioned_groups(
-        self,
-        df: DataFrame,
-        partition_by: list[str],
-        checks: dict | None,
-        bloom_cols: list[str] | None,
-        bloom_bits: int | None,
-    ) -> tuple[list[str], dict]:
-        """Write ``df`` as ONE GROUP PER PARTITION VALUE (the
-        Iceberg/Delta partitioned-table layout, applied per commit):
-        a single hash shuffle on the partition columns co-locates each
-        value, a staged ``partitionBy`` write lays the values out as
-        directories — partitioning on DERIVED columns (``__p_i``)
-        so the originals stay inside the data files and every reader
-        sees the full schema — and each leaf directory is renamed into
-        an immutable group. Because a group then holds exactly one
-        partition value, its stats box for that column is a POINT:
-        read()/MERGE/DML pruning on the partition column is exact, no
-        clustering pass needed. One combined aggregation over the new
-        groups (keyed by input_file_name's group id) produces stats,
-        NDV for bloom sizing, and CHECK validation counts; violations
-        raise AFTER the write, leaving only vacuum-reclaimable orphans
-        (same atomicity shape as _write_group_with_stats)."""
-        import shutil
-
-        # each entry is a bare column or a hidden-partitioning
-        # transform (days(ts), bucket(16, k), ... — Iceberg's
-        # ergonomic); either way the PARTITION VALUE is a derived
-        # ``__p_i`` column and the source columns stay in the files
-        transforms = [
-            _partition_transform(spec, df.schema)
-            for spec in partition_by
-        ]
-        spark = df.sparkSession
-        checks = checks or {}
-        staged = os.path.join(
-            self.path, "data", f"pt-{uuid.uuid4().hex}"
-        )
-        pcols = [f"__p_{i}" for i in range(len(transforms))]
-        (
-            df.select("*", *[
-                expr.alias(p)
-                for (_, expr), p in zip(transforms, pcols)
-            ])
-            .repartition(*[F.col(p) for p in pcols])
-            .write.partitionBy(*pcols)
-            .parquet(staged)
-        )
-        leaf_dirs: list[str] = []
-
-        def walk(d: str, depth: int) -> None:
-            if depth == 0:
-                leaf_dirs.append(d)
-                return
-            for name in sorted(os.listdir(d)):
-                sub = os.path.join(d, name)
-                if os.path.isdir(sub):
-                    walk(sub, depth - 1)
-
-        walk(staged, len(partition_by))
-        groups: list[str] = []
-        for d in leaf_dirs:
-            g = os.path.join("data", uuid.uuid4().hex)
-            os.rename(d, os.path.join(self.path, g))
-            groups.append(g)
-        shutil.rmtree(staged, ignore_errors=True)
-        if not groups:
-            return [], {}
-        # the staged files were just written from ``df`` (partitionBy
-        # strips only the derived __p_i directory columns), so their
-        # schema IS df.schema — read under it directly instead of
-        # mergeSchema, which runs a distributed footer-merge job at
-        # plan time for a schema we already hold (same rationale as
-        # the no-evolution arm of _read_groups)
-        gdf = spark.read.schema(df.schema).parquet(
-            *[os.path.join(self.path, g) for g in groups]
-        )
-        gcol = F.regexp_extract(
-            F.input_file_name(), "data/([0-9a-f]{32})/", 1
-        )
-        cols = [
-            f for f in df.schema.fields if _stats_eligible(f.dataType)
-        ]
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        summable: set = set()
-        for i, f in enumerate(cols):
-            aggs += [
-                F.min(f.name).alias(f"mn_{i}"),
-                F.max(f.name).alias(f"mx_{i}"),
-                F.sum(
-                    F.when(F.col(f.name).isNull(), 1).otherwise(0)
-                ).alias(f"nu_{i}"),
-            ]
-            se = _sum_stat_expr(f, f"sm_{i}")
-            if se is not None:
-                aggs.append(se)
-                summable.add(i)
-        check_names = sorted(checks)
-        for i, name in enumerate(check_names):
-            bad = ~F.coalesce(F.expr(checks[name]), F.lit(True))
-            aggs.append(
-                F.sum(F.when(bad, 1).otherwise(0)).alias(f"ck_{i}")
-            )
-        ndv_cols = [
-            c for c in (bloom_cols or []) if c in gdf.columns
-        ]
-        for i, c in enumerate(ndv_cols):
-            aggs.append(F.approx_count_distinct(c).alias(f"nd_{i}"))
-        per = {
-            r["__g"]: r
-            for r in gdf.withColumn("__g", gcol)
-            .groupBy("__g")
-            .agg(*aggs)
-            .collect()
-        }
-        violated = {
-            name: sum(
-                int(r[f"ck_{i}"] or 0) for r in per.values()
-            )
-            for i, name in enumerate(check_names)
-        }
-        violated = {n: c for n, c in violated.items() if c > 0}
-        if violated:
-            raise ConstraintViolationError(
-                "CHECK constraint(s) violated: "
-                + ", ".join(
-                    f"{n} ({c} rows, condition: {checks[n]!r})"
-                    for n, c in violated.items()
-                )
-                + "; the rejected data groups are unreferenced and "
-                "will be vacuumed"
-            )
-        stats: dict = {}
-        for g in groups:
-            gid = os.path.basename(g)
-            r = per.get(gid)
-            if r is None:
-                continue  # empty leaf (cannot normally happen)
-            n_rows = int(r["rows"] or 0)
-            st: dict = {"_rows": n_rows}
-            try:
-                gd = os.path.join(self.path, g)
-                st["_bytes"] = sum(
-                    os.path.getsize(os.path.join(gd, n))
-                    for n in os.listdir(gd)
-                    if not n.startswith(("_", "."))
-                )
-            except OSError:
-                pass
-            for i, f in enumerate(cols):
-                entry = _col_stats_entry(
-                    r[f"mn_{i}"],
-                    r[f"mx_{i}"],
-                    int(r[f"nu_{i}"] or 0),
-                    n_rows,
-                    f.dataType,
-                )
-                if entry is not None:
-                    if i in summable:
-                        sm = _json_safe(r[f"sm_{i}"], f.dataType)
-                        if r[f"sm_{i}"] is None or sm is not None:
-                            entry["sum"] = sm
-                    st[f.name] = entry
-            if bloom_cols:
-                blooms = _bloom_build(
-                    spark.read.parquet(os.path.join(self.path, g)),
-                    bloom_cols,
-                    n_rows,
-                    self.path,
-                    g,
-                    bits_per_key=bloom_bits
-                    or _BLOOM_DEFAULT_BITS_PER_KEY,
-                    ndv={
-                        c: int(r[f"nd_{i}"] or 0)
-                        for i, c in enumerate(ndv_cols)
-                    },
-                )
-                if blooms:
-                    st["_bloom"] = blooms
-            stats[g] = st
-        return groups, stats
 
     def _publish(
         self,
@@ -3526,11 +3400,11 @@ class VersionedTable:
         )
 
     def _cluster_write(
-        self, spark, m: dict, df, cluster_cols: list[str], k: int
+        self, m: dict, df, cluster_cols: list[str], k: int
     ) -> tuple[list[str], dict]:
         """Range-cluster ``df`` on the (single or Z-order-interleaved)
-        key into ``k`` new data groups with exact per-group stats and
-        blooms — the write kernel shared by optimize() and
+        key into ``k`` new data groups through _write_groups — the
+        clustering shuffle shared by optimize() and
         optimize_incremental(), so full and incremental clustering can
         never produce differently-shaped groups."""
         if len(cluster_cols) == 1:
@@ -3544,99 +3418,12 @@ class VersionedTable:
         # ranges to partitions, which the bucket column then names (NULLs
         # sort first — they land in bucket 0 and leave its min/max NULL-
         # insensitive, matching the stats contract)
-        staged = os.path.join(self.path, "data", f"opt-{uuid.uuid4().hex}")
         clustered = (
             keyed.repartitionByRange(k, key)
             .withColumn("__bucket", F.spark_partition_id())
             .drop(*drop)
         )
-        clustered.write.partitionBy("__bucket").parquet(staged)
-        # per-group stats in ONE aggregate pass over the staged data
-        # (cheaper than k footer scans, exact by construction)
-        staged_df = spark.read.parquet(staged)
-        cols = [
-            f
-            for f in df.schema.fields
-            if _stats_eligible(f.dataType)
-        ]
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        summable: set = set()
-        for i, f in enumerate(cols):
-            aggs += [
-                F.min(f.name).alias(f"mn_{i}"),
-                F.max(f.name).alias(f"mx_{i}"),
-                F.sum(
-                    F.when(F.col(f.name).isNull(), 1).otherwise(0)
-                ).alias(f"nu_{i}"),
-            ]
-            se = _sum_stat_expr(f, f"sm_{i}")
-            if se is not None:
-                aggs.append(se)
-                summable.add(i)
-        opt_bloom_cols = [
-            c for c in (m.get("bloom_cols") or []) if c in df.columns
-        ]
-        for i, c in enumerate(opt_bloom_cols):
-            aggs.append(F.approx_count_distinct(c).alias(f"nd_{i}"))
-        per_bucket = {
-            int(r["__bucket"]): r
-            for r in staged_df.groupBy("__bucket").agg(*aggs).collect()
-        }
-        groups, stats = [], {}
-        for b in sorted(per_bucket):
-            g = os.path.join("data", uuid.uuid4().hex)
-            os.rename(
-                os.path.join(staged, f"__bucket={b}"),
-                os.path.join(self.path, g),
-            )
-            groups.append(g)
-            r = per_bucket[b]
-            n_rows = int(r["rows"] or 0)
-            st: dict = {"_rows": n_rows}
-            try:
-                gd = os.path.join(self.path, g)
-                st["_bytes"] = sum(
-                    os.path.getsize(os.path.join(gd, n))
-                    for n in os.listdir(gd)
-                    if not n.startswith(("_", "."))
-                )
-            except OSError:
-                pass
-            for i, f in enumerate(cols):
-                entry = _col_stats_entry(
-                    r[f"mn_{i}"],
-                    r[f"mx_{i}"],
-                    int(r[f"nu_{i}"] or 0),
-                    n_rows,
-                    f.dataType,
-                )
-                if entry is not None:
-                    if i in summable:
-                        sm = _json_safe(r[f"sm_{i}"], f.dataType)
-                        if r[f"sm_{i}"] is None or sm is not None:
-                            entry["sum"] = sm
-                    st[f.name] = entry
-            if m.get("bloom_cols"):
-                blooms = _bloom_build(
-                    spark.read.parquet(os.path.join(self.path, g)),
-                    m["bloom_cols"],
-                    int(st["_rows"]),
-                    self.path,
-                    g,
-                    bits_per_key=m.get("bloom_bits")
-                    or _BLOOM_DEFAULT_BITS_PER_KEY,
-                    ndv={
-                        c: int(r[f"nd_{i}"] or 0)
-                        for i, c in enumerate(opt_bloom_cols)
-                    },
-                )
-                if blooms:
-                    st["_bloom"] = blooms
-            stats[g] = st
-        import shutil
-
-        shutil.rmtree(staged, ignore_errors=True)  # _SUCCESS marker etc.
-        return groups, stats
+        return _write_groups(clustered, self.path, m, ("__bucket",))
 
     def optimize(
         self,
@@ -3687,7 +3474,7 @@ class VersionedTable:
             [cluster_by] if isinstance(cluster_by, str) else list(cluster_by)
         )
         groups, stats = self._cluster_write(
-            spark, m, df, cluster_cols, max(1, target_groups)
+            m, df, cluster_cols, max(1, target_groups)
         )
         # Delta's OPTIMIZE-vs-append concurrency: clustering is an
         # O(table) rewrite, so forcing a full redo because an ingest
@@ -3728,10 +3515,10 @@ class VersionedTable:
         """INCREMENTAL clustering (the LSM answer to OPTIMIZE ZORDER
         being O(table)): rewrite ONLY the groups appended since the
         last clustering — range-clustered on the SAME key through the
-        shared _cluster_write kernel — and carry every already-
-        clustered group by reference. Continuous ingest + periodic
-        re-clustering then costs O(new data) per run instead of
-        O(table); each run adds one clustered LAYER per key range
+        clustering shuffle optimize() uses (_cluster_write) — and carry
+        every already-clustered group by reference. Continuous ingest
+        + periodic re-clustering then costs O(new data) per run
+        instead of O(table); each run adds one clustered LAYER per key range
         (groups stay tight in every clustered dimension, so
         read(where=...) pruning and file-pruned MERGE stay selective —
         a point probe touches one group per layer instead of one per
@@ -3798,7 +3585,7 @@ class VersionedTable:
         else:
             k = max(1, target_groups)
         new_groups, new_stats = self._cluster_write(
-            spark, m, df, cluster_cols, k
+            m, df, cluster_cols, k
         )
         retained = [g for g in live if g not in delta_set]
         stats = {
@@ -3864,12 +3651,7 @@ class VersionedTable:
         for g in m["groups"]:
             size = (stats.get(g) or {}).get("_bytes")
             if size is None:
-                d = os.path.join(self.path, g)
-                size = sum(
-                    os.path.getsize(os.path.join(d, n))
-                    for n in os.listdir(d)
-                    if not n.startswith(("_", "."))
-                )
+                size = _group_bytes(os.path.join(self.path, g))
             if int(size) < min_bytes:
                 small.append(g)
         if len(small) < 2:
@@ -3877,14 +3659,7 @@ class VersionedTable:
         out_df = self._read_groups(spark, m, small).coalesce(
             max(1, target_partitions)
         )
-        group = os.path.join("data", uuid.uuid4().hex)
-        group_stats = _write_group_with_stats(
-            out_df,
-            os.path.join(self.path, group),
-            checks=m.get("constraints") or {},
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-        )
+        (group,), group_stats = _write_groups(out_df, self.path, m)
         small_set = set(small)
         untouched = [g for g in m["groups"] if g not in small_set]
         stats_out = {
@@ -3892,8 +3667,7 @@ class VersionedTable:
             for g, s in (m.get("stats") or {}).items()
             if g in set(untouched)
         }
-        if group_stats is not None:
-            stats_out[group] = group_stats
+        stats_out.update(group_stats)
         entries = []
         for e in m.get("delete_entries") or []:
             applies = [g for g in e["applies_to"] if g in set(untouched)]
@@ -4364,18 +4138,11 @@ class VersionedTable:
             return base  # nothing can match: metadata-only no-op
         untouched = [g for g in groups if g not in set(touched)]
         out_df = transform(self._read_groups(spark, m, touched))
-        group = os.path.join("data", uuid.uuid4().hex)
-        group_stats = _write_group_with_stats(
-            out_df, os.path.join(self.path, group),
-            checks=m.get("constraints") or {},
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-        )
+        (group,), group_stats = _write_groups(out_df, self.path, m)
         stats_out = {
             g: s for g, s in stats.items() if g in set(untouched)
         }
-        if group_stats is not None:
-            stats_out[group] = group_stats
+        stats_out.update(group_stats)
         entries = []
         for e in m.get("delete_entries") or []:
             applies = [g for g in e["applies_to"] if g in set(untouched)]
@@ -5223,7 +4990,7 @@ def merge_into(
       ON CONFLICT semantics, the reference's O5; also what
       operators/upsert.py does). It compiles to the narrow anti-join +
       union plan, measured ~1.25x faster than the clause engine on the
-      bench hot path (tools/ab_merge_default_path.py).
+      bench hot path (26fac7e:tools/ab_merge_default_path.py).
     * any NON-default clause (a condition, a {col: expr} dict,
       "delete", a BY SOURCE clause) engages the SQL-MERGE clause
       engine, where EACH matched target row is updated/kept per row
@@ -5432,20 +5199,13 @@ def merge_into(
         # manifest carrying the untouched groups (and their stats) by
         # reference; base-pinned so a concurrent commit conflicts instead
         # of silently disappearing under the rewrite
-        group = os.path.join("data", uuid.uuid4().hex)
-        group_stats = _write_group_with_stats(
-            merged, os.path.join(table.path, group),
-            checks=m.get("constraints") or {},
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-        )
+        (group,), group_stats = _write_groups(merged, table.path, m)
         stats = {
             g: s
             for g, s in (m.get("stats") or {}).items()
             if g in set(untouched)
         }
-        if group_stats is not None:
-            stats[group] = group_stats
+        stats.update(group_stats)
         # delete entries survive only where their groups do: touched groups
         # were rewritten with deletes applied; an entry scoped solely to
         # touched groups is fully materialized and dropped
@@ -6244,20 +6004,13 @@ def apply_changes(
         rewritten = current.join(all_keys, keys, "left_anti").unionByName(
             upserts
         )
-        group = os.path.join("data", uuid.uuid4().hex)
-        group_stats = _write_group_with_stats(
-            rewritten, os.path.join(table.path, group),
-            checks=m.get("constraints") or {},
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-        )
+        (group,), group_stats = _write_groups(rewritten, table.path, m)
         stats = {
             g: s
             for g, s in (m.get("stats") or {}).items()
             if g in set(untouched)
         }
-        if group_stats is not None:
-            stats[group] = group_stats
+        stats.update(group_stats)
         entries = []
         for e in m.get("delete_entries") or []:
             applies = [g for g in e["applies_to"] if g in set(untouched)]

@@ -235,3 +235,47 @@ class TestTriggerBounds:
         with pytest.raises(ValueError, match=opt):
             ps.TableChangefeedPartitionedReader({"path": t.path, opt: "-1"})
         ps.TableChangefeedPartitionedReader({"path": t.path, opt: "0"})
+
+    @pytest.mark.parametrize(
+        "opt, raw",
+        [
+            ("maxversionspertrigger", "1e3"),
+            ("maxfilespertrigger", "2.5"),
+            ("maxbytespertrigger", "1.5g"),
+            ("maxbytespertrigger", "64x"),
+        ],
+    )
+    def test_malformed_bound_raises_naming_the_option(self, opt, raw):
+        with pytest.raises(ValueError, match=opt):
+            ps._trigger_limits({opt: raw})
+
+    def test_byte_bound_reads_spark_byte_strings(self):
+        assert ps._trigger_limits(
+            {"maxfilespertrigger": "3", "maxbytespertrigger": "64m"}
+        ) == (0, 3, 64 << 20)
+
+    def test_byte_parser_matches_spark(self, spark):
+        """The pure-Python parser (the streaming-source worker has no
+        JVM) reads every string as JavaUtils.byteStringAsBytes does,
+        rejections included."""
+        from pyspark.errors import IllegalArgumentException
+
+        from file_stream_import_spark.io.tables import _parse_bytes
+
+        jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        for raw in [
+            "64m", "134217728b", "1t", " 5G ", "0", "7", "1k", "1KB",
+            "2mb", "3gb", "1tb", "1p", "1pb", "\t8m\n", "08k",
+            "9223372036854775807", "8191p",
+            "9223372036854775808", "8192p", "1.5g", "1e3", "-1", "+1",
+            "", "m", "10x", "1 m", "1kib",
+        ]:
+            try:
+                want = int(jutils.byteStringAsBytes(raw))
+            except IllegalArgumentException:  # NumberFormatException too
+                want = ValueError
+            try:
+                got = _parse_bytes(raw)
+            except ValueError:
+                got = ValueError
+            assert got == want, raw

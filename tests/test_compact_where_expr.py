@@ -285,7 +285,7 @@ class TestMetadataOnlySizing:
 
         monkeypatch.setattr(os, "listdir", counting)
         v = t.compact(spark, min_bytes=64 << 10)
-        # the one listdir allowed is _write_group_with_stats sizing the
+        # the one listdir allowed is _write_groups sizing the
         # NEW packed group; the 5 existing groups were sized from stats
         assert calls["n"] <= 1
         assert len(t._load_manifest(v)["groups"]) == 2

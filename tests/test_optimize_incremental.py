@@ -170,8 +170,8 @@ def _rows_w(spark, t):
 
 class TestIncrementalWithBlooms:
     def test_new_layer_groups_carry_blooms(self, spark, tmp_path):
-        # the shared _cluster_write kernel rebuilds per-group blooms
-        # for the new layer exactly like the full optimize
+        # the new layer goes through the same clustering shuffle and
+        # group writer as the full optimize, blooms included
         t = VersionedTable(str(tmp_path / "tb"))
         t.commit(
             spark.range(2000).select(

@@ -1,6 +1,7 @@
 """Round-9: partition-aware commits (one group per partition value,
-io/versioned.py::_write_partitioned_groups) and the streaming writer's
-continuous maintenance (partition_by + auto_compact_every).
+written by the group writer every commit and clustering shares,
+io/versioned.py::_write_groups) and the streaming writer's continuous
+maintenance (partition_by + auto_compact_every).
 
 A partitioned commit makes each group's stats box for the partition
 column a POINT, so reads / MERGE touch tests / auto-pruned DML on that
@@ -11,6 +12,7 @@ without a clustering OPTIMIZE pass.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -203,6 +205,151 @@ class TestPartitionedCommit:
         assert len(carried) == 3
         got = t.read(spark).filter(F.col("tag") == "merged").count()
         assert got == 5
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs the call ran), counted by a job tag."""
+    sc = spark.sparkContext
+    tag = f"group-writer-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def _shapes_df(spark, n_parts=4):
+    """1,200 rows: a key, a double with NULLs, a string, and a
+    partition column of ``n_parts`` values."""
+    return spark.range(1200).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.col("id") * 0.5)
+        .alias("x"),
+        F.concat(F.lit("s"), (F.col("id") % 13).cast("string")).alias("s"),
+        (F.col("id") % n_parts).cast("int").alias("p"),
+    )
+
+
+class TestOneGroupWriter:
+    """Plain commits, partitioned commits and clustering write their
+    groups and stats through one writer (_write_groups), so the same
+    rows carry the same stats whichever way they were written."""
+
+    @pytest.mark.parametrize("partition_by", [None, ["bucket(2, a)"]])
+    def test_every_group_records_rows_and_bytes(
+        self, spark, tmp_path, partition_by
+    ):
+        # an array is not stats-eligible: the groups carry no column
+        # entry, but still their row and byte counts
+        t = VersionedTable(str(tmp_path / "t"))
+        v = t.commit(
+            spark.range(40).select(
+                F.array(F.col("id"), F.col("id") * 2).alias("a")
+            ),
+            mode="overwrite",
+            partition_by=partition_by,
+        )
+        m = t._load_manifest(v)
+        assert m["groups"]
+        for g in m["groups"]:
+            assert m["stats"][g]["_rows"] > 0
+            assert m["stats"][g]["_bytes"] > 0
+        assert sum(m["stats"][g]["_rows"] for g in m["groups"]) == 40
+
+    def test_three_write_shapes_agree(self, spark, tmp_path):
+        import decimal
+
+        plain = VersionedTable(str(tmp_path / "plain"))
+        plain.commit(_shapes_df(spark), mode="overwrite")
+        parted = VersionedTable(str(tmp_path / "parted"))
+        parted.commit(
+            _shapes_df(spark), mode="overwrite", partition_by=["p"]
+        )
+        clustered = VersionedTable(str(tmp_path / "clustered"))
+        clustered.commit(_shapes_df(spark), mode="overwrite")
+        clustered.optimize(spark, cluster_by="k", target_groups=12)
+
+        def summary(t):
+            m = t._load_manifest(t.latest_version())
+            sts = [m["stats"][g] for g in m["groups"]]
+            keys = {
+                (c, tuple(sorted(st[c])))
+                for st in sts
+                for c in st
+                if not c.startswith("_")
+            }
+            totals = {"rows": sum(st["_rows"] for st in sts)}
+            for c in ("k", "x", "s", "p"):
+                mins = [st[c]["min"] for st in sts if st[c]["min"] is not None]
+                maxs = [st[c]["max"] for st in sts if st[c]["max"] is not None]
+                totals[c] = (
+                    min(mins), max(maxs), sum(st[c]["nulls"] for st in sts),
+                    sum(
+                        decimal.Decimal(str(st[c]["sum"]))
+                        for st in sts
+                        if st[c].get("sum") is not None
+                    ) if c != "s" else None,
+                )
+            assert all(st["_bytes"] > 0 for st in sts)
+            return m, keys, totals
+
+        _, keys, totals = summary(plain)
+        assert keys == {
+            ("k", ("max", "min", "nulls", "sum")),
+            ("x", ("max", "min", "nulls", "sum")),
+            ("s", ("max", "min", "nulls")),
+            ("p", ("max", "min", "nulls", "sum")),
+        }
+        assert totals["rows"] == 1200
+        assert totals["k"] == (0, 1199, 0, 1199 * 1200 // 2)
+        assert totals["x"][2] == len(range(0, 1200, 7))
+        m_p, keys_p, totals_p = summary(parted)
+        m_c, keys_c, totals_c = summary(clustered)
+        assert len(m_p["groups"]) == 4 and len(m_c["groups"]) == 12
+        assert keys_p == keys == keys_c
+        assert totals_p == totals == totals_c
+        # the clustered groups are listed in key order
+        ks = [m_c["stats"][g]["k"] for g in m_c["groups"]]
+        assert all(a["max"] < b["min"] for a, b in zip(ks, ks[1:]))
+
+    @pytest.mark.parametrize("n_parts", [2, 12])
+    def test_partitioned_commit_jobs_do_not_grow_with_groups(
+        self, spark, tmp_path, n_parts
+    ):
+        """Two jobs for the hash-shuffled write and two for the one
+        grouped stats aggregate (AQE runs the shuffle map stage of each
+        as its own job), whether the commit lands 2 groups or 12."""
+        t = VersionedTable(str(tmp_path / "t"))
+        v, jobs = _jobs(
+            spark,
+            lambda: t.commit(
+                _shapes_df(spark, n_parts), mode="overwrite",
+                partition_by=["p"],
+            ),
+        )
+        assert len(t._load_manifest(v)["groups"]) == n_parts
+        assert jobs == 4
+
+    @pytest.mark.parametrize("target_groups", [2, 12])
+    def test_optimize_jobs_do_not_grow_with_groups(
+        self, spark, tmp_path, target_groups
+    ):
+        """One job samples the key range, two run the range-shuffled
+        write and two the grouped stats aggregate, at 2 groups or 12."""
+        t = VersionedTable(str(tmp_path / "t"))
+        t.commit(_shapes_df(spark), mode="overwrite")
+        v, jobs = _jobs(
+            spark,
+            lambda: t.optimize(
+                spark, cluster_by="k", target_groups=target_groups
+            ),
+        )
+        assert len(t._load_manifest(v)["groups"]) == target_groups
+        assert jobs == 5
 
 
 class TestWriterMaintenance:

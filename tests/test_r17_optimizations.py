@@ -2,8 +2,8 @@
 
 Covers: the vectorized cosine-dedup kernel (value identity with the JVM
 fold arm across every edge the fold semantics have), ivf_assign's norm
-reuse + reserved-column guard, and the manifest-schema read in
-_write_partitioned_groups.
+reuse + reserved-column guard, and the schema-given stats read of a
+multi-group write (io/versioned.py::_write_groups).
 """
 
 from __future__ import annotations

@@ -72,6 +72,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
@@ -6823,6 +6824,42 @@ def snapshot_diff(
     )
 
 
+def _txn_watermark(
+    table: VersionedTable, tag: str
+) -> tuple[int | None, int | None]:
+    """(latest version, ``tag``'s txn epoch) from ONE manifest: marks
+    inherit parent-to-child on every commit, so the latest manifest
+    holds them all and survives vacuum."""
+    latest = table.latest_version()
+    if latest is None:
+        return None, None
+    hw = (table._load_manifest(latest).get("txn") or {}).get(tag)
+    return latest, (None if hw is None else int(hw))
+
+
+def _txn_epoch_commit(
+    table: VersionedTable,
+    tag: str,
+    batch_id: int,
+    commit: Callable[[int | None, dict], int],
+) -> int | None:
+    """The exactly-once loop of every foreachBatch lake sink: skip a
+    ``batch_id`` at or below ``tag``'s watermark, else
+    ``commit(latest, txn)``, which must publish with
+    ``expected_parent=latest`` and ``txn=txn`` so the replay check is
+    ATOMIC with the commit. Of two deliveries of one batch (zombie
+    driver / speculative retry) the loser conflicts, re-reads the
+    watermark and skips. Returns the landed version, None on replay."""
+    while True:
+        latest, hw = _txn_watermark(table, tag)
+        if hw is not None and int(batch_id) <= hw:
+            return None  # replay of a committed epoch
+        try:
+            return commit(latest, {tag: int(batch_id)})
+        except CommitConflictError:
+            continue  # table advanced: re-read the watermark
+
+
 def make_idempotent_table_writer(
     table: VersionedTable,
     query_name: str,
@@ -6838,9 +6875,7 @@ def make_idempotent_table_writer(
     ``{"txn": {query_name: batch_id}}`` ATOMICALLY in its manifest
     publish (no post-commit stamping — a crash can't separate data from
     its epoch mark), and a replayed batch_id at or below the writer's
-    high-water mark is skipped. Watermarks inherit parent-to-child on
-    every commit, so the check reads ONE manifest (the latest) and
-    survives vacuum, which always retains the latest snapshot.
+    high-water mark is skipped (_txn_epoch_commit).
 
     ``key=None`` appends the batch; with a key, the batch MERGEs
     (upsert) — give last-writer-wins resolution to duplicate keys
@@ -6856,60 +6891,32 @@ def make_idempotent_table_writer(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        # The replay check must be ATOMIC with the commit (Delta
-        # validates txn versions inside the commit protocol): the
-        # commit is pinned to the exact version the watermark was read
-        # from, so two concurrent deliveries of the same batch_id
-        # (zombie driver / speculative retry) cannot both land — the
-        # loser conflicts, re-reads the watermark, and skips.
-        while True:
-            latest = table.latest_version()
-            hw = None
-            if latest is not None:
-                hw = (table._load_manifest(latest).get("txn") or {}).get(
-                    query_name
+        def land(latest: int | None, txn: dict) -> int:
+            if key is None or latest is None:
+                return table.commit(
+                    batch_df, mode="append", txn=txn,
+                    expected_parent=latest, partition_by=partition_by,
                 )
-            if hw is not None and int(batch_id) <= int(hw):
-                return  # replay of a committed epoch
-            stamp = {query_name: int(batch_id)}
+            return merge_into(
+                table, batch_df.sparkSession, batch_df, key,
+                txn=txn, expected_parent=latest,
+            )
+
+        v = _txn_epoch_commit(table, query_name, batch_id, land)
+        # continuous maintenance (r9): every Nth snapshot, bin-pack the
+        # small groups this stream keeps landing (one per micro-batch /
+        # per partition value). Losing a compaction race to another
+        # writer is FINE - the data is committed, a later trigger packs
+        # it; the exactly-once guarantee never depends on compaction.
+        if v is not None and auto_compact_every and (
+            v % int(auto_compact_every) == 0
+        ):
             try:
-                if key is None or latest is None:
-                    v = table.commit(
-                        batch_df,
-                        mode="append",
-                        txn=stamp,
-                        expected_parent=latest,
-                        partition_by=partition_by,
-                    )
-                else:
-                    v = merge_into(
-                        table,
-                        batch_df.sparkSession,
-                        batch_df,
-                        key,
-                        txn=stamp,
-                        expected_parent=latest,
-                    )
-                # continuous maintenance (r9): every Nth snapshot,
-                # bin-pack the small groups this stream keeps landing
-                # (one per micro-batch / per partition value). Losing
-                # a compaction race to another writer is FINE - the
-                # data is committed, a later trigger packs it; the
-                # exactly-once guarantee never depends on compaction.
-                if (
-                    auto_compact_every
-                    and v % int(auto_compact_every) == 0
-                ):
-                    try:
-                        table.compact(
-                            batch_df.sparkSession,
-                            min_bytes=compact_min_bytes,
-                        )
-                    except CommitConflictError:
-                        pass
-                return
+                table.compact(
+                    batch_df.sparkSession, min_bytes=compact_min_bytes
+                )
             except CommitConflictError:
-                continue  # table advanced: re-read the watermark
+                pass
 
     return write
 
@@ -6930,29 +6937,14 @@ def make_idempotent_cdc_writer(
     CDC topic lands on the lake table exactly once."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        while True:
-            latest = table.latest_version()
-            hw = None
-            if latest is not None:
-                hw = (table._load_manifest(latest).get("txn") or {}).get(
-                    query_name
-                )
-            if hw is not None and int(batch_id) <= int(hw):
-                return
-            try:
-                apply_changes(
-                    table,
-                    batch_df.sparkSession,
-                    batch_df,
-                    key,
-                    op_col=op_col,
-                    seq_col=seq_col,
-                    txn={query_name: int(batch_id)},
-                    expected_parent=latest,
-                )
-                return
-            except CommitConflictError:
-                continue
+        _txn_epoch_commit(
+            table, query_name, batch_id,
+            lambda latest, txn: apply_changes(
+                table, batch_df.sparkSession, batch_df, key,
+                op_col=op_col, seq_col=seq_col,
+                txn=txn, expected_parent=latest,
+            ),
+        )
 
     return write
 

@@ -43,6 +43,8 @@ from ..io.versioned import (
     _CDF_PLAN_CHUNK,
     CommitConflictError,
     VersionedTable,
+    _txn_epoch_commit,
+    _txn_watermark,
     merge_into,
     table_changes_cdf,
     table_signed_rows,
@@ -932,21 +934,6 @@ def rewrite_with_mv(
     return out
 
 
-def _watermark(
-    mv: VersionedTable, tag: str
-) -> tuple[int | None, int | None]:
-    """(mv_version, source_watermark) read from ONE manifest, so the
-    stored extremes the incremental arm joins against are the exact
-    state the watermark describes (reads pin version=mv_version, the
-    merge pins expected_parent=mv_version — a racing refresher forces
-    CommitConflictError and a clean re-read)."""
-    latest = mv.latest_version()
-    if latest is None:
-        return None, None
-    wm = (mv._load_manifest(latest).get("txn") or {}).get(tag)
-    return latest, (None if wm is None else int(wm))
-
-
 def refresh_mv(
     source: VersionedTable,
     mv: VersionedTable,
@@ -1106,7 +1093,7 @@ def refresh_mv(
         None if source_where is None else F.expr(source_where)
     )
     while True:
-        mv_v, wm = _watermark(mv, tag)
+        mv_v, wm = _txn_watermark(mv, tag)
         if wm is None:
             _store_spec(mv, spec)  # bootstrap (re)defines the spec
         else:
@@ -1492,7 +1479,7 @@ def _fold_aux(
         None if source_where is None else F.expr(source_where)
     )
     while True:
-        a_v, a_wm = _watermark(aux, tag)
+        a_v, a_wm = _txn_watermark(aux, tag)
         if a_wm is not None and a_wm >= cur:
             return  # replay / racing refresher already folded
         try:
@@ -2151,44 +2138,31 @@ def _fold_aux_batch(
         .groupBy(*group_cols, col)
         .agg(F.sum(sign).cast("bigint").alias("cnt"))
     )
-    while True:
-        latest = aux.latest_version()
-        hw = (
-            None
-            if latest is None
-            else (aux._load_manifest(latest).get("txn") or {}).get(tag)
+
+    def fold(latest: int | None, txn: dict) -> int:
+        if latest is None:
+            # first batch materializes the aux from nothing (a correct
+            # CDF replay cannot delete before inserting, so these
+            # counts are non-negative)
+            return aux.commit(
+                deltas, mode="overwrite", txn=txn, expected_parent=latest
+            )
+        return merge_into(
+            aux,
+            spark,
+            deltas,
+            key=[*group_cols, col],
+            when_matched={
+                "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
+                + F.coalesce(F.col("s.cnt"), F.lit(0))
+            },
+            txn=txn,
+            expected_parent=latest,
+            source_unique=True,  # groupBy(key) output
         )
-        if hw is not None and int(hw) >= int(batch_id):
-            return  # replay of a folded batch
-        try:
-            if latest is None:
-                # first batch materializes the aux from nothing (a
-                # correct CDF replay cannot delete before inserting,
-                # so these counts are non-negative)
-                aux.commit(
-                    deltas,
-                    mode="overwrite",
-                    txn={tag: int(batch_id)},
-                    expected_parent=latest,
-                )
-            else:
-                merge_into(
-                    aux,
-                    spark,
-                    deltas,
-                    key=[*group_cols, col],
-                    when_matched={
-                        "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
-                        + F.coalesce(F.col("s.cnt"), F.lit(0))
-                    },
-                    txn={tag: int(batch_id)},
-                    expected_parent=latest,
-                    source_unique=True,  # groupBy(key) output
-                )
-            _sweep_zero_groups(aux, spark, "cnt")
-            return
-        except CommitConflictError:
-            continue  # concurrent delivery landed: re-check
+
+    if _txn_epoch_commit(aux, tag, batch_id, fold) is not None:
+        _sweep_zero_groups(aux, spark, "cnt")
 
 
 def make_mv_maintainer(
@@ -2386,21 +2360,8 @@ def make_mv_maintainer(
                 group_cols=group_cols, col=c,
                 tag=query_name, batch_id=batch_id,
             )
-        # the txn-epoch replay/conflict loop mirrors
-        # io/versioned.py::make_idempotent_table_writer — a protocol
-        # change there (the hw comparison, the expected_parent pin)
-        # must land here too
-        while True:
-            latest = mv.latest_version()
-            hw = (
-                None
-                if latest is None
-                else (mv._load_manifest(latest).get("txn") or {}).get(
-                    query_name
-                )
-            )
-            if hw is not None and int(hw) >= int(batch_id):
-                return  # replay of a committed batch
+
+        def fold(latest: int | None, txn: dict) -> int:
             deltas = base
             if ext_names or hll_names:
                 deltas = _fold_stored(
@@ -2420,32 +2381,30 @@ def make_mv_maintainer(
                 *group_cols, *sum_cols, rows_col, *sq_names,
                 *ext_names, *nd_names, *hll_names, *hist_names,
             )
-            try:
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*sum_cols, rows_col, *sq_names]
-                        },
-                        **{
-                            n: F.col(f"s.{n}")
-                            for n in [*ext_names, *nd_names, *hll_names]
-                        },
-                        **{n: _hist_merge_expr(n) for n in hist_names},
+            return merge_into(
+                mv,
+                spark,
+                deltas,
+                key=group_cols,
+                when_matched={
+                    **{
+                        c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+                        + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+                        for c in [*sum_cols, rows_col, *sq_names]
                     },
-                    txn={query_name: int(batch_id)},
-                    expected_parent=latest,
-                    source_unique=True,  # groupBy(group_cols) output
-                )
-                break
-            except CommitConflictError:
-                continue  # concurrent delivery landed: re-check
-        _sweep_zero_groups(mv, spark, rows_col)
+                    **{
+                        n: F.col(f"s.{n}")
+                        for n in [*ext_names, *nd_names, *hll_names]
+                    },
+                    **{n: _hist_merge_expr(n) for n in hist_names},
+                },
+                txn=txn,
+                expected_parent=latest,
+                source_unique=True,  # groupBy(group_cols) output
+            )
+
+        if _txn_epoch_commit(mv, query_name, batch_id, fold) is not None:
+            _sweep_zero_groups(mv, spark, rows_col)
 
     return write
 
@@ -2635,7 +2594,7 @@ def refresh_rollup_mv(
         None if source_where is None else F.expr(source_where)
     )
     while True:
-        mv_v, wm = _watermark(mv, tag)
+        mv_v, wm = _txn_watermark(mv, tag)
         if wm is None:
             _store_spec(mv, spec)  # bootstrap (re)defines the spec
         else:

@@ -279,3 +279,52 @@ class TestTriggerBounds:
             except ValueError:
                 got = ValueError
             assert got == want, raw
+
+
+class TestPlanCostBounded:
+    """Default-tier pin of the checkpoint-served plan's cost: over a
+    backfill whose history the checkpoint covers, planning parses a
+    fixed number of manifests however long the history grows (the
+    manifest walk parses one per version). Timed at scale by
+    ``b195d10:tools/ab_cdf_plan.py``: a 302-version backfill of a
+    401-group table planned in 0.503 s / 138 manifest parses served vs
+    2.368 s / 908 walked, the same 1,003 partitions."""
+
+    def test_plan_manifest_loads_do_not_grow_with_history(
+        self, spark, tmp_path, monkeypatch
+    ):
+        t = _mk_history(spark, tmp_path, n_appends=0)
+        row = (
+            spark.createDataFrame([(0, "b", 0)], "k long, g string, x long")
+            .coalesce(1)
+            .localCheckpoint(eager=True)
+        )
+
+        def grow(n: int) -> None:
+            for _ in range(n):
+                v = t.latest_version()
+                t.commit(
+                    row.select((F.col("k") + 100 + v).alias("k"), "g", "x"),
+                    mode="append",
+                )
+            t._extend_checkpoint(t.latest_version())
+
+        def plan_loads():
+            loads = [0]
+            orig = VersionedTable._load_manifest
+
+            def counting(self, v):
+                loads[0] += 1
+                return orig(self, v)
+
+            with monkeypatch.context() as m:
+                m.setattr(VersionedTable, "_load_manifest", counting)
+                parts = _plan(t)
+            return loads[0], len(parts)
+
+        grow(8)
+        short, short_parts = plan_loads()
+        grow(8)
+        long_, long_parts = plan_loads()
+        assert long_parts == short_parts + 8  # the plan did grow
+        assert long_ == short

@@ -144,6 +144,9 @@ class TestClauseMergePruning:
         )
         carried = set(t._load_manifest(v)["groups"]) & before
         assert len(carried) == 3  # keys 150/160 live in ONE group
+        # b195d10:tools/ab_merge_pruned.py timed this at 16 groups x 1M
+        # rows: 1.33 s / 70.6 MB rewritten vs 5.23 s / 1129.9 MB with
+        # the stats stripped (every group rewritten)
 
     def test_validation_rejects_bad_clauses(self, spark, tmp_path):
         t = _table(spark, tmp_path)

@@ -1072,39 +1072,89 @@ class TestRound6Stats:
         # instant — consistent with version order despite the skew
         assert t.version_as_of(ts1) == 1
 
-    def test_idempotent_writer_conflict_replay_skips(self, spark, tmp_path):
-        """Zombie-driver race: writer A reads the watermark, then the
-        same batch lands via another instance before A commits. A's
-        pinned commit conflicts, A re-reads the watermark, and skips —
-        no double append."""
+    @pytest.mark.parametrize(
+        "sink", ["table_append", "table_keyed", "cdc", "mv_maintainer"]
+    )
+    def test_idempotent_writer_conflict_replay_skips(
+        self, spark, tmp_path, sink
+    ):
+        """Zombie-driver race, for every foreachBatch lake sink: writer
+        A reads the watermark, then another instance delivers the same
+        batch before A commits. A's pinned commit conflicts, A re-reads
+        the watermark, and skips — the batch lands once."""
         from file_stream_import_spark.io.versioned import (
+            make_idempotent_cdc_writer,
             make_idempotent_table_writer,
+        )
+        from file_stream_import_spark.operators.mv import (
+            make_mv_maintainer,
+            nd_aux_table,
         )
 
         t = VersionedTable(str(tmp_path / "t"))
-        w = make_idempotent_table_writer(t, "q")
-        w(self._kv(spark, [(1, "a")]), 0)
-        # interleave: patch latest_version to simulate A reading version
-        # 0, while batch 1 is committed concurrently before A publishes
+        if sink == "mv_maintainer":
+            # distinct_cols: the support-table fold runs on every batch
+            def make():
+                return make_mv_maintainer(
+                    t, "q", group_cols=["g"], sum_cols=["x"],
+                    distinct_cols=["v"],
+                )
+
+            schema = (
+                "g string, v string, x long, _change_type string, "
+                "_commit_version int"
+            )
+            b0 = [("a", "x", 1, "insert", 0)]
+            b1 = [("a", "y", 2, "insert", 1), ("a", "x", 4, "insert", 1)]
+        elif sink == "cdc":
+            def make():
+                return make_idempotent_cdc_writer(t, "q", key="k")
+
+            schema = "k long, v string, op string"
+            b0 = [(1, "a", "I")]
+            b1 = [(2, "b", "I")]
+        else:
+            def make():
+                key = "k" if sink == "table_keyed" else None
+                return make_idempotent_table_writer(t, "q", key=key)
+
+            schema = "k long, v string"
+            b0 = [(1, "a")]
+            b1 = [(2, "b")]
+        w = make()
+        w(spark.createDataFrame(b0, schema), 0)
+        # interleave: the first watermark read of the zombie delivery
+        # lets a competing instance land batch 1 before A publishes
         orig_latest = t.latest_version
-        calls = {"n": 0}
+        landed = []
 
         def racy_latest():
             v = orig_latest()
-            if calls["n"] == 0:
-                calls["n"] += 1
-                # competing instance lands batch 1 AFTER our read
-                t.commit(
-                    self._kv(spark, [(2, "b")]), txn={"q": 1}
-                )
+            if not landed:
+                landed.append(None)
+                make()(spark.createDataFrame(b1, schema), 1)
+                landed[0] = orig_latest()
             return v
 
         t.latest_version = racy_latest
-        w(self._kv(spark, [(2, "b")]), 1)  # zombie redelivery of batch 1
+        w(spark.createDataFrame(b1, schema), 1)  # zombie redelivery
         t.latest_version = orig_latest
-        assert t.read(spark).count() == 2  # not 3: the replay was skipped
-        hw = t._load_manifest(t.latest_version())["txn"]["q"]
-        assert hw == 1
+        assert landed  # the race ran
+        assert t.latest_version() == landed[0]  # A committed nothing
+        assert t._load_manifest(landed[0])["txn"]["q"] == 1
+        if sink == "mv_maintainer":
+            assert [
+                (r["g"], r["n_rows"], r["x"], r["v_nd"])
+                for r in t.read(spark).collect()
+            ] == [("a", 3, 7, 2)]
+            assert sorted(
+                (r["v"], r["cnt"])
+                for r in nd_aux_table(t, "v").read(spark).collect()
+            ) == [("x", 2), ("y", 1)]
+        else:
+            assert sorted(
+                (r["k"], r["v"]) for r in t.read(spark).collect()
+            ) == [(1, "a"), (2, "b")]
 
     def test_merge_materializes_deletes_on_touched_groups_only(
         self, spark, tmp_path

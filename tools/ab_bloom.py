@@ -1,5 +1,6 @@
 """A/B: MERGE on a hash-keyed table with vs without per-group Bloom
-filters (r7 feature) — the point-lookup analog of ab_merge_pruned.py.
+filters (r7 feature) — the point-lookup analog of
+b195d10:tools/ab_merge_pruned.py.
 
 The table's key is md5(id): every group's [min, max] stats box spans
 the whole hex space, so WITHOUT blooms the touch test must rewrite

@@ -73,7 +73,7 @@ import json
 import os
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -1065,6 +1065,15 @@ def _group_bytes(d: str) -> int:
     )
 
 
+def _flat_name(gid: str, name: str) -> str:
+    """A staged file's name in the flat stats directory: prefixed by
+    its group id, keeping a leading ``.``/``_`` so checksums and markers
+    stay hidden from the reader."""
+    if name.startswith((".", "_")):
+        return f"{name[0]}{gid}-{name[1:]}"
+    return f"{gid}-{name}"
+
+
 def _write_groups(
     df: DataFrame, table_path: str, m: dict, part_cols: tuple = ()
 ) -> tuple[list[str], dict]:
@@ -1084,12 +1093,13 @@ def _write_groups(
       the derived columns ``part_cols``; each distinct value becomes
       one group. A staged ``partitionBy`` write lays the values out as
       directories (the derived columns leave the files, every source
-      column stays), each leaf directory is renamed into an immutable
-      group — in name order with digit runs compared as numbers, so
+      column stays), each leaf directory becomes an immutable group —
+      in name order with digit runs compared as numbers, so
       clustering's ``__bucket=2`` precedes ``__bucket=10`` and the
       groups stay in key order — and ONE grouped aggregate of the same
-      expressions over the new groups, keyed by input_file_name's
-      group id, yields every group's stats.
+      expressions, keyed by the group id each file carries while all
+      of them sit in one flat staging directory, yields every group's
+      stats.
 
     The entry holds ``_rows``, ``_bytes`` (data bytes: compact() sizes
     groups from it without walking the data tree), ``{"min", "max",
@@ -1142,29 +1152,47 @@ def _write_groups(
                 )
                 if os.path.isdir(os.path.join(d, n))
             ]
-        groups = []
+        # the stats aggregate reads ONE flat directory holding every
+        # leaf's files under a group-id prefix: one path per group
+        # would make Spark list past 32 paths (parallelPartitionDiscovery
+        # threshold) in an extra job, and so would one root holding
+        # more than 32 leaf directories
+        flat = os.path.join(staged, "flat")
+        os.mkdir(flat)
+        moved: dict[str, list[str]] = {}
         for d in leaves:
-            g = os.path.join("data", uuid.uuid4().hex)
-            os.rename(d, os.path.join(table_path, g))
-            groups.append(g)
-        shutil.rmtree(staged, ignore_errors=True)
+            gid = uuid.uuid4().hex
+            moved[gid] = sorted(os.listdir(d))
+            for n in moved[gid]:
+                os.rename(
+                    os.path.join(d, n), os.path.join(flat, _flat_name(gid, n))
+                )
         per = {}
-        if groups:
+        if moved:
             # the files' schema IS ``schema``: read under it instead of
             # inferring, which runs a footer-reading job at plan time
             by_id = {
                 r["__g"]: r
                 for r in spark.read.schema(schema)
-                .parquet(*[os.path.join(table_path, g) for g in groups])
+                .parquet(flat)
                 .groupBy(
                     F.regexp_extract(
-                        F.input_file_name(), "data/([0-9a-f]{32})/", 1
+                        F.input_file_name(), "/([0-9a-f]{32})-[^/]*$", 1
                     ).alias("__g")
                 )
                 .agg(*exprs)
                 .collect()
             }
-            per = {g: by_id[os.path.basename(g)] for g in groups}
+        for gid, names in moved.items():
+            g = os.path.join("data", gid)
+            os.mkdir(os.path.join(table_path, g))
+            for n in names:
+                os.rename(
+                    os.path.join(flat, _flat_name(gid, n)),
+                    os.path.join(table_path, g, n),
+                )
+            per[g] = by_id[gid]
+        shutil.rmtree(staged, ignore_errors=True)
     violated = {}
     for i, name in enumerate(sorted(checks)):
         n = sum(int(r[f"ck_{i}"] or 0) for r in per.values())
@@ -2785,7 +2813,7 @@ class VersionedTable:
 
         declared = _schema_from_json(m["schema"])
         if not groups:
-            return spark.createDataFrame([], schema=declared)
+            return _empty_frame(spark, declared)
         colmap = m.get("colmap") or {}
         castmap = m.get("castmap") or {}
         dtypes = {f.name: f.dataType for f in declared.fields}
@@ -4152,18 +4180,7 @@ class VersionedTable:
         types = {
             f.name: f.dataType for f in _schema_from_json(m["schema"]).fields
         }
-        box = None
-        if prune_where:
-            box = {}
-            for col, bound in prune_where.items():
-                # _where_bounds normalizes both forms — a (lo, hi) range
-                # and an IN-set list, whose box is [min, max] (the rebase
-                # disjointness proof only needs the conservative hull)
-                lo, hi = _where_bounds(bound)
-                box[col] = (
-                    _json_safe(lo, types.get(col)) if lo is not None else None,
-                    _json_safe(hi, types.get(col)) if hi is not None else None,
-                )
+        box = _rebase_box(prune_where, types) if prune_where else None
         return self._publish_or_rebase(
             base,
             {
@@ -4872,6 +4889,24 @@ def _schema_from_json(schema_json: str):
     return StructType.fromJson(json.loads(schema_json))
 
 
+def _empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty DataFrame of ``schema`` built JVM-side as a
+    LocalRelation. ``spark.createDataFrame([], schema)`` is a Python
+    RDD: every action over it starts Python workers, and its unknown
+    size keeps the optimizer from folding the empty side away — the
+    write of a MERGE that touches no group ran three Spark jobs over it
+    instead of one."""
+    jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+        schema.json()
+    )
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jschema
+        ),
+        spark,
+    )
+
+
 def _schema_key(schema) -> list[tuple[str, str]]:
     """Nullability- and metadata-insensitive schema identity: parquet
     reads resolve every column nullable, so flags drift between a
@@ -4938,6 +4973,8 @@ def merge_into(
     not_matched_by_source_condition=None,
     allow_evolution: bool = False,
     source_unique: bool = False,
+    fold: dict[str, str] | None = None,
+    prune_where: dict | None = None,
 ) -> int:
     """MERGE INTO the versioned table. Default clauses: WHEN MATCHED
     THEN UPDATE SET *, WHEN NOT MATCHED THEN INSERT * — the lakehouse
@@ -4974,6 +5011,31 @@ def merge_into(
       otherwise the whole table rewrites; and because the decision
       depends on key NON-existence, a commit carrying this clause
       does not rebase over concurrent adds (they truly conflict).
+    * ``fold={col: how}`` — the FOLD form of WHEN MATCHED THEN UPDATE
+      / WHEN NOT MATCHED THEN INSERT *, for merging deltas into an
+      aggregate (operators/mv.py): the touched groups' rows and the
+      source rows are unioned and reduced by ONE ``groupBy(key)``
+      instead of joined. ``how`` per non-key column is ``"add"``
+      (``coalesce(t, 0) + coalesce(s, 0)``), ``"source"`` (the source
+      value wins, NULL included) or ``"map_add"`` (union-keyed
+      per-entry add of two maps, zero entries dropped); every non-key
+      column must be named. A key held by one side only keeps that
+      row as is, so on a target unique on the key the result equals
+      the clause engine's with the same assignments. The fold is
+      defined for such targets: rows sharing a key all fold into one,
+      so duplicate TARGET keys collapse (as in the default upsert),
+      their "add" columns summed. NULL keys never match: a row with a
+      NULL key column passes through on its own. Not combinable with
+      the other clause arguments.
+
+    ``prune_where`` ({col: (lo, hi)} over key columns, stats domain or
+    plain literals) is the caller's ASSERTION that every source row
+    lies inside the box — the ``update_where``/``delete_where``
+    contract. Groups whose stats box is disjoint from it are carried
+    by reference and NO touch-test pass runs; every other group is
+    rewritten. A wrong box loses matches (rows outside it are treated
+    as inserts), so derive it from metadata that bounds the source by
+    construction (diff_stats_box).
 
     Like SQL MERGE (and the Derby staging path in io/jdbc.py), the
     source must be unique per key — duplicate source keys would make
@@ -5024,7 +5086,11 @@ def merge_into(
     Once the touch test has filled the cache, the write plan also sees
     the source's real size, so the anti-join broadcasts it and a small
     merge lands as one file. A source the caller already cached is used
-    as is and stays cached.
+    as is and stays cached. A ``fold`` with a ``prune_where`` box over a
+    ``source_unique`` source is not pinned: no touch test and no probe
+    run, the one-sided fold plan reads the source once, and a rebase
+    proves disjointness from the box — a pin would only add a cache
+    stage (one more Spark job) to the write.
 
     ``expected_parent`` pins the snapshot the caller's decision was
     based on (exactly-once writers pass the version their watermark
@@ -5091,7 +5157,27 @@ def merge_into(
             f"{{col: expr}} dict, or None; got "
             f"{when_not_matched_by_source!r}"
         )
-    with _materialized(updates):
+    if fold is not None and (
+        when_matched != "update_all"
+        or matched_condition is not None
+        or when_not_matched != "insert_all"
+        or when_not_matched_by_source is not None
+    ):
+        raise ValueError(
+            "fold= is its own matched/not-matched clause pair; pass no "
+            "other clause arguments with it"
+        )
+    if prune_where is not None and when_not_matched_by_source is not None:
+        raise ValueError(
+            "prune_where bounds the source rows; a BY SOURCE clause "
+            "concerns target rows outside it"
+        )
+    # a caller-boxed fold of a unique source reads it once, in the write
+    # plan (no touch test, no probe, one-sided plan): nothing to pin
+    read_once = (
+        fold is not None and prune_where is not None and source_unique
+    )
+    with nullcontext() if read_once else _materialized(updates):
         base = (
             table.latest_version() if expected_parent == "any"
             else expected_parent
@@ -5138,10 +5224,22 @@ def merge_into(
             # the positional union below stays by-name correct
             updates = updates.select(*[f.name for f in declared.fields])
         types = {f.name: f.dataType for f in declared.fields}
-        touched, untouched, probe_row = _split_touched_groups(
-            m, updates, keys, types, table_path=table.path,
-            extra_aggs=dup_exprs,
-        )
+        if prune_where is not None:
+            # the caller's box bounds every source row: groups outside
+            # it are untouched by assertion, no touch-test pass
+            prune_where, _ = _normalize_prune_bounds(prune_where, types)
+            gstats = m.get("stats") or {}
+            touched = [
+                g for g in m["groups"]
+                if _group_may_match(gstats.get(g), prune_where)
+            ]
+            untouched = [g for g in m["groups"] if g not in set(touched)]
+            probe_row = None
+        else:
+            touched, untouched, probe_row = _split_touched_groups(
+                m, updates, keys, types, table_path=table.path,
+                extra_aggs=dup_exprs,
+            )
         if dup_exprs is not None:
             if probe_row is None:  # no touch-test pass ran
                 probe_row = updates.agg(*dup_exprs).first()
@@ -5178,7 +5276,9 @@ def merge_into(
                 current = current.withColumn(
                     f.name, F.lit(None).cast(f.dataType)
                 )
-        if (
+        if fold is not None:
+            merged = _merge_fold(current, updates, keys, declared, fold)
+        elif (
             when_matched == "update_all"
             and matched_condition is None
             and when_not_matched == "insert_all"
@@ -5228,18 +5328,22 @@ def merge_into(
             txn=txn,
             removed=touched,
             # evaluated ONLY if a rebase is needed: one tiny agg job over
-            # the updates proving which key range this merge could touch.
+            # the updates proving which key range this merge could touch
+            # (the caller's box when it gave one: no second read).
             # A BY SOURCE clause depends on key NON-existence, so no box
             # can prove a concurrent add disjoint — rebase is disabled
             # (update_box=None → any concurrent add truly conflicts).
             update_box=(
                 None
                 if when_not_matched_by_source is not None
+                else _rebase_box(prune_where, types)
+                if prune_where is not None
                 else (lambda: _key_box(updates, keys, types))
             ),
             update_membership=(
                 None
                 if when_not_matched_by_source is not None
+                or prune_where is not None
                 else (
                     lambda lstats, gs: _rebase_bloom_membership(
                         updates, keys, lstats, gs, table.path
@@ -5369,6 +5473,90 @@ def _merge_clauses(
         )
         kept = kept.unionByName(inserts)
     return kept
+
+
+_FOLD_KINDS = ("add", "source", "map_add")
+
+
+def _merge_fold(
+    current: DataFrame,
+    updates: DataFrame,
+    keys: list[str],
+    declared,
+    fold: dict[str, str],
+) -> DataFrame:
+    """merge_into's ``fold`` clause: the touched groups' rows and the
+    source rows, tagged by side, reduced by one ``groupBy(key)``. A
+    key with one row keeps it as is (an unmatched target row or an
+    insert); a key with several folds each column per ``fold``. A NULL
+    key never matches, so such a row groups on its own
+    (monotonically_increasing_id is unique per row of the union)."""
+    from functools import reduce
+
+    out = [f.name for f in declared.fields]
+    types = {f.name: f.dataType for f in declared.fields}
+    payload = [c for c in out if c not in keys]
+    bad = {c: k for c, k in fold.items() if k not in _FOLD_KINDS}
+    unknown = set(fold) - set(payload)
+    missing = set(payload) - set(fold)
+    if bad or unknown or missing:
+        raise ValueError(
+            f"fold must map every non-key column to one of {_FOLD_KINDS}"
+            f"; bad kinds {bad}, unknown {sorted(unknown)}, missing "
+            f"{sorted(missing)}"
+        )
+    side = "__fold_src"
+    rows = current.select(*out, F.lit(0).alias(side)).unionByName(
+        updates.select(*out, F.lit(1).alias(side))
+    )
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    lone = F.when(null_key, F.monotonically_increasing_id()).alias(
+        "__fold_lone"
+    )
+
+    aggs = []
+    for c in payload:
+        dt = types[c]
+        if fold[c] == "add":
+            folded = F.coalesce(F.sum(c), F.lit(0)).cast(dt)
+        elif fold[c] == "source":
+            folded = F.max_by(c, side)
+        else:
+            zero = F.lit(0).cast(dt.valueType)
+            folded = F.map_filter(
+                F.aggregate(
+                    F.collect_list(c),
+                    F.expr(f"cast(map() as {dt.simpleString()})"),
+                    lambda acc, m: F.map_zip_with(
+                        acc, m,
+                        lambda _, a, b: F.coalesce(a, zero)
+                        + F.coalesce(b, zero),
+                    ),
+                ),
+                lambda _, v: v != 0,
+            )
+        aggs.append(
+            F.when(F.count(F.lit(1)) > 1, folded)
+            .otherwise(F.first(c))
+            .alias(c)
+        )
+    return rows.groupBy(*keys, lone).agg(*aggs).select(*out)
+
+
+def _rebase_box(where: dict, types: dict) -> dict:
+    """A caller-asserted prune box in the manifest-stats domain, as
+    _publish_or_rebase's ``update_box``. _where_bounds normalizes both
+    forms — a (lo, hi) range and an IN-set list, whose box is [min,
+    max] (the rebase disjointness proof only needs the conservative
+    hull)."""
+    box = {}
+    for col, bound in where.items():
+        lo, hi = _where_bounds(bound)
+        box[col] = (
+            _json_safe(lo, types.get(col)) if lo is not None else None,
+            _json_safe(hi, types.get(col)) if hi is not None else None,
+        )
+    return box
 
 
 def _key_box(updates: DataFrame, keys: list[str], types: dict):
@@ -6130,7 +6318,7 @@ def table_changes(
         table._meta_root if table.is_branch else None,
     ):
         by_v.setdefault(v, []).append(g)
-    empty = spark.createDataFrame([], schema=declared).select(
+    empty = _empty_frame(spark, declared).select(
         "*",
         F.lit(None).cast("int").alias("_commit_version"),
         F.lit(None).cast("string").alias("_change_type"),
@@ -6469,6 +6657,81 @@ def _comparable_expr(col, dt):
     return col
 
 
+def _differing_groups(ma: dict, mb: dict) -> tuple[list, list]:
+    """The groups of two manifests a diff must read: all but the
+    shared ones (a group in both with identical applicable delete
+    entries contributes identical rows to both sides)."""
+
+    def entry_sig(m: dict, g: str) -> tuple:
+        return tuple(
+            (e["file"], tuple(e["key"]))
+            for e in (m.get("delete_entries") or [])
+            if g in e["applies_to"]
+        )
+
+    shared = {
+        g
+        for g in set(ma["groups"]) & set(mb["groups"])
+        if entry_sig(ma, g) == entry_sig(mb, g)
+    }
+    return (
+        [g for g in ma["groups"] if g not in shared],
+        [g for g in mb["groups"] if g not in shared],
+    )
+
+
+def diff_stats_box(
+    table: VersionedTable,
+    from_version: int,
+    to_version: int,
+    cols: list[str],
+) -> dict | None:
+    """``{col: (lo, hi)}``: the hull of ``cols``' manifest min/max over
+    every group that differs between adjacent snapshots in
+    (from_version, to_version] — metadata only, no Spark job. Every row
+    a diff of that range yields (keyed CDF or signed rows, either
+    side) comes from one of those groups, so it lies in the box or has
+    a NULL in that column. None when that cannot be proven from stats:
+    a differing group lacks min/max for a column (no stats, non-finite
+    floats), or the schema changes inside the range (a rename re-keys
+    and a widen re-types the stats). Bounds are decoded to the
+    column's Python domain (Decimal, date, datetime), ready for
+    ``prune_where``."""
+    cols = list(cols)
+    ms = [
+        table._load_manifest(v)
+        for v in range(int(from_version), int(to_version) + 1)
+    ]
+    if not cols or len(ms) < 2:
+        return None
+    if any(m["schema"] != ms[-1]["schema"] for m in ms):
+        return None
+    types = {
+        f.name: f.dataType for f in _schema_from_json(ms[-1]["schema"]).fields
+    }
+    box: dict = {}
+    for ma, mb in zip(ms, ms[1:]):
+        for m, groups in zip((ma, mb), _differing_groups(ma, mb)):
+            stats = m.get("stats") or {}
+            for g in groups:
+                gst = stats.get(g) or {}
+                for c in cols:
+                    st = gst.get(c)
+                    if not isinstance(st, dict):
+                        return None
+                    mn, mx = st.get("min"), st.get("max")
+                    if mn is None or mx is None:
+                        nulls, rows = st.get("nulls"), gst.get("_rows")
+                        if nulls is not None and nulls == rows:
+                            continue  # all NULL: no row can match
+                        return None
+                    mn = _stat_unjson(mn, types[c])
+                    mx = _stat_unjson(mx, types[c])
+                    lo, hi = box.get(c, (mn, mx))
+                    box[c] = (min(lo, mn), max(hi, mx))
+    return box or None
+
+
 def _diff_pair_sides(
     table: VersionedTable,
     spark: SparkSession,
@@ -6501,24 +6764,9 @@ def _diff_pair_sides(
             "tag to keep them retained"
         ) from None
 
-    def entry_sig(m: dict, g: str) -> tuple:
-        return tuple(
-            (e["file"], tuple(e["key"]))
-            for e in (m.get("delete_entries") or [])
-            if g in e["applies_to"]
-        )
-
-    shared = {
-        g
-        for g in set(ma["groups"]) & set(mb["groups"])
-        if entry_sig(ma, g) == entry_sig(mb, g)
-    }
-    a = table._read_groups(
-        spark, ma, [g for g in ma["groups"] if g not in shared]
-    )
-    b = table._read_groups(
-        spark, mb, [g for g in mb["groups"] if g not in shared]
-    )
+    ga, gb = _differing_groups(ma, mb)
+    a = table._read_groups(spark, ma, ga)
+    b = table._read_groups(spark, mb, gb)
     # RENAME evolution between the versions: each rename commit records
     # {"old", "new"}; fold the chain and rename the FROM side so the
     # field compares as ONE column (else every row would look Updated:

@@ -8,10 +8,21 @@ snapshot_diff: O(delta) via the manifest shared-group skip), folds the
 rows into SIGNED grouped deltas (+1 for insert/update_postimage, -1
 for delete/update_preimage — an update that MOVES a row between groups
 decomposes naturally into -1 old group / +1 new group), and MERGEs
-them into the MV keyed on the group columns. The deltas are handed to
-merge_into lazy: it materializes its source once for the whole merge
-(touch test, group write, rebase), so the upstream CDF diff and
-aggregation run once per refresh. At 100 TB this is the
+them into the MV keyed on the group columns. Every merge here is
+merge_into's FOLD clause (see _fold_clause): the touched MV rows and
+the delta rows reduce by one ``groupBy(group_cols)`` — sums and counts
+add, final values (extremes, sketches, distinct counts) replace,
+histograms merge per bucket — instead of the clause engine's joins.
+The refreshers that fold a TABLE diff (refresh_mv, _fold_aux,
+refresh_rollup_mv) also hand merge_into the diff's box: the hull of
+the group columns' manifest min/max over the source groups that differ
+between the watermark and ``cur`` (diff_stats_box, metadata only).
+Every delta row comes from those groups, so MV groups outside the box
+carry by reference and no touch-test pass runs, and the deltas are
+read once, by the write. Where no box is provable (a differing group
+without stats, a rename or widen in the range), and for the join MV
+and the streaming sinks, merge_into's touch test splits the groups as
+for any MERGE. At 100 TB this is the
 difference between a nightly full rescan and a seconds-long delta
 fold — the Delta Live Tables / classic incremental-view-maintenance
 design, built from parts this engine already has.
@@ -45,6 +56,7 @@ from ..io.versioned import (
     VersionedTable,
     _txn_epoch_commit,
     _txn_watermark,
+    diff_stats_box,
     merge_into,
     table_changes_cdf,
     table_signed_rows,
@@ -427,20 +439,19 @@ def _hist_map(df, group_cols: list[str], col: str, base: float, sign):
     )
 
 
-def _hist_merge_expr(name: str):
-    """MERGE when_matched combiner for a histogram column: union-keyed
-    signed add via map_zip_with, zero buckets dropped — the stored map
-    stays exactly the histogram a full recompute would build."""
-    empty = F.expr(f"cast(map() as {_HIST_TYPE})")
-    return F.map_filter(
-        F.map_zip_with(
-            F.coalesce(F.col(f"t.{name}"), empty),
-            F.coalesce(F.col(f"s.{name}"), empty),
-            lambda k, a, b: F.coalesce(a, F.lit(0).cast("bigint"))
-            + F.coalesce(b, F.lit(0).cast("bigint")),
-        ),
-        lambda k, v: v != 0,
-    )
+def _fold_clause(
+    add: list[str], source: list[str] = (), hists: list[str] = ()
+) -> dict[str, str]:
+    """merge_into's fold clause for an MV delta: signed sums and counts
+    ADD onto the stored row; final values the delta already carries
+    (extremes, sketches, distinct counts) replace it; histograms merge
+    by signed per-bucket add with zero buckets dropped, so the stored
+    map stays exactly the histogram a full recompute would build."""
+    return {
+        **{c: "add" for c in add},
+        **{c: "source" for c in source},
+        **{c: "map_add" for c in hists},
+    }
 
 
 def _attach_hists(deltas, df, group_cols, percentile_cols, base, sign):
@@ -1233,17 +1244,10 @@ def refresh_mv(
                     spark,
                     deltas,
                     key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*sum_cols, rows_col]
-                        },
-                        **{
-                            n: _hist_merge_expr(n)
-                            for n in hist_names
-                        },
-                    },
+                    fold=_fold_clause(
+                        [*sum_cols, rows_col], [], hist_names
+                    ),
+                    prune_where=diff_stats_box(source, wm, cur, group_cols),
                     txn={tag: cur},
                     expected_parent=mv_v,
                     source_unique=True,  # groupBy(group_cols) out
@@ -1378,29 +1382,15 @@ def refresh_mv(
                     spark,
                     deltas,
                     key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*sum_cols, rows_col, *sq_names]
-                        },
-                        # the source row already carries the FINAL
-                        # extreme (folded against the stored value /
-                        # exact-recomputed for endangered groups) —
-                        # and the FINAL distinct count from the aux
-                        **{
-                            n: F.col(f"s.{n}")
-                            for n in [
-                                *ext_names, *nd_names, *hll_names
-                            ]
-                        },
-                        # histograms MERGE-combine: signed
-                        # per-bucket add, zero buckets dropped
-                        **{
-                            n: _hist_merge_expr(n)
-                            for n in hist_names
-                        },
-                    },
+                    # the source row already carries the FINAL extreme
+                    # (folded against the stored value / recomputed
+                    # for endangered groups), sketch and distinct count
+                    fold=_fold_clause(
+                        [*sum_cols, rows_col, *sq_names],
+                        [*ext_names, *nd_names, *hll_names],
+                        hist_names,
+                    ),
+                    prune_where=diff_stats_box(source, wm, cur, group_cols),
                     txn={tag: cur},
                     expected_parent=mv_v,
                     source_unique=True,  # groupBy(group_cols) out
@@ -1523,10 +1513,10 @@ def _fold_aux(
                     spark,
                     deltas,
                     key=[*group_cols, col],
-                    when_matched={
-                        "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
-                        + F.coalesce(F.col("s.cnt"), F.lit(0))
-                    },
+                    fold=_fold_clause(["cnt"]),
+                    prune_where=diff_stats_box(
+                        source, a_wm, cur, group_cols
+                    ),
                     txn={tag: cur},
                     expected_parent=a_v,
                     source_unique=True,  # groupBy(key) output
@@ -2052,17 +2042,9 @@ def refresh_join_mv(
                     spark,
                     deltas,
                     key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*sum_cols, rows_col]
-                        },
-                        **{
-                            n: _hist_merge_expr(n)
-                            for n in hist_names
-                        },
-                    },
+                    fold=_fold_clause(
+                        [*sum_cols, rows_col], [], hist_names
+                    ),
                     txn={tag_a: cur_a, tag_b: cur_b},
                     expected_parent=mv_v,
                     source_unique=True,  # groupBy(group_cols) out
@@ -2152,10 +2134,7 @@ def _fold_aux_batch(
             spark,
             deltas,
             key=[*group_cols, col],
-            when_matched={
-                "cnt": F.coalesce(F.col("t.cnt"), F.lit(0))
-                + F.coalesce(F.col("s.cnt"), F.lit(0))
-            },
+            fold=_fold_clause(["cnt"]),
             txn=txn,
             expected_parent=latest,
             source_unique=True,  # groupBy(key) output
@@ -2386,18 +2365,11 @@ def make_mv_maintainer(
                 spark,
                 deltas,
                 key=group_cols,
-                when_matched={
-                    **{
-                        c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                        + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                        for c in [*sum_cols, rows_col, *sq_names]
-                    },
-                    **{
-                        n: F.col(f"s.{n}")
-                        for n in [*ext_names, *nd_names, *hll_names]
-                    },
-                    **{n: _hist_merge_expr(n) for n in hist_names},
-                },
+                fold=_fold_clause(
+                    [*sum_cols, rows_col, *sq_names],
+                    [*ext_names, *nd_names, *hll_names],
+                    hist_names,
+                ),
                 txn=txn,
                 expected_parent=latest,
                 source_unique=True,  # groupBy(group_cols) output
@@ -2703,17 +2675,10 @@ def refresh_rollup_mv(
                     spark,
                     deltas,
                     key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*fold_cols, rows_col]
-                        },
-                        **{
-                            n: _hist_merge_expr(n)
-                            for n in hist_names
-                        },
-                    },
+                    fold=_fold_clause(
+                        [*fold_cols, rows_col], [], hist_names
+                    ),
+                    prune_where=diff_stats_box(fine, wm, cur, group_cols),
                     txn={tag: cur},
                     expected_parent=mv_v,
                     source_unique=True,  # groupBy(group_cols) out
@@ -2806,21 +2771,12 @@ def refresh_rollup_mv(
                     spark,
                     deltas,
                     key=group_cols,
-                    when_matched={
-                        **{
-                            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                            for c in [*fold_cols, rows_col]
-                        },
-                        **{
-                            n: F.col(f"s.{n}")
-                            for n in [*ext_names, *hll_names]
-                        },
-                        **{
-                            n: _hist_merge_expr(n)
-                            for n in hist_names
-                        },
-                    },
+                    fold=_fold_clause(
+                        [*fold_cols, rows_col],
+                        [*ext_names, *hll_names],
+                        hist_names,
+                    ),
+                    prune_where=diff_stats_box(fine, wm, cur, group_cols),
                     txn={tag: cur},
                     expected_parent=mv_v,
                     source_unique=True,  # groupBy(group_cols) out

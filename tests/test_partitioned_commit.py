@@ -316,13 +316,15 @@ class TestOneGroupWriter:
         ks = [m_c["stats"][g]["k"] for g in m_c["groups"]]
         assert all(a["max"] < b["min"] for a, b in zip(ks, ks[1:]))
 
-    @pytest.mark.parametrize("n_parts", [2, 12])
+    @pytest.mark.parametrize("n_parts", [2, 12, 40])
     def test_partitioned_commit_jobs_do_not_grow_with_groups(
         self, spark, tmp_path, n_parts
     ):
         """Two jobs for the hash-shuffled write and two for the one
         grouped stats aggregate (AQE runs the shuffle map stage of each
-        as its own job), whether the commit lands 2 groups or 12."""
+        as its own job), whether the commit lands 2 groups, 12 or 40 —
+        past the 32 paths at which Spark lists files in a job of its
+        own."""
         t = VersionedTable(str(tmp_path / "t"))
         v, jobs = _jobs(
             spark,
@@ -334,12 +336,13 @@ class TestOneGroupWriter:
         assert len(t._load_manifest(v)["groups"]) == n_parts
         assert jobs == 4
 
-    @pytest.mark.parametrize("target_groups", [2, 12])
+    @pytest.mark.parametrize("target_groups", [2, 12, 40])
     def test_optimize_jobs_do_not_grow_with_groups(
         self, spark, tmp_path, target_groups
     ):
         """One job samples the key range, two run the range-shuffled
-        write and two the grouped stats aggregate, at 2 groups or 12."""
+        write and two the grouped stats aggregate, at 2, 12 or 40
+        groups."""
         t = VersionedTable(str(tmp_path / "t"))
         t.commit(_shapes_df(spark), mode="overwrite")
         v, jobs = _jobs(

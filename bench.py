@@ -230,7 +230,7 @@ def main() -> None:
     # was invisible to BENCH_r*.json. Setup (untimed, like the ingest
     # CSVs): an 8-group range-committed orders table. Timed: one
     # 5k-row merge touching ~2 of 8 groups — the touch test + pruned
-    # rewrite + stats-observed write, the O(delta) path end to end.
+    # rewrite + stats-recording write, the O(delta) path end to end.
     # Each pass adds one snapshot (that's what a MERGE is); group count
     # grows by 1/pass so pass-to-pass timing stays comparable.
     from pyspark.sql import functions as F

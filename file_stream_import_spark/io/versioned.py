@@ -111,18 +111,32 @@ class BranchDeletedError(RuntimeError):
 
 # -- per-group column statistics (the Iceberg manifest-stats analog) ----
 #
-# Each commit records min/max/null-count per stats-eligible column for
-# the group it writes, collected with DataFrame.observe() in the SAME
-# job as the parquet write (no second scan). Readers and MERGE use the
-# stats to prune whole groups without listing or opening their files —
-# at 100 TB that is the difference between an O(delta) incremental
-# merge and an O(table) rewrite (Iceberg/Delta data skipping;
-# reference's read-side acceleration is "index every payload column",
-# internal/db/db.go:97-103 — group stats are the lake-scale analog).
+# Each commit records a row count and min/max/null-count per
+# stats-eligible column for every group it writes, with no second scan
+# of the data. Rows, and min/max/nulls of the footer types below, are
+# read from the Parquet footers of the files just written, which the
+# Parquet writer fills anyway (Iceberg's writer takes its per-file
+# lower/upper bounds and null counts the same way); the rest — SUMs,
+# the other types' min/max/nulls, CHECK violation counts and bloom NDV —
+# is one aggregate that rides the write (see _write_groups). Readers and
+# MERGE use the stats to prune whole groups without listing or opening
+# their files — at 100 TB that is the difference between an O(delta)
+# incremental merge and an O(table) rewrite (Iceberg/Delta data
+# skipping; reference's read-side acceleration is "index every payload
+# column", internal/db/db.go:97-103 — group stats are the lake-scale
+# analog).
 
 _STATS_ATOMIC = (
     "byte", "short", "integer", "long", "float", "double",
     "string", "date", "boolean",
+)
+
+# Types whose Parquet footer min/max order as Spark orders them (by
+# simpleString, so a collated string — "string collate …" — is not one).
+# Not decimals (pyarrow cannot decode their statistics), INT96
+# timestamps (no statistics) or floats (a NaN reads as the max).
+_FOOTER_STATS = (
+    "tinyint", "smallint", "int", "bigint", "date", "boolean", "string",
 )
 
 
@@ -133,6 +147,10 @@ def _stats_eligible(dtype) -> bool:
         or name.startswith("decimal")
         or name in ("timestamp", "timestamp_ntz")
     )
+
+
+def _footer_stats_type(dtype) -> bool:
+    return dtype.simpleString() in _FOOTER_STATS
 
 
 def _json_safe(v, dtype):
@@ -238,8 +256,9 @@ def _partition_transform(spec: str, schema):
 
 
 def _sum_stat_expr(f, alias: str):
-    """SUM observation for a numeric column (rides the same write job
-    as min/max — powers agg_where's metadata-only SUM): integral types
+    """SUM observation for a numeric column (part of the aggregate that
+    rides the write, see _write_groups; Parquet footers carry no sums —
+    powers agg_where's metadata-only SUM): integral types
     sum in decimal(38,0) so a 100 TB group can't overflow under ANSI,
     decimals sum natively (Spark widens precision), floats as double.
     None for non-numeric columns (no SUM semantics)."""
@@ -291,8 +310,11 @@ def _truncate_str_stats(mn: str, mx: str):
     full string, valid lower bound); max takes the prefix with its
     rightmost incrementable char bumped and the tail dropped (sorts >
     any string sharing the prefix, valid upper bound — Delta's rule).
-    A max prefix of all U+10FFFF cannot be bumped: max becomes None
-    and the caller omits the entry (conservative scan)."""
+    The bump skips the surrogate block (U+D7FF becomes U+E000): a lone
+    surrogate is no character, and py4j cannot encode it into the
+    literal a MERGE touch test compares against. A max prefix of all
+    U+10FFFF cannot be bumped: max becomes None and the caller omits
+    the entry (conservative scan)."""
     trunc = False
     if isinstance(mn, str) and len(mn) > _STATS_STR_MAX:
         mn = mn[:_STATS_STR_MAX]
@@ -302,7 +324,8 @@ def _truncate_str_stats(mn: str, mx: str):
         mx = None
         for i in range(len(p) - 1, -1, -1):
             if ord(p[i]) < 0x10FFFF:
-                mx = p[:i] + chr(ord(p[i]) + 1)
+                c = ord(p[i]) + 1
+                mx = p[:i] + chr(0xE000 if c == 0xD800 else c)
                 break
         trunc = True
     return mn, mx, trunc
@@ -997,14 +1020,28 @@ def _size_write_delta(df: DataFrame) -> DataFrame:
 _STATS_EXPR_CACHE: dict = {}
 
 
+def _minmax_nulls_exprs(f, i: int) -> list:
+    """Min, max and NULL count of ``f``, the ``i``-th stats column, as
+    aggregate Columns."""
+    return [
+        F.min(f.name).alias(f"mn_{i}"),
+        F.max(f.name).alias(f"mx_{i}"),
+        F.sum(F.when(F.col(f.name).isNull(), 1).otherwise(0)).alias(
+            f"nu_{i}"
+        ),
+    ]
+
+
 def _stats_observe_exprs(
     cols: tuple, checks_items: tuple, ndv_cols: tuple
 ) -> tuple[list, set]:
-    """The one aggregate list behind every group's manifest stats (see
-    _write_groups): row count; min/max/null count per stats-eligible
-    column plus SUM for numerics; a violation count per CHECK
-    constraint; approx NDV per bloom column. The same Columns serve as
-    ``observe(...)`` on a one-group write and as
+    """The one aggregate list behind every group's manifest stats: what
+    the Parquet footers cannot answer (see _write_groups). Min/max/null
+    count per stats-eligible column that is not a footer type
+    (_FOOTER_STATS), SUM per numeric column, a violation count per
+    CHECK constraint, approx NDV per bloom column — so the list is
+    empty for an all-string table with no CHECK or bloom. The Columns
+    serve as ``observe(...)`` on a one-group write and as
     ``groupBy(<group id>).agg(...)`` over a multi-group write.
     Memoized per (schema, checks, bloom, SparkContext) signature.
 
@@ -1026,16 +1063,11 @@ def _stats_observe_exprs(
     if hit is not None:
         return hit
     checks = dict(checks_items)
-    exprs = [F.count(F.lit(1)).alias("rows")]
+    exprs: list = []
     summable: set = set()
     for i, f in enumerate(cols):
-        exprs.append(F.min(f.name).alias(f"mn_{i}"))
-        exprs.append(F.max(f.name).alias(f"mx_{i}"))
-        exprs.append(
-            F.sum(F.when(F.col(f.name).isNull(), 1).otherwise(0)).alias(
-                f"nu_{i}"
-            )
-        )
+        if not _footer_stats_type(f.dataType):
+            exprs.extend(_minmax_nulls_exprs(f, i))
         se = _sum_stat_expr(f, f"sm_{i}")
         if se is not None:
             exprs.append(se)
@@ -1055,14 +1087,98 @@ def _stats_observe_exprs(
     return exprs, summable
 
 
-def _group_bytes(d: str) -> int:
-    """Data bytes of one group directory: its parquet files, not the
-    ``_``-prefixed bloom sidecars and markers or ``.`` checksums."""
-    return sum(
-        os.path.getsize(os.path.join(d, n))
+def _data_files(d: str) -> list[str]:
+    """Paths of one group directory's data files: its parquet files,
+    not the ``_``-prefixed bloom sidecars and markers or ``.``
+    checksums."""
+    return [
+        os.path.join(d, n)
         for n in os.listdir(d)
         if not n.startswith(("_", "."))
-    )
+    ]
+
+
+def _group_bytes(d: str) -> int:
+    """Data bytes of one group directory (see _data_files)."""
+    return sum(os.path.getsize(p) for p in _data_files(d))
+
+
+def _read_footer(path: str):
+    """One data file's Parquet footer (a pyarrow FileMetaData)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path)
+
+
+def _read_footers(spark, paths: list[str]) -> list:
+    """The footers of ``paths``, in order. Several files are read by a
+    pool of up to defaultParallelism threads: pyarrow releases the GIL
+    while it reads."""
+    if len(paths) <= 1:
+        return [_read_footer(p) for p in paths]
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = min(len(paths), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(n) as pool:
+        return list(pool.map(_read_footer, paths))
+
+
+def _chunk_stats(s, rows: int):
+    """(min, max, nulls) from the footer statistics ``s`` of one column
+    chunk of ``rows`` rows (min and max None when every value is NULL),
+    or None where they cannot answer: no null count, or no min/max
+    beside non-NULL values (parquet-mr writes neither when a chunk's
+    min and max together exceed 4 KB), or a string min/max that is not
+    valid UTF-8 (Spark reads it with U+FFFD in place)."""
+    if s is None or not s.has_null_count:
+        return None
+    if not s.has_min_max:
+        return (None, None, s.null_count) if s.null_count == rows else None
+    try:
+        return s.min, s.max, s.null_count
+    except UnicodeDecodeError:
+        return None
+
+
+def _footer_stats(mds: list, fcols: dict) -> tuple[int, dict]:
+    """(rows, {i: (min, max, nulls) or None}) of one group, folded over
+    the footers ``mds`` of its files and their row groups, for the
+    footer-type columns ``fcols`` ({stats index: field}). None marks a
+    column that some chunk cannot answer (_chunk_stats), or dates that
+    Spark's LEGACY rebase mode stored in the Julian calendar: the
+    fallback aggregate answers those."""
+    rows = 0
+    out = {i: (None, None, 0) for i in fcols}
+    for md in mds:
+        rows += md.num_rows
+        # top-level primitive columns by name; a name two leaves share
+        # (a column "a.b" beside a required struct a) is ambiguous
+        leaf: dict = {}
+        for j in range(md.num_columns):
+            c = md.schema.column(j)
+            if c.max_repetition_level == 0 and c.max_definition_level <= 1:
+                leaf[c.path] = None if c.path in leaf else j
+        rebased = b"org.apache.spark.legacyDateTime" in (md.metadata or {})
+        for k in range(md.num_row_groups):
+            rg = md.row_group(k)
+            for i, f in fcols.items():
+                j = leaf.get(f.name)
+                if out[i] is None:
+                    continue
+                c = None
+                if j is not None and not (
+                    rebased and f.dataType.simpleString() == "date"
+                ):
+                    c = _chunk_stats(rg.column(j).statistics, rg.num_rows)
+                if c is None:
+                    out[i] = None
+                    continue
+                (lo, hi, n), (mn, mx, nulls) = c, out[i]
+                if lo is not None:
+                    mn = lo if mn is None or lo < mn else mn
+                    mx = hi if mx is None or hi > mx else mx
+                out[i] = (mn, mx, nulls + n)
+    return rows, out
 
 
 def _flat_name(gid: str, name: str) -> str:
@@ -1085,9 +1201,9 @@ def _write_groups(
     clustering — goes through here, so groups of the same rows carry
     the same stats however they were written.
 
-    * No ``part_cols``: ONE group. The _stats_observe_exprs aggregates
-      ride the write job as an Observation (no second scan, which
-      matters when the group is TBs); _size_write_delta sizes its
+    * No ``part_cols``: ONE group. The _stats_observe_exprs aggregates,
+      if any, ride the write job as an Observation (no second scan,
+      which matters when the group is TBs); _size_write_delta sizes its
       files.
     * ``part_cols``: ``df`` arrives shuffled by the caller and carries
       the derived columns ``part_cols``; each distinct value becomes
@@ -1096,10 +1212,19 @@ def _write_groups(
       column stays), each leaf directory becomes an immutable group —
       in name order with digit runs compared as numbers, so
       clustering's ``__bucket=2`` precedes ``__bucket=10`` and the
-      groups stay in key order — and ONE grouped aggregate of the same
-      expressions, keyed by the group id each file carries while all
-      of them sit in one flat staging directory, yields every group's
-      stats.
+      groups stay in key order. When the aggregate list is not empty,
+      ONE grouped aggregate of it, keyed by the group id each file
+      carries while all of them sit in one flat staging directory,
+      yields every group's share.
+
+    Each group's ``_rows``, and min/max/nulls of its footer-type
+    columns (_FOOTER_STATS), are folded from the Parquet footers of the
+    files just written (_footer_stats). Cost model: one footer read per
+    data file written, O(files) and never O(rows), from the same
+    listing that sizes ``_bytes``; a write of several files reads them
+    in a thread pool. A footer-type column some footer cannot answer
+    (a string over 4 KB) takes its stats from one fallback aggregate
+    over the written groups — the only case that reads the data back.
 
     The entry holds ``_rows``, ``_bytes`` (data bytes: compact() sizes
     groups from it without walking the data tree), ``{"min", "max",
@@ -1122,17 +1247,44 @@ def _write_groups(
         [f for f in df.schema.fields if f.name not in part_cols]
     )
     cols = [f for f in schema.fields if _stats_eligible(f.dataType)]
+    fcols = {
+        i: f for i, f in enumerate(cols) if _footer_stats_type(f.dataType)
+    }
     ndv_cols = [c for c in bloom_cols if c in schema.names]
     exprs, summable = _stats_observe_exprs(
         tuple(cols), tuple(sorted(checks.items())), tuple(ndv_cols)
     )
+
+    def footers(files: dict) -> tuple[dict, list]:
+        """{group: (rows, bytes, footer stats)} of ``files`` ({group:
+        data file paths}), and the fallback aggregate's Columns."""
+        mds = iter(
+            _read_footers(spark, [p for v in files.values() for p in v])
+        )
+        foot = {}
+        for g, paths in files.items():
+            rows, fs = _footer_stats([next(mds) for _ in paths], fcols)
+            foot[g] = (rows, sum(os.path.getsize(p) for p in paths), fs)
+        late = sorted(
+            {i for *_, fs in foot.values() for i, v in fs.items() if v is None}
+        )
+        return foot, [e for i in late for e in _minmax_nulls_exprs(cols[i], i)]
+
     if not part_cols:
         group = os.path.join("data", uuid.uuid4().hex)
-        obs = Observation()
-        _size_write_delta(df).observe(obs, *exprs).write.parquet(
-            os.path.join(table_path, group)
-        )
-        per = {group: obs.get}
+        gd = os.path.join(table_path, group)
+        out = _size_write_delta(df)
+        if exprs:
+            obs = Observation()
+            out = out.observe(obs, *exprs)
+        out.write.parquet(gd)
+        foot, late = footers({group: _data_files(gd)})
+        aggs = {group: dict(obs.get) if exprs else {}}
+        if late:
+            aggs[group].update(
+                spark.read.schema(schema).parquet(gd).agg(*late).first()
+                .asDict()
+            )
     else:
         staged = os.path.join(
             table_path, "data", f"stage-{uuid.uuid4().hex}"
@@ -1152,9 +1304,9 @@ def _write_groups(
                 )
                 if os.path.isdir(os.path.join(d, n))
             ]
-        # the stats aggregate reads ONE flat directory holding every
-        # leaf's files under a group-id prefix: one path per group
-        # would make Spark list past 32 paths (parallelPartitionDiscovery
+        # the aggregate reads ONE flat directory holding every leaf's
+        # files under a group-id prefix: one path per group would make
+        # Spark list past 32 paths (parallelPartitionDiscovery
         # threshold) in an extra job, and so would one root holding
         # more than 32 leaf directories
         flat = os.path.join(staged, "flat")
@@ -1167,22 +1319,30 @@ def _write_groups(
                 os.rename(
                     os.path.join(d, n), os.path.join(flat, _flat_name(gid, n))
                 )
-        per = {}
-        if moved:
+        foot, late = footers({
+            os.path.join("data", gid): [
+                os.path.join(flat, _flat_name(gid, n))
+                for n in names
+                if not n.startswith(("_", "."))
+            ]
+            for gid, names in moved.items()
+        })
+        aggs = {g: {} for g in foot}
+        if foot and (exprs or late):
             # the files' schema IS ``schema``: read under it instead of
             # inferring, which runs a footer-reading job at plan time
-            by_id = {
-                r["__g"]: r
-                for r in spark.read.schema(schema)
+            for r in (
+                spark.read.schema(schema)
                 .parquet(flat)
                 .groupBy(
                     F.regexp_extract(
                         F.input_file_name(), "/([0-9a-f]{32})-[^/]*$", 1
                     ).alias("__g")
                 )
-                .agg(*exprs)
+                .agg(*exprs, *late)
                 .collect()
-            }
+            ):
+                aggs[os.path.join("data", r["__g"])] = r.asDict()
         for gid, names in moved.items():
             g = os.path.join("data", gid)
             os.mkdir(os.path.join(table_path, g))
@@ -1191,11 +1351,10 @@ def _write_groups(
                     os.path.join(flat, _flat_name(gid, n)),
                     os.path.join(table_path, g, n),
                 )
-            per[g] = by_id[gid]
         shutil.rmtree(staged, ignore_errors=True)
     violated = {}
     for i, name in enumerate(sorted(checks)):
-        n = sum(int(r[f"ck_{i}"] or 0) for r in per.values())
+        n = sum(int(r[f"ck_{i}"] or 0) for r in aggs.values())
         if n:
             violated[name] = n
     if violated:
@@ -1209,15 +1368,14 @@ def _write_groups(
             "vacuumed"
         )
     stats: dict = {}
-    for g, r in per.items():
-        gd = os.path.join(table_path, g)
-        rows = int(r["rows"] or 0)
-        st: dict = {"_rows": rows, "_bytes": _group_bytes(gd)}
+    for g, (rows, nbytes, fs) in foot.items():
+        r = aggs[g]
+        st: dict = {"_rows": rows, "_bytes": nbytes}
         for i, f in enumerate(cols):
-            entry = _col_stats_entry(
-                r[f"mn_{i}"], r[f"mx_{i}"], int(r[f"nu_{i}"] or 0), rows,
-                f.dataType,
+            mn, mx, nulls = fs.get(i) or (
+                r[f"mn_{i}"], r[f"mx_{i}"], int(r[f"nu_{i}"] or 0)
             )
+            entry = _col_stats_entry(mn, mx, nulls, rows, f.dataType)
             if entry is None:
                 continue
             if i in summable:
@@ -1226,6 +1384,7 @@ def _write_groups(
                     entry["sum"] = sm  # None = all-NULL (SQL SUM=NULL)
             st[f.name] = entry
         if bloom_cols:
+            gd = os.path.join(table_path, g)
             # a second (tiny, page-cached) pass over the group just
             # written: an aggregate cannot express the per-row
             # k-position fan-out
@@ -1242,7 +1401,7 @@ def _write_groups(
             if blooms:
                 st["_bloom"] = blooms
         stats[g] = st
-    return list(per), stats
+    return list(foot), stats
 
 
 class SchemaMismatchError(ValueError):

@@ -234,6 +234,94 @@ def _shapes_df(spark, n_parts=4):
     )
 
 
+def _all_types_df(spark, n_parts=4):
+    """_shapes_df plus a column of every other stats-eligible type, with
+    the cases that decide where a column's stats come from: non-ASCII
+    strings past 64 chars (``trunc``), an all-NULL column, dates before
+    1582, one 5,000-char string (no footer statistics, so the fallback
+    aggregate answers), one string of invalid UTF-8 (whose footer
+    statistics pyarrow cannot decode), a decimal(9,2) and an INT96
+    timestamp (which footers cannot answer) and a NaN double."""
+    k = F.col("k")
+    return _shapes_df(spark, n_parts).select(
+        "*",
+        (k % 100).cast("byte").alias("b"),
+        (k * 7 % 3000 - 1500).cast("short").alias("sh"),
+        (k / 3).cast("float").alias("fl"),
+        F.when(k == 3, F.lit(float("nan")))
+        .otherwise(k.cast("double"))
+        .alias("nan"),
+        (k / 7).cast("decimal(9,2)").alias("dec"),
+        F.date_add(F.lit("1500-01-01"), (k * 97).cast("int")).alias("d"),
+        F.timestamp_seconds(k * 1000).alias("ts"),
+        (k % 3 == 0).alias("bo"),
+        F.concat(
+            F.lit("é"), F.repeat(F.lit("ü"), (k % 90).cast("int"))
+        ).alias("u"),
+        F.lit(None).cast("string").alias("nul"),
+        F.when(k == 5, F.repeat(F.lit("z"), 5000))
+        .otherwise(k.cast("string"))
+        .alias("big"),
+        F.when(k == 7, F.expr("cast(X'FF61' AS string)"))
+        .otherwise(k.cast("string"))
+        .alias("bad"),
+    )
+
+
+def _aggregate_entry(spark, t, g, schema):
+    """Group ``g``'s stats entry as one Spark aggregate over its files
+    computes it: the reference that entries taken from Parquet footers
+    must equal (all but ``_bytes`` and ``_bloom``)."""
+    from file_stream_import_spark.io.versioned import (
+        _col_stats_entry,
+        _json_safe,
+        _stats_eligible,
+        _sum_stat_expr,
+    )
+
+    cols = [f for f in schema.fields if _stats_eligible(f.dataType)]
+    exprs = [F.count(F.lit(1)).alias("rows")]
+    for i, f in enumerate(cols):
+        exprs += [
+            F.min(f.name).alias(f"mn{i}"),
+            F.max(f.name).alias(f"mx{i}"),
+            F.count_if(F.col(f.name).isNull()).alias(f"nu{i}"),
+        ]
+        se = _sum_stat_expr(f, f"sm{i}")
+        if se is not None:
+            exprs.append(se)
+    r = (
+        spark.read.schema(schema).parquet(os.path.join(t.path, g))
+        .agg(*exprs).first().asDict()
+    )
+    out = {"_rows": r["rows"]}
+    for i, f in enumerate(cols):
+        entry = _col_stats_entry(
+            r[f"mn{i}"], r[f"mx{i}"], r[f"nu{i}"], r["rows"], f.dataType
+        )
+        if entry is None:
+            continue
+        if f"sm{i}" in r:
+            sm = _json_safe(r[f"sm{i}"], f.dataType)
+            if r[f"sm{i}"] is None or sm is not None:
+                entry["sum"] = sm
+        out[f.name] = entry
+    return out
+
+
+def _entries_match_aggregate(spark, t, schema):
+    """Every group's manifest entry equals _aggregate_entry; returns
+    the manifest."""
+    m = t._load_manifest(t.latest_version())
+    for g in m["groups"]:
+        got = {
+            c: e for c, e in m["stats"][g].items()
+            if c not in ("_bytes", "_bloom")
+        }
+        assert got == _aggregate_entry(spark, t, g, schema), g
+    return m
+
+
 class TestOneGroupWriter:
     """Plain commits, partitioned commits and clustering write their
     groups and stats through one writer (_write_groups), so the same
@@ -261,60 +349,202 @@ class TestOneGroupWriter:
         assert sum(m["stats"][g]["_rows"] for g in m["groups"]) == 40
 
     def test_three_write_shapes_agree(self, spark, tmp_path):
+        """Every group's entry, whichever of the three shapes wrote it,
+        equals the one an aggregate over the group's rows gives, for
+        every stats-eligible type: the footers answer ``_rows`` and the
+        footer types, the aggregate the rest, and the fallback
+        aggregate a string too long for footer statistics."""
+        import datetime
         import decimal
 
+        from file_stream_import_spark.io.versioned import (
+            _data_files,
+            _footer_stats,
+            _read_footer,
+            _stat_unjson,
+        )
+
+        schema = _all_types_df(spark).schema
         plain = VersionedTable(str(tmp_path / "plain"))
-        plain.commit(_shapes_df(spark), mode="overwrite")
+        plain.commit(_all_types_df(spark), mode="overwrite")
         parted = VersionedTable(str(tmp_path / "parted"))
         parted.commit(
-            _shapes_df(spark), mode="overwrite", partition_by=["p"]
+            _all_types_df(spark), mode="overwrite", partition_by=["p"]
         )
         clustered = VersionedTable(str(tmp_path / "clustered"))
-        clustered.commit(_shapes_df(spark), mode="overwrite")
+        clustered.commit(_all_types_df(spark), mode="overwrite")
         clustered.optimize(spark, cluster_by="k", target_groups=12)
 
         def summary(t):
-            m = t._load_manifest(t.latest_version())
+            m = _entries_match_aggregate(spark, t, schema)
             sts = [m["stats"][g] for g in m["groups"]]
-            keys = {
-                (c, tuple(sorted(st[c])))
-                for st in sts
-                for c in st
-                if not c.startswith("_")
-            }
             totals = {"rows": sum(st["_rows"] for st in sts)}
-            for c in ("k", "x", "s", "p"):
-                mins = [st[c]["min"] for st in sts if st[c]["min"] is not None]
-                maxs = [st[c]["max"] for st in sts if st[c]["max"] is not None]
+            for c in ("k", "x", "s", "p", "d", "bo", "dec", "ts", "big",
+                      "bad"):
+                dt = schema[c].dataType
+                mins = [_stat_unjson(st[c]["min"], dt) for st in sts]
+                maxs = [_stat_unjson(st[c]["max"], dt) for st in sts]
                 totals[c] = (
                     min(mins), max(maxs), sum(st[c]["nulls"] for st in sts),
                     sum(
                         decimal.Decimal(str(st[c]["sum"]))
                         for st in sts
                         if st[c].get("sum") is not None
-                    ) if c != "s" else None,
+                    ),
                 )
             assert all(st["_bytes"] > 0 for st in sts)
-            return m, keys, totals
+            assert all(
+                st["nul"] == {"min": None, "max": None, "nulls": st["_rows"]}
+                for st in sts
+            )
+            assert any(st["u"].get("trunc") for st in sts)
+            # the group holding the NaN has no usable "nan" ordering
+            assert sum("nan" not in st for st in sts) == 1
+            return m, totals
 
-        _, keys, totals = summary(plain)
-        assert keys == {
-            ("k", ("max", "min", "nulls", "sum")),
-            ("x", ("max", "min", "nulls", "sum")),
-            ("s", ("max", "min", "nulls")),
-            ("p", ("max", "min", "nulls", "sum")),
-        }
+        m, totals = summary(plain)
         assert totals["rows"] == 1200
         assert totals["k"] == (0, 1199, 0, 1199 * 1200 // 2)
         assert totals["x"][2] == len(range(0, 1200, 7))
-        m_p, keys_p, totals_p = summary(parted)
-        m_c, keys_c, totals_c = summary(clustered)
+        assert totals["d"][:2] == (
+            datetime.date(1500, 1, 1), datetime.date(1818, 6, 6)
+        )
+        # the plain group's footers answer "u" but not "big", which
+        # took the fallback aggregate
+        (g,) = m["groups"]
+        _, fs = _footer_stats(
+            [
+                _read_footer(p)
+                for p in _data_files(os.path.join(plain.path, g))
+            ],
+            {0: schema["u"], 1: schema["big"]},
+        )
+        assert fs[0] is not None and fs[1] is None
+        m_p, totals_p = summary(parted)
+        m_c, totals_c = summary(clustered)
         assert len(m_p["groups"]) == 4 and len(m_c["groups"]) == 12
-        assert keys_p == keys == keys_c
         assert totals_p == totals == totals_c
         # the clustered groups are listed in key order
         ks = [m_c["stats"][g]["k"] for g in m_c["groups"]]
         assert all(a["max"] < b["min"] for a, b in zip(ks, ks[1:]))
+
+    def test_empty_write_entries_match_aggregate(self, spark, tmp_path):
+        schema = _all_types_df(spark).schema
+        t = VersionedTable(str(tmp_path / "t"))
+        t.commit(_all_types_df(spark).limit(0), mode="overwrite")
+        m = _entries_match_aggregate(spark, t, schema)
+        (g,) = m["groups"]
+        assert m["stats"][g]["_rows"] == 0
+        assert m["stats"][g]["s"] == {"min": None, "max": None, "nulls": 0}
+        v = t.commit(
+            _all_types_df(spark).limit(0), mode="append", partition_by=["p"]
+        )
+        assert t._load_manifest(v)["added"] == []
+
+    def test_legacy_rebased_dates_match_aggregate(self, spark, tmp_path):
+        """Under Spark's LEGACY rebase mode the footers hold pre-1582
+        dates in the Julian calendar; their stats come from the
+        fallback aggregate instead."""
+        schema = _all_types_df(spark).schema
+        t = VersionedTable(str(tmp_path / "t"))
+        key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "LEGACY")
+        try:
+            t.commit(_all_types_df(spark), mode="overwrite")
+        finally:
+            spark.conf.set(key, old)
+        m = _entries_match_aggregate(spark, t, schema)
+        assert m["stats"][m["groups"][0]]["d"]["min"] == "1500-01-01"
+
+    def test_all_string_write_observes_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Footers answer every stat of an all-string table with no
+        CHECK or bloom, so its one-group write carries no observe; a
+        numeric column's SUM still rides the write as one."""
+        strs = spark.range(50).select(
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+            F.lit("x").alias("v"),
+        )
+        calls = []
+        real = type(strs).observe  # the session's DataFrame class
+
+        def counting(self, *a, **kw):
+            calls.append(1)
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(type(strs), "observe", counting)
+        t = VersionedTable(str(tmp_path / "t"))
+        m = t._load_manifest(t.commit(strs, mode="overwrite"))
+        st = m["stats"][m["added"][0]]
+        assert calls == []
+        assert st["_rows"] == 50
+        assert st["k"] == {"min": "k0", "max": "k9", "nulls": 0}
+        VersionedTable(str(tmp_path / "t2")).commit(
+            spark.range(50), mode="overwrite"
+        )
+        assert calls == [1]
+
+    def test_all_string_partitioned_commit_runs_two_jobs(
+        self, spark, tmp_path
+    ):
+        """Only the hash-shuffled write's two jobs: with no SUM, CHECK
+        or bloom to aggregate, no grouped stats aggregate runs."""
+        t = VersionedTable(str(tmp_path / "t"))
+        df = spark.range(1200).select(
+            F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+            (F.col("id") % 4).cast("string").alias("p"),
+        )
+        v, jobs = _jobs(
+            spark,
+            lambda: t.commit(df, mode="overwrite", partition_by=["p"]),
+        )
+        m = t._load_manifest(v)
+        assert len(m["groups"]) == 4
+        assert sum(m["stats"][g]["_rows"] for g in m["groups"]) == 1200
+        assert jobs == 2
+
+    def test_footer_reads_equal_data_files_written(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One footer read per data file, in every write shape, with
+        each write split into several files per group (at most 200
+        rows a file)."""
+        from file_stream_import_spark.io import versioned
+
+        reads = []
+        real = versioned._read_footer
+
+        def counting(path):
+            reads.append(path)
+            return real(path)
+
+        monkeypatch.setattr(versioned, "_read_footer", counting)
+        t = VersionedTable(str(tmp_path / "t"))
+        key = "spark.sql.files.maxRecordsPerFile"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "200")
+        try:
+            writes = [
+                lambda: t.commit(_shapes_df(spark), mode="overwrite"),
+                lambda: t.commit(
+                    _shapes_df(spark), mode="append", partition_by=["p"]
+                ),
+                lambda: t.optimize(spark, cluster_by="k", target_groups=3),
+            ]
+            for write in writes:
+                reads.clear()
+                m = t._load_manifest(write())
+                files = [
+                    p for g in m["added"]
+                    for p in versioned._data_files(os.path.join(t.path, g))
+                ]
+                assert len(reads) == len(files) > len(m["added"])
+        finally:
+            spark.conf.set(key, old)
+        m = t._load_manifest(t.latest_version())
+        assert sum(m["stats"][g]["_rows"] for g in m["groups"]) == 2400
 
     @pytest.mark.parametrize("n_parts", [2, 12, 40])
     def test_partitioned_commit_jobs_do_not_grow_with_groups(

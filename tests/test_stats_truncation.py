@@ -46,6 +46,10 @@ class TestTruncationUnit:
         mn, mx, trunc = _truncate_str_stats("abc", "def")
         assert (mn, mx, trunc) == ("abc", "def", False)
 
+    def test_bump_skips_the_surrogate_block(self):
+        mn, mx, trunc = _truncate_str_stats("a", "b" * 63 + "\ud7ff" + "zz")
+        assert trunc and mx == "b" * 63 + "\ue000"
+
     def test_unbumpable_max_becomes_none(self):
         big = chr(0x10FFFF) * 100
         mn, mx, trunc = _truncate_str_stats("a", big)
@@ -134,3 +138,27 @@ class TestConsumersStayCorrect:
         }
         assert rows["mmm"] == 99
         assert len(rows) == 3
+
+    def test_merge_past_a_max_that_bumps_to_a_surrogate(
+        self, spark, tmp_path
+    ):
+        """A 64-char max prefix ending in U+D7FF bumps to U+E000, not to
+        the lone surrogate U+D800 that py4j cannot send as the touch
+        test's literal."""
+        from file_stream_import_spark.io.versioned import merge_into
+
+        key = "b" * 63 + "\ud7ff" + "zz"
+        t = VersionedTable(str(tmp_path / "t"))
+        t.commit(
+            spark.createDataFrame([("a", 1), (key, 2)], "k string, v long"),
+            mode="overwrite",
+        )
+        merge_into(
+            t, spark,
+            spark.createDataFrame([("a", 10)], "k string, v long"),
+            key="k",
+        )
+        got = t.read(spark, where={"k": ("a", key)}).collect()
+        assert sorted((r["k"], r["v"]) for r in got) == [
+            ("a", 10), (key, 2),
+        ]

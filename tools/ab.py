@@ -9,7 +9,11 @@ side's tree, the side that goes first alternating pair by pair. ``{i}``
 in CMD becomes the pair index (0-based), so each pair can take a fresh
 seed. The last line of CMD's stdout must be a JSON object: every number
 in it is a metric (nested keys joined with ``.``; an object with a
-``"value"`` is that value). Per metric, the report gives each side's
+``"value"`` is that value). So is every ``name value unit`` report line
+before it whose value is a number and whose name the JSON does not
+already carry (perfbench's ``host.calibration_start_s``/``_end_s`` and
+per-op-type p50s), so each pair can be read against host drift. Per
+metric, the report gives each side's
 median and quartiles, B's change in the median, and the pairs in which
 B read lower / higher than A. A run that exits non-zero is reported and
 leaves its pair out of that metric. The last line of the report is the
@@ -66,6 +70,25 @@ def flatten(obj, prefix: str = "") -> dict:
     return {}
 
 
+def report_lines(lines: list[str], known: dict) -> dict:
+    """{name: value} of the ``name value unit`` lines among ``lines``
+    whose value is a number, leaving out a name that ``known`` (the
+    flattened JSON) has as a key or as the last part of a dotted key."""
+    out = {}
+    for line in lines:
+        parts = line.split()
+        if len(parts) != 3:
+            continue
+        name, value, _unit = parts
+        try:
+            out[name] = float(value)
+        except ValueError:
+            continue
+        if any(k == name or k.endswith("." + name) for k in known):
+            del out[name]
+    return out
+
+
 def run(cmd: list[str], cwd: str, i: int, label: str) -> dict | None:
     argv = [a.replace("{i}", str(i)) for a in cmd]
     t0 = time.perf_counter()
@@ -76,6 +99,7 @@ def run(cmd: list[str], cwd: str, i: int, label: str) -> dict | None:
         if p.returncode:
             raise ValueError(f"exit {p.returncode}")
         got = flatten(json.loads(lines[-1]))
+        got.update(report_lines(lines[:-1], got))
     except (ValueError, IndexError) as e:
         print(f"pair {i} {label}: FAILED ({e}) after {dt:.0f}s\n"
               + p.stderr[-2000:], file=sys.stderr)

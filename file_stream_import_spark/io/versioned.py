@@ -1098,9 +1098,9 @@ def _data_files(d: str) -> list[str]:
     ]
 
 
-def _group_bytes(d: str) -> int:
-    """Data bytes of one group directory (see _data_files)."""
-    return sum(os.path.getsize(p) for p in _data_files(d))
+def _files_bytes(paths: list[str]) -> int:
+    """Data bytes of ``paths`` (a group's _data_files)."""
+    return sum(os.path.getsize(p) for p in paths)
 
 
 def _read_footer(path: str):
@@ -1108,19 +1108,6 @@ def _read_footer(path: str):
     import pyarrow.parquet as pq
 
     return pq.read_metadata(path)
-
-
-def _read_footers(spark, paths: list[str]) -> list:
-    """The footers of ``paths``, in order. Several files are read by a
-    pool of up to defaultParallelism threads: pyarrow releases the GIL
-    while it reads."""
-    if len(paths) <= 1:
-        return [_read_footer(p) for p in paths]
-    from concurrent.futures import ThreadPoolExecutor
-
-    n = min(len(paths), spark.sparkContext.defaultParallelism)
-    with ThreadPoolExecutor(n) as pool:
-        return list(pool.map(_read_footer, paths))
 
 
 def _chunk_stats(s, rows: int):
@@ -1220,11 +1207,11 @@ def _write_groups(
     Each group's ``_rows``, and min/max/nulls of its footer-type
     columns (_FOOTER_STATS), are folded from the Parquet footers of the
     files just written (_footer_stats). Cost model: one footer read per
-    data file written, O(files) and never O(rows), from the same
-    listing that sizes ``_bytes``; a write of several files reads them
-    in a thread pool. A footer-type column some footer cannot answer
-    (a string over 4 KB) takes its stats from one fallback aggregate
-    over the written groups — the only case that reads the data back.
+    data file written, O(files) and never O(rows), serial, from the
+    same _data_files listing that sizes ``_bytes``. A footer-type
+    column some footer cannot answer (a string over 4 KB) takes its
+    stats from one fallback aggregate over the written groups — the
+    only case that reads the data back.
 
     The entry holds ``_rows``, ``_bytes`` (data bytes: compact() sizes
     groups from it without walking the data tree), ``{"min", "max",
@@ -1258,13 +1245,10 @@ def _write_groups(
     def footers(files: dict) -> tuple[dict, list]:
         """{group: (rows, bytes, footer stats)} of ``files`` ({group:
         data file paths}), and the fallback aggregate's Columns."""
-        mds = iter(
-            _read_footers(spark, [p for v in files.values() for p in v])
-        )
         foot = {}
         for g, paths in files.items():
-            rows, fs = _footer_stats([next(mds) for _ in paths], fcols)
-            foot[g] = (rows, sum(os.path.getsize(p) for p in paths), fs)
+            rows, fs = _footer_stats([_read_footer(p) for p in paths], fcols)
+            foot[g] = (rows, _files_bytes(paths), fs)
         late = sorted(
             {i for *_, fs in foot.values() for i, v in fs.items() if v is None}
         )
@@ -1312,21 +1296,19 @@ def _write_groups(
         flat = os.path.join(staged, "flat")
         os.mkdir(flat)
         moved: dict[str, list[str]] = {}
+        files: dict[str, list[str]] = {}
         for d in leaves:
             gid = uuid.uuid4().hex
+            files[os.path.join("data", gid)] = [
+                os.path.join(flat, _flat_name(gid, os.path.basename(p)))
+                for p in _data_files(d)
+            ]
             moved[gid] = sorted(os.listdir(d))
             for n in moved[gid]:
                 os.rename(
                     os.path.join(d, n), os.path.join(flat, _flat_name(gid, n))
                 )
-        foot, late = footers({
-            os.path.join("data", gid): [
-                os.path.join(flat, _flat_name(gid, n))
-                for n in names
-                if not n.startswith(("_", "."))
-            ]
-            for gid, names in moved.items()
-        })
+        foot, late = footers(files)
         aggs = {g: {} for g in foot}
         if foot and (exprs or late):
             # the files' schema IS ``schema``: read under it instead of
@@ -3839,7 +3821,9 @@ class VersionedTable:
         for g in m["groups"]:
             size = (stats.get(g) or {}).get("_bytes")
             if size is None:
-                size = _group_bytes(os.path.join(self.path, g))
+                size = _files_bytes(
+                    _data_files(os.path.join(self.path, g))
+                )
             if int(size) < min_bytes:
                 small.append(g)
         if len(small) < 2:

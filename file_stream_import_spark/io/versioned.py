@@ -652,7 +652,8 @@ def _node_literal(node):
 def _bounds_intersect(a, b):
     """AND of two per-column bounds (each a (lo,hi) tuple or a list)."""
     if isinstance(a, list) and isinstance(b, list):
-        sa = [v for v in a if v in set(b)]
+        sb = set(b)
+        sa = [v for v in a if v in sb]
         return sa if sa else a  # empty intersection: keep either (sound)
     if isinstance(a, list) or isinstance(b, list):
         vs, (lo, hi) = (a, b) if isinstance(a, list) else (b, a)
@@ -674,7 +675,8 @@ def _bounds_intersect(a, b):
 def _bounds_hull(a, b):
     """OR of two per-column bounds: the convex hull."""
     if isinstance(a, list) and isinstance(b, list):
-        vs = a + [v for v in b if v not in set(a)]
+        sa = set(a)
+        vs = a + [v for v in b if v not in sa]
         try:
             min(vs), max(vs)  # comparability probe (mixed-type IN-sets
             # out of e.g. isin(1,2) | isin('a') have no orderable box —
@@ -1995,9 +1997,7 @@ class VersionedTable:
                     f"{expected_parent}; recompute and retry"
                 )
         schema_json = df.schema.json()
-        groups: list[str] = []
-        delete_entries: list[dict] = []
-        # ONE parent load serves the schema check, the stats carry, and
+        # ONE parent load serves the schema check, the group rule, and
         # the bloom/constraint lookups below (each load parses the full
         # materialized manifest — O(width) per call at large widths)
         pm = self._load_manifest(parent) if parent is not None else {}
@@ -2010,21 +2010,6 @@ class VersionedTable:
                         "overwrite to migrate explicitly"
                     )
                 schema_json = _evolve_schema(pm["schema"], df.schema)
-            groups = list(pm["groups"])
-            # pending merge-on-read deletes stay scoped to the OLD
-            # groups; the new group is younger than every delete and
-            # must not be touched by them
-            delete_entries = list(pm.get("delete_entries") or [])
-        # stats for RETAINED groups carry forward by reference
-        stats = (
-            {
-                g: s
-                for g, s in (pm.get("stats") or {}).items()
-                if g in set(groups)
-            }
-            if parent is not None and groups
-            else {}
-        )
         # (1) immutable data files first, invisible until the manifest;
         # stats + CHECK validation in the same pass as the write
         pcols: tuple = ()
@@ -2042,29 +2027,26 @@ class VersionedTable:
             df = df.select("*", *[
                 expr.alias(p) for (_, expr), p in zip(transforms, pcols)
             ]).repartition(*pcols)
-        added, new_stats = _write_groups(df, self.path, pm, pcols)
-        groups.extend(added)
-        stats.update(new_stats)
-        # (2) atomic manifest publish; "added" records THIS commit's
-        # delta explicitly so consumers (the changefeed) never need the
-        # parent manifest — which vacuum may have expired. Appends
-        # rebase over concurrent commits (no read dependency: only
-        # schema/constraint/txn changes conflict); overwrite/delete
-        # stay strictly pinned.
-        manifest = {
-            "schema": schema_json,
-            "groups": groups,
-            "mode": mode,
-            "added": added,
-            "delete_entries": delete_entries,
-            "stats": stats,
-        }
-        if mode == "append":
-            return self._publish_or_rebase(
-                parent, manifest, txn=txn, removed=[],
-                concurrent_adds_ok=True,
-            )
-        return self._publish(parent, manifest, txn=txn)
+        added, stats = _write_groups(df, self.path, pm, pcols)
+        # (2) atomic manifest publish. An append removes nothing: the
+        # parent's groups, stats and pending merge-on-read deletes carry
+        # (the new groups are younger than every delete and stay outside
+        # its scope), and it rebases over concurrent commits (no read
+        # dependency: only schema/constraint/txn changes conflict).
+        # overwrite/delete remove every parent group and stay strictly
+        # pinned: rebasing over a concurrent commit would erase it.
+        append = mode == "append"
+        return self._publish_or_rebase(
+            pm,
+            [] if append else list(pm.get("groups") or []),
+            added,
+            stats,
+            mode=mode,
+            schema=schema_json,
+            txn=txn,
+            concurrent_adds_ok=True,
+            pinned=not append,
+        )
 
     def _publish(
         self,
@@ -2110,6 +2092,7 @@ class VersionedTable:
         # rewritten data; rewritten groups carry fresh uuids and need
         # no entry). A commit that SETS "colmap" itself (rename/drop/
         # rollback) is authoritative and skips inheritance.
+        live = set(manifest.get("groups") or [])
         for mkey in ("colmap", "castmap"):
             if mkey not in manifest:
                 inherited_cm = {
@@ -2117,7 +2100,7 @@ class VersionedTable:
                     for g, mp in (
                         parent_manifest.get(mkey) or {}
                     ).items()
-                    if g in set(manifest.get("groups") or []) and mp
+                    if g in live and mp
                 }
                 if inherited_cm:
                     manifest[mkey] = inherited_cm
@@ -2290,22 +2273,43 @@ class VersionedTable:
 
     def _publish_or_rebase(
         self,
-        base: int | None,
-        manifest: dict,
-        *,
+        m: dict,
         removed: list[str],
+        added: list[str],
+        stats: dict,
+        *,
+        mode: str,
         txn: dict[str, int] | None = None,
         update_box=None,
         update_membership=None,
         concurrent_adds_ok: bool = False,
-        max_rebases: int = 50,
+        pinned: bool = False,
+        **keys,
     ) -> int:
-        """Publish a commit computed against snapshot ``base``; if the
-        table advanced, VALIDATE the concurrent commits for overlap
-        (Delta/Iceberg-style optimistic concurrency) and REBASE onto
-        the actual latest instead of failing — disjoint writers both
-        land without recompute. Raises CommitConflictError only on a
-        TRUE conflict:
+        """Publish a data write computed against snapshot ``m`` (the
+        loaded base manifest; ``{}`` for an empty table) — the one place
+        a write's groups become a manifest. The write names the groups
+        it ``removed`` and the groups it ``added`` with their
+        ``stats``; ``keys`` are the extra manifest keys it owns
+        (``schema`` when it evolves the base's, ``clustered``).
+
+        THE GROUP RULE, applied to a head snapshot: the head's groups
+        minus ``removed``, in head order, then ``added``; the kept
+        groups' stats carried by reference plus the added ones; each
+        pending merge-on-read delete entry rescoped to the kept groups
+        it applies to (removed groups were rewritten with the deletes
+        applied), and dropped once its scope is empty. The first attempt
+        applies the rule to ``m``. ``pinned`` (overwrite/delete: the
+        write replaced the whole table) publishes that once at base + 1
+        and conflicts on any concurrent commit.
+
+        Otherwise a lost slot REBASES through _commit_loop: the
+        concurrent commits between base and the latest snapshot are
+        VALIDATED for overlap (Delta/Iceberg-style optimistic
+        concurrency, _validate_rebase) and the rule is applied to the
+        latest snapshot, recorded with ``rebased_from`` — disjoint
+        writers both land without recompute, concurrent work preserved
+        verbatim. CommitConflictError only on a TRUE conflict:
 
         * a concurrent commit removed (rewrote) a group this commit
           also rewrote — both touched the same data;
@@ -2318,37 +2322,98 @@ class VersionedTable:
           zero-arg callable evaluated only when a rebase is actually
           needed (no extra job on the uncontended path); ``None``
           means "no proof available" → any concurrent add conflicts;
+          ``update_membership`` is the Bloom second chance for the
+          groups the box cannot clear;
         * the schema, CHECK constraints, or this writer's txn
           watermark advanced, or merge-on-read delete entries are in
-          play (row-level intent the group algebra can't see).
+          play (row-level intent the group algebra can't see)."""
+        base = m.get("version")
+        gone = set(removed)
+        keys.setdefault("schema", m.get("schema"))
 
-        The rebased manifest takes the LATEST snapshot's group list,
-        drops the groups this commit rewrote, and adds this commit's
-        groups — concurrent disjoint work is preserved verbatim. The
-        publish itself still goes through the atomic create-if-absent
-        link, so a third writer landing mid-rebase just triggers
-        another validation round (bounded by ``max_rebases``)."""
-        removed_set = set(removed)
-        attempt_base = base
-        stale_lists = 0
-        for _ in range(max_rebases):
+        def apply_rule(head_m: dict) -> dict:
+            kept = [g for g in head_m.get("groups") or [] if g not in gone]
+            keep = set(kept)
+            hstats = head_m.get("stats") or {}
+            out_stats = {g: hstats[g] for g in kept if g in hstats}
+            out_stats.update({g: stats[g] for g in added if g in stats})
+            entries = []
+            for e in head_m.get("delete_entries") or []:
+                applies = [g for g in e["applies_to"] if g in keep]
+                if applies:
+                    entries.append({**e, "applies_to": applies})
+            return {
+                "groups": kept + list(added),
+                "mode": mode,
+                "added": list(added),
+                "delete_entries": entries,
+                "stats": out_stats,
+                **keys,
+            }
+
+        if pinned:
+            return self._publish(base, apply_rule(m), txn=txn)
+
+        def attempt(head: int | None) -> dict:
+            if head == base:
+                return apply_rule(m)
             try:
-                return self._publish(attempt_base, dict(manifest), txn=txn)
+                base_m = (
+                    self._load_manifest(base) if base is not None else {}
+                )
+                latest_m = self._load_manifest(head)
+            except FileNotFoundError:
+                raise CommitConflictError(
+                    "concurrent commit landed and its lineage is no "
+                    "longer readable; recompute and retry"
+                ) from None
+            rebased = {**apply_rule(latest_m), "rebased_from": base}
+            self._validate_rebase(
+                base_m, latest_m, rebased, gone, txn,
+                update_box, update_membership, concurrent_adds_ok,
+            )
+            return rebased
+
+        return self._commit_loop(base, attempt, txn=txn)
+
+    def _commit_loop(
+        self,
+        head: int | None,
+        attempt,
+        txn: dict[str, int] | None = None,
+    ) -> int:
+        """The one optimistic-concurrency loop (Delta's commit
+        protocol): ``attempt(head)`` validates the write against
+        snapshot ``head`` — raising CommitConflictError on a true
+        conflict, by the writer's own rule — and returns the manifest
+        to publish at ``head + 1``, or a version number when there is
+        nothing left to publish. Each publish is an atomic
+        create-if-absent link; a lost slot re-lists the table and
+        calls ``attempt`` again with the new latest snapshot.
+
+        Stale-listing guard: a lost slot whose re-listing still shows
+        ``head`` as latest is a listing race (a writer mid-publish, a
+        vacuum mid-unlink), not a new head. It re-lists after a short
+        back-off, and raises a distinct "listing inconsistent" error
+        after five in a row instead of burning attempts on identical
+        publishes and reporting a misleading commit storm. At most 50
+        publishes are tried in all."""
+        stale_lists = 0
+        manifest = attempt(head)
+        for _ in range(50):
+            if isinstance(manifest, int):
+                return manifest
+            try:
+                return self._publish(head, dict(manifest), txn=txn)
             except CommitConflictError:
                 pass
             latest = self.latest_version()
-            if latest is None or latest == attempt_base:
-                # the target version slot exists (the publish just
-                # conflicted) yet the listing still shows attempt_base
-                # as latest — a listing race (writer mid-publish /
-                # vacuum mid-unlink). Re-list with its OWN small bound
-                # instead of burning rebase attempts on identical
-                # publishes and surfacing a misleading "commit storm".
+            if latest is None or latest == head:
                 stale_lists += 1
                 if stale_lists > 5:
                     raise CommitConflictError(
                         "version listing inconsistent: version "
-                        f"{(attempt_base if attempt_base is not None else -1) + 1} "
+                        f"{(head if head is not None else -1) + 1} "
                         "exists but the manifest listing does not show "
                         "it; check _manifests/ for external interference"
                     )
@@ -2357,39 +2422,10 @@ class VersionedTable:
                 _time.sleep(0.01 * stale_lists)
                 continue
             stale_lists = 0
-            try:
-                base_m = (
-                    self._load_manifest(base) if base is not None else {}
-                )
-                latest_m = self._load_manifest(latest)
-            except FileNotFoundError:
-                raise CommitConflictError(
-                    "concurrent commit landed and its lineage is no "
-                    "longer readable; recompute and retry"
-                ) from None
-            self._validate_rebase(
-                base_m, latest_m, manifest, removed_set, txn,
-                update_box, update_membership, concurrent_adds_ok,
-            )
-            # rebase: latest's groups, minus what we rewrote, plus ours
-            ours = list(manifest.get("added") or [])
-            groups = [
-                g for g in latest_m["groups"] if g not in removed_set
-            ] + ours
-            lstats = latest_m.get("stats") or {}
-            ostats = manifest.get("stats") or {}
-            stats = {g: lstats[g] for g in groups if g in lstats}
-            stats.update({g: ostats[g] for g in ours if g in ostats})
-            manifest = {
-                **manifest,
-                "groups": groups,
-                "stats": stats,
-                "delete_entries": [],  # proven empty by validation
-                "rebased_from": base,
-            }
-            attempt_base = latest
+            head = latest
+            manifest = attempt(head)
         raise CommitConflictError(
-            f"gave up after {max_rebases} rebase attempts (commit storm)"
+            "gave up after 50 rebase attempts (commit storm)"
         )
 
     def _validate_rebase(
@@ -3062,16 +3098,17 @@ class VersionedTable:
             ]
             return reduce(lambda a, b: a.unionByName(b), parts)
 
+        read_set = set(groups)
         dels = [
             e
             for e in (m.get("delete_entries") or [])
-            if set(e["applies_to"]) & set(groups)
+            if read_set.intersection(e["applies_to"])
         ]
         if not dels:
             return load(groups)
 
         touched = {
-            g for e in dels for g in e["applies_to"] if g in set(groups)
+            g for e in dels for g in e["applies_to"] if g in read_set
         }
         parts = []
         untouched = [g for g in groups if g not in touched]
@@ -3656,24 +3693,16 @@ class VersionedTable:
         # play; pure appends carry into the clustered snapshot verbatim
         # (their rows simply stay unclustered until the next optimize).
         return self._publish_or_rebase(
-            base,
-            {
-                "schema": m["schema"],
-                "groups": groups,
-                "mode": f"optimize:cluster_by={cluster_by}",
-                "added": groups,
-                "delete_entries": [],
-                "stats": stats,
-                # the clustered-set record optimize_incremental reads:
-                # inherited by later commits (like txn/bloom_bits) and
-                # intersected with the live group list at use, so
-                # groups rewritten away simply drop out
-                "clustered": {
-                    "cols": ",".join(cluster_cols),
-                    "groups": groups,
-                },
-            },
-            removed=list(m["groups"]),
+            m,
+            list(m["groups"]),
+            groups,
+            stats,
+            mode=f"optimize:cluster_by={cluster_by}",
+            # the clustered-set record optimize_incremental reads:
+            # inherited by later commits (like txn/bloom_bits) and
+            # intersected with the live group list at use, so groups
+            # rewritten away simply drop out
+            clustered={"cols": ",".join(cluster_cols), "groups": groups},
             concurrent_adds_ok=True,
         )
 
@@ -3757,31 +3786,16 @@ class VersionedTable:
         new_groups, new_stats = self._cluster_write(
             m, df, cluster_cols, k
         )
-        retained = [g for g in live if g not in delta_set]
-        stats = {
-            g: stats_all[g] for g in retained if g in stats_all
-        }
-        stats.update(new_stats)
-        kept_dels = [
-            e
-            for e in dels
-            if set(e["applies_to"]) & set(retained)
-        ]
         return self._publish_or_rebase(
-            base,
-            {
-                "schema": m["schema"],
-                "groups": retained + new_groups,
-                "mode": f"optimize_delta:cluster_by={rec['cols']}",
-                "added": new_groups,
-                "delete_entries": kept_dels,
-                "stats": stats,
-                "clustered": {
-                    "cols": rec["cols"],
-                    "groups": clustered_live + new_groups,
-                },
+            m,
+            delta,
+            new_groups,
+            new_stats,
+            mode=f"optimize_delta:cluster_by={rec['cols']}",
+            clustered={
+                "cols": rec["cols"],
+                "groups": clustered_live + new_groups,
             },
-            removed=list(delta),
             concurrent_adds_ok=True,
         )
 
@@ -3831,31 +3845,13 @@ class VersionedTable:
         out_df = self._read_groups(spark, m, small).coalesce(
             max(1, target_partitions)
         )
-        (group,), group_stats = _write_groups(out_df, self.path, m)
-        small_set = set(small)
-        untouched = [g for g in m["groups"] if g not in small_set]
-        stats_out = {
-            g: s
-            for g, s in (m.get("stats") or {}).items()
-            if g in set(untouched)
-        }
-        stats_out.update(group_stats)
-        entries = []
-        for e in m.get("delete_entries") or []:
-            applies = [g for g in e["applies_to"] if g in set(untouched)]
-            if applies:
-                entries.append({**e, "applies_to": applies})
+        added, added_stats = _write_groups(out_df, self.path, m)
         return self._publish_or_rebase(
-            base,
-            {
-                "schema": m["schema"],
-                "groups": untouched + [group],
-                "mode": f"compact:{len(small)}",
-                "added": [group],
-                "delete_entries": entries,
-                "stats": stats_out,
-            },
-            removed=small,
+            m,
+            small,
+            added,
+            added_stats,
+            mode=f"compact:{len(small)}",
             # no read dependency on concurrent adds: compaction only
             # rewrites what it read, so pure appends rebase cleanly
             concurrent_adds_ok=True,
@@ -3957,63 +3953,44 @@ class VersionedTable:
             "key": list(key_cols),
             "applies_to": list(m["groups"]),
         }
-        # concurrency: _publish targets base+1 atomically; on conflict
-        # the MoR delete REBASES with its own rule set (r7): a delete
-        # sidecar composes with concurrent PURE APPENDS (the new groups
-        # are deliberately outside applies_to — re-inserted keys
-        # survive, the documented scoping semantics) and with other
-        # delete entries (independent sidecars), but NOT with commits
-        # that rewrote any of the groups it scopes to — the matched
-        # rows may have moved to files the sidecar doesn't cover, which
-        # would silently lose the delete.
-        attempt_base, manifest = base, {
-            "schema": m["schema"],
-            "groups": list(m["groups"]),
-            "mode": "delete",
-            "added": [],
-            "delete_entries": list(m.get("delete_entries") or []) + [entry],
-            "stats": dict(m.get("stats") or {}),
-        }
-        stale_lists = 0
-        for _ in range(50):
-            try:
-                return self._publish(attempt_base, dict(manifest))
-            except CommitConflictError:
-                pass
-            latest = self.latest_version()
-            if latest is None or latest == attempt_base:
-                # same listing-race guard as _publish_or_rebase
-                stale_lists += 1
-                if stale_lists > 5:
-                    raise CommitConflictError(
-                        "version listing inconsistent: the target "
-                        "version exists but the listing does not show "
-                        "it; check _manifests/ for external interference"
-                    )
-                import time as _time
 
-                _time.sleep(0.01 * stale_lists)
-                continue
-            stale_lists = 0
-            latest_m = self._load_manifest(latest)
-            if _schema_key(latest_m["schema"]) != _schema_key(m["schema"]):
-                raise CommitConflictError(
-                    "concurrent commit changed the schema; recompute "
-                    "the delete"
+        def attempt(head: int) -> dict:
+            """The sidecar joins the head's delete entries; everything
+            else carries. On a lost slot the MoR delete REBASES with
+            its own rule set: a delete sidecar composes with
+            concurrent PURE APPENDS (the new groups are deliberately
+            outside applies_to — re-inserted keys survive, the
+            documented scoping semantics) and with other delete entries
+            (independent sidecars), but NOT with commits that rewrote
+            any of the groups it scopes to — the matched rows may have
+            moved to files the sidecar doesn't cover, which would
+            silently lose the delete."""
+            if head == base:
+                latest_m = m
+            else:
+                latest_m = self._load_manifest(head)
+                if _schema_key(latest_m["schema"]) != _schema_key(
+                    m["schema"]
+                ):
+                    raise CommitConflictError(
+                        "concurrent commit changed the schema; recompute "
+                        "the delete"
+                    )
+                if (latest_m.get("constraints") or {}) != (
+                    m.get("constraints") or {}
+                ):
+                    raise CommitConflictError(
+                        "concurrent commit changed CHECK constraints; "
+                        "recompute the delete"
+                    )
+                rewritten = set(entry["applies_to"]) - set(
+                    latest_m["groups"]
                 )
-            if (latest_m.get("constraints") or {}) != (
-                m.get("constraints") or {}
-            ):
-                raise CommitConflictError(
-                    "concurrent commit changed CHECK constraints; "
-                    "recompute the delete"
-                )
-            rewritten = set(entry["applies_to"]) - set(latest_m["groups"])
-            if rewritten:
-                raise CommitConflictError(
-                    "concurrent commit rewrote group(s) this delete "
-                    "scopes to; recompute the delete"
-                )
+                if rewritten:
+                    raise CommitConflictError(
+                        "concurrent commit rewrote group(s) this delete "
+                        "scopes to; recompute the delete"
+                    )
             manifest = {
                 "schema": latest_m["schema"],
                 "groups": list(latest_m["groups"]),
@@ -4022,12 +3999,12 @@ class VersionedTable:
                 "delete_entries": list(latest_m.get("delete_entries") or [])
                 + [entry],
                 "stats": dict(latest_m.get("stats") or {}),
-                "rebased_from": base,
             }
-            attempt_base = latest
-        raise CommitConflictError(
-            "gave up after 50 rebase attempts (commit storm)"
-        )
+            if head != base:
+                manifest["rebased_from"] = base
+            return manifest
+
+        return self._commit_loop(base, attempt)
 
     # -- Bloom-indexed columns -----------------------------------------
 
@@ -4308,34 +4285,14 @@ class VersionedTable:
             touched = groups
         if prune_where and not touched:
             return base  # nothing can match: metadata-only no-op
-        untouched = [g for g in groups if g not in set(touched)]
         out_df = transform(self._read_groups(spark, m, touched))
-        (group,), group_stats = _write_groups(out_df, self.path, m)
-        stats_out = {
-            g: s for g, s in stats.items() if g in set(untouched)
-        }
-        stats_out.update(group_stats)
-        entries = []
-        for e in m.get("delete_entries") or []:
-            applies = [g for g in e["applies_to"] if g in set(untouched)]
-            if applies:
-                entries.append({**e, "applies_to": applies})
+        added, added_stats = _write_groups(out_df, self.path, m)
         types = {
             f.name: f.dataType for f in _schema_from_json(m["schema"]).fields
         }
         box = _rebase_box(prune_where, types) if prune_where else None
         return self._publish_or_rebase(
-            base,
-            {
-                "schema": m["schema"],
-                "groups": untouched + [group],
-                "mode": mode,
-                "added": [group],
-                "delete_entries": entries,
-                "stats": stats_out,
-            },
-            removed=touched,
-            update_box=box,
+            m, touched, added, added_stats, mode=mode, update_box=box
         )
 
     # -- refs: tags & branches (write-audit-publish) --------------------
@@ -4676,7 +4633,8 @@ class VersionedTable:
         anyway would silently drop or reorder the other side's
         semantics, because a manifest is a full state, not a delta).
         A concurrent commit racing the publish itself triggers another
-        validate-and-rebase round, bounded like _publish_or_rebase.
+        validate-and-rebase round through _commit_loop, the loop every
+        rebasing write shares.
 
         The main commit's mode is ``publish_branch:<name>`` when the
         branch only ADDED data (every fork group still present, no new
@@ -4706,26 +4664,10 @@ class VersionedTable:
                 "(branch-vacuumed away?) — cannot verify the fork "
                 "point; recreate the branch"
             ) from None
-        bm = b._load_manifest(bh) if bh > 0 else None
-        last_base, stale_lists = None, 0
-        for _ in range(50):
-            main_latest = self.latest_version()
-            if last_base is not None and main_latest == last_base:
-                # the publish just conflicted yet the listing still
-                # shows the same head — a listing race (writer mid-
-                # publish); back off briefly instead of burning
-                # attempts on identical publishes
-                import time as _time
+        bm = b._load_manifest(bh) if bh > 0 else {}
 
-                stale_lists += 1
-                if stale_lists > 5:
-                    raise CommitConflictError(
-                        "version listing inconsistent during publish; "
-                        "check _manifests/ for external interference"
-                    )
-                _time.sleep(0.01 * stale_lists)
-                continue
-            last_base, stale_lists = main_latest, 0
+        def attempt(main_latest: int | None):
+            # the fast-forward or rebase rule above, against main_latest
             diverged = main_latest != fork_v
             if diverged:
                 self._publish_rebase_check(
@@ -4858,15 +4800,10 @@ class VersionedTable:
                     manifest["bloom_bits"] = int(
                         latest_m["bloom_bits"]
                     )
-            try:
-                return self._publish(
-                    main_latest, manifest, txn=bm.get("txn")
-                )
-            except CommitConflictError:
-                continue  # raced by a commit: re-list, re-validate
-        raise CommitConflictError(
-            f"gave up publishing branch {name!r} after 50 rebase "
-            "attempts (commit storm)"
+            return manifest
+
+        return self._commit_loop(
+            self.latest_version(), attempt, txn=bm.get("txn")
         )
 
     def vacuum(
@@ -5376,7 +5313,8 @@ def merge_into(
                 g for g in m["groups"]
                 if _group_may_match(gstats.get(g), prune_where)
             ]
-            untouched = [g for g in m["groups"] if g not in set(touched)]
+            touched_set = set(touched)
+            untouched = [g for g in m["groups"] if g not in touched_set]
             probe_row = None
         else:
             touched, untouched, probe_row = _split_touched_groups(
@@ -5409,7 +5347,8 @@ def merge_into(
                 or _group_may_match(gstats.get(g), bys_bounds)
             ]
             extra_set = set(extra)
-            touched = [g for g in m["groups"] if g in set(touched) | extra_set]
+            widened = set(touched) | extra_set
+            touched = [g for g in m["groups"] if g in widened]
             untouched = [g for g in untouched if g not in extra_set]
         current = table._read_groups(spark, m, touched)
         # evolved columns: rewritten target rows NULL-backfill the new
@@ -5439,37 +5378,21 @@ def merge_into(
                 when_not_matched_by_source, not_matched_by_source_condition,
             )
 
-        # write the rewritten delta as ONE new group, then publish a
-        # manifest carrying the untouched groups (and their stats) by
-        # reference; base-pinned so a concurrent commit conflicts instead
-        # of silently disappearing under the rewrite
-        (group,), group_stats = _write_groups(merged, table.path, m)
-        stats = {
-            g: s
-            for g, s in (m.get("stats") or {}).items()
-            if g in set(untouched)
-        }
-        stats.update(group_stats)
-        # delete entries survive only where their groups do: touched groups
-        # were rewritten with deletes applied; an entry scoped solely to
-        # touched groups is fully materialized and dropped
-        entries = []
-        for e in m.get("delete_entries") or []:
-            applies = [g for g in e["applies_to"] if g in set(untouched)]
-            if applies:
-                entries.append({**e, "applies_to": applies})
+        # the touched groups' rows, merged, are ONE new group; the write
+        # removes the touched groups and adds it, and _publish_or_rebase's
+        # group rule carries the untouched groups with their stats and
+        # rescopes pending deletes (touched groups were rewritten with
+        # theirs applied). A concurrent commit that overlaps conflicts
+        # instead of silently disappearing under the rewrite.
+        added, added_stats = _write_groups(merged, table.path, m)
         return table._publish_or_rebase(
-            base,
-            {
-                "schema": schema_json,
-                "groups": untouched + [group],
-                "mode": "overwrite",
-                "added": [group],
-                "delete_entries": entries,
-                "stats": stats,
-            },
+            m,
+            touched,
+            added,
+            added_stats,
+            mode="overwrite",
+            schema=schema_json,
             txn=txn,
-            removed=touched,
             # evaluated ONLY if a rebase is needed: one tiny agg job over
             # the updates proving which key range this merge could touch
             # (the caller's box when it gave one: no second read).
@@ -6325,7 +6248,7 @@ def apply_changes(
             )
         types = {f.name: f.dataType for f in declared.fields}
         # a group is touched if ANY change key (upsert OR delete) hits it
-        touched, untouched, probe_row = _split_touched_groups(
+        touched, _, probe_row = _split_touched_groups(
             m, changes, keys, types, table_path=table.path,
             extra_aggs=probes,
         )
@@ -6336,30 +6259,14 @@ def apply_changes(
         rewritten = current.join(all_keys, keys, "left_anti").unionByName(
             upserts
         )
-        (group,), group_stats = _write_groups(rewritten, table.path, m)
-        stats = {
-            g: s
-            for g, s in (m.get("stats") or {}).items()
-            if g in set(untouched)
-        }
-        stats.update(group_stats)
-        entries = []
-        for e in m.get("delete_entries") or []:
-            applies = [g for g in e["applies_to"] if g in set(untouched)]
-            if applies:
-                entries.append({**e, "applies_to": applies})
+        added, added_stats = _write_groups(rewritten, table.path, m)
         return table._publish_or_rebase(
-            base,
-            {
-                "schema": m["schema"],
-                "groups": untouched + [group],
-                "mode": "overwrite",
-                "added": [group],
-                "delete_entries": entries,
-                "stats": stats,
-            },
+            m,
+            touched,
+            added,
+            added_stats,
+            mode="overwrite",
             txn=txn,
-            removed=touched,
             update_box=lambda: _key_box(all_keys, keys, types),
             update_membership=lambda lstats, gs: _rebase_bloom_membership(
                 all_keys, keys, lstats, gs, table.path

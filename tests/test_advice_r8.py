@@ -150,13 +150,20 @@ class TestJpegRobustness:
 
 
 class TestStaleListingGuard:
+    """Each publish path loops through _commit_loop: a publish that
+    keeps losing its slot while the listing never moves past the base
+    is a listing race, reported as such instead of a commit storm."""
+
+    @pytest.mark.parametrize("path", ["rebase", "mor", "branch"])
     def test_inconsistent_listing_raises_distinct_error(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path, monkeypatch, path
     ):
         t = VersionedTable(str(tmp_path / "t"))
         df = spark.createDataFrame([(1, "a")], "k long, v string")
         base = t.commit(df)
         m = t._load_manifest(base)
+        if path == "branch":
+            t.create_branch("b").commit(df)
 
         def always_conflict(*a, **kw):
             raise CommitConflictError("slot taken")
@@ -164,15 +171,12 @@ class TestStaleListingGuard:
         monkeypatch.setattr(t, "_publish", always_conflict)
         monkeypatch.setattr(t, "latest_version", lambda: base)
         with pytest.raises(CommitConflictError, match="listing inconsistent"):
-            t._publish_or_rebase(
-                base,
-                {
-                    "schema": m["schema"],
-                    "groups": list(m["groups"]),
-                    "mode": "append",
-                    "added": [],
-                    "delete_entries": [],
-                    "stats": {},
-                },
-                removed=[],
-            )
+            if path == "rebase":
+                t._publish_or_rebase(m, [], [], {}, mode="append")
+            elif path == "mor":
+                t.delete_where(
+                    spark, F.col("k") == 1, strategy="merge-on-read",
+                    key_cols=["k"],
+                )
+            else:
+                t.publish_branch("b")

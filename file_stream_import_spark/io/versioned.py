@@ -2053,7 +2053,11 @@ class VersionedTable:
         parent: int | None,
         manifest: dict,
         txn: dict[str, int] | None = None,
+        parent_m: dict | None = None,
     ) -> int:
+        """Publish ``manifest`` at ``parent + 1``. ``parent_m`` is the
+        parent's manifest when the caller already holds it parsed (a
+        write's base or rebase head); otherwise it is loaded here."""
         os.makedirs(_manifest_dir(self._meta_root), exist_ok=True)
         version = (parent if parent is not None else -1) + 1
         manifest["version"] = version
@@ -2063,9 +2067,12 @@ class VersionedTable:
         manifest.setdefault("format", 1)
         import time as _time
 
-        parent_manifest = (
-            self._load_manifest(parent) if parent is not None else {}
-        )
+        if parent_m is not None:
+            parent_manifest = parent_m
+        else:
+            parent_manifest = (
+                self._load_manifest(parent) if parent is not None else {}
+            )
         # wall-clock commit instant for TIMESTAMP AS OF resolution; the
         # ORDER of versions is authoritative (monotone by construction),
         # the timestamp is best-effort metadata like Delta's — and, like
@@ -2352,15 +2359,12 @@ class VersionedTable:
             }
 
         if pinned:
-            return self._publish(base, apply_rule(m), txn=txn)
+            return self._publish(base, apply_rule(m), txn=txn, parent_m=m)
 
-        def attempt(head: int | None) -> dict:
+        def attempt(head: int | None) -> tuple[dict, dict]:
             if head == base:
-                return apply_rule(m)
+                return apply_rule(m), m
             try:
-                base_m = (
-                    self._load_manifest(base) if base is not None else {}
-                )
                 latest_m = self._load_manifest(head)
             except FileNotFoundError:
                 raise CommitConflictError(
@@ -2369,10 +2373,10 @@ class VersionedTable:
                 ) from None
             rebased = {**apply_rule(latest_m), "rebased_from": base}
             self._validate_rebase(
-                base_m, latest_m, rebased, gone, txn,
+                m, latest_m, rebased, gone, txn,
                 update_box, update_membership, concurrent_adds_ok,
             )
-            return rebased
+            return rebased, latest_m
 
         return self._commit_loop(base, attempt, txn=txn)
 
@@ -2386,8 +2390,10 @@ class VersionedTable:
         protocol): ``attempt(head)`` validates the write against
         snapshot ``head`` — raising CommitConflictError on a true
         conflict, by the writer's own rule — and returns the manifest
-        to publish at ``head + 1``, or a version number when there is
-        nothing left to publish. Each publish is an atomic
+        to publish at ``head + 1`` paired with ``head``'s own manifest
+        when the rule parsed it (None otherwise; the publish then loads
+        it), or a version number when there is nothing left to
+        publish. Each publish is an atomic
         create-if-absent link; a lost slot re-lists the table and
         calls ``attempt`` again with the new latest snapshot.
 
@@ -2399,12 +2405,15 @@ class VersionedTable:
         publishes and reporting a misleading commit storm. At most 50
         publishes are tried in all."""
         stale_lists = 0
-        manifest = attempt(head)
+        planned = attempt(head)
         for _ in range(50):
-            if isinstance(manifest, int):
-                return manifest
+            if isinstance(planned, int):
+                return planned
+            manifest, head_m = planned
             try:
-                return self._publish(head, dict(manifest), txn=txn)
+                return self._publish(
+                    head, dict(manifest), txn=txn, parent_m=head_m
+                )
             except CommitConflictError:
                 pass
             latest = self.latest_version()
@@ -2423,7 +2432,7 @@ class VersionedTable:
                 continue
             stale_lists = 0
             head = latest
-            manifest = attempt(head)
+            planned = attempt(head)
         raise CommitConflictError(
             "gave up after 50 rebase attempts (commit storm)"
         )
@@ -3954,7 +3963,7 @@ class VersionedTable:
             "applies_to": list(m["groups"]),
         }
 
-        def attempt(head: int) -> dict:
+        def attempt(head: int) -> tuple[dict, dict]:
             """The sidecar joins the head's delete entries; everything
             else carries. On a lost slot the MoR delete REBASES with
             its own rule set: a delete sidecar composes with
@@ -4002,7 +4011,7 @@ class VersionedTable:
             }
             if head != base:
                 manifest["rebased_from"] = base
-            return manifest
+            return manifest, latest_m
 
         return self._commit_loop(base, attempt)
 
@@ -4800,7 +4809,8 @@ class VersionedTable:
                     manifest["bloom_bits"] = int(
                         latest_m["bloom_bits"]
                     )
-            return manifest
+                return manifest, latest_m
+            return manifest, None
 
         return self._commit_loop(
             self.latest_version(), attempt, txn=bm.get("txn")

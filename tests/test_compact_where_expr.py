@@ -83,7 +83,7 @@ class TestCompact:
         real_publish = VersionedTable._publish
         state = {"fired": False}
 
-        def racing_publish(self, parent, manifest, txn=None):
+        def racing_publish(self, parent, manifest, txn=None, **kw):
             if not state["fired"] and manifest["mode"].startswith("compact"):
                 state["fired"] = True
                 t2 = VersionedTable(self.path)
@@ -95,7 +95,7 @@ class TestCompact:
                     ),
                     mode="append",
                 )
-            return real_publish(self, parent, manifest, txn=txn)
+            return real_publish(self, parent, manifest, txn=txn, **kw)
 
         orig = VersionedTable._publish
         VersionedTable._publish = racing_publish
@@ -119,7 +119,7 @@ class TestCompact:
         real_publish = VersionedTable._publish
         state = {"fired": False}
 
-        def racing_publish(self, parent, manifest, txn=None):
+        def racing_publish(self, parent, manifest, txn=None, **kw):
             if not state["fired"] and manifest["mode"].startswith("compact"):
                 state["fired"] = True
                 t2 = VersionedTable(self.path)
@@ -129,7 +129,7 @@ class TestCompact:
                     F.md5(F.col("id").cast("string")).alias("pad"),
                 )
                 merge_into(t2, spark, upd, key="k")
-            return real_publish(self, parent, manifest, txn=txn)
+            return real_publish(self, parent, manifest, txn=txn, **kw)
 
         VersionedTable._publish = racing_publish
         try:

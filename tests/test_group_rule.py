@@ -183,3 +183,51 @@ def test_rewrite_rescopes_delete_entry(
     assert m["groups"][0] == g1 and g2 not in m["groups"]
     assert [e["applies_to"] for e in m["delete_entries"]] == [[g1]]
     assert sorted((r.k, r.v) for r in t.read(spark).collect()) == rows
+
+
+def _count_loads(monkeypatch, fn) -> tuple:
+    """(fn's result, how many manifests it parsed)."""
+    loads = [0]
+    orig = VersionedTable._load_manifest
+
+    def counting(self, v):
+        loads[0] += 1
+        return orig(self, v)
+
+    with monkeypatch.context() as m:
+        m.setattr(VersionedTable, "_load_manifest", counting)
+        out = fn()
+    return out, loads[0]
+
+
+class TestBaseManifestParsedOnce:
+    """A write publishes against the manifest it already holds: the
+    publish inherits txn marks, constraints and column maps from that
+    parsed parent instead of loading it again, and a rebase round
+    validates against the held base and loads only the new head."""
+
+    def test_one_row_append(self, spark, monkeypatch, tmp_path):
+        t = VersionedTable(str(tmp_path / "t"))
+        df = spark.createDataFrame([(1,)], "k long")
+        t.commit(df)
+        v, loads = _count_loads(monkeypatch, lambda: t.commit(df))
+        assert v == 1
+        # commit's own parent load; the publish reuses it
+        assert loads == 1
+
+    def test_one_rebase_round(self, monkeypatch, tmp_path):
+        t = VersionedTable(str(tmp_path / "t"))
+        m = _base(t, ["a", "b"], [])
+        t._publish(m["version"], {**m, "groups": ["a", "b", "z"],
+                                  "added": ["z"]})
+        v, loads = _count_loads(
+            monkeypatch,
+            lambda: t._publish_or_rebase(
+                m, ["b"], ["x"], {"x": _stats(8)}, mode="compact:1",
+                concurrent_adds_ok=True,
+            ),
+        )
+        assert t._load_manifest(v)["groups"] == ["a", "z", "x"]
+        # the lost first publish is free; the round loads the new head
+        # once, and its publish reuses it
+        assert loads == 1

@@ -43,8 +43,8 @@ def recorder(monkeypatch):
     recorded: dict[tuple, dict] = {}
     orig = VersionedTable._publish
 
-    def rec(self, parent, manifest, txn=None):
-        ver = orig(self, parent, manifest, txn=txn)
+    def rec(self, parent, manifest, txn=None, **kw):
+        ver = orig(self, parent, manifest, txn=txn, **kw)
         recorded[(self._meta_root, ver)] = json.loads(json.dumps(manifest))
         return ver
 

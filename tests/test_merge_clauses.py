@@ -271,14 +271,14 @@ class TestNotMatchedBySource:
         real_publish = VersionedTable._publish
         state = {"fired": False}
 
-        def racing(self, parent, manifest, txn=None):
+        def racing(self, parent, manifest, txn=None, **kw):
             if not state["fired"] and manifest["mode"] == "overwrite":
                 state["fired"] = True
                 t2 = VersionedTable(self.path)
                 t2.commit(
                     _src(spark, [(9999, 1, "late")]), mode="append"
                 )
-            return real_publish(self, parent, manifest, txn=txn)
+            return real_publish(self, parent, manifest, txn=txn, **kw)
 
         VersionedTable._publish = racing
         try:

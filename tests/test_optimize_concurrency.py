@@ -39,13 +39,13 @@ def _race(spark, t, action):
     real_publish = VersionedTable._publish
     state = {"fired": False}
 
-    def racing_publish(self, parent, manifest, txn=None):
+    def racing_publish(self, parent, manifest, txn=None, **kw):
         if not state["fired"] and str(manifest.get("mode", "")).startswith(
             "optimize"
         ):
             state["fired"] = True
             action(VersionedTable(self.path))
-        return real_publish(self, parent, manifest, txn=txn)
+        return real_publish(self, parent, manifest, txn=txn, **kw)
 
     VersionedTable._publish = racing_publish
     try:

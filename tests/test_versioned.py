@@ -1678,9 +1678,9 @@ class TestDmlRebase:
         try:
             VersionedTable.latest_version = lambda self: base
 
-            def restore_then_publish(self, parent, manifest, txn=None):
+            def restore_then_publish(self, parent, manifest, txn=None, **kw):
                 VersionedTable.latest_version = orig
-                return real_publish(self, parent, manifest, txn=txn)
+                return real_publish(self, parent, manifest, txn=txn, **kw)
 
             VersionedTable._publish = restore_then_publish
             from pyspark.sql import functions as F
@@ -1715,9 +1715,9 @@ class TestDmlRebase:
         try:
             VersionedTable.latest_version = lambda self: base
 
-            def restore_then_publish(self, parent, manifest, txn=None):
+            def restore_then_publish(self, parent, manifest, txn=None, **kw):
                 VersionedTable.latest_version = orig
-                return real_publish(self, parent, manifest, txn=txn)
+                return real_publish(self, parent, manifest, txn=txn, **kw)
 
             VersionedTable._publish = restore_then_publish
             v = t.delete_where(
@@ -1748,9 +1748,9 @@ class TestDmlRebase:
         try:
             VersionedTable.latest_version = lambda self: base
 
-            def restore_then_publish(self, parent, manifest, txn=None):
+            def restore_then_publish(self, parent, manifest, txn=None, **kw):
                 VersionedTable.latest_version = orig
-                return real_publish(self, parent, manifest, txn=txn)
+                return real_publish(self, parent, manifest, txn=txn, **kw)
 
             VersionedTable._publish = restore_then_publish
             with pytest.raises(CommitConflictError, match="rewrote"):
@@ -1779,9 +1779,9 @@ class TestDmlRebase:
         try:
             VersionedTable.latest_version = lambda self: base
 
-            def restore_then_publish(self, parent, manifest, txn=None):
+            def restore_then_publish(self, parent, manifest, txn=None, **kw):
                 VersionedTable.latest_version = orig
-                return real_publish(self, parent, manifest, txn=txn)
+                return real_publish(self, parent, manifest, txn=txn, **kw)
 
             VersionedTable._publish = restore_then_publish
             v = t.update_where(

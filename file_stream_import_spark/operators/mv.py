@@ -8,7 +8,14 @@ snapshot_diff: O(delta) via the manifest shared-group skip), folds the
 rows into SIGNED grouped deltas (+1 for insert/update_postimage, -1
 for delete/update_preimage — an update that MOVES a row between groups
 decomposes naturally into -1 old group / +1 new group), and MERGEs
-them into the MV keyed on the group columns. Every merge here is
+them into the MV keyed on the group columns. One kernel builds every
+delta — _signed_deltas, DBSP's grouped aggregate over a signed
+multiset, for the batch, rollup, join and streaming refreshers and
+the distinct support tables alike — and one function folds it in,
+_merge_deltas. The batch refreshers share one watermark loop,
+_refresh_loop (read the watermarks; fold unless converged; on a
+commit conflict re-read; then sweep and pin), and refresh_mv and
+refresh_rollup_mv one delta arm, _fold_diff. Every merge here is
 merge_into's FOLD clause (see _fold_clause): the touched MV rows and
 the delta rows reduce by one ``groupBy(group_cols)`` — sums and counts
 add, final values (extremes, sketches, distinct counts) replace,
@@ -55,7 +62,6 @@ from ..io.versioned import (
     CommitConflictError,
     VersionedTable,
     _txn_epoch_commit,
-    _txn_watermark,
     diff_stats_box,
     merge_into,
     table_changes_cdf,
@@ -64,16 +70,6 @@ from ..io.versioned import (
 
 _ROWS = "n_rows"
 
-# Signed direct fold (r16 optimization 2): when every maintained
-# aggregate is LINEAR in the row multiset over EXACT arithmetic
-# (integral/decimal SUMs, the row count, signed histogram buckets —
-# no min/max/HLL/exact-distinct, no double sums, no sumsq), the
-# refresh folds table_signed_rows directly by the GROUP columns: the
-# keyed CDF's per-key shuffle and pair join disappear (unchanged rows
-# cancel exactly). Every other spec folds the keyed CDF, as do ranges
-# past _CDF_PLAN_CHUNK pairs (its chunked evaluation bounds Catalyst
-# analysis; the signed fold has no chunk machinery).
-
 # endangered-group keys are collected driver-side only up to this cap
 # (to drive the group-pruned exact read); a larger set falls back to a
 # distributed semi join — same bounded-driver discipline as
@@ -81,30 +77,32 @@ _ROWS = "n_rows"
 _MAX_EXACT_KEYS = 8192
 
 
-def _derived_names(
-    group_cols: list[str],
-    sum_cols: list[str],
-    rows_col: str,
-    min_cols: list[str],
-    max_cols: list[str],
-    sumsq_cols: list[str],
-    distinct_cols: list[str],
-    approx_distinct_cols: list[str],
-    percentile_cols: list[str] | None = None,
-) -> tuple[list[str], list[str], list[str], list[str], list[str]]:
-    """Shared column validation + derived-name derivation for BOTH the
-    batch refresher and the streaming maintainer (review r14: the
-    maintainer had drifted - no collision checks), so the two paths
+def _measure_names(spec: dict) -> tuple[list[str], ...]:
+    """(extreme, sumsq, distinct, sketch, histogram) column names the
+    spec's measures are stored under. Measure lists a spec does not
+    record (a join spec has only sums and histograms) are empty."""
+    def cols(k):
+        return list(spec.get(k) or [])
+
+    return (
+        [f"{c}_min" for c in cols("min_cols")]
+        + [f"{c}_max" for c in cols("max_cols")],
+        [f"{c}_sumsq" for c in cols("sumsq_cols")],
+        [f"{c}_nd" for c in cols("distinct_cols")],
+        [f"{c}_hll" for c in cols("approx_distinct_cols")],
+        [f"{c}_hist" for c in cols("percentile_cols")],
+    )
+
+
+def _derived_names(spec: dict) -> tuple[list[str], ...]:
+    """Shared column validation + derived-name derivation for EVERY
+    refresher and the streaming maintainer (review r14: the
+    maintainer had drifted - no collision checks), so all paths
     raise the same clear ValueError at call time instead of an opaque
-    ambiguous-column failure mid-refresh."""
-    percentile_cols = list(percentile_cols or [])
-    ext_names = [f"{c}_min" for c in min_cols] + [
-        f"{c}_max" for c in max_cols
-    ]
-    sq_names = [f"{c}_sumsq" for c in sumsq_cols]
-    nd_names = [f"{c}_nd" for c in distinct_cols]
-    hll_names = [f"{c}_hll" for c in approx_distinct_cols]
-    hist_names = [f"{c}_hist" for c in percentile_cols]
+    ambiguous-column failure mid-refresh. Returns _measure_names."""
+    names = _measure_names(spec)
+    group_cols, sum_cols = spec["group_cols"], spec["sum_cols"]
+    rows_col = spec["rows_col"]
     taken = {*group_cols, *sum_cols, rows_col}
     if rows_col in group_cols or rows_col in sum_cols:
         raise ValueError(
@@ -112,18 +110,19 @@ def _derived_names(
             "- pass rows_col=<other name> (an MV-over-MV rollup that "
             "groups by the lower MV's count column hits this)"
         )
-    for c in [
-        *min_cols, *max_cols, *sumsq_cols, *distinct_cols,
-        *approx_distinct_cols, *percentile_cols,
-    ]:
-        if c in group_cols:
-            raise ValueError(
-                f"derived-aggregate column {c!r} is a group column"
-            )
-    for n in [*ext_names, *sq_names, *nd_names, *hll_names, *hist_names]:
+    for k in (
+        "min_cols", "max_cols", "sumsq_cols", "distinct_cols",
+        "approx_distinct_cols", "percentile_cols",
+    ):
+        for c in spec.get(k) or []:
+            if c in group_cols:
+                raise ValueError(
+                    f"derived-aggregate column {c!r} is a group column"
+                )
+    for n in [n for ns in names for n in ns]:
         if n in taken:
             raise ValueError(f"derived column name {n!r} collides")
-    return ext_names, sq_names, nd_names, hll_names, hist_names
+    return names
 
 
 def _sweep_zero_groups(mv: VersionedTable, spark, rows_col: str) -> None:
@@ -143,9 +142,11 @@ def _sweep_zero_groups(mv: VersionedTable, spark, rows_col: str) -> None:
 
 def _sign_col():
     """+1 for insert/update_postimage, -1 for delete/update_preimage —
-    THE signed-multiset convention every MV fold in this module uses
-    (refresh_mv, refresh_join_mv via _signed_cdf, make_mv_maintainer).
-    One definition so the folds can never drift."""
+    the sign of a keyed CDF row, for the folds that read the keyed CDF
+    (refresh_mv's and refresh_rollup_mv's keyed arms, _fold_aux,
+    refresh_join_mv via _signed_cdf, make_mv_maintainer). The signed
+    arms read table_signed_rows, which carries the same convention as
+    its ``__sign`` column."""
     return F.when(
         F.col("_change_type").isin("insert", "update_postimage"),
         F.lit(1),
@@ -510,6 +511,321 @@ def _attach_merged_hists(deltas, df, group_cols, hist_names, sign):
             name, F.coalesce(F.col(name), empty)
         )
     return deltas
+
+
+def _measure_agg(family: str, c: str, rollup_src: bool, when=None):
+    """The MIN / MAX / HLL aggregate (``family`` "min" / "max" /
+    "hll") of measure ``c`` — the one place the choice of measure
+    INPUTS lives. Over source rows it reads the raw column ``c`` (HLL:
+    hll_sketch_agg); over a fine MV's rows (``rollup_src``, the
+    rollup's source) it reads the stored ``<c>_min`` / ``<c>_max`` /
+    ``<c>_hll`` (HLL: hll_union_agg, a sketch union). ``when`` keeps
+    one side of a signed fold. The delta kernel, the stored-state
+    recompute and both bootstraps take extremes and sketches here."""
+    v = F.col(f"{c}_{family}") if rollup_src else F.col(c)
+    if when is not None:
+        v = F.when(when, v)
+    if family == "min":
+        return F.min(v)
+    if family == "max":
+        return F.max(v)
+    return F.hll_union_agg(v) if rollup_src else F.hll_sketch_agg(v)
+
+
+def _signed_deltas(rows, sign, spec: dict, ftypes: dict, *, rollup_src=False):
+    """THE signed-delta kernel — DBSP's grouped aggregate over a signed
+    multiset, and the only code that builds an MV delta. ``rows``
+    carry ``sign`` (+1 insert side, −1 delete side: _sign_col() over a
+    keyed CDF, or the ``__sign`` column of table_signed_rows and of the
+    delta join) and reduce per ``spec["group_cols"]`` to:
+
+    * each sum column, sign × value cast to its fold type
+      (``ftypes``, see _sum_fold_types); ``rows_col``, the signed row
+      count; ``<c>_sumsq``, sign × value² as double;
+    * extremes split by side: ``__ins_min_<c>`` / ``__ins_max_<c>``
+      fold with LEAST/GREATEST, ``__del_min_<c>`` / ``__del_max_<c>``
+      only arm _fold_stored's endangerment test;
+    * the insert-side sketch ``__ins_hll_<c>`` and the any-delete flag
+      ``__any_del`` (a sketch cannot forget a value);
+    * ``<c>_hist``, signed log-bucket histograms (_attach_hists).
+
+    Over a fine MV's rows (``rollup_src``) the same measures coarsen:
+    rows weigh by the fine group's ``rows_col``, ``<c>_sumsq`` adds the
+    stored sums of squares, extremes and sketches read the stored
+    measures (_measure_agg), and histograms merge
+    (_attach_merged_hists). _merge_deltas folds the result into the
+    MV."""
+    def cols(k):
+        return list(spec.get(k) or [])
+
+    group_cols, rows_col = spec["group_cols"], spec["rows_col"]
+    mins, maxs = cols("min_cols"), cols("max_cols")
+    hlls, pcts = cols("approx_distinct_cols"), cols("percentile_cols")
+    if mins or maxs or hlls:
+        is_add = sign == 1
+    if rollup_src:
+        n = F.coalesce(F.sum(sign * F.col(rows_col)), F.lit(0))
+    else:
+        n = F.sum(sign)
+
+    def sumsq(c):
+        if rollup_src:
+            v = sign * F.col(f"{c}_sumsq")
+        else:
+            x = F.col(c).cast("double")  # a large integral's square
+            v = sign * x * x              # overflows bigint
+        return F.coalesce(F.sum(v), F.lit(0.0)).alias(f"{c}_sumsq")
+
+    deltas = rows.groupBy(*group_cols).agg(
+        *[
+            F.coalesce(F.sum(sign * F.col(c)), F.lit(0))
+            .cast(ftypes[c])
+            .alias(c)
+            for c in spec["sum_cols"]
+        ],
+        n.cast("bigint").alias(rows_col),
+        *[sumsq(c) for c in cols("sumsq_cols")],
+        *[
+            _measure_agg("min", c, rollup_src, is_add).alias(
+                f"__ins_min_{c}"
+            )
+            for c in mins
+        ],
+        *[
+            _measure_agg("min", c, rollup_src, ~is_add).alias(
+                f"__del_min_{c}"
+            )
+            for c in mins
+        ],
+        *[
+            _measure_agg("max", c, rollup_src, is_add).alias(
+                f"__ins_max_{c}"
+            )
+            for c in maxs
+        ],
+        *[
+            _measure_agg("max", c, rollup_src, ~is_add).alias(
+                f"__del_max_{c}"
+            )
+            for c in maxs
+        ],
+        *[
+            _measure_agg("hll", c, rollup_src, is_add).alias(
+                f"__ins_hll_{c}"
+            )
+            for c in hlls
+        ],
+        *(
+            [F.max(F.when(~is_add, F.lit(1))).alias("__any_del")]
+            if hlls
+            else []
+        ),
+    )
+    if pcts and rollup_src:
+        deltas = _attach_merged_hists(
+            deltas, rows, group_cols, [f"{c}_hist" for c in pcts], sign
+        )
+    elif pcts:
+        deltas = _attach_hists(
+            deltas, rows, group_cols, pcts,
+            _hist_base(spec["percentile_rel_err"]), sign,
+        )
+    return deltas
+
+
+def _merge_deltas(
+    src, mv, spark, deltas, spec: dict, *, cur, mv_v, txn,
+    prune_where=None, rollup_src=False,
+) -> int:
+    """Fold ``deltas`` (_signed_deltas) into ``mv`` as one merge_into
+    FOLD commit (_fold_clause) at ``expected_parent=mv_v`` carrying
+    ``txn``: sums and counts add, final values replace, histograms
+    merge. The final values are resolved first: extremes and sketches
+    against the stored MV and, for endangered groups, ``src`` at
+    ``cur`` (_fold_stored), distinct counts from the support tables
+    (_fold_distinct)."""
+    ext_names, sq_names, nd_names, hll_names, hist_names = (
+        _measure_names(spec)
+    )
+    group_cols = spec["group_cols"]
+    if ext_names or hll_names:
+        deltas = _fold_stored(
+            src, mv, spark, deltas,
+            cur=cur, mv_v=mv_v, group_cols=group_cols,
+            min_cols=list(spec["min_cols"]),
+            max_cols=list(spec["max_cols"]),
+            approx_cols=list(spec["approx_distinct_cols"]),
+            source_where=spec.get("source_where"),
+            rollup_src=rollup_src,
+        )
+    if nd_names:
+        deltas = _fold_distinct(
+            mv, spark, deltas,
+            group_cols=group_cols, distinct_cols=spec["distinct_cols"],
+        )
+    # the MV's stored column order: a rollup's bootstrap puts its sums
+    # of squares with its sums, ahead of the row count
+    sums, rows_col = spec["sum_cols"], spec["rows_col"]
+    adds = (
+        [*sums, *sq_names, rows_col] if rollup_src
+        else [*sums, rows_col, *sq_names]
+    )
+    return merge_into(
+        mv,
+        spark,
+        deltas.select(
+            *group_cols, *adds,
+            *ext_names, *nd_names, *hll_names, *hist_names,
+        ),
+        key=group_cols,
+        fold=_fold_clause(
+            adds, [*ext_names, *nd_names, *hll_names], hist_names
+        ),
+        prune_where=prune_where,
+        txn=txn,
+        expected_parent=mv_v,
+        source_unique=True,  # groupBy(group_cols) output
+    )
+
+
+def _fold_diff(
+    src, mv, spark, spec: dict, ftypes: dict, *, mv_v, wm, cur, tag,
+    rollup_src=False,
+) -> None:
+    """Fold ``src``'s change since the watermark, versions (wm, cur],
+    into ``mv`` — the delta arm of refresh_mv and (``rollup_src``) of
+    refresh_rollup_mv. Every delta row comes from the source groups
+    that differ in that window, so merge_into gets their stats box
+    (diff_stats_box) and MV groups outside it carry by reference.
+
+    DIRECT SIGNED FOLD when every measure is LINEAR in the row
+    multiset over exact arithmetic (integral/decimal sums, the row
+    count, histograms — no extremes, sketches, distinct counts, sums
+    of squares or double sums) and the window is within one CDF plan
+    chunk (_CDF_PLAN_CHUNK pairs: the keyed CDF's chunked evaluation
+    bounds Catalyst analysis, and the signed fold has no chunk
+    machinery): table_signed_rows' ± rows of the differing groups fold
+    directly, since unchanged rows cancel exactly — no per-key shuffle
+    and no pair join. Groups whose delta cancels to zero are dropped
+    before the merge. Every other spec folds the keyed CDF, projected
+    to the columns the fold consumes (a ± pair over other columns
+    cancels in every signed aggregate; a rollup reads whole fine rows,
+    and a filtered view whole rows, since ``source_where`` may name
+    any column), and refreshes the distinct support tables first.
+    Each row image filters by ``source_where`` independently, so an
+    update that crosses the view boundary nets to a view insert or
+    delete."""
+    group_cols, sum_cols = spec["group_cols"], spec["sum_cols"]
+    rows_col, where = spec["rows_col"], spec.get("source_where")
+    hist_names = _measure_names(spec)[4]
+    nonlinear = [
+        spec[k] for k in (
+            "min_cols", "max_cols", "sumsq_cols", "distinct_cols",
+            "approx_distinct_cols",
+        )
+    ]
+    if (
+        not any(nonlinear)
+        and all(ftypes[c] != "double" for c in sum_cols)
+        and cur - wm <= _CDF_PLAN_CHUNK
+    ):
+        inputs = [*group_cols, *sum_cols] + (
+            [rows_col, *hist_names] if rollup_src
+            else spec["percentile_cols"]
+        )
+        rows = table_signed_rows(
+            src, spark, wm, cur,
+            columns=None if where is not None else sorted(set(inputs)),
+        )
+        if where is not None:
+            rows = rows.filter(F.expr(where))
+        deltas = _signed_deltas(
+            rows, F.col("__sign"), spec, ftypes, rollup_src=rollup_src
+        )
+        # merging an all-zero delta is the identity: skipping it spares
+        # the group rewrite where every read row cancels (compaction,
+        # moved rows)
+        nonzero = F.col(rows_col) != 0
+        for c in sum_cols:
+            nonzero = nonzero | (F.col(c) != 0)
+        for n in hist_names:
+            nonzero = nonzero | (F.size(F.col(n)) > 0)
+        deltas = deltas.filter(nonzero)
+    else:
+        needed = sorted({
+            *group_cols, *sum_cols, *spec["sumsq_cols"],
+            *spec["min_cols"], *spec["max_cols"], *spec["distinct_cols"],
+            *spec["approx_distinct_cols"], *spec["percentile_cols"],
+        })
+        rows = table_changes_cdf(
+            src, spark, wm + 1, cur, key=spec["key"], dup_probe="lazy",
+            columns=None if where is not None or rollup_src else needed,
+        )
+        if where is not None:
+            rows = rows.filter(F.expr(where))
+        deltas = _signed_deltas(
+            rows, _sign_col(), spec, ftypes, rollup_src=rollup_src
+        )
+        for c in spec["distinct_cols"]:
+            _fold_aux(
+                nd_aux_table(mv, c), src, spark,
+                group_cols=group_cols, col=c, key=spec["key"],
+                tag=tag, cur=cur, source_where=where,
+            )
+    _merge_deltas(
+        src, mv, spark, deltas, spec, cur=cur, mv_v=mv_v,
+        txn={tag: cur},
+        prune_where=diff_stats_box(src, wm, cur, group_cols),
+        rollup_src=rollup_src,
+    )
+
+
+def _refresh_loop(
+    mv: VersionedTable, spark, marks: dict[str, int], fold, *,
+    rows_col: str, spec: dict | None = None, pins=(),
+) -> tuple:
+    """The one watermark loop of every batch refresher. ``marks`` maps
+    each txn tag to the source version this refresh brings the MV to
+    (two for a join MV). Each round reads the tags' watermarks from
+    the MV's latest manifest (the marks ride every commit, so the
+    latest holds them all). The first tag's watermark decides the
+    spec: none (a bootstrap) records ``spec``; otherwise the refresh
+    is validated against the recorded one. Unless every watermark has
+    reached its mark, ``fold(mv_v, watermarks)`` folds — or, on a
+    missing watermark, bootstraps — and commits at
+    ``expected_parent=mv_v`` with ``txn=marks``; a racing refresher
+    that landed first makes it raise CommitConflictError, and the
+    round re-reads. Converged or folded, the zero-count groups are
+    swept (a crashed predecessor's residue heals) and each
+    ``(table, pin name, tag)`` in ``pins`` is tagged at that tag's
+    watermark (_pin_watermark; converged replays pin too, so switching
+    pinning on protects an MV from the next vacuum even when nothing
+    folds). Returns the watermarks the MV now reflects, in ``marks``
+    order."""
+    while True:
+        mv_v = mv.latest_version()
+        txn = (
+            {} if mv_v is None
+            else mv._load_manifest(mv_v).get("txn") or {}
+        )
+        wms = {
+            t: None if txn.get(t) is None else int(txn[t]) for t in marks
+        }
+        if spec is not None:
+            if wms[next(iter(marks))] is None:
+                _store_spec(mv, spec)  # bootstrap (re)defines the spec
+            else:
+                _validate_spec(mv, spec)
+        if any(wms[t] is None or wms[t] < v for t, v in marks.items()):
+            try:
+                fold(mv_v, wms)
+            except CommitConflictError:
+                continue  # a racing refresher landed: re-read the marks
+            wms = marks
+        _sweep_zero_groups(mv, spark, rows_col)
+        for table, pin_name, t in pins:
+            _pin_watermark(table, pin_name, wms[t])
+        return tuple(wms.values())
 
 
 def hist_percentile(
@@ -1060,26 +1376,6 @@ def refresh_mv(
     approx_distinct_cols = list(approx_distinct_cols or [])
     percentile_cols = list(percentile_cols or [])
     hist_base = _hist_base(percentile_rel_err)
-    ext_names, sq_names, nd_names, hll_names, hist_names = _derived_names(
-        group_cols, sum_cols, rows_col, min_cols, max_cols,
-        sumsq_cols, distinct_cols, approx_distinct_cols,
-        percentile_cols,
-    )
-    cur = source.latest_version()
-    if cur is None:
-        raise FileNotFoundError(f"source has no snapshots: {source.path}")
-    from ..io.versioned import _schema_from_json
-
-    src_schema = _schema_from_json(source._load_manifest(cur)["schema"])
-    ftypes = _sum_fold_types(src_schema, sum_cols)
-    _sum_fold_types(src_schema, sumsq_cols)  # numeric-family check
-    src_names = {f.name for f in src_schema.fields}
-    for c in [*distinct_cols, *approx_distinct_cols]:
-        if c not in src_names:
-            raise ValueError(
-                f"distinct column {c!r} not in source schema"
-            )
-    _sum_fold_types(src_schema, percentile_cols)  # numeric-family check
     spec = {
         "spec_version": _SPEC_VERSION,
         "kind": "agg",
@@ -1100,307 +1396,89 @@ def refresh_mv(
         "hist_encoding": _HIST_ENCODING if percentile_cols else None,
         "source_where": source_where,
     }
-    where_expr = (
-        None if source_where is None else F.expr(source_where)
-    )
-    while True:
-        mv_v, wm = _txn_watermark(mv, tag)
-        if wm is None:
-            _store_spec(mv, spec)  # bootstrap (re)defines the spec
-        else:
-            _validate_spec(mv, spec)
-        if wm is not None and cur <= wm:
-            # converged (or a replay of an applied refresh): still run
-            # the zero-group sweep so a crashed predecessor's residue
-            # heals
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                # converged replays still pin: a caller switching an
-                # unpinned MV to pin_watermark=True must be protected
-                # from the NEXT vacuum even when no delta folds
-                _pin_watermark(source, name, wm)
-            return wm
-        try:
-            if wm is None:
-                boot_src = source.read(spark, version=cur)
-                if where_expr is not None:
-                    boot_src = boot_src.filter(where_expr)
-                agg = (
-                    boot_src
-                    .groupBy(*group_cols)
-                    .agg(
-                        # 0, not NULL, for an all-null group: the
-                        # incremental arm folds with + and must agree
-                        # with the bootstrap on the empty-sum identity
-                        *[
-                            F.coalesce(F.sum(c), F.lit(0))
-                            .cast(ftypes[c])
-                            .alias(c)
-                            for c in sum_cols
-                        ],
-                        F.count("*").cast("bigint").alias(rows_col),
-                        # sum of squares folds as DOUBLE always: the
-                        # square of a large integral overflows bigint
-                        *[
-                            F.coalesce(
-                                F.sum(
-                                    F.col(c).cast("double")
-                                    * F.col(c).cast("double")
-                                ),
-                                F.lit(0.0),
-                            ).alias(f"{c}_sumsq")
-                            for c in sumsq_cols
-                        ],
-                        *[F.min(c).alias(f"{c}_min") for c in min_cols],
-                        *[F.max(c).alias(f"{c}_max") for c in max_cols],
-                        *[
-                            F.count_distinct(F.col(c))
-                            .cast("bigint")
-                            .alias(f"{c}_nd")
-                            for c in distinct_cols
-                        ],
-                        *[
-                            F.hll_sketch_agg(F.col(c)).alias(
-                                f"{c}_hll"
-                            )
-                            for c in approx_distinct_cols
-                        ],
-                    )
-                )
-                if percentile_cols:
-                    agg = _attach_hists(
-                        agg, boot_src, group_cols, percentile_cols,
-                        hist_base, F.lit(1),
-                    )
-                for c in distinct_cols:
-                    _fold_aux(
-                        nd_aux_table(mv, c), source, spark,
-                        group_cols=group_cols, col=c, key=key,
-                        tag=tag, cur=cur, source_where=source_where,
-                    )
-                mv.commit(
-                    agg,
-                    mode="overwrite",
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                )
-            elif (
-                not ext_names
-                and not nd_names
-                and not hll_names
-                and not sumsq_cols
-                and all(ftypes[c] != "double" for c in sum_cols)
-                and cur - wm <= _CDF_PLAN_CHUNK
-            ):
-                # DIRECT SIGNED FOLD (see the module signed-fold
-                # note): every maintained aggregate here is linear in
-                # the row multiset over exact arithmetic, so folding
-                # ALL rows of the differing groups (±) equals folding
-                # the keyed CDF delta — unchanged rows cancel exactly —
-                # with no per-key shuffle and no pair join.
-                needed = (
-                    None
-                    if source_where is not None
-                    else sorted({
-                        *group_cols, *sum_cols, *percentile_cols,
-                    })
-                )
-                srows = table_signed_rows(
-                    source, spark, wm, cur, columns=needed
-                )
-                if where_expr is not None:
-                    # each side's rows filter independently — same
-                    # partial-view identity as the CDF row images
-                    srows = srows.filter(where_expr)
-                s = F.col("__sign")
-                deltas = srows.groupBy(*group_cols).agg(
-                    *[
-                        F.coalesce(F.sum(s * F.col(c)), F.lit(0))
-                        .cast(ftypes[c])
-                        .alias(c)
-                        for c in sum_cols
-                    ],
-                    F.sum(s).cast("bigint").alias(rows_col),
-                )
-                if percentile_cols:
-                    deltas = _attach_hists(
-                        deltas, srows, group_cols, percentile_cols,
-                        hist_base, s,
-                    )
-                # drop pure-cancel groups (all-zero delta, empty hist
-                # deltas): merging them is the identity, so skipping
-                # the touch spares group rewrites — the compaction /
-                # moved-rows case where every read row cancels
-                nonzero = F.col(rows_col) != 0
-                for c in sum_cols:
-                    nonzero = nonzero | (F.col(c) != 0)
-                for n in hist_names:
-                    nonzero = nonzero | (F.size(F.col(n)) > 0)
-                deltas = deltas.filter(nonzero).select(
-                    *group_cols, *sum_cols, rows_col, *hist_names,
-                )
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    fold=_fold_clause(
-                        [*sum_cols, rows_col], [], hist_names
+    _derived_names(spec)
+    cur = source.latest_version()
+    if cur is None:
+        raise FileNotFoundError(f"source has no snapshots: {source.path}")
+    from ..io.versioned import _schema_from_json
+
+    src_schema = _schema_from_json(source._load_manifest(cur)["schema"])
+    ftypes = _sum_fold_types(src_schema, sum_cols)
+    _sum_fold_types(src_schema, sumsq_cols)  # numeric-family check
+    src_names = {f.name for f in src_schema.fields}
+    for c in [*distinct_cols, *approx_distinct_cols]:
+        if c not in src_names:
+            raise ValueError(
+                f"distinct column {c!r} not in source schema"
+            )
+    _sum_fold_types(src_schema, percentile_cols)  # numeric-family check
+
+    def fold(mv_v: int | None, wms: dict) -> None:
+        if wms[tag] is not None:
+            _fold_diff(
+                source, mv, spark, spec, ftypes,
+                mv_v=mv_v, wm=wms[tag], cur=cur, tag=tag,
+            )
+            return
+        boot_src = source.read(spark, version=cur)
+        if source_where is not None:
+            boot_src = boot_src.filter(F.expr(source_where))
+        agg = boot_src.groupBy(*group_cols).agg(
+            # 0, not NULL, for an all-null group: the incremental arm
+            # folds with + and must agree with the bootstrap on the
+            # empty-sum identity
+            *[
+                F.coalesce(F.sum(c), F.lit(0)).cast(ftypes[c]).alias(c)
+                for c in sum_cols
+            ],
+            F.count("*").cast("bigint").alias(rows_col),
+            # sum of squares folds as DOUBLE always: the square of a
+            # large integral overflows bigint
+            *[
+                F.coalesce(
+                    F.sum(
+                        F.col(c).cast("double") * F.col(c).cast("double")
                     ),
-                    prune_where=diff_stats_box(source, wm, cur, group_cols),
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                    source_unique=True,  # groupBy(group_cols) out
-                )
-            else:
-                sign = _sign_col()
-                is_add = sign == 1
-                # project the CDF to the columns the fold consumes
-                # (guide §2.3): ± pairs over untracked columns cancel
-                # in every signed aggregate, so dropping them changes
-                # nothing downstream while the diff aggregate shuffles only
-                # the tracked bytes. source_where may reference any
-                # source column, so filtered MVs keep the full row.
-                needed = (
-                    None
-                    if source_where is not None
-                    else sorted({
-                        *group_cols, *sum_cols, *sumsq_cols,
-                        *min_cols, *max_cols, *distinct_cols,
-                        *approx_distinct_cols, *percentile_cols,
-                    })
-                )
-                cdf_df = table_changes_cdf(
-                    source, spark, wm + 1, cur, key=key,
-                    dup_probe="lazy", columns=needed,
-                )
-                if where_expr is not None:
-                    # each ROW IMAGE filters independently: an update
-                    # moving a row across the boundary nets to a pure
-                    # insert/delete of the view row
-                    cdf_df = cdf_df.filter(where_expr)
-                deltas = (
-                    cdf_df
-                    .groupBy(*group_cols)
-                    .agg(
-                        *[
-                            F.coalesce(F.sum(sign * F.col(c)), F.lit(0))
-                            .cast(ftypes[c])
-                            .alias(c)
-                            for c in sum_cols
-                        ],
-                        F.sum(sign).cast("bigint").alias(rows_col),
-                        *[
-                            F.coalesce(
-                                F.sum(
-                                    sign
-                                    * F.col(c).cast("double")
-                                    * F.col(c).cast("double")
-                                ),
-                                F.lit(0.0),
-                            ).alias(f"{c}_sumsq")
-                            for c in sumsq_cols
-                        ],
-                        # extreme candidates, split by side: the +1
-                        # side folds with LEAST/GREATEST; the -1 side
-                        # only ARMS the endangerment test
-                        *[
-                            F.min(F.when(is_add, F.col(c))).alias(
-                                f"__ins_min_{c}"
-                            )
-                            for c in min_cols
-                        ],
-                        *[
-                            F.min(F.when(~is_add, F.col(c))).alias(
-                                f"__del_min_{c}"
-                            )
-                            for c in min_cols
-                        ],
-                        *[
-                            F.max(F.when(is_add, F.col(c))).alias(
-                                f"__ins_max_{c}"
-                            )
-                            for c in max_cols
-                        ],
-                        *[
-                            F.max(F.when(~is_add, F.col(c))).alias(
-                                f"__del_max_{c}"
-                            )
-                            for c in max_cols
-                        ],
-                        # approx-distinct: insert-side sketch + the
-                        # shared any-delete endangerment flag (a
-                        # sketch cannot forget a value)
-                        *[
-                            F.hll_sketch_agg(
-                                F.when(is_add, F.col(c))
-                            ).alias(f"__ins_hll_{c}")
-                            for c in approx_distinct_cols
-                        ],
-                        *(
-                            [
-                                F.max(
-                                    F.when(~is_add, F.lit(1))
-                                ).alias("__any_del")
-                            ]
-                            if approx_distinct_cols
-                            else []
-                        ),
-                    )
-                )
-                if percentile_cols:
-                    deltas = _attach_hists(
-                        deltas, cdf_df, group_cols, percentile_cols,
-                        hist_base, _sign_col(),
-                    )
-                if ext_names or hll_names:
-                    deltas = _fold_stored(
-                        source, mv, spark, deltas,
-                        cur=cur, mv_v=mv_v, group_cols=group_cols,
-                        min_cols=min_cols, max_cols=max_cols,
-                        approx_cols=approx_distinct_cols,
-                        source_where=source_where,
-                    )
-                for c in distinct_cols:
-                    _fold_aux(
-                        nd_aux_table(mv, c), source, spark,
-                        group_cols=group_cols, col=c, key=key,
-                        tag=tag, cur=cur, source_where=source_where,
-                    )
-                if distinct_cols:
-                    deltas = _fold_distinct(
-                        mv, spark, deltas,
-                        group_cols=group_cols,
-                        distinct_cols=distinct_cols,
-                    )
-                deltas = deltas.select(
-                    *group_cols, *sum_cols, rows_col, *sq_names,
-                    *ext_names, *nd_names, *hll_names, *hist_names,
-                )
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    # the source row already carries the FINAL extreme
-                    # (folded against the stored value / recomputed
-                    # for endangered groups), sketch and distinct count
-                    fold=_fold_clause(
-                        [*sum_cols, rows_col, *sq_names],
-                        [*ext_names, *nd_names, *hll_names],
-                        hist_names,
-                    ),
-                    prune_where=diff_stats_box(source, wm, cur, group_cols),
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                    source_unique=True,  # groupBy(group_cols) out
-                )
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                _pin_watermark(source, name, cur)
-            return cur
-        except CommitConflictError:
-            continue  # racing refresher landed: re-read the watermark
+                    F.lit(0.0),
+                ).alias(f"{c}_sumsq")
+                for c in sumsq_cols
+            ],
+            *[
+                _measure_agg("min", c, False).alias(f"{c}_min")
+                for c in min_cols
+            ],
+            *[
+                _measure_agg("max", c, False).alias(f"{c}_max")
+                for c in max_cols
+            ],
+            *[
+                F.count_distinct(F.col(c)).cast("bigint").alias(f"{c}_nd")
+                for c in distinct_cols
+            ],
+            *[
+                _measure_agg("hll", c, False).alias(f"{c}_hll")
+                for c in approx_distinct_cols
+            ],
+        )
+        if percentile_cols:
+            agg = _attach_hists(
+                agg, boot_src, group_cols, percentile_cols, hist_base,
+                F.lit(1),
+            )
+        for c in distinct_cols:
+            _fold_aux(
+                nd_aux_table(mv, c), source, spark,
+                group_cols=group_cols, col=c, key=key,
+                tag=tag, cur=cur, source_where=source_where,
+            )
+        mv.commit(
+            agg, mode="overwrite", txn={tag: cur}, expected_parent=mv_v
+        )
+
+    return _refresh_loop(
+        mv, spark, {tag: cur}, fold, rows_col=rows_col, spec=spec,
+        pins=[(source, name, tag)] if pin_watermark else (),
+    )[0]
 
 
 def _pin_watermark(t: VersionedTable, name: str, v: int) -> None:
@@ -1409,7 +1487,9 @@ def _pin_watermark(t: VersionedTable, name: str, v: int) -> None:
     contiguous suffix from the oldest tag forward). Create-new-then-
     delete-old on version-suffixed names: a crash mid-move only
     OVER-retains (an extra pin, swept by the next refresh), never
-    leaves the watermark unprotected."""
+    leaves the watermark unprotected. The sweep matches this MV's own
+    pins only — ``mvpin-<name>-<digits>`` — never those of an MV whose
+    name extends this one (``<name>-eu``, a join MV's ``<name>-a``)."""
     import re
 
     safe = re.sub(r"[^A-Za-z0-9._-]", "-", name)
@@ -1418,8 +1498,9 @@ def _pin_watermark(t: VersionedTable, name: str, v: int) -> None:
         t.create_tag(f"{prefix}{v}", v)
     except ValueError:
         pass  # replayed refresh: the pin already exists
+    own = re.compile(re.escape(prefix) + r"\d+")
     for tag_name, tv in t.tags().items():
-        if tag_name.startswith(prefix) and int(tv) < v:
+        if own.fullmatch(tag_name) and int(tv) < v:
             try:
                 t.delete_tag(tag_name)
             except KeyError:
@@ -1464,67 +1545,56 @@ def _fold_aux(
     check) while still recomputing the MV's nd from the aux. A
     filtered MV's predicate (``source_where``) applies to both the
     bootstrap snapshot and the CDF row images, so the aux counts
-    exactly the view's universe."""
-    where_expr = (
-        None if source_where is None else F.expr(source_where)
-    )
-    while True:
-        a_v, a_wm = _txn_watermark(aux, tag)
-        if a_wm is not None and a_wm >= cur:
-            return  # replay / racing refresher already folded
-        try:
-            if a_wm is None:
-                snap = source.read(spark, version=cur)
-                if where_expr is not None:
-                    snap = snap.filter(where_expr)
-                counts = (
-                    snap
-                    .filter(F.col(col).isNotNull())
-                    .groupBy(*group_cols, col)
-                    .agg(F.count("*").cast("bigint").alias("cnt"))
-                )
-                aux.commit(
-                    counts,
-                    mode="overwrite",
-                    txn={tag: cur},
-                    expected_parent=a_v,
-                )
-            else:
-                sign = _sign_col()
-                cdf = table_changes_cdf(
-                    source, spark, a_wm + 1, cur, key=key,
-                    dup_probe="lazy",
-                    columns=(
-                        None
-                        if source_where is not None
-                        else sorted({*group_cols, col})
-                    ),
-                )
-                if where_expr is not None:
-                    cdf = cdf.filter(where_expr)
-                deltas = (
-                    cdf
-                    .filter(F.col(col).isNotNull())
-                    .groupBy(*group_cols, col)
-                    .agg(F.sum(sign).cast("bigint").alias("cnt"))
-                )
-                merge_into(
-                    aux,
-                    spark,
-                    deltas,
-                    key=[*group_cols, col],
-                    fold=_fold_clause(["cnt"]),
-                    prune_where=diff_stats_box(
-                        source, a_wm, cur, group_cols
-                    ),
-                    txn={tag: cur},
-                    expected_parent=a_v,
-                    source_unique=True,  # groupBy(key) output
-                )
-            _sweep_zero_groups(aux, spark, "cnt")
+    exactly the view's universe. The aux is an MV of per-(group,
+    value) counts: its deltas come from the signed-delta kernel and
+    fold through _merge_deltas, under the one refresh loop."""
+    spec = _aux_spec(group_cols, col)
+
+    def fold(a_v: int | None, wms: dict) -> None:
+        if wms[tag] is None:
+            snap = source.read(spark, version=cur)
+            if source_where is not None:
+                snap = snap.filter(F.expr(source_where))
+            counts = (
+                snap
+                .filter(F.col(col).isNotNull())
+                .groupBy(*group_cols, col)
+                .agg(F.count("*").cast("bigint").alias("cnt"))
+            )
+            aux.commit(
+                counts, mode="overwrite", txn={tag: cur}, expected_parent=a_v
+            )
             return
-        except CommitConflictError:
-            continue  # racing refresher: re-read the aux watermark
+        a_wm = wms[tag]
+        cdf = table_changes_cdf(
+            source, spark, a_wm + 1, cur, key=key,
+            dup_probe="lazy",
+            columns=(
+                None
+                if source_where is not None
+                else sorted({*group_cols, col})
+            ),
+        )
+        if source_where is not None:
+            cdf = cdf.filter(F.expr(source_where))
+        deltas = _signed_deltas(
+            cdf.filter(F.col(col).isNotNull()), _sign_col(), spec, {}
+        )
+        _merge_deltas(
+            None, aux, spark, deltas, spec, cur=cur, mv_v=a_v,
+            txn={tag: cur},
+            prune_where=diff_stats_box(source, a_wm, cur, group_cols),
+        )
+
+    _refresh_loop(aux, spark, {tag: cur}, fold, rows_col="cnt")
+
+
+def _aux_spec(group_cols: list[str], col: str) -> dict:
+    """The support table of ``col`` as a measure spec: grouped by the
+    MV's groups plus the value, its only measure the signed count."""
+    return {
+        "group_cols": [*group_cols, col], "sum_cols": [], "rows_col": "cnt",
+    }
 
 
 def _fold_distinct(
@@ -1604,13 +1674,15 @@ def _fold_stored(
     then masks with ITS OWN endangerment flag, so results are
     identical to the former two-pass fold.
 
-    ``rollup_src=True`` (r16, refresh_rollup_mv): the source is itself
-    an aggregate MV, so the endangered recompute reads the FINE MV's
-    derived columns — ``MIN(c_min)`` / ``MAX(c_max)`` instead of the
-    raw column, and ``hll_union_agg(c_hll)`` (sketch union) instead of
-    re-sketching raw values. The caller's delta candidate columns
-    (``__ins_*``/``__del_*``) already carry the fine-level derived
-    values, so everything else is unchanged."""
+    The candidates (``__ins_*`` / ``__del_*`` / ``__any_del``) come
+    from the signed-delta kernel, _signed_deltas, through
+    _merge_deltas. ``rollup_src=True`` (refresh_rollup_mv): the source
+    is itself an aggregate MV, so the endangered recompute reads the
+    FINE MV's stored measures — ``MIN(c_min)`` / ``MAX(c_max)`` and
+    ``hll_union_agg(c_hll)`` (sketch union) instead of the raw column.
+    That flag is the one switch for measure inputs: the kernel's
+    candidates and both bootstraps make the same choice through the
+    same helper, _measure_agg."""
     if mv_v is None:
         # streaming maintainer's first batches: no MV yet — every
         # group is new, so the stored side is an EMPTY frame typed
@@ -1680,32 +1752,20 @@ def _fold_stored(
     if not probe:
         exact = None
     else:
-        if rollup_src:
-            aggs = (
-                [
-                    F.min(f"{c}_min").alias(f"__ex_min_{c}")
-                    for c in min_cols
-                ]
-                + [
-                    F.max(f"{c}_max").alias(f"__ex_max_{c}")
-                    for c in max_cols
-                ]
-                + [
-                    F.hll_union_agg(F.col(f"{c}_hll")).alias(
-                        f"__ex_hll_{c}"
-                    )
-                    for c in approx_cols
-                ]
-            )
-        else:
-            aggs = (
-                [F.min(c).alias(f"__ex_min_{c}") for c in min_cols]
-                + [F.max(c).alias(f"__ex_max_{c}") for c in max_cols]
-                + [
-                    F.hll_sketch_agg(F.col(c)).alias(f"__ex_hll_{c}")
-                    for c in approx_cols
-                ]
-            )
+        aggs = (
+            [
+                _measure_agg("min", c, rollup_src).alias(f"__ex_min_{c}")
+                for c in min_cols
+            ]
+            + [
+                _measure_agg("max", c, rollup_src).alias(f"__ex_max_{c}")
+                for c in max_cols
+            ]
+            + [
+                _measure_agg("hll", c, rollup_src).alias(f"__ex_hll_{c}")
+                for c in approx_cols
+            ]
+        )
         if len(group_cols) == 1 and len(probe) <= _MAX_EXACT_KEYS:
             src = source.read(
                 spark,
@@ -1788,6 +1848,7 @@ def _fold_stored(
         )
     return j.select("*", *out_cols)
 
+
 def refresh_join_mv(
     a: VersionedTable,
     b: VersionedTable,
@@ -1853,10 +1914,24 @@ def refresh_join_mv(
     tag_a, tag_b = f"mv:{name}:a", f"mv:{name}:b"
     percentile_cols = list(percentile_cols or [])
     hist_base = _hist_base(percentile_rel_err)
-    *_, hist_names = _derived_names(
-        group_cols, sum_cols, rows_col, [], [], [], [], [],
-        percentile_cols,
-    )
+    spec = {
+        "spec_version": _SPEC_VERSION,
+        "kind": "join",
+        "name": name,
+        "on": list(on),
+        "group_cols": list(group_cols),
+        "sum_cols": list(sum_cols),
+        "key_a": _norm_key(key_a),
+        "key_b": _norm_key(key_b),
+        "rows_col": rows_col,
+        "percentile_cols": percentile_cols,
+        "percentile_rel_err": (
+            float(percentile_rel_err) if percentile_cols else None
+        ),
+        "hist_encoding": _HIST_ENCODING if percentile_cols else None,
+        "source_where": source_where,
+    }
+    _derived_names(spec)
     cur_a, cur_b = a.latest_version(), b.latest_version()
     if cur_a is None or cur_b is None:
         raise FileNotFoundError(
@@ -1882,184 +1957,109 @@ def refresh_join_mv(
             f"non-join columns shared by both sources would collide in "
             f"the joined row: {sorted(clash)} — rename one side"
         )
-    spec = {
-        "spec_version": _SPEC_VERSION,
-        "kind": "join",
-        "name": name,
-        "on": list(on),
-        "group_cols": list(group_cols),
-        "sum_cols": list(sum_cols),
-        "key_a": _norm_key(key_a),
-        "key_b": _norm_key(key_b),
-        "rows_col": rows_col,
-        "percentile_cols": percentile_cols,
-        "percentile_rel_err": (
-            float(percentile_rel_err) if percentile_cols else None
-        ),
-        "hist_encoding": _HIST_ENCODING if percentile_cols else None,
-        "source_where": source_where,
-    }
-    where_expr = (
-        None if source_where is None else F.expr(source_where)
-    )
-    while True:
-        mv_v = mv.latest_version()
-        txn = (
-            {}
-            if mv_v is None
-            else (mv._load_manifest(mv_v).get("txn") or {})
-        )
-        wa = None if txn.get(tag_a) is None else int(txn[tag_a])
-        wb = None if txn.get(tag_b) is None else int(txn[tag_b])
+    marks = {tag_a: cur_a, tag_b: cur_b}
+
+    def fold(mv_v: int | None, wms: dict) -> None:
+        wa, wb = wms[tag_a], wms[tag_b]
         if wa is None:
-            _store_spec(mv, spec)  # bootstrap (re)defines the spec
-        else:
-            _validate_spec(mv, spec)
-        if wa is not None and cur_a <= wa and wb is not None and (
-            cur_b <= wb
-        ):
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                _pin_watermark(a, f"{name}-a", wa)
-                _pin_watermark(b, f"{name}-b", wb)
-            return wa, wb
-        try:
-            sums = [
-                F.coalesce(F.sum(c), F.lit(0)).cast(ftypes[c]).alias(c)
-                for c in sum_cols
-            ]
-            if wa is None:
-                joined = a.read(spark, version=cur_a).join(
-                    b.read(spark, version=cur_b), on=on, how="inner"
+            joined = a.read(spark, version=cur_a).join(
+                b.read(spark, version=cur_b), on=on, how="inner"
+            )
+            if source_where is not None:
+                joined = joined.filter(F.expr(source_where))
+            agg = joined.groupBy(*group_cols).agg(
+                *[
+                    F.coalesce(F.sum(c), F.lit(0)).cast(ftypes[c]).alias(c)
+                    for c in sum_cols
+                ],
+                F.count("*").cast("bigint").alias(rows_col),
+            )
+            if percentile_cols:
+                agg = _attach_hists(
+                    agg, joined, group_cols, percentile_cols,
+                    hist_base, F.lit(1),
                 )
-                if where_expr is not None:
-                    joined = joined.filter(where_expr)
-                agg = joined.groupBy(*group_cols).agg(
-                    *sums, F.count("*").cast("bigint").alias(rows_col)
-                )
-                if percentile_cols:
-                    agg = _attach_hists(
-                        agg, joined, group_cols, percentile_cols,
-                        hist_base, F.lit(1),
-                    )
-                mv.commit(
-                    agg,
-                    mode="overwrite",
-                    txn={tag_a: cur_a, tag_b: cur_b},
-                    expected_parent=mv_v,
-                )
-            else:
-                # project each leg to the columns the fold consumes
-                # (guide §2.3; see _signed_cdf's note — untracked-only
-                # ± pairs cancel after the join). The post-join select
-                # keeps the two legs union-compatible. Filtered MVs
-                # keep full rows (source_where may reference any
-                # joined column).
-                tracked = (
-                    set(group_cols) | set(sum_cols)
-                    | set(percentile_cols)
-                )
-                sel = sorted(set(on) | tracked)
-                proj_a = (
-                    None
-                    if source_where is not None
-                    else sorted(set(on) | (tracked & cols_a))
-                )
-                proj_b = (
-                    None
-                    if source_where is not None
-                    else sorted(set(on) | (tracked & cols_b))
-                )
+            mv.commit(
+                agg, mode="overwrite", txn=marks, expected_parent=mv_v
+            )
+            return
+        # project each leg to the columns the fold consumes (guide
+        # §2.3; see _signed_cdf's note — untracked-only ± pairs cancel
+        # after the join). The post-join select keeps the two legs
+        # union-compatible. Filtered MVs keep full rows (source_where
+        # may reference any joined column).
+        tracked = set(group_cols) | set(sum_cols) | set(percentile_cols)
+        sel = sorted(set(on) | tracked)
+        proj_a = (
+            None
+            if source_where is not None
+            else sorted(set(on) | (tracked & cols_a))
+        )
+        proj_b = (
+            None
+            if source_where is not None
+            else sorted(set(on) | (tracked & cols_b))
+        )
 
-                def leg(joined):
-                    if source_where is not None:
-                        return joined
-                    return joined.select(*sel, "__sign")
+        def leg(joined):
+            if source_where is not None:
+                return joined
+            return joined.select(*sel, "__sign")
 
-                parts = []
-                if cur_a > wa:
-                    da = _signed_cdf(
-                        a, spark, wa + 1, cur_a, key_a,
-                        columns=proj_a,
-                    ).localCheckpoint(eager=True)
-                    parts.append(
-                        leg(
-                            da.join(
-                                _pruned_snapshot(
-                                    b, spark, cur_b, on, da
-                                ),
-                                on=on,
-                                how="inner",
-                            )
-                        )
+        parts = []
+        if cur_a > wa:
+            da = _signed_cdf(
+                a, spark, wa + 1, cur_a, key_a, columns=proj_a,
+            ).localCheckpoint(eager=True)
+            parts.append(
+                leg(
+                    da.join(
+                        _pruned_snapshot(b, spark, cur_b, on, da),
+                        on=on,
+                        how="inner",
                     )
-                if cur_b > wb:
-                    db = _signed_cdf(
-                        b, spark, wb + 1, cur_b, key_b,
-                        columns=proj_b,
-                    ).localCheckpoint(eager=True)
-                    try:
-                        a_old = _pruned_snapshot(a, spark, wa, on, db)
-                    except FileNotFoundError as e:
-                        raise ValueError(
-                            f"join-MV watermark snapshot {wa} of "
-                            f"{a.path} was expired by vacuum(); "
-                            "re-create the MV (bootstrap) or retain "
-                            "watermark snapshots until refresh"
-                        ) from e
-                    parts.append(
-                        leg(db.join(a_old, on=on, how="inner"))
-                    )
-                delta = parts[0]
-                for p in parts[1:]:
-                    delta = delta.unionByName(p)
-                if where_expr is not None:
-                    # joined delta rows filter independently — a
-                    # join-key update whose post-image leaves the view
-                    # nets to a pure view delete (and mirror-wise)
-                    delta = delta.filter(where_expr)
-                deltas = delta.groupBy(*group_cols).agg(
-                    *[
-                        F.coalesce(
-                            F.sum(F.col("__sign") * F.col(c)), F.lit(0)
-                        )
-                        .cast(ftypes[c])
-                        .alias(c)
-                        for c in sum_cols
-                    ],
-                    F.sum("__sign").cast("bigint").alias(rows_col),
                 )
-                if percentile_cols:
-                    # the joined delta row's sign is already the
-                    # product of its sides' signs (__sign) — the same
-                    # signed fold the agg MV uses, over joined rows
-                    deltas = _attach_hists(
-                        deltas, delta, group_cols, percentile_cols,
-                        hist_base, F.col("__sign"),
-                    )
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    fold=_fold_clause(
-                        [*sum_cols, rows_col], [], hist_names
-                    ),
-                    txn={tag_a: cur_a, tag_b: cur_b},
-                    expected_parent=mv_v,
-                    source_unique=True,  # groupBy(group_cols) out
-                )
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                # pin BOTH sides: the next refresh reads A@watermark
-                # (the delta-join's old snapshot) and each side's CDF
-                # walk needs its watermark manifest as the first pair's
-                # parent
-                _pin_watermark(a, f"{name}-a", cur_a)
-                _pin_watermark(b, f"{name}-b", cur_b)
-            return cur_a, cur_b
-        except CommitConflictError:
-            continue  # racing refresher landed: re-read the watermarks
+            )
+        if cur_b > wb:
+            db = _signed_cdf(
+                b, spark, wb + 1, cur_b, key_b, columns=proj_b,
+            ).localCheckpoint(eager=True)
+            try:
+                a_old = _pruned_snapshot(a, spark, wa, on, db)
+            except FileNotFoundError as e:
+                raise ValueError(
+                    f"join-MV watermark snapshot {wa} of "
+                    f"{a.path} was expired by vacuum(); "
+                    "re-create the MV (bootstrap) or retain "
+                    "watermark snapshots until refresh"
+                ) from e
+            parts.append(leg(db.join(a_old, on=on, how="inner")))
+        delta = parts[0]
+        for p in parts[1:]:
+            delta = delta.unionByName(p)
+        if source_where is not None:
+            # joined delta rows filter independently — a join-key
+            # update whose post-image leaves the view nets to a pure
+            # view delete (and mirror-wise)
+            delta = delta.filter(F.expr(source_where))
+        # the joined delta row's sign is already the product of its
+        # sides' signs (__sign): the same signed fold as the agg MV,
+        # over joined rows
+        deltas = _signed_deltas(delta, F.col("__sign"), spec, ftypes)
+        _merge_deltas(
+            None, mv, spark, deltas, spec, cur=None, mv_v=mv_v, txn=marks
+        )
+
+    # pin BOTH sides: the next refresh reads A@watermark (the
+    # delta-join's old snapshot) and each side's CDF walk needs its
+    # watermark manifest as the first pair's parent
+    pins = (
+        [(a, f"{name}-a", tag_a), (b, f"{name}-b", tag_b)]
+        if pin_watermark else ()
+    )
+    return _refresh_loop(
+        mv, spark, marks, fold, rows_col=rows_col, spec=spec, pins=pins
+    )
 
 
 def _signed_cdf(t, spark, lo, hi, key, columns=None):
@@ -2099,6 +2099,7 @@ def _pruned_snapshot(t, spark, version, on, delta):
         keys, on=on, how="semi"
     )
 
+
 def _fold_aux_batch(
     aux: VersionedTable,
     batch_df,
@@ -2114,11 +2115,9 @@ def _fold_aux_batch(
     aux's own manifest, so a restart that replays the batch skips the
     fold it already applied."""
     spark = batch_df.sparkSession
-    sign = _sign_col()
-    deltas = (
-        batch_df.filter(F.col(col).isNotNull())
-        .groupBy(*group_cols, col)
-        .agg(F.sum(sign).cast("bigint").alias("cnt"))
+    spec = _aux_spec(group_cols, col)
+    deltas = _signed_deltas(
+        batch_df.filter(F.col(col).isNotNull()), _sign_col(), spec, {}
     )
 
     def fold(latest: int | None, txn: dict) -> int:
@@ -2129,15 +2128,8 @@ def _fold_aux_batch(
             return aux.commit(
                 deltas, mode="overwrite", txn=txn, expected_parent=latest
             )
-        return merge_into(
-            aux,
-            spark,
-            deltas,
-            key=[*group_cols, col],
-            fold=_fold_clause(["cnt"]),
-            txn=txn,
-            expected_parent=latest,
-            source_unique=True,  # groupBy(key) output
+        return _merge_deltas(
+            None, aux, spark, deltas, spec, cur=None, mv_v=latest, txn=txn
         )
 
     if _txn_epoch_commit(aux, tag, batch_id, fold) is not None:
@@ -2177,8 +2169,9 @@ def make_mv_maintainer(
     materializes incrementally from nothing and then stays O(delta)
     per trigger.
 
-    Measure parity with batch refresh_mv (r14 — the two paths share
-    the fold algebra so they cannot drift): ``sumsq_cols`` and
+    Measure parity with batch refresh_mv: both build their deltas with
+    the one signed-delta kernel (_signed_deltas) and fold them through
+    the one merge (_merge_deltas), so they cannot drift. ``sumsq_cols`` and
     ``distinct_cols`` work exactly as in refresh_mv (the distinct
     support table folds per batch with the same batch_id epoch, see
     _fold_aux_batch); ``min_cols``/``max_cols`` additionally require
@@ -2199,18 +2192,7 @@ def make_mv_maintainer(
     distinct_cols = list(distinct_cols or [])
     approx_distinct_cols = list(approx_distinct_cols or [])
     percentile_cols = list(percentile_cols or [])
-    hist_base = _hist_base(percentile_rel_err)
-    ext_names, sq_names, nd_names, hll_names, hist_names = _derived_names(
-        group_cols, sum_cols, rows_col, min_cols, max_cols,
-        sumsq_cols, distinct_cols, approx_distinct_cols,
-        percentile_cols,
-    )
-    if (ext_names or hll_names) and source is None:
-        raise ValueError(
-            "min_cols/max_cols/approx_distinct_cols need source= "
-            "(the endangered-group recompute/re-sketch reads the "
-            "source snapshot)"
-        )
+    _hist_base(percentile_rel_err)  # range check
     # kind "agg-stream", NOT "agg": a batch refresh_mv pointed at a
     # stream-maintained MV (or vice versa) must raise — the two
     # protocols keep independent watermarks and would double-count
@@ -2233,6 +2215,14 @@ def make_mv_maintainer(
         "hist_encoding": _HIST_ENCODING if percentile_cols else None,
         "source_where": source_where,
     }
+    ext_names, _, _, hll_names, _ = _derived_names(spec)
+    stored_state = bool(ext_names or hll_names)
+    if stored_state and source is None:
+        raise ValueError(
+            "min_cols/max_cols/approx_distinct_cols need source= "
+            "(the endangered-group recompute/re-sketch reads the "
+            "source snapshot)"
+        )
     spec_checked = False
 
     def write(batch_df, batch_id: int) -> None:
@@ -2258,8 +2248,6 @@ def make_mv_maintainer(
             else:
                 _validate_spec(mv, spec)
             spec_checked = True
-        sign = _sign_col()
-        is_add = sign == 1
         ftypes = _sum_fold_types(batch_df.schema, sum_cols)
         _sum_fold_types(batch_df.schema, sumsq_cols)
         _sum_fold_types(batch_df.schema, percentile_cols)
@@ -2269,65 +2257,12 @@ def make_mv_maintainer(
                 raise ValueError(
                     f"distinct column {c!r} not in the stream schema"
                 )
-        base = batch_df.groupBy(*group_cols).agg(
-            *[
-                F.coalesce(F.sum(sign * F.col(c)), F.lit(0))
-                .cast(ftypes[c])
-                .alias(c)
-                for c in sum_cols
-            ],
-            F.sum(sign).cast("bigint").alias(rows_col),
-            *[
-                F.coalesce(
-                    F.sum(
-                        sign
-                        * F.col(c).cast("double")
-                        * F.col(c).cast("double")
-                    ),
-                    F.lit(0.0),
-                ).alias(f"{c}_sumsq")
-                for c in sumsq_cols
-            ],
-            *[
-                F.min(F.when(is_add, F.col(c))).alias(f"__ins_min_{c}")
-                for c in min_cols
-            ],
-            *[
-                F.min(F.when(~is_add, F.col(c))).alias(f"__del_min_{c}")
-                for c in min_cols
-            ],
-            *[
-                F.max(F.when(is_add, F.col(c))).alias(f"__ins_max_{c}")
-                for c in max_cols
-            ],
-            *[
-                F.max(F.when(~is_add, F.col(c))).alias(f"__del_max_{c}")
-                for c in max_cols
-            ],
-            *[
-                F.hll_sketch_agg(F.when(is_add, F.col(c))).alias(
-                    f"__ins_hll_{c}"
-                )
-                for c in approx_distinct_cols
-            ],
-            *(
-                [
-                    F.max(F.when(~is_add, F.lit(1))).alias("__any_del")
-                ]
-                if approx_distinct_cols
-                else []
-            ),
-        )
-        if percentile_cols:
-            base = _attach_hists(
-                base, batch_df, group_cols, percentile_cols,
-                hist_base, _sign_col(),
-            )
-        if ext_names or distinct_cols or hll_names or hist_names:
+        deltas = _signed_deltas(batch_df, _sign_col(), spec, ftypes)
+        if stored_state or distinct_cols or percentile_cols:
             # one tiny metadata job; reused across conflict retries
-            base = base.localCheckpoint(eager=True)
+            deltas = deltas.localCheckpoint(eager=True)
         cur = None
-        if ext_names or hll_names:
+        if stored_state:
             cur = int(
                 batch_df.agg(
                     F.max("_commit_version").cast("bigint")
@@ -2341,38 +2276,9 @@ def make_mv_maintainer(
             )
 
         def fold(latest: int | None, txn: dict) -> int:
-            deltas = base
-            if ext_names or hll_names:
-                deltas = _fold_stored(
-                    source, mv, spark, deltas,
-                    cur=cur, mv_v=latest, group_cols=group_cols,
-                    min_cols=min_cols, max_cols=max_cols,
-                    approx_cols=approx_distinct_cols,
-                    source_where=source_where,
-                )
-            if distinct_cols:
-                deltas = _fold_distinct(
-                    mv, spark, deltas,
-                    group_cols=group_cols,
-                    distinct_cols=distinct_cols,
-                )
-            deltas = deltas.select(
-                *group_cols, *sum_cols, rows_col, *sq_names,
-                *ext_names, *nd_names, *hll_names, *hist_names,
-            )
-            return merge_into(
-                mv,
-                spark,
-                deltas,
-                key=group_cols,
-                fold=_fold_clause(
-                    [*sum_cols, rows_col, *sq_names],
-                    [*ext_names, *nd_names, *hll_names],
-                    hist_names,
-                ),
-                txn=txn,
-                expected_parent=latest,
-                source_unique=True,  # groupBy(group_cols) output
+            return _merge_deltas(
+                source, mv, spark, deltas, spec,
+                cur=cur, mv_v=latest, txn=txn,
             )
 
         if _txn_epoch_commit(mv, query_name, batch_id, fold) is not None:
@@ -2518,29 +2424,6 @@ def refresh_rollup_mv(
             f"this build merges encoding {_HIST_ENCODING} — "
             "re-bootstrap the fine MV first"
         )
-    ext_names, sq_names, _, hll_names, hist_names = _derived_names(
-        group_cols, sum_cols, rows_col, min_cols, max_cols,
-        sumsq_cols, [], approx_cols, pct_cols,
-    )
-    cur = fine.latest_version()
-    if cur is None:
-        raise FileNotFoundError(f"fine MV has no snapshots: {fine.path}")
-    from ..io.versioned import _schema_from_json
-
-    fine_schema = _schema_from_json(fine._load_manifest(cur)["schema"])
-    fine_names = {f.name for f in fine_schema.fields}
-    for n in [rows_col, *sum_cols, *sq_names, *ext_names,
-              *hll_names, *hist_names]:
-        if n not in fine_names:
-            raise ValueError(
-                f"fine MV at {fine.path} is missing measure column "
-                f"{n!r} its spec declares — re-bootstrap the fine MV"
-            )
-    # sums (incl. the _sumsq columns, which are plain double sums at
-    # this level) fold in the fine MV's own storage types — bigint
-    # stays exact, decimal(38,s) stays exact, double stays double
-    fold_cols = [*sum_cols, *sq_names]
-    ftypes = _sum_fold_types(fine_schema, fold_cols)
     spec = {
         "spec_version": _SPEC_VERSION,
         "kind": "rollup",
@@ -2562,231 +2445,70 @@ def refresh_rollup_mv(
         "hist_encoding": _HIST_ENCODING if pct_cols else None,
         "source_where": source_where,
     }
-    where_expr = (
-        None if source_where is None else F.expr(source_where)
-    )
-    while True:
-        mv_v, wm = _txn_watermark(mv, tag)
-        if wm is None:
-            _store_spec(mv, spec)  # bootstrap (re)defines the spec
-        else:
-            _validate_spec(mv, spec)
-        if wm is not None and cur <= wm:
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                _pin_watermark(fine, name, wm)
-            return wm
-        try:
-            if wm is None:
-                boot = fine.read(spark, version=cur)
-                if where_expr is not None:
-                    boot = boot.filter(where_expr)
-                agg = boot.groupBy(*group_cols).agg(
-                    *[
-                        F.coalesce(F.sum(c), F.lit(0))
-                        .cast(ftypes[c])
-                        .alias(c)
-                        for c in fold_cols
-                    ],
-                    F.coalesce(F.sum(rows_col), F.lit(0))
-                    .cast("bigint")
-                    .alias(rows_col),
-                    *[
-                        F.min(f"{c}_min").alias(f"{c}_min")
-                        for c in min_cols
-                    ],
-                    *[
-                        F.max(f"{c}_max").alias(f"{c}_max")
-                        for c in max_cols
-                    ],
-                    *[
-                        F.hll_union_agg(F.col(f"{c}_hll")).alias(
-                            f"{c}_hll"
-                        )
-                        for c in approx_cols
-                    ],
-                )
-                if hist_names:
-                    agg = _attach_merged_hists(
-                        agg, boot, group_cols, hist_names, F.lit(1)
-                    )
-                mv.commit(
-                    agg,
-                    mode="overwrite",
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                )
-            elif (
-                not ext_names
-                and not hll_names
-                and all(ftypes[c] != "double" for c in fold_cols)
-                and cur - wm <= _CDF_PLAN_CHUNK
-            ):
-                # DIRECT SIGNED FOLD over fine-MV rows (see refresh_mv
-                # and the module signed-fold note): coarse sums, the
-                # weighted row count, and signed histogram merges are
-                # all linear in the fine-row multiset over exact
-                # arithmetic, so ± fine rows fold to the same coarse
-                # delta as the keyed fine CDF — unchanged fine groups
-                # cancel exactly.
-                # (fold_cols includes <c>_sumsq only when the fine MV
-                # declares it, and those are double — the gate above
-                # keeps such specs on the CDF path.)
-                needed = (
-                    None
-                    if source_where is not None
-                    else sorted({
-                        *group_cols, *fold_cols, rows_col, *hist_names,
-                    })
-                )
-                srows = table_signed_rows(
-                    fine, spark, wm, cur, columns=needed
-                )
-                if where_expr is not None:
-                    # each fine ROW IMAGE filters independently — same
-                    # partial-view identity as the CDF path
-                    srows = srows.filter(where_expr)
-                s = F.col("__sign")
-                deltas = srows.groupBy(*group_cols).agg(
-                    *[
-                        F.coalesce(F.sum(s * F.col(c)), F.lit(0))
-                        .cast(ftypes[c])
-                        .alias(c)
-                        for c in fold_cols
-                    ],
-                    F.coalesce(F.sum(s * F.col(rows_col)), F.lit(0))
-                    .cast("bigint")
-                    .alias(rows_col),
-                )
-                if hist_names:
-                    deltas = _attach_merged_hists(
-                        deltas, srows, group_cols, hist_names, s
-                    )
-                nonzero = F.col(rows_col) != 0
-                for c in fold_cols:
-                    nonzero = nonzero | (F.col(c) != 0)
-                for n in hist_names:
-                    nonzero = nonzero | (F.size(F.col(n)) > 0)
-                deltas = deltas.filter(nonzero).select(
-                    *group_cols, *fold_cols, rows_col, *hist_names,
-                )
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    fold=_fold_clause(
-                        [*fold_cols, rows_col], [], hist_names
-                    ),
-                    prune_where=diff_stats_box(fine, wm, cur, group_cols),
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                    source_unique=True,  # groupBy(group_cols) out
-                )
-            else:
-                sign = _sign_col()
-                is_add = sign == 1
-                cdf_df = table_changes_cdf(
-                    fine, spark, wm + 1, cur, key=fine_groups,
-                    dup_probe="lazy",
-                )
-                if where_expr is not None:
-                    # each fine ROW IMAGE filters independently: a
-                    # fine-group update crossing the view boundary
-                    # nets to a pure coarse insert/delete — the same
-                    # partial-view identity as refresh_mv
-                    cdf_df = cdf_df.filter(where_expr)
-                deltas = cdf_df.groupBy(*group_cols).agg(
-                    *[
-                        F.coalesce(F.sum(sign * F.col(c)), F.lit(0))
-                        .cast(ftypes[c])
-                        .alias(c)
-                        for c in fold_cols
-                    ],
-                    F.coalesce(
-                        F.sum(sign * F.col(rows_col)), F.lit(0)
-                    )
-                    .cast("bigint")
-                    .alias(rows_col),
-                    *[
-                        F.min(
-                            F.when(is_add, F.col(f"{c}_min"))
-                        ).alias(f"__ins_min_{c}")
-                        for c in min_cols
-                    ],
-                    *[
-                        F.min(
-                            F.when(~is_add, F.col(f"{c}_min"))
-                        ).alias(f"__del_min_{c}")
-                        for c in min_cols
-                    ],
-                    *[
-                        F.max(
-                            F.when(is_add, F.col(f"{c}_max"))
-                        ).alias(f"__ins_max_{c}")
-                        for c in max_cols
-                    ],
-                    *[
-                        F.max(
-                            F.when(~is_add, F.col(f"{c}_max"))
-                        ).alias(f"__del_max_{c}")
-                        for c in max_cols
-                    ],
-                    *[
-                        F.hll_union_agg(
-                            F.when(is_add, F.col(f"{c}_hll"))
-                        ).alias(f"__ins_hll_{c}")
-                        for c in approx_cols
-                    ],
-                    *(
-                        [
-                            F.max(
-                                F.when(~is_add, F.lit(1))
-                            ).alias("__any_del")
-                        ]
-                        if approx_cols
-                        else []
-                    ),
-                )
-                if hist_names:
-                    deltas = _attach_merged_hists(
-                        deltas, cdf_df, group_cols, hist_names,
-                        _sign_col(),
-                    )
-                if ext_names or hll_names:
-                    deltas = _fold_stored(
-                        fine, mv, spark, deltas,
-                        cur=cur, mv_v=mv_v, group_cols=group_cols,
-                        min_cols=min_cols, max_cols=max_cols,
-                        approx_cols=approx_cols,
-                        source_where=source_where,
-                        rollup_src=True,
-                    )
-                deltas = deltas.select(
-                    *group_cols, *fold_cols, rows_col,
-                    *ext_names, *hll_names, *hist_names,
-                )
-                merge_into(
-                    mv,
-                    spark,
-                    deltas,
-                    key=group_cols,
-                    fold=_fold_clause(
-                        [*fold_cols, rows_col],
-                        [*ext_names, *hll_names],
-                        hist_names,
-                    ),
-                    prune_where=diff_stats_box(fine, wm, cur, group_cols),
-                    txn={tag: cur},
-                    expected_parent=mv_v,
-                    source_unique=True,  # groupBy(group_cols) out
-                )
-            _sweep_zero_groups(mv, spark, rows_col)
-            if pin_watermark:
-                _pin_watermark(fine, name, cur)
-            return cur
-        except CommitConflictError:
-            continue  # racing refresher landed: re-read the watermark
+    ext_names, sq_names, _, hll_names, hist_names = _derived_names(spec)
+    cur = fine.latest_version()
+    if cur is None:
+        raise FileNotFoundError(f"fine MV has no snapshots: {fine.path}")
+    from ..io.versioned import _schema_from_json
+
+    fine_schema = _schema_from_json(fine._load_manifest(cur)["schema"])
+    fine_names = {f.name for f in fine_schema.fields}
+    for n in [rows_col, *sum_cols, *sq_names, *ext_names,
+              *hll_names, *hist_names]:
+        if n not in fine_names:
+            raise ValueError(
+                f"fine MV at {fine.path} is missing measure column "
+                f"{n!r} its spec declares — re-bootstrap the fine MV"
+            )
+    # sums (incl. the _sumsq columns, which are plain double sums at
+    # this level) fold in the fine MV's own storage types — bigint
+    # stays exact, decimal(38,s) stays exact, double stays double
+    fold_cols = [*sum_cols, *sq_names]
+    ftypes = _sum_fold_types(fine_schema, fold_cols)
+
+    def fold(mv_v: int | None, wms: dict) -> None:
+        if wms[tag] is not None:
+            _fold_diff(
+                fine, mv, spark, spec, ftypes,
+                mv_v=mv_v, wm=wms[tag], cur=cur, tag=tag, rollup_src=True,
+            )
+            return
+        boot = fine.read(spark, version=cur)
+        if source_where is not None:
+            boot = boot.filter(F.expr(source_where))
+        agg = boot.groupBy(*group_cols).agg(
+            *[
+                F.coalesce(F.sum(c), F.lit(0)).cast(ftypes[c]).alias(c)
+                for c in fold_cols
+            ],
+            F.coalesce(F.sum(rows_col), F.lit(0))
+            .cast("bigint")
+            .alias(rows_col),
+            *[
+                _measure_agg("min", c, True).alias(f"{c}_min")
+                for c in min_cols
+            ],
+            *[
+                _measure_agg("max", c, True).alias(f"{c}_max")
+                for c in max_cols
+            ],
+            *[
+                _measure_agg("hll", c, True).alias(f"{c}_hll")
+                for c in approx_cols
+            ],
+        )
+        if hist_names:
+            agg = _attach_merged_hists(
+                agg, boot, group_cols, hist_names, F.lit(1)
+            )
+        mv.commit(
+            agg, mode="overwrite", txn={tag: cur}, expected_parent=mv_v
+        )
+
+    return _refresh_loop(
+        mv, spark, {tag: cur}, fold, rows_col=rows_col, spec=spec,
+        pins=[(fine, name, tag)] if pin_watermark else (),
+    )[0]
 
 
 def answer_from_mvs(

@@ -1198,6 +1198,29 @@ class TestWatermarkPinning:
         assert b.tags() == {"mvpin-j-b-1": 1}
         assert _state_j(spark, mv) == _recompute_j(spark, a, b)
 
+    def test_pin_sweep_moves_only_its_own_pins(self, tmp_path):
+        """An MV's sweep removes its own older pins and never the pins
+        of an MV whose name extends its own (``daily-eu``, or the join
+        MV ``daily``'s ``daily-a``): vacuum could otherwise expire the
+        manifests that MV's next refresh needs."""
+        from file_stream_import_spark.operators.mv import _pin_watermark
+
+        src = VersionedTable(str(tmp_path / "src"))
+        parent = None
+        for _ in range(3):  # metadata-only snapshots v0..v2
+            parent = src._publish(parent, {
+                "schema": '{"type":"struct","fields":[]}',
+                "groups": [], "mode": "append", "added": [],
+                "delete_entries": [], "stats": {},
+            })
+        _pin_watermark(src, "daily", 0)
+        _pin_watermark(src, "daily-eu", 0)
+        _pin_watermark(src, "daily-a", 1)
+        _pin_watermark(src, "daily", 2)
+        assert src.tags() == {
+            "mvpin-daily-eu-0": 0, "mvpin-daily-a-1": 1, "mvpin-daily-2": 2,
+        }
+
 
 class TestFractionalSums:
     """Review finding (r13 continuation): SUM folding must preserve the

@@ -1676,7 +1676,10 @@ def _fold_stored(
 
     The candidates (``__ins_*`` / ``__del_*`` / ``__any_del``) come
     from the signed-delta kernel, _signed_deltas, through
-    _merge_deltas. ``rollup_src=True`` (refresh_rollup_mv): the source
+    _merge_deltas, inside the fold of the watermark loop
+    (_refresh_loop, or the stream's _txn_epoch_commit): a commit
+    conflict re-reads the MV, so the stored side is always ``mv_v``,
+    the parent the merge commits on. ``rollup_src=True`` (refresh_rollup_mv): the source
     is itself an aggregate MV, so the endangered recompute reads the
     FINE MV's stored measures — ``MIN(c_min)`` / ``MAX(c_max)`` and
     ``hll_union_agg(c_hll)`` (sketch union) instead of the raw column.

@@ -1209,10 +1209,10 @@ def _arrow_align(table, declared, mapping):
     """Executor-side align of one parquet file's Arrow table to the
     declared schema THROUGH a column name map (RENAME/DROP evolution):
     ``mapping`` is the group's colmap entry (file_name ->
-    current_name, None = tombstoned). Shared by the changefeed reader
-    and the versioned_table batch source so the two can never drift
-    from VersionedTable._read_groups' routing. Widening casts fall out
-    of the declared-type cast (int32 -> int64 is a plain Arrow cast)."""
+    current_name, None = tombstoned). Shared by the changefeed's
+    stream and batch readers; it must route exactly like
+    VersionedTable._read_groups. Widening casts fall out of the
+    declared-type cast (int32 -> int64 is a plain Arrow cast)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_type
@@ -1313,9 +1313,8 @@ class TableChangefeedPartitionedReader(DataSourceStreamReader):
     driver-side metadata work only: it emits one InputPartition per
     parquet file of each ADDED group. The DATA never touches the
     driver: ``read(partition)`` runs on executors and yields Arrow
-    record batches (the same align-by-name kernel as the
-    versioned_table batch source), so a commit of N files fans out to
-    N parallel tasks.
+    record batches (aligned by name through ``_arrow_align``), so a
+    commit of N files fans out to N parallel tasks.
 
     Replay is bit-identical because partitions are a pure function of
     the immutable manifest range — exactly-once through a sink
@@ -1749,273 +1748,3 @@ class TableChangefeedBatchReader(DataSourceReader):
 
     def read(self, partition):
         yield from self._inner.read(partition)
-
-
-# ---------------------------------------------------------------------------
-# Batch Python DataSource over the VersionedTable with manifest-stats
-# GROUP PRUNING via load-time bound options:
-#
-#   spark.read.format("versioned_table").option("path", p)
-#        .option("min.k", "11").option("max.k", "20").load()
-#
-# Bounds are part of the load() options — immutable per DataFrame — so
-# a pruned scan is a VIEW DEFINITION, never cross-query state. We
-# deliberately do NOT implement Spark 4.1's pushFilters() here:
-# measured on 4.1.2, the JVM caches the planned read (reader +
-# partitions) on the shared relation node, so a filtered query's
-# pushdown-pruned partitions leak into later queries on the same
-# load() DataFrame — an unfiltered df.count() after
-# df.filter(...).collect() silently returned the pruned count. With
-# group-granular (partial) pruning that caching is a silent-wrong-
-# results hazard; explicit options give the same data skipping with
-# per-DataFrame semantics instead.
-# ---------------------------------------------------------------------------
-
-
-class _GroupFile(InputPartition):
-    def __init__(
-        self, file_path: str, schema_json: str, mapping=None
-    ):
-        self.file_path = file_path
-        self.schema_json = schema_json
-        # the group's colmap entry (RENAME/DROP routing), if any
-        self.mapping = mapping
-
-
-class VersionedTableReader(DataSourceReader):
-    def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("versioned_table requires .option('path', ...)")
-        self.path = path
-        v = options.get("version")
-        self.version = int(v) if v is not None else None
-        ts = options.get("timestampasof")  # option keys arrive lowercased
-        self.as_of_timestamp = float(ts) if ts is not None else None
-        # refs: .option("branch", name) reads the branch head (version/
-        # timestampAsOf then resolve within the branch chain);
-        # .option("tag", name) pins the tag's main-chain version
-        self._meta = _branch_meta_root(path, options.get("branch"))
-        tag = options.get("tag")
-        if tag is not None:
-            if self._meta is not None:
-                raise ValueError(
-                    "tag= pins a main-chain version; it cannot combine "
-                    "with branch="
-                )
-            if self.version is not None:
-                raise ValueError("pass option 'version' OR 'tag', not both")
-            from .versioned import VersionedTable
-
-            self.version = VersionedTable(path).tag_version(tag)
-        if self.version is not None and self.as_of_timestamp is not None:
-            raise ValueError(
-                "pass option 'version' OR 'timestampAsOf', not both"
-            )
-        # load-time bounds: min.<col> / max.<col> option pairs
-        self.bounds: dict[str, list] = {}
-        for k, v in options.items():
-            for pre in ("min.", "max."):
-                if k.startswith(pre):
-                    lo_hi = self.bounds.setdefault(k[4:], [None, None])
-                    lo_hi[0 if pre == "min." else 1] = v
-
-    # -- planning ------------------------------------------------------
-    def _manifest(self) -> dict:
-        from .versioned import VersionedTable
-
-        t = VersionedTable(self.path, _meta_root=self._meta)
-        version = self.version
-        if version is None and self.as_of_timestamp is not None:
-            version = t.version_as_of(self.as_of_timestamp)
-        if version is None:
-            version = t.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots at {self.path}")
-        return t._load_manifest(version)
-
-    @staticmethod
-    def _parse_bound(s: str | None, dtype):
-        """Bound in the PLAN-time comparison domain: manifest stats are
-        the ``_json_safe`` encodings (dates/timestamps as ISO-'T'
-        strings), so a timestamp bound is normalized through
-        ``fromisoformat`` — '2024-01-01 08:00:00' (space) would
-        otherwise order before every 'T'-separated stats string and
-        mis-prune. Raises ValueError on an unparseable bound (better
-        than silently comparing garbage text)."""
-        if s is None:
-            return None
-        name = dtype.typeName()
-        if name in ("byte", "short", "integer", "long"):
-            return int(s)
-        if name in ("float", "double"):
-            return float(s)
-        if name == "boolean":
-            return s.lower() == "true"
-        if name in ("timestamp", "timestamp_ntz"):
-            import datetime
-
-            return datetime.datetime.fromisoformat(s).isoformat()
-        return s  # string / date / decimal: compared as text
-
-    @staticmethod
-    def _exec_bound(s: str | None, dtype):
-        """Bound as a native Arrow-comparable value for the EXEC-time
-        row filter — date/timestamp bounds become Python date/datetime
-        so the comparison kernel runs on the column's own Arrow type
-        (casting a timestamp column to string yields a SPACE-separated
-        rendering that breaks lexicographic comparison, and Arrow has
-        no timestamp-vs-string kernel at all — ADVICE r6)."""
-        if s is None:
-            return None
-        import datetime
-
-        name = dtype.typeName()
-        if name == "date":
-            return datetime.date.fromisoformat(s)
-        if name in ("timestamp", "timestamp_ntz"):
-            return datetime.datetime.fromisoformat(s)
-        return VersionedTableReader._parse_bound(s, dtype)
-
-    def partitions(self) -> list[InputPartition]:
-        from .versioned import _group_may_match, _schema_from_json
-
-        m = self._manifest()
-        declared = _schema_from_json(m["schema"])
-        types = {f.name: f.dataType for f in declared.fields}
-        where = {
-            c: (
-                self._parse_bound(lo, types[c]),
-                self._parse_bound(hi, types[c]),
-            )
-            for c, (lo, hi) in self.bounds.items()
-            if c in types
-        }
-        stats = m.get("stats") or {}
-        groups = [
-            g
-            for g in m["groups"]
-            if not where or _group_may_match(stats.get(g), where)
-        ]
-        colmap = m.get("colmap") or {}
-        dels = m.get("delete_entries") or []
-        if any(set(e["applies_to"]) & set(groups) for e in dels):
-            raise NotImplementedError(
-                "versioned_table DataSource cannot apply pending "
-                "merge-on-read deletes; run VersionedTable.optimize() "
-                "to materialize them first (or read via "
-                "VersionedTable.read)"
-            )
-        import os
-
-        parts: list[InputPartition] = []
-        for g in groups:
-            d = os.path.join(self.path, g)
-            for name in sorted(os.listdir(d)):
-                if name.endswith(".parquet"):
-                    parts.append(
-                        _GroupFile(
-                            os.path.join(d, name),
-                            m["schema"],
-                            colmap.get(g),
-                        )
-                    )
-        # zero surviving files: one sentinel partition yielding nothing
-        # (Spark requires >= 1 partition)
-        return parts or [_GroupFile("", m["schema"])]
-
-    # -- execution -----------------------------------------------------
-    def read(self, partition: _GroupFile):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        from .versioned import _schema_from_json
-
-        if not partition.file_path:
-            return
-        declared = _schema_from_json(partition.schema_json)
-        table = pq.read_table(partition.file_path)
-        # by-name align THROUGH the group's column name map: additive
-        # evolution reads NULLs, renamed columns route to the file
-        # name, tombstoned drops never resurrect (shared _arrow_align
-        # kernel — same routing as VersionedTable._read_groups)
-        out = _arrow_align(
-            table, declared, getattr(partition, "mapping", None)
-        )
-        # bounds are an exact view, not advisory: apply the same [lo, hi]
-        # row filter that pruned the groups (NULLs fail bounds, as in
-        # SQL comparisons and VersionedTable.read(where=...))
-        types = {f.name: f.dataType for f in declared.fields}
-        import pyarrow.compute as pc
-
-        for c, (lo, hi) in self.bounds.items():
-            if c not in types:
-                continue
-
-            def scalar(v):
-                # bounds compare on the column's NATIVE Arrow type — a
-                # naive bound datetime is materialized IN the column's
-                # type (tz-aware Spark timestamps read as
-                # timestamp[us, tz=UTC]; a bare timestamp[us] scalar
-                # has no comparison kernel against it). No string
-                # casts anywhere, so chronology is exact.
-                import datetime
-
-                if isinstance(v, (datetime.date, datetime.datetime)):
-                    return pa.scalar(v, type=out.schema.field(c).type)
-                return v
-
-            if lo is not None:
-                out = out.filter(
-                    pc.fill_null(
-                        pc.greater_equal(
-                            out.column(c),
-                            scalar(self._exec_bound(lo, types[c])),
-                        ),
-                        False,
-                    )
-                )
-            if hi is not None:
-                out = out.filter(
-                    pc.fill_null(
-                        pc.less_equal(
-                            out.column(c),
-                            scalar(self._exec_bound(hi, types[c])),
-                        ),
-                        False,
-                    )
-                )
-        yield from out.to_batches(max_chunksize=65536)
-
-
-class VersionedTableDataSource(DataSource):
-    """``spark.dataSource.register(VersionedTableDataSource)`` then
-    ``spark.read.format("versioned_table").option("path", p).load()``.
-    Options: ``version`` (time travel), ``tag`` (read the snapshot a
-    named tag pins), ``branch`` (read a branch head; version/
-    timestampAsOf then resolve within the branch chain), and
-    ``min.<col>`` / ``max.<col>`` bound pairs — an EXACT range view
-    whose groups are pruned via the manifest's commit-time column
-    stats before a single file is opened (option keys arrive
-    lowercased, so bound columns must be lower-case — all fixture
-    schemas are). Bounds live in the
-    load() options rather than Catalyst pushFilters deliberately; see
-    the module comment for the measured scan-caching hazard."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "versioned_table"
-
-    def schema(self):
-        from .versioned import _schema_from_json
-
-        return _nullable(
-            _schema_from_json(
-                VersionedTableReader(self.options)._manifest()["schema"]
-            )
-        )
-
-    def reader(self, schema) -> VersionedTableReader:
-        return VersionedTableReader(self.options)

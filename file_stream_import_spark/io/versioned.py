@@ -2714,7 +2714,8 @@ class VersionedTable:
     ) -> DataFrame:
         """The exact row filter a ``where`` bounds dict means — the
         semantics the group pruning approximates. Shared by read() and
-        count_where()'s boundary scans so the two can never drift."""
+        the boundary scans of count_where() and agg_where() so the
+        three can never drift."""
         declared = _schema_from_json(m["schema"])
         types = {f.name: f.dataType for f in declared.fields}
 
@@ -2745,6 +2746,80 @@ class VersionedTable:
                     F.col(col) <= _stat_lit(hi, types[col])
                 )
         return out
+
+    def _classify_where(
+        self,
+        spark: SparkSession,
+        where: dict | None,
+        version: int | None,
+        column: str | None = None,
+        need_sum: bool = False,
+    ):
+        """count_where's and agg_where's split of a snapshot's groups
+        into pruned, metadata-answered and scanned (see their
+        docstrings). With ``column``, a metadata group also needs that
+        column's stats entry, untruncated (truncated string stats are
+        BOUNDS: they prune/contain but cannot answer MIN/MAX), with a
+        ``sum`` when ``need_sum``. Returns ``(m, metadata_groups,
+        boundary, detail)``: ``boundary`` is the exactly row-filtered
+        scan of the other groups (None when none scan)."""
+        v = self.latest_version() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no snapshots at {self.path}")
+        m = self._load_manifest(v)
+        declared = _schema_from_json(m["schema"])
+        types = {f.name: f.dataType for f in declared.fields}
+        if column is not None:
+            if column not in types:
+                raise ValueError(f"no such column: {column!r}")
+            if need_sum and _sum_stat_expr(
+                next(f for f in declared.fields if f.name == column), "s"
+            ) is None:
+                raise ValueError(
+                    f"SUM is undefined for column {column!r} of type "
+                    f"{types[column].simpleString()}"
+                )
+        where = where or {}
+        # classification runs on stats-domain bounds; the boundary scan
+        # keeps the caller's originals (exact semantics). A bound that
+        # can't be normalized is WEAKER than the predicate, so it may
+        # not prune AND must break containment proofs (else metadata
+        # rows would include rows the scan filter rejects).
+        cls_where, cls_dropped = _normalize_prune_bounds(where, types)
+        stats = m.get("stats") or {}
+        del_groups: set[str] = set()
+        for e in m.get("delete_entries") or []:
+            del_groups.update(e["applies_to"])
+        pruned, metadata, scan = 0, [], []
+        for g in m["groups"]:
+            st = stats.get(g) or {}
+            # pruning stays sound under pending deletes: an equality
+            # delete only REMOVES rows, so a box disjoint from the
+            # bounds still holds none
+            if cls_where and not _group_may_match(st, cls_where):
+                pruned += 1
+                continue
+            entry = st.get(column) if column is not None else {}
+            if (
+                g not in del_groups
+                and st.get("_rows") is not None
+                and not cls_dropped
+                and (not where or _group_fully_contained(st, cls_where))
+                and isinstance(entry, dict)
+                and (not need_sum or "sum" in entry)
+                and not entry.get("trunc")
+            ):
+                metadata.append(g)
+            else:
+                scan.append(g)
+        boundary = None
+        if scan:
+            boundary = self._apply_where_rowfilter(
+                self._read_groups(spark, m, scan), m, where
+            )
+        detail = {"pruned": pruned, "metadata": len(metadata),
+                  "scanned": len(scan)}
+        return m, metadata, boundary, detail
 
     def count_where(
         self,
@@ -2777,57 +2852,15 @@ class VersionedTable:
         Bound literals are interpreted in the column's type domain
         (a datetime bound on a DATE column truncates to the date) —
         see read()'s docstring for the full contract."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots at {self.path}")
-        m = self._load_manifest(v)
-        where = where or {}
+        m, metadata, boundary, info = self._classify_where(
+            spark, where, version
+        )
         stats = m.get("stats") or {}
-        # classification runs on stats-domain bounds; the boundary scan
-        # keeps the caller's originals (exact semantics). A bound that
-        # can't be normalized is WEAKER than the predicate, so it may
-        # not prune AND must break containment proofs (else metadata
-        # rows would include rows the scan filter rejects).
-        _types = {
-            f.name: f.dataType
-            for f in _schema_from_json(m["schema"]).fields
-        }
-        cls_where, cls_dropped = _normalize_prune_bounds(where, _types)
-        del_groups: set[str] = set()
-        for e in m.get("delete_entries") or []:
-            del_groups.update(e["applies_to"])
-        pruned, metadata, scan = 0, 0, []
-        total = 0
-        for g in m["groups"]:
-            st = stats.get(g)
-            # pruning stays sound under pending deletes: an equality
-            # delete only REMOVES rows, so a box disjoint from the
-            # bounds still counts exactly 0
-            if cls_where and not _group_may_match(st, cls_where):
-                pruned += 1
-                continue
-            rows = (st or {}).get("_rows")
-            if (
-                g not in del_groups
-                and rows is not None
-                and not cls_dropped
-                and (not where or _group_fully_contained(st, cls_where))
-            ):
-                metadata += 1
-                total += int(rows)
-                continue
-            scan.append(g)
-        if scan:
-            df = self._read_groups(spark, m, scan)
-            if where:
-                df = self._apply_where_rowfilter(df, m, where)
-            total += df.count()
+        total = sum(int(stats[g]["_rows"]) for g in metadata)
+        if boundary is not None:
+            total += boundary.count()
         if detail:
-            return total, {
-                "pruned": pruned,
-                "metadata": metadata,
-                "scanned": len(scan),
-            }
+            return total, info
         return total
 
     def agg_where(
@@ -2869,56 +2902,21 @@ class VersionedTable:
         bad = [o for o in ops if o not in ("min", "max", "sum", "count")]
         if bad:
             raise ValueError(f"unsupported agg op(s): {bad}")
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots at {self.path}")
-        m = self._load_manifest(v)
-        declared = _schema_from_json(m["schema"])
-        types = {f.name: f.dataType for f in declared.fields}
-        if column not in types:
-            raise ValueError(f"no such column: {column!r}")
-        dtype = types[column]
-        if "sum" in ops and _sum_stat_expr(
-            next(f for f in declared.fields if f.name == column), "s"
-        ) is None:
-            raise ValueError(
-                f"SUM is undefined for column {column!r} of type "
-                f"{dtype.simpleString()}"
-            )
-        where = where or {}
-        cls_where, cls_dropped = _normalize_prune_bounds(where, types)
-        stats = m.get("stats") or {}
-        del_groups: set = set()
-        for e in m.get("delete_entries") or []:
-            del_groups.update(e["applies_to"])
-
         need_sum = "sum" in ops
-        pruned, metadata, scan = 0, 0, []
+        m, metadata, boundary, info = self._classify_where(
+            spark, where, version, column=column, need_sum=need_sum
+        )
+        field = next(
+            f for f in _schema_from_json(m["schema"]).fields
+            if f.name == column
+        )
+        dtype = field.dataType
+        stats = m.get("stats") or {}
         mn_md, mx_md, n_md = None, None, 0
         sum_md = None
-        for g in m["groups"]:
-            st = stats.get(g)
-            if cls_where and not _group_may_match(st, cls_where):
-                pruned += 1
-                continue
-            entry = (st or {}).get(column)
-            rows = (st or {}).get("_rows")
-            usable = (
-                g not in del_groups
-                and rows is not None
-                and isinstance(entry, dict)
-                and not cls_dropped
-                and (not where or _group_fully_contained(st, cls_where))
-                and (not need_sum or "sum" in entry)
-                # truncated string stats are BOUNDS, not values: they
-                # still prune/contain, but cannot answer MIN/MAX
-                and not entry.get("trunc")
-            )
-            if not usable:
-                scan.append(g)
-                continue
-            metadata += 1
-            nn = int(rows) - int(entry.get("nulls") or 0)
+        for g in metadata:
+            entry = stats[g][column]
+            nn = int(stats[g]["_rows"]) - int(entry.get("nulls") or 0)
             n_md += nn
             if nn > 0:
                 gmn = _stat_unjson(entry["min"], dtype)
@@ -2932,14 +2930,8 @@ class VersionedTable:
                     )
                     sum_md = gs if sum_md is None else sum_md + gs
         mn_sc, mx_sc, sum_sc, n_sc = None, None, None, 0
-        if scan:
-            df = self._read_groups(spark, m, scan)
-            if where:
-                df = self._apply_where_rowfilter(df, m, where)
-            se = _sum_stat_expr(
-                next(f for f in declared.fields if f.name == column),
-                "s",
-            )
+        if boundary is not None:
+            se = _sum_stat_expr(field, "s")
             aggs = [
                 F.min(column).alias("mn"),
                 F.max(column).alias("mx"),
@@ -2947,7 +2939,7 @@ class VersionedTable:
             ]
             if se is not None:
                 aggs.append(se)
-            r = df.agg(*aggs).first()
+            r = boundary.agg(*aggs).first()
             mn_sc, mx_sc, n_sc = r["mn"], r["mx"], int(r["n"])
             sum_sc = r["s"] if se is not None else None
         out: dict = {}
@@ -2981,11 +2973,7 @@ class VersionedTable:
                     total = int(total)
                 out[op] = total
         if detail:
-            return out, {
-                "pruned": pruned,
-                "metadata": metadata,
-                "scanned": len(scan),
-            }
+            return out, info
         return out
 
     def _read_groups(
@@ -6309,6 +6297,40 @@ def _version_at_or_after(table: VersionedTable, epoch: float) -> int:
         return 0
 
 
+def _change_range(
+    table: VersionedTable,
+    from_version,
+    to_version,
+    from_timestamp,
+    to_timestamp,
+) -> tuple[int, int]:
+    """``(lo, hi)`` versions of a changes read whose bounds may be
+    versions OR instants: ``from_timestamp`` resolves to the first
+    commit AT or AFTER the instant, ``to_timestamp`` to the newest
+    commit at or before it, and a missing end to the latest version.
+    ``lo > hi`` is an empty range, not an error."""
+    if from_timestamp is not None:
+        if from_version is not None:
+            raise ValueError(
+                "pass from_version OR from_timestamp, not both"
+            )
+        from_version = _version_at_or_after(
+            table, _parse_instant(from_timestamp)
+        )
+    if from_version is None:
+        raise ValueError("pass from_version or from_timestamp")
+    if to_timestamp is not None:
+        if to_version is not None:
+            raise ValueError("pass to_version OR to_timestamp, not both")
+        to_version = table.version_as_of(_parse_instant(to_timestamp))
+    hi = (
+        table.latest_version() if to_version is None else int(to_version)
+    )
+    if hi is None:
+        raise FileNotFoundError(f"no snapshots at {table.path}")
+    return int(from_version), hi
+
+
 def table_changes(
     table: VersionedTable,
     spark: SparkSession,
@@ -6345,26 +6367,9 @@ def table_changes(
 
     from .pysource import _changefeed_added_groups, _resolved_map
 
-    if from_timestamp is not None:
-        if from_version is not None:
-            raise ValueError(
-                "pass from_version OR from_timestamp, not both"
-            )
-        from_version = _version_at_or_after(
-            table, _parse_instant(from_timestamp)
-        )
-    if from_version is None:
-        raise ValueError("pass from_version or from_timestamp")
-    if to_timestamp is not None:
-        if to_version is not None:
-            raise ValueError("pass to_version OR to_timestamp, not both")
-        to_version = table.version_as_of(_parse_instant(to_timestamp))
-    hi = (
-        table.latest_version() if to_version is None else int(to_version)
+    lo, hi = _change_range(
+        table, from_version, to_version, from_timestamp, to_timestamp
     )
-    if hi is None:
-        raise FileNotFoundError(f"no snapshots at {table.path}")
-    lo = int(from_version)
     m_hi = table._load_manifest(hi)
     declared = _schema_from_json(m_hi["schema"])
     by_v: dict[int, list[str]] = {}
@@ -6540,6 +6545,17 @@ def table_changes_rows(
                 "new",
             )
         )
+    if not parts:
+        # an empty range (from_version past the end): the typed empty
+        # frame of the same columns a non-empty range returns
+        payload = F.struct(*[f.name for f in payload_fields])
+        return _empty_frame(spark, declared).select(
+            *keys,
+            F.lit(None).cast("string").alias("_change_type"),
+            F.lit(None).cast("int").alias("_commit_version"),
+            payload.alias("old"),
+            payload.alias("new"),
+        )
     union = lambda ps: reduce(  # noqa: E731
         lambda a, b: a.unionByName(b), ps
     )
@@ -6587,32 +6603,16 @@ def table_changes_cdf(
     backfills too large for the stream's one-task-per-rewrite diff.
     Bounds may be versions or instants, like ``table_changes``."""
     keys = [key] if isinstance(key, str) else list(key)
-    if from_timestamp is not None:
-        if from_version is not None:
-            raise ValueError(
-                "pass from_version OR from_timestamp, not both"
-            )
-        from_version = _version_at_or_after(
-            table, _parse_instant(from_timestamp)
-        )
-    if from_version is None:
-        raise ValueError("pass from_version or from_timestamp")
-    if to_timestamp is not None:
-        if to_version is not None:
-            raise ValueError("pass to_version OR to_timestamp, not both")
-        to_version = table.version_as_of(_parse_instant(to_timestamp))
     # resolve the end version ONCE and pass it down — re-reading
     # latest_version() after table_changes_rows resolved its own end
     # let a concurrent evolution commit in between pin a schema the
     # diffed payload structs don't carry (review finding, r13
     # continuation)
-    hi = (
-        table.latest_version() if to_version is None else int(to_version)
+    lo, hi = _change_range(
+        table, from_version, to_version, from_timestamp, to_timestamp
     )
-    if hi is None:
-        raise FileNotFoundError(f"no snapshots at {table.path}")
     d = table_changes_rows(
-        table, spark, from_version, hi, key=keys, dup_probe=dup_probe,
+        table, spark, lo, hi, key=keys, dup_probe=dup_probe,
         columns=columns,
     )
     # output columns follow the DECLARED schema's field order (keys in

@@ -22,12 +22,8 @@ from pyspark.sql import functions as F
 
 from ..io.tables import load_table
 from ..operators import dedup
+from ..operators.similarity import _q6
 from . import register
-
-
-def _q6(col: Column) -> Column:
-    """Floor-quantize onto the 1e-6 grid with the -0.0 guard."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6) + F.lit(0.0)
 
 
 _TS = "yyyy-MM-dd HH:mm:ss"

@@ -22,14 +22,10 @@ from pyspark.sql import functions as F
 
 from ..io.tables import load_table
 from ..operators import dedup
+from ..operators.similarity import _q6
 from ..operators.text import tokens
 from . import register
 from .llm import _JACCARD_ORACLE
-
-
-def _q6(col: Column) -> Column:
-    """Floor-quantize onto the 1e-6 grid with the -0.0 guard."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6) + F.lit(0.0)
 
 
 @register(

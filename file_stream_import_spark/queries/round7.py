@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..io.tables import load_table
+from ..operators.similarity import _q6
 from . import register
 
 
@@ -86,12 +87,6 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
     return jpeg_roundtrip_features(attach_fake_payload(d))
-
-
-def _q6(col):
-    """Floor-quantize onto the 1e-6 grid with the -0.0 guard (the
-    cross-engine-exact alternative to ROUND(double, 6))."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6) + F.lit(0.0)
 
 
 @register(

@@ -204,15 +204,17 @@ class TestCyclicRenameMap:
         assert rows == {k: (k * 100, k * 10) for k in range(4)}
 
     def test_arrow_path_agrees(self, spark, tmp_path):
+        """The batch changefeed aligns each file through
+        pysource._arrow_align — the Arrow twin of _read_groups' remap."""
         from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
+            TableChangefeedDataSource,
         )
 
         t = self._swapped(spark, tmp_path, "swap_arrow")
-        spark.dataSource.register(VersionedTableDataSource)
+        spark.dataSource.register(TableChangefeedDataSource)
         got = {
             r["k"]: (r["a"], r["b"])
-            for r in spark.read.format("versioned_table")
+            for r in spark.read.format("table_changefeed")
             .option("path", t.path)
             .load()
             .collect()

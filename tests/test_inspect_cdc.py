@@ -333,6 +333,33 @@ class TestTableChangesRows:
         }
         assert got == {(1, 1, "U"), (5, 1, "I")}
 
+    def test_empty_range_is_a_typed_empty_frame(self, spark, tmp_path):
+        """A range past the last commit (by version, or by an instant
+        after it) is empty, not an error: both row-level feeds return
+        no rows under the columns a non-empty range carries, as
+        table_changes does."""
+        from file_stream_import_spark.io.versioned import (
+            table_changes_cdf,
+            table_changes_rows,
+        )
+
+        t = self._history(spark, tmp_path)
+        latest = t.latest_version()
+        after = t._load_manifest(latest)["committed_at"] + 60
+        for empty, full in [
+            (
+                table_changes_rows(t, spark, latest + 1, key="k"),
+                table_changes_rows(t, spark, 0, key="k"),
+            ),
+            (
+                table_changes_cdf(t, spark, from_timestamp=after, key="k"),
+                table_changes_cdf(t, spark, 0, key="k"),
+            ),
+        ]:
+            assert empty.collect() == []
+            assert empty.dtypes == full.dtypes
+        assert table_changes(t, spark, latest + 1).collect() == []
+
 
 class TestVacuumDryRunAndTimestampBounds:
     def test_vacuum_dry_run_reports_without_removing(

@@ -347,10 +347,9 @@ class TestPublish:
 
 
 class TestRefsReaders:
-    """Refs through the reader surfaces: read(branch=/tag=) sugar, the
-    versioned_table batch DataSource's branch/tag options, and the
-    changefeed's .option("branch", ...) — the audit side of WAP tails
-    staging as commits land."""
+    """Refs through the reader surfaces: read(branch=/tag=) sugar and
+    the changefeed's .option("branch", ...) — the audit side of WAP
+    tails staging as commits land."""
 
     def _staged(self, spark, tmp_path):
         t = _mk(spark, tmp_path)
@@ -378,35 +377,6 @@ class TestRefsReaders:
         b = t.branch("stage")
         with pytest.raises(ValueError, match="branch handle"):
             b.read(spark, tag="gold")
-
-    def test_batch_datasource_refs_options(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        spark.dataSource.register(VersionedTableDataSource)
-        t = self._staged(spark, tmp_path)
-
-        def base():
-            # a fresh reader each time: .option() MUTATES the reader
-            return spark.read.format("versioned_table").option(
-                "path", t.path
-            )
-
-        got = sorted(
-            r["k"]
-            for r in base().option("branch", "stage").load().collect()
-        )
-        assert got == list(range(8)) + [50, 51]
-        assert sorted(
-            r["k"] for r in base().option("tag", "gold").load().collect()
-        ) == list(range(8))
-        with pytest.raises(Exception, match="no such branch"):
-            base().option("branch", "nope").load().collect()
-        with pytest.raises(Exception, match="cannot combine"):
-            base().option("branch", "stage").option(
-                "tag", "gold"
-            ).load().collect()
 
     @pytest.mark.parametrize("reader", ["partitioned"])
     def test_changefeed_tails_branch(self, spark, tmp_path, reader):

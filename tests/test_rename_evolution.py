@@ -478,35 +478,20 @@ class TestWiden:
 
 
 class TestVersionedTableSourceAcrossEvolution:
-    """The versioned_table BATCH DataSource must route reads through
-    the column name maps exactly like VersionedTable.read — a silent
-    NULL on a renamed column (or resurrected bytes on a re-added
-    dropped name) would be a wrong answer, not an error."""
-
-    def test_rename_routes(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        spark.dataSource.register(VersionedTableDataSource)
-        t = _mk(spark, tmp_path)
-        t.rename_column("val", "amount")
-        df = (
-            spark.read.format("versioned_table")
-            .option("path", t.path)
-            .load()
-        )
-        got = {r["k"]: r["amount"] for r in df.collect()}
-        assert got == {k: 2 * k for k in range(30)}
+    """The Arrow read path (pysource._arrow_align, driven here through
+    the batch changefeed) must route through the column name maps
+    exactly like VersionedTable.read — a silent NULL on a renamed
+    column (or resurrected bytes on a re-added dropped name) would be a
+    wrong answer, not an error."""
 
     def test_drop_readd_no_resurrection(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
+            TableChangefeedDataSource,
         )
 
-        spark.dataSource.register(VersionedTableDataSource)
+        spark.dataSource.register(TableChangefeedDataSource)
         t = _mk(spark, tmp_path)
         t.drop_column("val")
         t.commit(
@@ -519,59 +504,17 @@ class TestVersionedTableSourceAcrossEvolution:
             allow_evolution=True,
         )
         df = (
-            spark.read.format("versioned_table")
+            spark.read.format("table_changefeed")
             .option("path", t.path)
             .load()
         )
         got = {r["k"]: r["val"] for r in df.collect()}
         assert got[0] is None and got[31] == 217
 
-    def test_widen_casts(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        spark.dataSource.register(VersionedTableDataSource)
-        t = VersionedTable(str(tmp_path / "w"))
-        t.commit(
-            spark.range(3).select(
-                F.col("id").alias("k"),
-                F.col("id").cast("int").alias("v"),
-            ),
-            mode="overwrite",
-        )
-        t.widen_column("v", "long")
-        t.commit(
-            spark.createDataFrame(
-                [(9, 5_000_000_000)], "k bigint, v long"
-            ),
-            mode="append",
-        )
-        df = (
-            spark.read.format("versioned_table")
-            .option("path", t.path)
-            .load()
-        )
-        assert dict(df.dtypes)["v"] == "bigint"
-        got = {r["k"]: r["v"] for r in df.collect()}
-        assert got[9] == 5_000_000_000 and got[2] == 2
-
     def test_bounds_on_renamed_column(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        spark.dataSource.register(VersionedTableDataSource)
         t = _mk(spark, tmp_path)
         t.rename_column("val", "amount")
-        df = (
-            spark.read.format("versioned_table")
-            .option("path", t.path)
-            .option("min.amount", "40")
-            .load()
-        )
+        df = t.read(spark, where={"amount": (40, None)})
         assert df.count() == 10  # stats rekeyed: bounds prune + filter
 
 

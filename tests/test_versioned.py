@@ -1873,8 +1873,9 @@ class TestNonFiniteStats:
 
 
 class TestVersionedDataSource:
-    """Batch Python DataSource over the versioned table with Catalyst
-    filter pushdown pruning manifest groups (Spark 4.1 pushFilters)."""
+    """Range views, time travel and evolution through read()'s
+    arguments — where=, version=, as_of_timestamp= — the one batch
+    reader of a snapshot."""
 
     def _build(self, spark, path):
         t = VersionedTable(path)
@@ -1884,65 +1885,23 @@ class TestVersionedDataSource:
         t.commit(mk([(21, "e"), (30, "f")]))
         return t
 
-    def test_reader_prunes_partitions_by_bound_options(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableReader,
-        )
-
-        p = str(tmp_path / "t")
-        self._build(spark, p)
-        n_all = len(VersionedTableReader({"path": p}).partitions())
-        r = VersionedTableReader({"path": p, "min.k": "11", "max.k": "20"})
-        n_pruned = len(r.partitions())
-        assert 0 < n_pruned < n_all  # only the middle group's files
-
     def test_end_to_end_bounds_and_time_travel(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        p = str(tmp_path / "t")
-        self._build(spark, p)
-        spark.dataSource.register(VersionedTableDataSource)
-        ranged = (
-            spark.read.format("versioned_table")
-            .option("path", p)
-            .option("min.k", "11")
-            .option("max.k", "20")
-            .load()
-        )
+        t = self._build(spark, str(tmp_path / "t"))
+        ranged = t.read(spark, where={"k": (11, 20)})
         assert sorted((r.k, r.v) for r in ranged.collect()) == [
             (11, "c"), (20, "d"),
         ]
-        # bounds are per-load options: an unbounded load is unaffected
-        df = spark.read.format("versioned_table").option("path", p).load()
-        assert df.count() == 6
+        # bounds are per-read arguments: an unbounded read is unaffected
+        assert t.read(spark).count() == 6
         # exactness: a bound INSIDE a surviving group's range filters
         # rows, not just groups
-        narrow = (
-            spark.read.format("versioned_table")
-            .option("path", p)
-            .option("min.k", "12")
-            .option("max.k", "20")
-            .load()
-        )
+        narrow = t.read(spark, where={"k": (12, 20)})
         assert sorted(r.k for r in narrow.collect()) == [20]
-        # time travel via option
-        v0 = (
-            spark.read.format("versioned_table")
-            .option("path", p)
-            .option("version", 0)
-            .load()
-        )
+        v0 = t.read(spark, version=0)
         assert sorted(r.k for r in v0.collect()) == [1, 10]
 
     def test_evolved_groups_read_nulls(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
-        p = str(tmp_path / "t")
-        t = VersionedTable(p)
+        t = VersionedTable(str(tmp_path / "t"))
         t.commit(spark.createDataFrame([(1, "a")], "k long, v string"))
         t.commit(
             spark.createDataFrame(
@@ -1950,27 +1909,10 @@ class TestVersionedDataSource:
             ),
             allow_evolution=True,
         )
-        spark.dataSource.register(VersionedTableDataSource)
-        df = spark.read.format("versioned_table").option("path", p).load()
         got = sorted(
-            (r.k, r.v, r.score) for r in df.collect()
+            (r.k, r.v, r.score) for r in t.read(spark).collect()
         )
         assert got == [(1, "a", None), (2, "b", 9.5)]
-
-    def test_pending_mor_deletes_fail_fast(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableReader,
-        )
-
-        p = str(tmp_path / "t")
-        t = self._build(spark, p)
-        t.delete_where(
-            spark, F.col("k") == 1, strategy="merge-on-read", key_cols=["k"]
-        )
-        with pytest.raises(NotImplementedError, match="optimize"):
-            VersionedTableReader({"path": p}).partitions()
 
 
 class TestRealConcurrency:
@@ -2493,15 +2435,10 @@ class TestCheckConstraints:
             t.drop_check_constraint("v_positive")
 
     def test_datasource_date_bounds_prune(self, spark, tmp_path):
-        """Date-typed bound options: ISO text comparison against the
-        ISO-stored stats prunes groups, and the Arrow row filter (date
-        cast to ISO string) keeps the view exact."""
+        """ISO-text bounds on a DATE column through read(where=):
+        compared against the ISO-stored stats they prune the January
+        group, and the row filter keeps the view exact."""
         import datetime
-
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-            VersionedTableReader,
-        )
 
         t = VersionedTable(str(tmp_path / "t"))
         mk = lambda rows: spark.createDataFrame(rows, "d date, v string")
@@ -2509,19 +2446,10 @@ class TestCheckConstraints:
                      (datetime.date(2024, 1, 31), "b")]))
         t.commit(mk([(datetime.date(2024, 6, 1), "c"),
                      (datetime.date(2024, 6, 30), "d")]))
-        n_all = len(VersionedTableReader({"path": t.path}).partitions())
-        r = VersionedTableReader(
-            {"path": t.path, "min.d": "2024-06-01", "max.d": "2024-06-15"}
-        )
-        assert 0 < len(r.partitions()) < n_all
-        spark.dataSource.register(VersionedTableDataSource)
-        df = (
-            spark.read.format("versioned_table")
-            .option("path", t.path)
-            .option("min.d", "2024-06-01")
-            .option("max.d", "2024-06-15")
-            .load()
-        )
+        where = {"d": ("2024-06-01", "2024-06-15")}
+        _, detail = t.count_where(spark, where=where, detail=True)
+        assert detail["pruned"] == 1
+        df = t.read(spark, where=where)
         assert [(str(x.d), x.v) for x in df.collect()] == [
             ("2024-06-01", "c")
         ]
@@ -2529,17 +2457,11 @@ class TestCheckConstraints:
     def test_datasource_timestamp_bounds_prune_and_filter(
         self, spark, tmp_path
     ):
-        """Timestamp-typed bounds (ADVICE r6): exec-time filtering runs
-        on the native Arrow timestamp kernel (no string cast — that
-        raised ArrowNotImplementedError), and plan-time pruning
-        normalizes SPACE-separated bound text to the stats' ISO-'T'
-        form so ordering is chronological."""
+        """Timestamp bounds through read(where=): SPACE-separated text
+        normalizes to the stats' ISO-'T' form, so pruning is
+        chronological, and the row filter compares timestamps, not
+        their text."""
         import datetime
-
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-            VersionedTableReader,
-        )
 
         dt = datetime.datetime
         t = VersionedTable(str(tmp_path / "t"))
@@ -2550,28 +2472,15 @@ class TestCheckConstraints:
                      (dt(2024, 1, 31, 9, 30, 0), "b")]))
         t.commit(mk([(dt(2024, 6, 1, 10, 0, 0), "c"),
                      (dt(2024, 6, 30, 23, 59, 59), "d")]))
-        n_all = len(VersionedTableReader({"path": t.path}).partitions())
-        # SPACE-separated bound text must prune the January group
-        r = VersionedTableReader(
-            {
-                "path": t.path,
-                "min.ts": "2024-06-01 00:00:00",
-                "max.ts": "2024-06-15 00:00:00",
-            }
-        )
-        assert 0 < len(r.partitions()) < n_all
-        spark.dataSource.register(VersionedTableDataSource)
         for lo, hi in [
             ("2024-06-01 00:00:00", "2024-06-15 00:00:00"),  # space
             ("2024-06-01T00:00:00", "2024-06-15T00:00:00"),  # ISO 'T'
         ]:
-            df = (
-                spark.read.format("versioned_table")
-                .option("path", t.path)
-                .option("min.ts", lo)
-                .option("max.ts", hi)
-                .load()
-            )
+            where = {"ts": (lo, hi)}
+            # the January group is pruned
+            _, detail = t.count_where(spark, where=where, detail=True)
+            assert detail["pruned"] == 1
+            df = t.read(spark, where=where)
             assert [(x.ts, x.v) for x in df.collect()] == [
                 (dt(2024, 6, 1, 10, 0, 0), "c")
             ]
@@ -2597,33 +2506,15 @@ class TestCheckConstraints:
             )
 
     def test_datasource_timestamp_as_of(self, spark, tmp_path):
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableDataSource,
-        )
-
         t = VersionedTable(str(tmp_path / "t"))
         mk = lambda rows: spark.createDataFrame(rows, "k long, v string")
         t.commit(mk([(1, "a")]))
         ts0 = t._load_manifest(0)["committed_at"]
         t.commit(mk([(2, "b")]))
-        spark.dataSource.register(VersionedTableDataSource)
-        df = (
-            spark.read.format("versioned_table")
-            .option("path", t.path)
-            .option("timestampAsOf", str(ts0))
-            .load()
-        )
+        df = t.read(spark, as_of_timestamp=ts0)
         assert sorted(r.k for r in df.collect()) == [1]
-        import pytest as _p
-
-        from file_stream_import_spark.io.pysource import (
-            VersionedTableReader,
-        )
-
-        with _p.raises(ValueError, match="not both"):
-            VersionedTableReader(
-                {"path": t.path, "version": "0", "timestampasof": str(ts0)}
-            )
+        with pytest.raises(ValueError, match="ONE of"):
+            t.read(spark, version=0, as_of_timestamp=ts0)
 
 
 class TestPrunedCopyOnWriteDelete:
